@@ -169,25 +169,11 @@ def main() -> None:
     paired_ratio: dict[str, float] = {}
     compute_timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # Per-operator AQE hints (r11, VERDICT r10 #7): a registry spec may
-    # pin spark.sql.adaptive.enabled for ITS query only — measured per
-    # family (tools/ab_aqe_hints.py); "inherit" (the default for every
-    # other query) leaves the bench/session global untouched, so the
-    # contract methodology is unchanged for unhinted queries.
-    from one_stop_cdc_ingestion_toolkit_spark.operators import (
-        apply_aqe_hint,
-        load_all,
-    )
-
-    specs = load_all()
     for name, fn in queries.items():
         best = float("inf")
         obest = float("inf")
         nrows = 0
         sql = oracles.get(name)
-        prev_aqe = (
-            apply_aqe_hint(spark, specs[name]) if name in specs else None
-        )
         # One failing query must NOT kill the whole bench (round 2 lost
         # all numbers to a single AnalysisException): record the error,
         # keep the JSON line coming.
@@ -241,9 +227,6 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             release_caches()
-        finally:
-            if prev_aqe is not None:
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     total = round(sum(timings.values()), 3)
     oracle_total = round(sum(oracle_timings.values()), 3)

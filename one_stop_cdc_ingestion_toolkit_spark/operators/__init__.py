@@ -22,16 +22,6 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None  # DuckDB-runnable SQL, or None for rows-only check
-    #: Per-operator AQE posture (VERDICT r9/r10 ask): "inherit" leaves
-    #: the session/bench global alone; "on"/"off" pins
-    #: spark.sql.adaptive.enabled for THIS query only. Hints are given
-    #: only where an interleaved A/B measured a win under both globals:
-    #: the CC/cluster family re-plans per pointer-jumping round, so AQE
-    #: coalescing pays even at bench scale; staged inverted-index
-    #: pipelines pay AQE's per-stage re-planning with nothing to
-    #: coalesce, so they pin "off" at any scale (r9 sf1: q44 1.37x
-    #: slower under global AQE; r11 sf3 A/B in OPTIMIZATION_r11.md).
-    aqe: str = "inherit"
 
 
 #: Global registry, populated by operator modules at import time.
@@ -198,31 +188,16 @@ def release_caches() -> int:
     return n
 
 
-def register(
-    name: str, oracle: str | None = None, aqe: str = "inherit"
-) -> Callable[[QueryFn], QueryFn]:
+def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
-    if aqe not in ("inherit", "on", "off"):
-        raise ValueError(f"bad aqe hint for {name}: {aqe!r}")
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, aqe)
+        REGISTRY[name] = QuerySpec(name, fn, oracle)
         return fn
 
     return deco
-
-
-def apply_aqe_hint(spark: SparkSession, spec: QuerySpec) -> str | None:
-    """Pin spark.sql.adaptive.enabled for one query per its registry
-    hint; returns the previous value to restore afterwards (None when
-    the hint is "inherit" and nothing was touched)."""
-    if spec.aqe == "inherit":
-        return None
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true" if spec.aqe == "on" else "false")
-    return prev
 
 
 def load_all() -> dict[str, QuerySpec]:

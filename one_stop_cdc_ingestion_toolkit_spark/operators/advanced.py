@@ -516,7 +516,7 @@ def _dup_clusters_oracle() -> str:
         FROM reach GROUP BY node ORDER BY doc_id"""
 
 
-@register("d96_dup_clusters", _dup_clusters_oracle(), aqe="on")
+@register("d96_dup_clusters", _dup_clusters_oracle())
 def d96_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS (not just pairs): connected components of
     the MinHash-LSH candidate graph, labeling every involved doc with its
@@ -667,7 +667,7 @@ def _semantic_clusters_oracle() -> str:
         FROM reach GROUP BY node ORDER BY vec_id"""
 
 
-@register("a038_semantic_clusters", _semantic_clusters_oracle(), aqe="on")
+@register("a038_semantic_clusters", _semantic_clusters_oracle())
 def a038_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC dedup clusters: connected components over the
     embedding-cosine near-dup graph (b55's LSH-bucketed pair space, so

@@ -46,10 +46,6 @@ def latest_change_per_key(
     )
 
 
-def _row_field_names(changes: DataFrame) -> list[str]:
-    return changes.schema["row"].dataType.fieldNames()
-
-
 def apply_changes(
     state: DataFrame | None,
     changes: DataFrame,

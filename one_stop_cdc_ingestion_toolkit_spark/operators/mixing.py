@@ -26,19 +26,6 @@ N_EPOCHS = 3
 HEAD_K = 10
 
 
-def epoch_order(df: DataFrame, id_col: str, epoch: int) -> DataFrame:
-    """The given epoch's training order: sort key = md5 of ``id:epoch``.
-
-    Deterministic under retries/re-runs (pure function of the id), and a
-    different permutation per epoch (the epoch salts the hash). At scale
-    this is a sort by a uniform key — Spark's range-partitioned sort, no
-    single-point shuffle hotspot, and consumers can equivalently
-    range-partition on the hash to get reproducible shard boundaries."""
-    return df.withColumn(
-        "__ord", F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(epoch)))
-    ).orderBy("__ord")
-
-
 @register(
     "a005_epoch_shuffle",
     f"""WITH e AS (SELECT unnest(generate_series(0, {N_EPOCHS - 1})) AS epoch),

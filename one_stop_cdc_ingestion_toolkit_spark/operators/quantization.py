@@ -34,9 +34,7 @@ from one_stop_cdc_ingestion_toolkit_spark.operators import (
 from one_stop_cdc_ingestion_toolkit_spark.operators.similarity import (
     EMB_DIM,
     cosine,
-    cosine_hoisted,
     dot,
-    norm,
 )
 
 #: Matryoshka prefix length (first PREFIX_DIM of EMB_DIM dims).
@@ -50,27 +48,6 @@ MK_TOPK = 10
 
 #: Number of query vectors sampled for the recall audit.
 MK_QUERIES = 10
-
-
-def sqdist(a: Column, b: Column) -> Column:
-    """Squared euclidean distance as a left-to-right fold (the dot()
-    discipline: same order as the oracle's list_sum, bit-identical)."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _duck_sqdist(a: str, b: str, dim: int = EMB_DIM) -> str:
-    return (
-        f"list_sum(list_transform(generate_series(1, {dim}), i -> "
-        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) * "
-        f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))))"
-    )
 
 
 def _duck_dot2(a: str, b: str, dim: int = EMB_DIM) -> str:
@@ -339,31 +316,6 @@ def jl_project(vec: Column, use_arrow: bool = True) -> Column:
             for p in range(JL_DIM)
         ]
     )
-
-
-def _duck_jl_proj(p: int, vec: str) -> str:
-    return (
-        f"list_sum(list_transform(generate_series(0, {EMB_DIM - 1}), "
-        f"i -> (CASE WHEN substr(md5('j{p}:' || i), 1, 1) < '8' "
-        f"THEN 1.0 ELSE -1.0 END) * CAST({vec}[i+1] AS DOUBLE))) / 4.0"
-    )
-
-
-def _duck_jl_vec(vec: str) -> str:
-    els = ", ".join(_duck_jl_proj(p, vec) for p in range(JL_DIM))
-    return f"[{els}]"
-
-
-def _duck_sig(vec: str) -> str:
-    # Mirrors similarity._duck_signature (8 LSH planes, seed '<p>:<i>').
-    bits = [
-        f"(CASE WHEN list_sum(list_transform(generate_series(0, {EMB_DIM - 1}), "
-        f"i -> (CASE WHEN substr(md5('{p}:' || i), 1, 1) < '8' "
-        f"THEN 1.0 ELSE -1.0 END) * CAST({vec}[i+1] AS DOUBLE))) >= 0 "
-        f"THEN '1' ELSE '0' END)"
-        for p in range(8)
-    ]
-    return " || ".join(bits)
 
 
 def _jl_bucket_hist(pdf):

@@ -334,7 +334,7 @@ def _retention_oracle() -> str:
         FROM ranked GROUP BY cluster_id ORDER BY cluster_id"""
 
 
-@register("a141_cluster_retention", _retention_oracle(), aqe="on")
+@register("a141_cluster_retention", _retention_oracle())
 def a141_cluster_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate retention policy: within every MinHash-LSH cluster
     (d96's connected components) keep the highest-quality member (q48

@@ -279,15 +279,6 @@ def lakehouse_format_available(spark: SparkSession, fmt: str = "delta") -> bool:
         shutil.rmtree(probe, ignore_errors=True)
 
 
-def write_lakehouse(
-    df: DataFrame, path: str, fmt: str = "delta", mode: str = "append"
-) -> None:
-    """Write through a lakehouse format; callers should gate on
-    :func:`lakehouse_format_available`. Raises the underlying
-    data-source error when the format jar is absent."""
-    df.write.format(fmt).mode(mode).save(path)
-
-
 def recover(path: str) -> bool:
     """Restore a dataset left mid-swap by a crashed :func:`compact`:
     if ``<path>._old`` exists and ``path`` is missing, the first rename

@@ -96,28 +96,6 @@ def kafka_reader(
     return reader
 
 
-def kafka_writer(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    client_options: dict[str, str] | None = None,
-):
-    """Configured (not started) Kafka re-publish sink (SURVEY §2.4): a
-    streaming DataFrame with string ``key``/``value`` columns written back
-    to a topic — the engine's analogue of the pipeline's topic outputs.
-    Same gating as the reader: no broker/jar in the test container."""
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    for key, v in normalize_client_options(client_options).items():
-        writer = writer.option(key, v)
-    return writer
-
-
 def raw_records(df: DataFrame) -> DataFrame:
     """Kafka frame → the engine's raw (key,value) change-record shape
     (string key per the reference's StringConverter, A9)."""

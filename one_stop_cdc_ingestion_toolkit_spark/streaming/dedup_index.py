@@ -34,11 +34,13 @@ from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
     minhash_band_rows,
 )
 from one_stop_cdc_ingestion_toolkit_spark.operators.text import fingerprint
-from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import key_bucket
+from one_stop_cdc_ingestion_toolkit_spark.streaming.keyed_index import KeyedIndex
 
 
-class DedupIndex:
+class DedupIndex(KeyedIndex):
     """Dedup index for one document table, materialized in ``store``."""
+
+    suffix = "dedup_idx"
 
     def __init__(
         self,
@@ -49,15 +51,9 @@ class DedupIndex:
         n_buckets: int | None = None,
         id_type: str | None = None,
     ):
-        """``id_col``/``text_col`` are required for maintenance
-        (:meth:`update`); lookups over an existing index need only the
-        store and table. ``n_buckets`` switches the index to the
-        key-bucketed layout: an update rewrites only the id-hash buckets
-        the batch touched, making the whole maintenance path — fingerprint
-        AND write — O(batch), not O(index). Use the same bucketing as the
-        data table so batch locality carries over. ``id_type`` is the
-        document id's Spark SQL type name — only consulted when a lookup
-        runs before any batch materialized the index, so the empty
+        """See :class:`KeyedIndex` for the shared arguments. ``id_type``
+        is the document id's Spark SQL type name — only consulted when a
+        lookup runs before any batch materialized the index, so the empty
         answer's schema matches what a materialized one would carry
         (review r8). When omitted it is INFERRED from the stored data
         table's ``id_col`` at lookup time; a lookup-only construction
@@ -65,16 +61,8 @@ class DedupIndex:
         table raises rather than guessing a type — a silent 'long'
         default re-created the empty-vs-materialized schema mismatch on
         string-keyed tables (ADVICE r9)."""
-        self.store = store
-        self.table = table
-        self.index_table = f"{table}__dedup_idx"
-        self.id_col = id_col
-        self.text_col = text_col
-        self.n_buckets = n_buckets
+        super().__init__(store, table, id_col, text_col, n_buckets)
         self.id_type = id_type
-
-    def _bucket_of(self, col: F.Column) -> F.Column:
-        return key_bucket(self.n_buckets, col)
 
     # -- maintenance -------------------------------------------------------
 
@@ -109,62 +97,7 @@ class DedupIndex:
         )
         return bands.select("id", "fp", "band_idx", "band_sig")
 
-    def update(
-        self,
-        spark: SparkSession,
-        touched_state: DataFrame,
-        affected: list[int] | None = None,
-    ) -> None:
-        """Fold one micro-batch into the index.
-
-        ``touched_state`` is the post-merge state restricted to the keys
-        the batch touched: data columns plus ``__deleted``. Touched ids
-        are dropped from the index and live rows re-inserted — O(batch)
-        fingerprint work + one index rewrite (bucketable exactly like the
-        data table at scale). ``affected``: the touched ids' bucket list
-        when the caller already collected it (same ids, same key_bucket
-        hash); None collects it here (review r7)."""
-        touched = touched_state.select(
-            F.col(self.id_col).alias("id"), self.text_col, "__deleted"
-        )
-        fresh = self._index_rows(
-            touched.filter(~F.col("__deleted")).select(
-                F.col("id").alias(self.id_col), self.text_col
-            )
-        )
-        gone = touched.select("id")
-        if self.n_buckets:
-            # bucketed path: read/rewrite ONLY the id-hash buckets this
-            # batch touches (collect bounded by n_buckets, never rows).
-            if affected is None:
-                affected = sorted(
-                    r[0]
-                    for r in gone.select(
-                        self._bucket_of(F.col("id")).alias("__b")
-                    )
-                    .distinct()
-                    .collect()
-                )
-            current = self.store.read_buckets(spark, self.index_table, affected)
-            new = fresh
-            if current is not None:
-                new = current.drop("__bucket").join(
-                    gone.select("id"), "id", "left_anti"
-                ).unionByName(fresh)
-            new = new.withColumn("__bucket", self._bucket_of(F.col("id")))
-            self.store.write_buckets(new, self.index_table, affected)
-            return
-        current = self.store.read(spark, self.index_table)
-        if current is None:
-            new = fresh
-        else:
-            new = current.join(gone, "id", "left_anti").unionByName(fresh)
-        self.store.write(new, self.index_table)
-
     # -- lookups (index-only: no corpus rescan) ----------------------------
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        return self.store.read(spark, self.index_table)
 
     def _empty_index(self, spark: SparkSession) -> DataFrame:
         """A never-materialized index (no batch touched the table yet, or
@@ -259,15 +192,3 @@ class DedupIndex:
             idx.select("id", "band_idx", "band_sig").join(reps, "id")
         )
         return _collapsed_form(lab, rep_pairs)
-
-    def rebuild(self, spark: SparkSession, snapshot: DataFrame) -> None:
-        """Recompute the whole index from a table snapshot and swap it in
-        (repair for index drift — see SearchIndex.rebuild)."""
-        rows = self._index_rows(snapshot)
-        if self.n_buckets:
-            rows = rows.withColumn("__bucket", self._bucket_of(F.col("id")))
-            self.store.write_buckets(
-                rows, self.index_table, list(range(self.n_buckets))
-            )
-            return
-        self.store.write(rows, self.index_table)

@@ -132,7 +132,7 @@ class JoinView:
         if "__deleted" in state.columns:
             state = state.filter(~F.col("__deleted"))
         # __bucket is the bucketed store's internal partition column
-        # (read_buckets / _bucket_pruned_state) — leaking it into the
+        # (read / read_keys on a bucketed table) — leaking it into the
         # materialized view exposes a spurious column and breaks the
         # union with a view built pre-migration (review r7)
         return state.drop("__deleted", "__pos", "__ts_ms", "__bucket")

@@ -52,10 +52,7 @@ from one_stop_cdc_ingestion_toolkit_spark.streaming.join_view import JoinView
 from one_stop_cdc_ingestion_toolkit_spark.streaming.dedup_index import DedupIndex
 from one_stop_cdc_ingestion_toolkit_spark.streaming.search_index import SearchIndex
 from one_stop_cdc_ingestion_toolkit_spark.streaming.schema_store import SchemaStore
-from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-    BucketedTableStore,
-    key_bucket,
-)
+from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import BucketedTableStore
 
 #: Reserved lake table holding quarantined (malformed) source records.
 DLQ_TABLE = "_dlq"
@@ -72,6 +69,8 @@ class TableSpec:
     ``n_buckets`` switches the table to key-bucketed state
     (BucketedTableStore): each micro-batch rewrites only the hash buckets
     its keys touch — the 100 TB merge path. None = whole-snapshot swap.
+    Changing it on an existing table is one whole-table rewrite on the
+    next batch, for None→n and for n→m alike; n→None is refused.
 
     ``index_text_col`` names a text column to maintain an incremental
     near-duplicate index over (``streaming.dedup_index.DedupIndex``):
@@ -413,16 +412,18 @@ class Pipeline:
                     # no-op when row_schema is already the latest version.
                     self.schemas.register(tspec.name, row_schema)
                     changes = flatten_changes(ok, tspec.key_cols)
-                    if tspec.n_buckets:
-                        delta = self._apply_bucketed(tspec, changes)
-                    else:
-                        current = self.store.read(self.spark, tspec.name)
-                        merged = apply_changes(current, changes, tspec.key_cols)
-                        delta = self._view_delta(tspec, current, merged, changes)
-                        self.store.write(merged, tspec.name)
+                    # keyed merge: only the touched buckets of a bucketed
+                    # table are read and rewritten; the bucket list is
+                    # collected once and reused by index/view upkeep
+                    current, buckets = self._read_keys(tspec, changes)
+                    merged = apply_changes(current, changes, tspec.key_cols)
+                    delta = self._view_delta(tspec, current, merged, changes)
+                    self.store.replace_keys(
+                        merged, tspec.name, tspec.key_cols, tspec.n_buckets, buckets
+                    )
                     self._apply_view(tspec, delta)
-                    self._update_index(tspec, changes)
-                    self._update_join_views(tspec, changes)
+                    self._update_index(tspec, changes, buckets)
+                    self._update_join_views(tspec, changes, buckets)
                 finally:
                     mine.unpersist()
             # Consistency point: every declared table has now absorbed
@@ -546,7 +547,9 @@ class Pipeline:
             # would otherwise hold one dead block-set per batch in flight)
             release_eager(delta)
 
-    def _update_join_views(self, tspec: TableSpec, changes: DataFrame) -> None:
+    def _update_join_views(
+        self, tspec: TableSpec, changes: DataFrame, buckets: list[int] | None
+    ) -> None:
         """Maintain every declared fact⟕dim view this table participates
         in — O(touched keys) per side, driven by POST-merge state.
 
@@ -579,16 +582,14 @@ class Pipeline:
                 )
                 continue
             if is_fact:
-                keys = changes.select(*tspec.key_cols).distinct()
                 # fact side bucket-pruned: on_fact_batch only reads the
                 # touched keys' post-merge rows (review r7); the dim
                 # side stays a full read — it is semi-joined to the
                 # touched join keys inside on_fact_batch
-                fact_state, _ = self._bucket_pruned_state(tspec, keys)
                 jv.on_fact_batch(
                     self.spark,
-                    keys,
-                    fact_state,
+                    changes.select(*tspec.key_cols).distinct(),
+                    self._read_keys(tspec, changes, buckets)[0],
                     self.store.read(self.spark, jv.spec.dim),
                     fact_upto,
                     dim_upto,
@@ -616,48 +617,36 @@ class Pipeline:
         view = self.agg_views.get(table)
         return view.read(self.spark) if view is not None else None
 
-    def _bucket_pruned_state(
-        self, tspec: TableSpec, keys: DataFrame
+    def _read_keys(
+        self, tspec: TableSpec, changes: DataFrame, buckets: list[int] | None = None
     ) -> tuple[DataFrame | None, list[int] | None]:
-        """(state, affected_buckets): current table state restricted to
-        the id-hash buckets holding ``keys`` — the O(batch) read for
-        bucketed tables (the documented 100 TB maintenance path; a full
-        store.read here made every index/join-view update O(table) per
-        micro-batch, review r7). Whole-table read (and None buckets) for
-        snapshot-layout tables. The bucket list is returned so downstream
-        index maintenance reuses it instead of re-collecting it from the
-        same ids with the same hash."""
-        if tspec.n_buckets and self.store.layout(tspec.name) == "bucketed":
-            bucket = key_bucket(
-                tspec.n_buckets, *[F.col(k) for k in tspec.key_cols]
-            )
-            affected = sorted(
-                r[0] for r in keys.select(bucket.alias("__b")).distinct().collect()
-            )
-            return (
-                self.store.read_buckets(self.spark, tspec.name, affected),
-                affected,
-            )
-        return self.store.read(self.spark, tspec.name), None
+        """(state, buckets) of the table rows holding this batch's keys —
+        bucket-pruned in the table's requested bucketed layout, whole
+        otherwise (``BucketedTableStore.read_keys``)."""
+        return self.store.read_keys(
+            self.spark, tspec.name, tspec.key_cols, tspec.n_buckets, changes, buckets
+        )
 
-    def _update_index(self, tspec: TableSpec, changes: DataFrame) -> None:
-        """Fold this batch into the table's dedup index, if configured.
+    def _update_index(
+        self, tspec: TableSpec, changes: DataFrame, buckets: list[int] | None
+    ) -> None:
+        """Fold this batch into the table's dedup/search indexes, if
+        configured.
 
         Driven by the POST-MERGE state of the touched keys (read back
         from the just-written store generation, so nothing is
         recomputed): the raw batch's per-key winner can lose to already-
         applied state under cross-batch out-of-order delivery, but the
         merged state is authoritative. The touched-key read is
-        bucket-pruned (_bucket_pruned_state: the keys lie in the buckets
-        the merge just rewrote)."""
+        bucket-pruned to ``buckets``, the list the merge just rewrote."""
         index = self.indexes.get(tspec.name)
         sindex = self.search_indexes.get(tspec.name)
         if index is None and sindex is None:
             return
-        keys = changes.select(*tspec.key_cols).distinct()
-        state, affected = self._bucket_pruned_state(tspec, keys)
+        state, affected = self._read_keys(tspec, changes, buckets)
         if state is None:
             return
+        keys = changes.select(*tspec.key_cols).distinct()
         touched = state.join(keys, tspec.key_cols)
         if index is not None and sindex is not None:
             touched = touched.persist()
@@ -670,51 +659,13 @@ class Pipeline:
             if index is not None and sindex is not None:
                 touched.unpersist()
 
-    def _apply_bucketed(self, tspec: TableSpec, changes: DataFrame):
-        """Partition-scoped merge: only the key-buckets present in this
-        batch are read, merged and rewritten (cdc.affected_partitions
-        idea specialized to hash buckets). Returns the agg-view delta
-        (computed against the touched buckets' prior state — already the
-        O(batch) slice) for apply_batch to fold in after the write."""
-        def bucket_of(df: DataFrame) -> F.Column:
-            return key_bucket(
-                tspec.n_buckets, *[F.col(k) for k in tspec.key_cols]
-            )
-
-        changes = changes.withColumn("__bucket", bucket_of(changes)).persist()
-        try:
-            migrating = self.store.layout(tspec.name) == "snapshot"
-            if migrating:
-                # one-time layout migration: fold the whole existing
-                # snapshot in, then rewrite every bucket it lands in.
-                current = self.store.read(self.spark, tspec.name)
-            else:
-                affected = sorted(
-                    r[0] for r in changes.select("__bucket").distinct().collect()
-                )
-                current = self.store.read_buckets(self.spark, tspec.name, affected)
-            merged = apply_changes(current, changes, tspec.key_cols)
-            merged = merged.withColumn("__bucket", bucket_of(merged))
-            delta = self._view_delta(tspec, current, merged, changes)
-            if migrating:
-                merged = merged.persist()
-                affected = sorted(
-                    r[0] for r in merged.select("__bucket").distinct().collect()
-                )
-            self.store.write_buckets(merged, tspec.name, affected)
-            if migrating:
-                self.store.retire_snapshot(tspec.name)
-                merged.unpersist()
-            return delta
-        finally:
-            changes.unpersist()
-
     def gc_tombstones(self, min_pos: int) -> dict[str, int]:
         """Maintenance: drop tombstones whose sequence is older than the
         redelivery horizon (``cdc.expire_tombstones``) — run with min_pos
         = the checkpointed min source offset, so a redelivered old insert
         can no longer resurrect the key. Returns per-table removed counts.
-        Respects the table's layout: bucketed tables rewrite per bucket."""
+        Each table with expired tombstones is rewritten whole, in its
+        declared layout."""
         removed: dict[str, int] = {}
         for tspec in self.spec.tables:
             state = self.store.read(self.spark, tspec.name)
@@ -726,17 +677,13 @@ class Pipeline:
             if expired == 0:
                 removed[tspec.name] = 0
                 continue
-            new = expire_tombstones(state, min_pos)
-            if self.store.layout(tspec.name) == "bucketed":
-                bucket = key_bucket(
-                    tspec.n_buckets, *[F.col(k) for k in tspec.key_cols]
-                )
-                affected = sorted(self.store.bucket_map(tspec.name))
-                self.store.write_buckets(
-                    new.withColumn("__bucket", bucket), tspec.name, affected
-                )
-            else:
-                self.store.write(new, tspec.name)
+            self.store.replace_keys(
+                expire_tombstones(state, min_pos),
+                tspec.name,
+                tspec.key_cols,
+                tspec.n_buckets,
+                None,
+            )
             removed[tspec.name] = expired
         return removed
 

@@ -36,29 +36,13 @@ from one_stop_cdc_ingestion_toolkit_spark.operators.retrieval import (
     bm25_partial,
     tokenize,
 )
-from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import key_bucket
+from one_stop_cdc_ingestion_toolkit_spark.streaming.keyed_index import KeyedIndex
 
 
-class SearchIndex:
+class SearchIndex(KeyedIndex):
     """BM25 search index for one document table, materialized in ``store``."""
 
-    def __init__(
-        self,
-        store,
-        table: str,
-        id_col: str | None = None,
-        text_col: str | None = None,
-        n_buckets: int | None = None,
-    ):
-        self.store = store
-        self.table = table
-        self.index_table = f"{table}__search_idx"
-        self.id_col = id_col
-        self.text_col = text_col
-        self.n_buckets = n_buckets
-
-    def _bucket_of(self, col: F.Column) -> F.Column:
-        return key_bucket(self.n_buckets, col)
+    suffix = "search_idx"
 
     # -- maintenance -------------------------------------------------------
 
@@ -93,57 +77,7 @@ class SearchIndex:
             doc_rows
         )
 
-    def update(
-        self,
-        spark: SparkSession,
-        touched_state: DataFrame,
-        affected: list[int] | None = None,
-    ) -> None:
-        """Fold one micro-batch into the index (same shape as
-        DedupIndex.update: anti-join out touched ids, re-insert live
-        rows; bucketed layout rewrites only touched id-hash buckets).
-        ``affected``: the touched ids' bucket list when the caller
-        already collected it (pipeline._bucket_pruned_state — same ids,
-        same key_bucket hash); None collects it here (review r7)."""
-        touched = touched_state.select(
-            F.col(self.id_col).alias("id"), self.text_col, "__deleted"
-        )
-        fresh = self._index_rows(
-            touched.filter(~F.col("__deleted")).select(
-                F.col("id").alias(self.id_col), self.text_col
-            )
-        )
-        gone = touched.select("id")
-        if self.n_buckets:
-            if affected is None:
-                affected = sorted(
-                    r[0]
-                    for r in gone.select(
-                        self._bucket_of(F.col("id")).alias("__b")
-                    )
-                    .distinct()
-                    .collect()
-                )
-            current = self.store.read_buckets(spark, self.index_table, affected)
-            new = fresh
-            if current is not None:
-                new = current.drop("__bucket").join(
-                    gone.select("id"), "id", "left_anti"
-                ).unionByName(fresh)
-            new = new.withColumn("__bucket", self._bucket_of(F.col("id")))
-            self.store.write_buckets(new, self.index_table, affected)
-            return
-        current = self.store.read(spark, self.index_table)
-        if current is None:
-            new = fresh
-        else:
-            new = current.join(gone, "id", "left_anti").unionByName(fresh)
-        self.store.write(new, self.index_table)
-
     # -- queries (index-only: no corpus rescan) ----------------------------
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        return self.store.read(spark, self.index_table)
 
     def bm25(self, spark: SparkSession, terms: list[str], k: int = 10) -> DataFrame:
         """Top-``k`` (id, score) for the bag-of-words query ``terms``,
@@ -174,18 +108,3 @@ class SearchIndex:
             .orderBy(F.desc("score"), "id")
             .limit(k)
         )
-
-    def rebuild(self, spark: SparkSession, snapshot: DataFrame) -> None:
-        """Recompute the whole index from a table snapshot and swap it in
-        — the repair verb for index drift (e.g. a crash landed between
-        the data write and the index write, leaving the index one batch
-        behind; the atomic generation swap makes the repair itself safe
-        to re-run)."""
-        rows = self._index_rows(snapshot)
-        if self.n_buckets:
-            rows = rows.withColumn("__bucket", self._bucket_of(F.col("id")))
-            self.store.write_buckets(
-                rows, self.index_table, list(range(self.n_buckets))
-            )
-            return
-        self.store.write(rows, self.index_table)

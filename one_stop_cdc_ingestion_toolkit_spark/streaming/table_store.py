@@ -95,11 +95,11 @@ def _truncate_torn_tail(path: Path) -> None:
 def key_bucket(n_buckets: int, *cols) -> Column:
     """THE key→bucket hash: ``pmod(xxhash64(cols...), n)`` as int.
 
-    Bucket pruning is only correct because every module — the pipeline's
-    merge and pruned maintenance reads, the dedup/search indexes,
-    tombstone GC — agrees on this exact function; a drifted copy would
+    Bucket pruning is only correct because every read and write of a
+    bucketed table agrees on this exact function; a drifted copy would
     silently mis-prune buckets and drop rows from reads (review r7).
-    Keep every call site on this single definition."""
+    Only :class:`BucketedTableStore` calls it (``read_keys`` /
+    ``replace_keys``); tests use it to build bucketed frames by hand."""
     from pyspark.sql import functions as F
 
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
@@ -323,7 +323,8 @@ class TableStore:
 
 
 class BucketedTableStore(TableStore):
-    """Key-bucketed snapshots: the 100 TB CDC state layout.
+    """Key-bucketed snapshots: the 100 TB CDC state layout, and the one
+    place that decides how a keyed table is laid out.
 
     State is hash-partitioned into ``n_buckets`` by key; each merge batch
     rewrites ONLY the buckets its changes touch (a micro-batch touching
@@ -338,6 +339,14 @@ class BucketedTableStore(TableStore):
     replace), then prunes generations no bucket references. Readers union
     the per-bucket paths. Crash safety matches TableStore: a half-written
     generation is invisible until the pointer flips.
+
+    Keyed-state writers (pipeline merge, tombstone GC, the dedup/search
+    indexes) go through :meth:`read_keys` and :meth:`replace_keys` only,
+    naming the layout they want (``n_buckets``, None = whole snapshot).
+    Layout-change rule: when the stored layout differs from the requested
+    one — snapshot→bucketed (None→n) or a changed bucket count (n→m) —
+    the table is read whole and rewritten whole, once, in the requested
+    layout. Bucketed→snapshot (n→None) is refused by :meth:`write`.
     """
 
     def _bucket_pointer(self, table: str) -> Path:
@@ -379,14 +388,77 @@ class BucketedTableStore(TableStore):
             return self.read_buckets(spark, table)
         return super().read(spark, table)
 
-    def retire_snapshot(self, table: str) -> None:
-        """Remove a whole-snapshot pointer + generation after migrating the
-        table to the bucketed layout."""
-        ptr = self._pointer(table)
-        if ptr.exists():
-            gen = ptr.read_text().strip()
-            ptr.unlink()
-            shutil.rmtree(self._table_dir(table) / gen, ignore_errors=True)
+    def _count_file(self, table: str) -> Path:
+        return self._table_dir(table) / "_NBUCKETS"
+
+    def _bucket_count(self, table: str) -> int | None:
+        """The bucket count of the table's last whole bucketed rewrite;
+        None for a snapshot or absent table, or an unknown count. Only a
+        map written under the requested count may be pruned by it: under
+        another count the same key sits in a different bucket, and the
+        pruned read would miss its old row."""
+        cf = self._count_file(table)
+        return int(cf.read_text()) if cf.exists() else None
+
+    def read_keys(
+        self,
+        spark: SparkSession,
+        table: str,
+        key_cols: list[str],
+        n_buckets: int | None,
+        keys: DataFrame | None = None,
+        buckets: list[int] | None = None,
+    ) -> tuple[DataFrame | None, list[int] | None]:
+        """(state, buckets): the current state covering ``keys`` (any
+        frame carrying ``key_cols``; duplicates are fine), and the bucket
+        list to hand back to :meth:`replace_keys`.
+
+        In the requested bucketed layout only the buckets holding
+        ``keys`` are read — the O(batch) maintenance read. ``buckets``
+        reuses a list already collected for the same keys (the collect
+        is bounded by n_buckets, never rows). Otherwise — snapshot
+        layout, ``keys=None``, or a stored layout that differs from the
+        requested one — the whole table is read and the bucket list is
+        None, which makes replace_keys rewrite the whole table."""
+        if keys is None or not n_buckets or self._bucket_count(table) != n_buckets:
+            return self.read(spark, table), None
+        if buckets is None:
+            b = key_bucket(n_buckets, *key_cols).alias("__b")
+            buckets = sorted(r[0] for r in keys.select(b).distinct().collect())
+        return self.read_buckets(spark, table, buckets), buckets
+
+    def replace_keys(
+        self,
+        df: DataFrame,
+        table: str,
+        key_cols: list[str],
+        n_buckets: int | None,
+        buckets: list[int] | None,
+    ) -> None:
+        """Write ``df`` — the new state of exactly what :meth:`read_keys`
+        returned, with the ``buckets`` it returned — in the requested
+        layout: a snapshot swap, a rewrite of the listed buckets, or
+        (``buckets`` None) a whole-table bucketed rewrite that also
+        drops any bucket of a previous count and retires a snapshot
+        pointer."""
+        if not n_buckets:
+            self.write(df, table)
+            return
+        df = df.withColumn("__bucket", key_bucket(n_buckets, *key_cols))
+        if buckets is not None:
+            self.write_buckets(df, table, buckets)
+            return
+        # the recorded count is cleared before the flip and set after it:
+        # a crash in between leaves it absent, which reads as a layout
+        # mismatch and repeats the (idempotent) whole rewrite
+        cf = self._count_file(table)
+        cf.unlink(missing_ok=True)
+        every = set(range(n_buckets)) | set(self.bucket_map(table))
+        self.write_buckets(df, table, sorted(every))
+        self._pointer(table).unlink(missing_ok=True)
+        tmp = cf.with_name("_NBUCKETS.tmp")
+        tmp.write_text(str(n_buckets))
+        tmp.replace(cf)
 
     def write_buckets(self, df: DataFrame, table: str, buckets: list[int]) -> Path:
         """Write a new generation holding ONLY the given buckets (df must

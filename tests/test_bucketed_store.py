@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import pathlib
 
+import pytest
+
 from one_stop_cdc_ingestion_toolkit_spark.streaming.pipeline import (
     Pipeline,
     PipelineSpec,
@@ -110,7 +112,6 @@ def test_snapshot_to_bucketed_migration(spark, tmp_path):
 
 
 def test_whole_snapshot_write_refused_on_bucketed_table(spark, tmp_path):
-    import pytest
 
     spec = _spec(tmp_path)
     write_stream_files(spec.source_dir, CANONICAL_EVENTS[:2], files=1)
@@ -132,3 +133,46 @@ def test_generation_pruning(spark, tmp_path):
     live = set(pipe.store.bucket_map("person").values())
     on_disk = {p.name for p in tdir.glob("gen-*")}
     assert on_disk == live, "unreferenced generations must be pruned"
+
+
+
+@pytest.mark.parametrize("old_n,new_n", [(4, 8), (8, 4)], ids=["grow", "shrink"])
+def test_bucket_count_change_keeps_one_row_per_key(spark, tmp_path, old_n, new_n):
+    """Changing n_buckets on a bucketed table must rewrite it once under
+    the new count: pruning a 4-bucket map by 8-bucket ids (or the
+    reverse) missed carol's old row (bucket 2 of 4, bucket 6 of 8), so
+    an update to carol left two live carol rows."""
+    from pyspark.sql import functions as F
+
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
+        key_bucket,
+    )
+
+    moved = spark.createDataFrame([("carol",)], "k string").select(
+        key_bucket(4, F.col("k")).alias("b4"), key_bucket(8, F.col("k")).alias("b8")
+    ).first()
+    assert (moved["b4"], moved["b8"]) == (2, 6)
+
+    spec = _spec(tmp_path)
+    spec.tables[0].n_buckets = old_n
+    write_stream_files(spec.source_dir, CANONICAL_EVENTS, files=1)
+    pipe = Pipeline(spark, spec)
+    pipe.process_available()
+    pipe.stop()
+
+    late = [envelope("u", 10, before=person("carol", "white", 25),
+                     after=person("carol", "black", 26))]
+    with open(pathlib.Path(spec.source_dir) / "late.json", "w") as f:
+        for e in late:
+            f.write(json.dumps(e) + "\n")
+    spec.tables[0].n_buckets = new_n  # same dirs, new bucket count
+    pipe2 = Pipeline(spark, spec)
+    pipe2.process_available()
+    pipe2.stop()
+
+    rows = pipe2.read_table("person").collect()
+    assert sorted(r["firstName"] for r in rows) == sorted(GOLDEN_STATE)
+    expect = dict(GOLDEN_STATE)
+    expect["carol"] = ("carol", "black", 26)
+    assert _state(pipe2) == expect
+    assert set(pipe2.store.bucket_map("person")) <= set(range(new_n))

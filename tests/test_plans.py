@@ -647,30 +647,3 @@ def test_rfm_stacked_ntile_small_inputs(spark, tmp_path):
             .collect()
         }
         assert got == want, (n_cust, got, want)
-
-
-def test_aqe_hints_registry_and_restore(spark):
-    """r11 (VERDICT r10 #7): per-operator AQE hints. Only the measured
-    winners may carry one (the CC/cluster trio — AQE on beat off at
-    sf0.1 AND sf3 AND sf10, tools/ab_aqe_hints.py), and bench.py's
-    apply/restore must leave the session conf untouched for everyone
-    else."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators import (
-        apply_aqe_hint,
-        load_all,
-    )
-
-    reg = load_all()
-    hinted = {n: s.aqe for n, s in reg.items() if s.aqe != "inherit"}
-    assert hinted == {
-        "d96_dup_clusters": "on",
-        "a141_cluster_retention": "on",
-        "a038_semantic_clusters": "on",
-    }
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    p = apply_aqe_hint(spark, reg["d96_dup_clusters"])
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert p == prev
-    spark.conf.set("spark.sql.adaptive.enabled", prev)
-    assert apply_aqe_hint(spark, reg["q01_scan_count"]) is None
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prev

@@ -149,3 +149,32 @@ def test_rebuild_repairs_drift(spark, tmp_path):
     assert sindex.read(spark) is None
     sindex.rebuild(spark, pipe.read_table("docs"))
     assert _index_scores(spark, pipe, ["table", "merge"]) == before
+
+
+def test_layout_change_keeps_indexes(spark, tmp_path):
+    """Switching an indexed table from snapshot to bucketed (None → 4)
+    must carry both indexes over whole: the bucketed update used to read
+    the still-snapshot index as empty, shrinking it to the batch's docs."""
+    from tests.test_dedup_index import _assert_index_equals_recompute
+
+    spec = _spec(tmp_path)
+    spec.tables[0].index_text_col = "text"
+    batch1 = [doc_envelope("c", i, d, t) for i, (d, t) in enumerate(DOCS[:3], 1)]
+    write_stream_files(spec.source_dir, batch1, files=1)
+    pipe = Pipeline(spark, spec)
+    pipe.process_available()
+    pipe.stop()
+
+    with open(f"{spec.source_dir}/b2.json", "w") as f:
+        f.write(json.dumps(doc_envelope("u", 10, 2, "merge table scan")) + "\n")
+    spec_b = _spec(tmp_path, n_buckets=4)  # same dirs, now bucketed
+    spec_b.tables[0].index_text_col = "text"
+    pipe2 = Pipeline(spark, spec_b)
+    pipe2.process_available()
+    pipe2.stop()
+
+    doc_rows = pipe2.search_indexes["docs"].read(spark).filter(F.col("term").isNull())
+    assert doc_rows.count() == 3
+    _assert_matches_recompute(spark, pipe2, ["table", "merge"])
+    assert pipe2.indexes["docs"].read(spark).select("id").distinct().count() == 3
+    _assert_index_equals_recompute(spark, pipe2)
