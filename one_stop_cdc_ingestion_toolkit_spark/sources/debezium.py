@@ -83,6 +83,59 @@ def decode_json(
     return df.select(*cols)
 
 
+def route_envelopes(df: DataFrame) -> DataFrame:
+    """Classify raw ``(key?, value)`` change records in one JSON parse.
+
+    One ``json_tuple`` over the value pulls the top-level routing fields;
+    the nested ``source.table``/``source.db``/``transaction.id`` are read
+    from the small ``source``/``transaction`` texts it returns. Output:
+    ``key, value`` (as strings) plus
+
+    - ``op``, ``table``, ``db``, ``tx_id`` — the envelope's routing fields;
+    - ``ddl`` — a schema-change event (``tableChanges`` present);
+    - ``boundary`` — a transaction BEGIN/END record (``status`` and ``id``
+      present, no ``op``), with its ``status``, ``boundary_id`` and
+      ``event_count``.
+
+    ``json_tuple`` extracts each field exactly as the equivalent
+    ``get_json_object('$.<field>')`` does (``tests/test_routing.py`` holds
+    those predicates as the oracle), except that a duplicated top-level
+    key resolves to its last occurrence, not its first, and a ``source``
+    that is a *string* of JSON text reads as that object — the decode
+    check (``Pipeline``) quarantines such a record as
+    ``missing_source_table``, as the path predicate did.
+    """
+    key = (
+        F.col("key").cast("string")
+        if "key" in df.columns
+        else F.lit(None).cast("string")
+    )
+    fields = ("op", "tableChanges", "source", "transaction", "status", "id",
+              "event_count")
+    parsed = df.select(
+        key.alias("key"),
+        F.col("value").cast("string").alias("value"),
+        F.json_tuple(F.col("value").cast("string"), *fields).alias(*fields),
+    )
+    return parsed.select(
+        "key",
+        "value",
+        "op",
+        F.get_json_object("source", "$.table").alias("table"),
+        F.get_json_object("source", "$.db").alias("db"),
+        F.get_json_object("transaction", "$.id").alias("tx_id"),
+        F.col("tableChanges").isNotNull().alias("ddl"),
+        (
+            F.col("status").isNotNull()
+            & F.col("id").isNotNull()
+            & F.col("op").isNull()
+        ).alias("boundary"),
+        "status",
+        F.col("id").alias("boundary_id"),
+        F.col("event_count").cast("long").alias("event_count"),
+    )
+
+
 def strip_confluent_header(value: Column) -> tuple[Column, Column]:
     """Split a Confluent-wire-format value into (schema_id, avro_payload).
 
@@ -267,6 +320,15 @@ def avro_to_json(
     return df.select(*cols).mapInPandas(batches, out_schema)
 
 
+def change_key(k: str, env: Column | None = None) -> Column:
+    """Key column ``k`` of a change: from the after-image, else (a delete)
+    the before-image — of the envelope struct ``env``, or of top-level
+    ``after``/``before`` columns."""
+    after = F.col("after") if env is None else env["after"]
+    before = F.col("before") if env is None else env["before"]
+    return F.coalesce(after[k], before[k])
+
+
 def flatten_changes(decoded: DataFrame, key_cols: list[str]) -> DataFrame:
     """Project an envelope stream to the merge-ready change shape:
 
@@ -277,10 +339,7 @@ def flatten_changes(decoded: DataFrame, key_cols: list[str]) -> DataFrame:
     re-expressed here as an explicit sort key so at-least-once + reorder
     replay converges to the same state.
     """
-    cols = [
-        F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")).alias(k)
-        for k in key_cols
-    ]
+    cols = [change_key(k).alias(k) for k in key_cols]
     return decoded.select(
         *cols,
         F.col("after").alias("row"),

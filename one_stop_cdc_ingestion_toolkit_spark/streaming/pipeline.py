@@ -7,26 +7,36 @@ checkpoint, driven by ``foreachBatch``:
 
     readStream (file source; Kafka shares the code path — the decode and
     merge stages are source-agnostic)
-      → decode_json (Debezium envelope)
-      → per-table routing (the reference's topic-per-table, A4)
+      → route_envelopes (one parse of the routing fields; the tx gate
+        and the decode share it — the reference's topic-per-table, A4)
+      → decode check (each record by its own table's envelope schema)
       → schema auto-registration + BACKWARD gate   (A10/A11)
       → flatten_changes → apply_changes            (latest-wins merge)
-      → TableStore.write (atomic snapshot swap)
+      → BucketedTableStore.replace_keys (atomic snapshot / bucket swap)
 
 Checkpointing makes replay after restart at-least-once; the merge is
 idempotent (keyed, total-ordered), so end-to-end state is exactly-once.
 
 Scale posture: the only shuffles are keyed (window + anti-join) inside
-each table's merge; decode is a map; routing is a filter per table (one
-pass when tables share a batch, Spark caches the decoded batch).
+each table's merge; routing and decode are maps. A micro-batch costs a
+fixed number of passes whatever its table count — one to classify
+(shared with the tx gate), one to check every table's decode — whose
+facts (DDL and bad-record counts, per-table row counts and touched key
+buckets) are observed metrics of a no-op write that also fills the
+cache, not probe actions. The tables with rows then merge concurrently,
+one thread each (tables linked by a join view share one), so their
+small jobs and the query planning between them overlap on otherwise
+idle cores.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -37,8 +47,10 @@ from one_stop_cdc_ingestion_toolkit_spark.operators.cdc import (
     snapshot,
 )
 from one_stop_cdc_ingestion_toolkit_spark.sources.debezium import (
-    decode_json,
+    change_key,
+    envelope_schema,
     flatten_changes,
+    route_envelopes,
 )
 from one_stop_cdc_ingestion_toolkit_spark.sources.schema_events import (
     apply_schema_changes,
@@ -60,6 +72,8 @@ DLQ_TABLE = "_dlq"
 #: mid-replay; a fresh replay resumes from it (replay is idempotent:
 #: CDC merge dedups per key by sequence, quarantine dedups by value).
 DLQ_REPLAY_TABLE = "_dlq_replay"
+#: Decoded envelope fields a table's merge reads (``flatten_changes``).
+ENVELOPE_FIELDS = ("before", "after", "op", "ts_ms", "source")
 
 
 @dataclass
@@ -190,6 +204,27 @@ RAW_SCHEMA = T.StructType(
 )
 
 
+def _linked_groups(spec: PipelineSpec) -> list[list[int]]:
+    """The declared tables (as indexes) grouped by join-view links: two
+    tables share a group when a view joins them, directly or through
+    other tables. Groups and their members keep declaration order."""
+    names = [t.name for t in spec.tables]
+    group = list(range(len(names)))  # table index -> group leader
+
+    def leader(i: int) -> int:
+        while group[i] != i:
+            i = group[i]
+        return i
+
+    for jv in spec.join_views:
+        a, b = leader(names.index(jv.fact)), leader(names.index(jv.dim))
+        group[max(a, b)] = min(a, b)
+    out: dict[int, list[int]] = {}
+    for i in range(len(names)):
+        out.setdefault(leader(i), []).append(i)
+    return list(out.values())
+
+
 class Pipeline:
     """A running (or startable) CDC ingestion pipeline."""
 
@@ -268,6 +303,8 @@ class Pipeline:
             )
             for jv in spec.join_views
         ]
+        self._groups = _linked_groups(spec)
+        self._check_cache: tuple | None = None
         self.query: StreamingQuery | None = None
 
     # -- batch core (also used directly by tests / backfills) -------------
@@ -275,10 +312,22 @@ class Pipeline:
     def apply_batch(self, raw: DataFrame, batch_id: int | None = None) -> None:
         """Decode + merge one micro-batch of raw (key,value) records.
 
-        The raw batch is persisted once so per-table decodes (each table
-        has its own envelope row schema) re-parse from memory, not from
-        the source; each table's decoded slice is persisted across its
-        isEmpty + merge actions. Thread-safe: the whole batch holds
+        Three steps, each a fixed number of Spark passes whatever the
+        table count:
+
+        1. classify: every record's routing fields are parsed once
+           (``route_envelopes``) into a persisted frame the tx gate and
+           the decode share; DDL events are registered first;
+        2. check: one pass decodes each record with its own table's
+           schema, flags malformed and decode-mismatch records, and
+           observes per-table row counts and touched key buckets;
+        3. merge: the tables with rows merge concurrently, one thread per
+           group of tables linked by a join view (declaration order
+           inside a group); then every bad record goes to ``_dlq`` in one
+           write and one epoch is logged.
+
+        A failure anywhere fails the batch before its epoch is logged, so
+        a replay redoes it. Thread-safe: the whole batch holds
         ``_apply_lock`` (streaming foreachBatch vs concurrent backfill)."""
         with self._apply_lock:
             self._apply_batch_locked(raw, batch_id)
@@ -286,159 +335,273 @@ class Pipeline:
     def _apply_batch_locked(
         self, raw: DataFrame, batch_id: int | None = None
     ) -> None:
-        # persist the SOURCE batch before ANY action: the tx gate below
-        # runs its own actions (boundary collect, buffer writes), and
-        # un-persisted each one re-read the source — the r6 soak's
-        # listener log showed ~2.4x numInputRows per micro-batch.
-        src = raw.persist()
-        raw = src
+        # persisted before ANY action: the tx gate and the check pass both
+        # read it, and un-persisted each action re-read the source (the
+        # r6 soak's listener log showed ~2.4x numInputRows per batch)
+        routed = route_envelopes(raw).persist()
+        checked = None
         try:
-            if self.tx_gate is not None:
-                # transaction atomicity: boundary records are consumed,
-                # open transactions buffered, committed ones released into
-                # THIS batch — so a source transaction lands in one epoch.
-                # Inside the try so the finally's unpersist covers a gate
-                # failure (filter_batch runs actions + buffer-file I/O and
-                # can raise; outside the try both frames leaked).
-                raw = self.tx_gate.filter_batch(src, batch_id).persist()
             # A5: schema-change (DDL) events ride the same stream
             # (``include.schema.changes=true``, the reference's
             # bin/mskc-connector.sh:399). Debezium logs DDL BEFORE the data
             # that uses the new schema, so register first — data later in
-            # this same batch then decodes with the evolved schema. DDL is
-            # rare; the collect is bounded by schema changes per batch,
-            # never data volume.
-            is_ddl = F.get_json_object(F.col("value"), "$.tableChanges").isNotNull()
-            ddl_events = [r[0] for r in raw.filter(is_ddl).select("value").collect()]
-            if ddl_events:
-                self.schema_log.extend(
-                    apply_schema_changes(self.schemas, ddl_events)
+            # this same batch then decodes with the evolved schema.
+            ddl_done = False
+            if self.tx_gate is None:
+                batch = routed
+            else:
+                # transaction atomicity: boundary records are consumed,
+                # open transactions buffered, committed ones released into
+                # THIS batch — so a source transaction lands in one epoch.
+                # The gate's one pass fills the routed cache and also
+                # counts this batch's DDL events.
+                seen = Observation("classify")
+                batch = self.tx_gate.filter_batch(
+                    routed.observe(seen, F.count_if("ddl").alias("ddl")), batch_id
                 )
-            data = raw.filter(~is_ddl)
-            # Debezium log-compaction tombstones (tombstones.on.delete,
-            # default true): a (key, NULL) record after every delete.
-            # No envelope to decode and NOT an error — drop them before
-            # the malformed check, as the Avro path does
-            # (sources/debezium.avro_to_json); quarantining them would
-            # make dlq_rows read nonzero on a perfectly healthy stream.
-            data = data.filter(F.col("value").isNotNull())
-            # Dead-letter quarantine: records that are not parseable
-            # envelopes (broken JSON, missing op/source.table) must not
-            # vanish silently — the reference's only diagnosis is grepping
-            # connector logs for 'error|failed' (A27,
-            # bin/mskc-connector.sh:491-499); the engine materializes the
-            # offending records themselves. Valid envelopes for
-            # undeclared tables are NOT dead letters (include-list
-            # semantics, A3) and are dropped as before.
-            val = F.col("value").cast("string")
-            malformed = (
-                F.get_json_object(val, "$.op").isNull()
-                | F.get_json_object(val, "$.source.table").isNull()
+                if seen.get["ddl"]:
+                    self._register_ddl(batch)
+                    ddl_done = True
+            schemas = [self._decode_schema(t) for t in self.spec.tables]
+            checked, facts = self._check_batch(batch, schemas)
+            if facts["ddl"] and not ddl_done:
+                # DDL found by the check pass itself (no gate, or a DDL
+                # released from the tx buffer): register it, and decode
+                # again if it evolved a table this batch has rows for
+                self._register_ddl(checked)
+                evolved = [self._decode_schema(t) for t in self.spec.tables]
+                if any(
+                    facts[f"n{i}"] and evolved[i] != schemas[i]
+                    for i in range(len(schemas))
+                ):
+                    checked.unpersist()
+                    schemas = evolved
+                    checked, facts = self._check_batch(batch, schemas)
+            self._run_concurrently(
+                [
+                    self._merge_group(group, checked, schemas, facts)
+                    for group in self._groups
+                    if any(facts[f"g{i}"] for i in group)
+                ]
             )
-            bad = data.filter(malformed)
-            if not bad.isEmpty():
-                reason = F.when(
-                    F.get_json_object(val, "$.op").isNull(),
-                    F.lit("not_an_envelope"),
-                ).otherwise(F.lit("missing_source_table"))
-                key = (
-                    F.col("key").cast("string")
-                    if "key" in bad.columns
-                    else F.lit(None).cast("string")
-                )
+            # Dead-letter quarantine: records that are not parseable
+            # envelopes (broken JSON, missing op/source.table) or whose
+            # payload lost data in decoding must not vanish silently — the
+            # reference's only diagnosis is grepping connector logs for
+            # 'error|failed' (A27, bin/mskc-connector.sh:491-499); the
+            # engine materializes the offending records themselves. One
+            # write per batch, after the merges: _quarantine is a
+            # read-modify-write of one table.
+            if facts["bad"]:
                 self._quarantine(
-                    bad.select(
-                        key.alias("key"), val.alias("value"), reason.alias("reason")
+                    checked.filter(F.col("reason").isNotNull()).select(
+                        "key", "value", "reason"
                     )
                 )
-            data = data.filter(~malformed)
-            for tspec in self.spec.tables:
-                # Effective row schema: when the declared schema is already
-                # a registered version, the stream may have evolved past it
-                # (DDL events above) — use the latest version. A declared
-                # schema NOT in the registry is a new user declaration
-                # (redeployed spec) and must itself pass the gate below.
-                # NOTE (ADVICE r10): register() dedups to the EARLIEST
-                # identical version (Confluent semantics), so a genuine
-                # DDL revert A→B→A leaves versions[-1] == B and this
-                # decode path stays pinned to B: the reverted-away column
-                # reads as NULL from then on, and latest() reflects the
-                # widest historical schema, not the active writer's.
-                # That is BACKWARD-safe (B ⊇ A under the gate below, so
-                # every A-shaped payload decodes losslessly) and matches
-                # Confluent Schema Registry, which also returns the
-                # earliest id on re-register. If revert-following decode
-                # is ever wanted, track the active schema from the most
-                # recent successful register() call instead of
-                # versions[-1] — deliberately not done: flip-flopping
-                # writers would churn the decode schema per batch.
-                versions = self.schemas.versions(tspec.name)
-                if versions and tspec.row_schema in versions:
-                    row_schema = versions[-1]
-                else:
-                    row_schema = tspec.row_schema
-                decoded = decode_json(data, row_schema, keep_raw=True)
-                if self.spec.database_include:
-                    # database.include.list (A3): restrict captured schemas
-                    decoded = decoded.filter(
-                        F.col("source.db").isin(self.spec.database_include)
-                    )
-                mine = decoded.filter(F.col("source.table") == tspec.name).persist()
-                try:
-                    if mine.isEmpty():
-                        continue
-                    # Decode-mismatch quarantine: a payload field that is
-                    # NULL after from_json but present in the raw JSON was
-                    # silently dropped by PERMISSIVE parsing (type drift —
-                    # e.g. upstream widened int→string ahead of the DDL
-                    # event). Without this the merge writes a null over
-                    # real data; with it the record waits in _dlq until
-                    # the schema evolves, then replay_dlq() re-decodes it.
-                    bad_decode = self._decode_mismatch(row_schema)
-                    ok = mine
-                    badd = mine.filter(bad_decode)
-                    if not badd.isEmpty():
-                        self._quarantine(
-                            badd.select(
-                                F.col("key"),
-                                F.col("_raw").alias("value"),
-                                F.lit("decode_mismatch").alias("reason"),
-                            )
-                        )
-                        ok = mine.filter(~bad_decode)
-                        if ok.isEmpty():
-                            continue
-                    # schema auto-registration + BACKWARD gate (A10/A11):
-                    # no-op when row_schema is already the latest version.
-                    self.schemas.register(tspec.name, row_schema)
-                    changes = flatten_changes(ok, tspec.key_cols)
-                    # keyed merge: only the touched buckets of a bucketed
-                    # table are read and rewritten; the bucket list is
-                    # collected once and reused by index/view upkeep
-                    current, buckets = self._read_keys(tspec, changes)
-                    merged = apply_changes(current, changes, tspec.key_cols)
-                    delta = self._view_delta(tspec, current, merged, changes)
-                    self.store.replace_keys(
-                        merged, tspec.name, tspec.key_cols, tspec.n_buckets, buckets
-                    )
-                    self._apply_view(tspec, delta)
-                    self._update_index(tspec, changes, buckets)
-                    self._update_join_views(tspec, changes, buckets)
-                finally:
-                    mine.unpersist()
             # Consistency point: every declared table has now absorbed
             # this batch — record one epoch over their current pointer
             # seqs so read_epoch() can serve a cross-table-consistent
             # view (and, with snapshot_retain > 0, any past batch).
             self.store.log_epoch([t.name for t in self.spec.tables])
         finally:
-            raw.unpersist()
-            if raw is not src:
-                src.unpersist()
+            if checked is not None:
+                checked.unpersist()
+            routed.unpersist()
 
-    def _decode_mismatch(self, row_schema) -> F.Column:
-        """Predicate over decoded envelope rows (with ``_raw``): true when
-        the after/before payload lost data in PERMISSIVE parsing.
+    def _register_ddl(self, batch: DataFrame) -> None:
+        """Register the batch's schema-change events, in source order (the
+        collect is bounded by schema changes per batch, never data
+        volume)."""
+        events = [r[0] for r in batch.filter("ddl").select("value").collect()]
+        self.schema_log.extend(apply_schema_changes(self.schemas, events))
+
+    def _decode_schema(self, tspec: TableSpec) -> T.StructType:
+        """Effective row schema: when the declared schema is already a
+        registered version, the stream may have evolved past it (DDL
+        events) — use the latest version. A declared schema NOT in the
+        registry is a new user declaration (redeployed spec) and must
+        itself pass the registry's gate at merge time.
+
+        NOTE (ADVICE r10): register() dedups to the EARLIEST identical
+        version (Confluent semantics), so a genuine DDL revert A→B→A
+        leaves versions[-1] == B and decode stays pinned to B: the
+        reverted-away column reads as NULL from then on, and latest()
+        reflects the widest historical schema, not the active writer's.
+        That is BACKWARD-safe (B ⊇ A under the gate, so every A-shaped
+        payload decodes losslessly) and matches Confluent Schema
+        Registry, which also returns the earliest id on re-register. If
+        revert-following decode is ever wanted, track the active schema
+        from the most recent successful register() call instead of
+        versions[-1] — deliberately not done: flip-flopping writers
+        would churn the decode schema per batch."""
+        versions = self.schemas.versions(tspec.name)
+        if versions and tspec.row_schema in versions:
+            return versions[-1]
+        return tspec.row_schema
+
+    def _check_batch(
+        self, batch: DataFrame, schemas: list[T.StructType]
+    ) -> tuple[DataFrame, dict]:
+        """Decode every record with its own table's schema, in one pass.
+
+        Returns the persisted frame — ``key, value, ddl, reason`` and, per
+        declared table i, its decoded envelope ``__env<i>`` (null on
+        other tables' rows) — and the facts observed while filling it:
+        ``ddl`` and ``bad`` counts, and per table ``n<i>`` (rows routed
+        to it), ``g<i>`` (rows to merge) and, where the store prunes
+        reads by key bucket, ``b<i>`` (their buckets).
+
+        ``reason`` is null on a good row, else the DLQ reason:
+        ``not_an_envelope`` (no ``op``), ``missing_source_table``, or
+        ``decode_mismatch`` (see :meth:`_decode_mismatch`). Debezium
+        log-compaction tombstones — (key, NULL) records after a delete —
+        have no envelope and are NOT errors: they get no reason and no
+        table, as on the Avro path (``sources/debezium.avro_to_json``).
+        Valid envelopes for undeclared tables, or outside
+        ``database_include`` (A3), are dropped the same way."""
+        envs, reason, metrics = self._check_columns(schemas)
+        checked = (
+            batch.select("key", "value", "ddl", "op", "table", *envs)
+            .select(
+                "key", "value", "ddl", reason.alias("reason"),
+                *[f"__env{i}" for i in range(len(envs))],
+            )
+            .persist()
+        )
+        good_rows = F.col("reason").isNull()
+        for i, t in enumerate(self.spec.tables):
+            env = F.col(f"__env{i}")
+            bucket = self.store.bucket_of(
+                t.name, [change_key(k, env) for k in t.key_cols], t.n_buckets
+            )
+            if bucket is not None:
+                good = env.isNotNull() & good_rows
+                metrics = metrics + [
+                    F.collect_set(F.when(good, bucket)).alias(f"b{i}")
+                ]
+        seen = Observation("decode check")
+        checked.observe(seen, *metrics).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        return checked, seen.get
+
+    def _check_columns(self, schemas: list[T.StructType]) -> tuple:
+        """(envelope columns, reason column, metric columns) of the check
+        pass for these decode schemas. Built once per schema set and
+        reused: the decode-mismatch predicates alone are ~1k py4j calls,
+        a Python-side cost every batch would otherwise pay."""
+        if self._check_cache is not None and self._check_cache[0] == schemas:
+            return self._check_cache[1]
+        tables = list(zip(self.spec.tables, schemas))
+        live = ~F.col("ddl") & F.col("value").isNotNull()
+        envelope = live & F.col("op").isNotNull() & F.col("table").isNotNull()
+        if self.spec.database_include:
+            envelope = envelope & F.col("db").isin(self.spec.database_include)
+        envs = [
+            F.when(
+                envelope & (F.col("table") == t.name),
+                F.from_json("value", envelope_schema(schema)),
+            ).alias(f"__env{i}")
+            for i, (t, schema) in enumerate(tables)
+        ]
+        reason = F.when(live & F.col("op").isNull(), "not_an_envelope").when(
+            live & F.col("table").isNull(), "missing_source_table"
+        )
+        for i, (t, schema) in enumerate(tables):
+            env = F.col(f"__env{i}")
+            reason = reason.when(
+                env.isNotNull() & ~env["source"]["table"].eqNullSafe(t.name),
+                "missing_source_table",
+            ).when(
+                env.isNotNull() & self._decode_mismatch(env, schema),
+                "decode_mismatch",
+            )
+        bad = F.col("reason").isNotNull()
+        metrics = [F.count_if("ddl").alias("ddl"), F.count_if(bad).alias("bad")]
+        for i in range(len(tables)):
+            env = F.col(f"__env{i}")
+            metrics += [
+                F.count_if(env.isNotNull()).alias(f"n{i}"),
+                F.count_if(env.isNotNull() & ~bad).alias(f"g{i}"),
+            ]
+        self._check_cache = (list(schemas), (envs, reason, metrics))
+        return envs, reason, metrics
+
+    def _merge_group(
+        self, group: list[int], checked: DataFrame, schemas: list, facts: dict
+    ):
+        """The merge work of one group of tables (indexes into the
+        declared tables, declaration order), as a callable."""
+
+        def run() -> None:
+            for i in group:
+                if not facts[f"g{i}"]:
+                    continue
+                env = F.col(f"__env{i}")
+                rows = checked.filter(
+                    env.isNotNull() & F.col("reason").isNull()
+                ).select(
+                    "key", *[env[c].alias(c) for c in ENVELOPE_FIELDS]
+                )
+                buckets = facts.get(f"b{i}")
+                self._merge_table(
+                    self.spec.tables[i],
+                    rows,
+                    schemas[i],
+                    None if buckets is None else sorted(buckets),
+                )
+
+        return run
+
+    def _merge_table(
+        self,
+        tspec: TableSpec,
+        rows: DataFrame,
+        row_schema: T.StructType,
+        buckets: list[int] | None,
+    ) -> None:
+        """Merge one table's decoded envelope rows into its state, then
+        maintain its views and indexes. ``buckets``: the touched key
+        buckets, when the store prunes this table's reads by bucket."""
+        # schema auto-registration + BACKWARD gate (A10/A11):
+        # no-op when row_schema is already the latest version.
+        self.schemas.register(tspec.name, row_schema)
+        changes = flatten_changes(rows, tspec.key_cols)
+        # keyed merge: only the touched buckets of a bucketed table are
+        # read and rewritten; the bucket list is reused by index/view upkeep
+        current, buckets = self._read_keys(tspec, changes, buckets)
+        merged = apply_changes(current, changes, tspec.key_cols)
+        delta = self._view_delta(tspec, current, merged, changes)
+        self.store.replace_keys(
+            merged, tspec.name, tspec.key_cols, tspec.n_buckets, buckets
+        )
+        self._apply_view(tspec, delta)
+        self._update_index(tspec, changes, buckets)
+        self._update_join_views(tspec, changes, buckets)
+
+    def _run_concurrently(self, tasks: list) -> None:
+        """Run the tasks in threads of their own (inline when there is one)
+        and wait for all of them; then re-raise the first failure. The
+        threads inherit the caller's Spark local properties (job group,
+        description) and job tags."""
+        if len(tasks) <= 1:
+            for task in tasks:
+                task()
+            return
+        inherit = inheritable_thread_target(self.spark)
+        with ThreadPoolExecutor(len(tasks)) as pool:
+            futures = [pool.submit(inherit(t)) for t in tasks]
+        for f in futures:
+            if f.exception() is not None:
+                raise f.exception()
+
+    def _decode_mismatch(self, env: Column, row_schema: T.StructType) -> Column:
+        """Predicate over a decoded envelope column and the raw ``value``:
+        true when the after/before payload lost data in PERMISSIVE
+        parsing (type drift — e.g. upstream widened int→string ahead of
+        the DDL event). Without this the merge writes a null over real
+        data; with it the record waits in _dlq until the schema evolves,
+        then replay_dlq() re-decodes it.
 
         A side is bad when its raw JSON is present but either (a) it is
         not an object (map parse fails), or (b) some schema field decoded
@@ -447,11 +610,11 @@ class Pipeline:
         columns are legitimate; adding them is what BACKWARD evolution
         allows)."""
 
-        def side_bad(side: str) -> F.Column:
-            raw = F.get_json_object(F.col("_raw"), f"$.{side}")
+        def side_bad(side: str) -> Column:
+            raw = F.get_json_object(F.col("value"), f"$.{side}")
             m = F.from_json(raw, "map<string,string>")
             dropped = [
-                F.col(side).getField(f).isNull() & m.getItem(f).isNotNull()
+                env[side].getField(f).isNull() & m.getItem(f).isNotNull()
                 for f in row_schema.fieldNames()
             ]
             any_dropped = dropped[0]

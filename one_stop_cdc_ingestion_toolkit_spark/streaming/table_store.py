@@ -98,7 +98,7 @@ def key_bucket(n_buckets: int, *cols) -> Column:
     Bucket pruning is only correct because every read and write of a
     bucketed table agrees on this exact function; a drifted copy would
     silently mis-prune buckets and drop rows from reads (review r7).
-    Only :class:`BucketedTableStore` calls it (``read_keys`` /
+    Only :class:`BucketedTableStore` calls it (``bucket_of`` /
     ``replace_keys``); tests use it to build bucketed frames by hand."""
     from pyspark.sql import functions as F
 
@@ -420,12 +420,27 @@ class BucketedTableStore(TableStore):
         layout, ``keys=None``, or a stored layout that differs from the
         requested one — the whole table is read and the bucket list is
         None, which makes replace_keys rewrite the whole table."""
-        if keys is None or not n_buckets or self._bucket_count(table) != n_buckets:
+        bucket = None if keys is None else self.bucket_of(table, key_cols, n_buckets)
+        if bucket is None:
             return self.read(spark, table), None
         if buckets is None:
-            b = key_bucket(n_buckets, *key_cols).alias("__b")
-            buckets = sorted(r[0] for r in keys.select(b).distinct().collect())
+            buckets = sorted(
+                r[0] for r in keys.select(bucket.alias("__b")).distinct().collect()
+            )
         return self.read_buckets(spark, table, buckets), buckets
+
+    def bucket_of(
+        self, table: str, key_cols: list, n_buckets: int | None
+    ) -> Column | None:
+        """The bucket of each key, over key columns (names or Columns of
+        the key types) — what :meth:`read_keys` prunes by; None when it
+        would read the whole table instead (snapshot layout, or a stored
+        layout that differs from the requested one). A caller that
+        computes the distinct buckets of a batch's keys in a pass of its
+        own hands them to ``read_keys`` as ``buckets``."""
+        if not n_buckets or self._bucket_count(table) != n_buckets:
+            return None
+        return key_bucket(n_buckets, *key_cols)
 
     def replace_keys(
         self,

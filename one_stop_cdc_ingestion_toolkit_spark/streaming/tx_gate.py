@@ -60,9 +60,11 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from one_stop_cdc_ingestion_toolkit_spark.sources.debezium import route_envelopes
 
 BUFFER_SCHEMA = T.StructType(
     [
@@ -187,8 +189,13 @@ class TxGate:
     ) -> DataFrame:
         """One micro-batch in → the records the apply path may see now.
 
-        Splits ``raw`` into boundary records (consumed here), tx-tagged
-        data (buffered), and plain data (passes through). Returns plain
+        ``raw`` is raw ``(key, value)`` records or, from the pipeline,
+        the same records already classified by
+        :func:`~one_stop_cdc_ingestion_toolkit_spark.sources.debezium.route_envelopes`
+        (then nothing is parsed again); the return carries the routing
+        columns either way. Splits the batch into boundary records
+        (consumed here), tx-tagged data (buffered, as raw ``(key,
+        value)``), and plain data (passes through). Returns plain
         data UNIONed with every buffered record of transactions that
         are now provably committed. ``batch_id`` is the foreachBatch
         epoch — the replay detector; direct (non-streaming) callers get
@@ -243,102 +250,91 @@ class TxGate:
                     buf0.filter(~F.col("tx_id").isin(sorted(closed)))
                 )
 
-        val = F.col("value").cast("string")
-        tx_id = F.get_json_object(val, "$.transaction.id")
-        is_boundary = (
-            F.get_json_object(val, "$.status").isNotNull()
-            & F.get_json_object(val, "$.id").isNotNull()
-            & F.get_json_object(val, "$.op").isNull()
+        # 1. one pass over the routed batch: the END boundaries (bounded
+        # by tx ends per batch) and whether any OPEN-tx data needs
+        # buffering come back as observed metrics of a no-op write — it
+        # also fills the caller's cache of the batch, and any observation
+        # the caller put on ``raw`` fires in the same pass
+        batch = raw if "boundary" in raw.columns else route_envelopes(raw)
+        in_closed = (
+            F.col("tx_id").isin(sorted(closed)) if closed else F.lit(False)
         )
-        raw = raw.select(
-            F.col("key").cast("string").alias("key"), val.alias("value")
-        ).persist()
-        try:
-            # 1. consume boundaries (bounded by tx ends per batch)
-            ends = (
-                raw.filter(is_boundary)
-                .select(
-                    F.get_json_object(val, "$.status").alias("status"),
-                    F.get_json_object(val, "$.id").alias("id"),
-                    F.get_json_object(val, "$.event_count")
-                    .cast("long")
-                    .alias("event_count"),
-                )
-                .filter(F.col("status") == "END")
+        is_open = ~F.col("boundary") & F.col("tx_id").isNotNull() & ~in_closed
+        end = F.when(
+            F.col("boundary") & (F.col("status") == "END"),
+            F.struct("boundary_id", "event_count"),
+        )
+        seen = Observation("tx_gate")
+        batch.observe(
+            seen,
+            F.collect_list(end).alias("ends"),
+            F.count_if(is_open).alias("open"),
+        ).write.format("noop").mode("overwrite").save()
+        facts = seen.get
+        # collect_list has no order: sort so a tx whose END arrives twice
+        # in one batch with different counts resolves the same way on
+        # every run (the larger count wins; a redelivered END is the same
+        # record, so this only matters for a malformed source)
+        ends = sorted(facts["ends"], key=lambda r: (r[0], r[1] is not None, r[1]))
+        for tx, count in ends:
+            if tx not in closed:  # redelivered END: ignore
+                state["ended"][tx] = count
+
+        # 2. buffer OPEN-tx data; rows of already-released/tombstoned
+        # transactions pass straight through to the idempotent merge
+        # (advisory: re-buffering them would strand them forever)
+        if facts["open"]:
+            self._append_buffer(
+                batch.filter(is_open).select("key", "value", "tx_id")
+            )
+        passthrough = batch.filter(
+            ~F.col("boundary") & (F.col("tx_id").isNull() | in_closed)
+        )
+
+        # 3. release committed transactions
+        if state["ended"]:
+            buf = self._read_buffer().distinct()
+            counts = {
+                r["tx_id"]: r["n"]
+                for r in buf.groupBy("tx_id")
+                .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
-            )
-            for r in ends:
-                if r["id"] not in closed:  # redelivered END: ignore
-                    state["ended"][r["id"]] = r["event_count"]
-
-            # 2. buffer OPEN-tx data; rows of already-released/tombstoned
-            # transactions pass straight through to the idempotent merge
-            # (advisory: re-buffering them would strand them forever)
-            data = raw.filter(~is_boundary)
-            tagged = data.filter(tx_id.isNotNull()).select(
-                "key", "value", tx_id.alias("tx_id")
-            )
-            stragglers = (
-                tagged.filter(F.col("tx_id").isin(sorted(closed)))
-                .select("key", "value")
-                if closed
-                else None
-            )
-            open_tagged = (
-                tagged.filter(~F.col("tx_id").isin(sorted(closed)))
-                if closed
-                else tagged
-            )
-            if not open_tagged.isEmpty():
-                self._append_buffer(open_tagged)
-            passthrough = data.filter(tx_id.isNull())
-            if stragglers is not None:
-                passthrough = passthrough.unionByName(stragglers)
-
-            # 3. release committed transactions
-            if state["ended"]:
-                buf = self._read_buffer().distinct()
-                counts = {
-                    r["tx_id"]: r["n"]
-                    for r in buf.groupBy("tx_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                release = [
-                    t
-                    for t, need in state["ended"].items()
-                    if t in counts and (need is None or counts[t] >= need)
-                ]
-                if release:
-                    # stage per-tx BEFORE the buffer swap invalidates
-                    # lineage; the staged dirs + released markers are
-                    # what make a post-release crash replayable
-                    for t in release:
-                        buf.filter(F.col("tx_id") == t).select(
-                            "key", "value"
-                        ).write.mode("overwrite").parquet(self._staged_dir(t))
-                        state["released"][t] = {"batch": eb, "mode": mode}
-                        del state["ended"][t]
-                    self._save_state(state)
-                    self._rewrite_buffer(
-                        buf.filter(~F.col("tx_id").isin(release))
-                    )
-
-            # 4. emit staged rows for every tx released IN THIS batch —
-            # covers fresh releases and the replay-after-crash case
-            # (the released marker survives until a later same-mode
-            # batch GCs it)
-            emit = [
+            }
+            release = [
                 t
-                for t, rb in state["released"].items()
-                if rb["mode"] == mode and rb["batch"] == eb
+                for t, need in state["ended"].items()
+                if t in counts and (need is None or counts[t] >= need)
             ]
-            self._save_state(state)
-            if emit:
-                return passthrough.unionByName(self._read_staged(emit))
-            return passthrough
-        finally:
-            raw.unpersist()
+            if release:
+                # stage per-tx BEFORE the buffer swap invalidates
+                # lineage; the staged dirs + released markers are
+                # what make a post-release crash replayable
+                for t in release:
+                    buf.filter(F.col("tx_id") == t).select(
+                        "key", "value"
+                    ).write.mode("overwrite").parquet(self._staged_dir(t))
+                    state["released"][t] = {"batch": eb, "mode": mode}
+                    del state["ended"][t]
+                self._save_state(state)
+                self._rewrite_buffer(
+                    buf.filter(~F.col("tx_id").isin(release))
+                )
+
+        # 4. emit staged rows for every tx released IN THIS batch —
+        # covers fresh releases and the replay-after-crash case
+        # (the released marker survives until a later same-mode
+        # batch GCs it)
+        emit = [
+            t
+            for t, rb in state["released"].items()
+            if rb["mode"] == mode and rb["batch"] == eb
+        ]
+        self._save_state(state)
+        if emit:
+            return passthrough.unionByName(
+                route_envelopes(self._read_staged(emit))
+            )
+        return passthrough
 
     def pending(self) -> dict:
         """Observability: open transaction ids → buffered record count.

@@ -209,3 +209,58 @@ def test_remove_drop_data_cascades_everything(spark, tmp_path):
     # recreate on the same sink_dir: clean start, no stale registry
     pipe2 = Pipeline(spark, spec)
     assert pipe2.schemas.list_subjects() == []
+
+
+def test_decode_mismatch_in_two_tables_one_dlq_write(spark, tmp_path):
+    """One batch with decode-mismatch rows in two tables (merged
+    concurrently): every bad row of both lands in _dlq exactly once with
+    reason decode_mismatch, in ONE write of the DLQ table — a per-table
+    read-modify-write of _dlq running in each table's thread could lose
+    the other table's rows."""
+    from pyspark.sql import types as T
+
+    pet_schema = T.StructType(
+        [
+            T.StructField("name", T.StringType(), True),
+            T.StructField("legs", T.IntegerType(), True),
+        ]
+    )
+
+    def pet(pos: int, name: str, legs) -> dict:
+        return {
+            "key": name,
+            "value": json.dumps(
+                {
+                    "before": None,
+                    "after": {"name": name, "legs": legs},
+                    "op": "c",
+                    "ts_ms": 1_700_000_000_000 + pos,
+                    "source": {"db": "cdc_test_db", "table": "pet", "pos": pos,
+                               "server_id": 1},
+                }
+            ),
+        }
+
+    spec = _spec(tmp_path)
+    spec.tables.append(TableSpec("pet", ["name"], pet_schema))
+    bad_person = _mismatch_record()
+    bad_pets = [pet(101, "rex", "four"), pet(102, "tom", "many")]
+    write_stream_files(
+        spec.source_dir,
+        CANONICAL_EVENTS + [bad_person, pet(100, "fido", 4)] + bad_pets,
+    )
+    pipe = Pipeline(spark, spec)
+    pipe.process_available()
+    pipe.stop()
+
+    assert _state(pipe.read_table("person")) == GOLDEN_STATE
+    assert {r["name"]: r["legs"] for r in pipe.read_table("pet").collect()} == {
+        "fido": 4
+    }
+    dlq = [(r["key"], r["reason"]) for r in pipe.read_dlq().collect()]
+    assert sorted(dlq) == [
+        ("eve", "decode_mismatch"),
+        ("rex", "decode_mismatch"),
+        ("tom", "decode_mismatch"),
+    ]
+    assert len(pipe.store.history("_dlq")) == 1

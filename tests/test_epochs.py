@@ -125,3 +125,90 @@ def test_cli_epochs_and_sql_at_epoch(spark, tmp_path, capsys):
     )
     out = capsys.readouterr().out
     assert rc == 0 and "1" in out
+
+
+def test_failed_table_fails_batch_without_epoch(spark, tmp_path, monkeypatch):
+    """The two tables of one batch merge concurrently; when one table's
+    merge fails, the batch fails after the other has finished, no epoch
+    is logged, and re-applying the batch converges."""
+    pipe = Pipeline(spark, _spec(tmp_path, retain=0))
+    rows = [
+        _env("person", "c", 1, {"firstName": "alice", "age": 30}),
+        _env("account", "c", 2, {"accId": "a1", "balance": 100}),
+    ]
+    merge = Pipeline._merge_table
+
+    def failing(self, tspec, *args):
+        if tspec.name == "account":
+            raise RuntimeError("account merge failed")
+        return merge(self, tspec, *args)
+
+    monkeypatch.setattr(Pipeline, "_merge_table", failing)
+    with pytest.raises(RuntimeError, match="account merge failed"):
+        _apply(spark, pipe, rows)
+    assert pipe.store.epochs() == []
+    assert pipe.read_table("person").count() == 1
+    assert pipe.read_table("account") is None
+
+    monkeypatch.setattr(Pipeline, "_merge_table", merge)
+    _apply(spark, pipe, rows)
+    assert [e["epoch"] for e in pipe.store.epochs()] == [0]
+    assert pipe.read_table("person").count() == 1
+    assert pipe.read_table("account").collect()[0]["balance"] == 100
+
+
+def test_more_tables_than_cores_merge_concurrently(spark, tmp_path):
+    """Stress: one batch touching more tables than there are cores runs
+    one merge thread per table, with a short thread switch interval. Each
+    table must hold exactly its own rows, and the one epoch must name
+    every table (a lost or crossed update would break either)."""
+    import os
+    import sys
+    import threading
+
+    n_tables = (os.cpu_count() or 4) + 2
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), True),
+            T.StructField("v", T.IntegerType(), True),
+        ]
+    )
+    names = [f"t{i}" for i in range(n_tables)]
+    spec = PipelineSpec(
+        name="many",
+        source_dir=str(tmp_path / "stream"),
+        tables=[
+            TableSpec(n, ["k"], schema, n_buckets=4 if i % 2 else None)
+            for i, n in enumerate(names)
+        ],
+        sink_dir=str(tmp_path / "lake"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    pipe = Pipeline(spark, spec)
+    rows = [
+        _env(n, "c", 10 * i + j, {"k": f"{n}-{j}", "v": i})
+        for i, n in enumerate(names)
+        for j in range(3)
+    ]
+    errors = []
+
+    def run():
+        try:
+            _apply(spark, pipe, rows)
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        worker = threading.Thread(target=run)
+        worker.start()
+        worker.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not worker.is_alive() and errors == []
+    for i, n in enumerate(names):
+        got = {(r["k"], r["v"]) for r in pipe.read_table(n).collect()}
+        assert got == {(f"{n}-{j}", i) for j in range(3)}, n
+    (epoch,) = pipe.store.epochs()
+    assert sorted(epoch["tables"]) == sorted(names)

@@ -113,3 +113,43 @@ def test_incompatible_ddl_is_recorded_not_fatal(spark, tmp_path):
     assert table == "person" and version is None and "ssn" in err
     rows = {r["firstName"] for r in pipe.read_table("person").collect()}
     assert "frank" in rows
+
+
+def test_two_ddl_events_in_one_batch_register_in_source_order(spark, tmp_path):
+    """One batch carries two ALTERs for the same table (v2 adds email,
+    v3 adds phone) and then data using both columns: they register as
+    v2 then v3, and the rows after them decode with v3. Registered in
+    the other order, v3 would be followed by an email-only v2 and the
+    phone values would be dropped to the DLQ as decode mismatches."""
+    import json
+
+    spec = _spec(tmp_path)
+    pipe = Pipeline(spark, spec)
+    write_stream_files(spec.source_dir, CANONICAL_EVENTS, files=1)
+    pipe.process_available()
+
+    v2 = BASE_COLS + [("email", "VARCHAR", True)]
+    v3 = v2 + [("phone", "VARCHAR", True)]
+    batch2 = [
+        schema_change_event(v2, ddl="ALTER TABLE person ADD COLUMN email varchar(64)"),
+        schema_change_event(v3, ddl="ALTER TABLE person ADD COLUMN phone varchar(16)"),
+        envelope(
+            "c", 10,
+            after={"firstName": "eve", "lastName": "black", "age": 28,
+                   "email": "eve@x.io", "phone": "555-0100"},
+        ),
+    ]
+    with open(f"{spec.source_dir}/batch-0100.json", "w") as f:
+        for e in batch2:
+            f.write(json.dumps(e) + "\n")
+    pipe.process_available()
+    pipe.stop()
+
+    assert pipe.schema_log[-2:] == [("person", 2, None), ("person", 3, None)]
+    versions = pipe.schemas.versions("person")
+    assert [v.fieldNames()[-1] for v in versions[1:]] == ["email", "phone"]
+    assert pipe.read_dlq() is None
+    rows = {r["firstName"]: r for r in pipe.read_table("person").collect()}
+    assert rows["eve"]["email"] == "eve@x.io"
+    assert rows["eve"]["phone"] == "555-0100"
+    assert rows["carol"]["phone"] is None
