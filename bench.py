@@ -19,31 +19,20 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entry_mod  # noqa: E402
 from one_stop_cdc_ingestion_toolkit_spark.operators import release_caches  # noqa: E402
 from one_stop_cdc_ingestion_toolkit_spark.session import get_session  # noqa: E402
-
-
-def _burn(_arg: int) -> float:
-    # Module-level so mp.Pool can pickle it (a nested function raised
-    # AttributeError and the probe silently reported null in r5).
-    t0 = time.time()
-    x = 0
-    for i in range(5_000_000):
-        x += i
-    return time.time() - t0
+from perfbench.run import host_marker  # noqa: E402
+from tools.probe import scale_settings  # noqa: E402
 
 
 def _host_spread() -> float | None:
-    """Per-core CPU-steal probe: max/min wall time of an identical burn
-    loop across 32 processes. ~1 s total. This host shows intermittent
-    steal that inflates Spark totals up to ±50% between sittings while
-    DuckDB stays flat (PARITY.md host-noise note) — reporting the spread
-    alongside the timings lets a reader discount a noisy run: ≤1.4 is a
-    clean window, ≥2 means the totals are not comparable across runs."""
+    """Host-noise marker: max/min wall time of one fixed loop run at the
+    same time on every core this process may use (perfbench/run.py's
+    ``host_marker``). This host shows intermittent steal that inflates
+    Spark totals up to ±50% between sittings while DuckDB stays flat
+    (PARITY.md host-noise note) — reporting the spread alongside the
+    timings lets a reader discount a noisy run: ≤1.4 is a clean window,
+    ≥2 means the totals are not comparable across runs."""
     try:
-        import multiprocessing as mp
-
-        with mp.Pool(32) as pool:
-            ts = pool.map(_burn, range(32))
-        return round(max(ts) / min(ts), 2)
+        return round(host_marker(len(os.sched_getaffinity(0)))["max_over_min"], 2)
     except Exception as exc:  # noqa: BLE001 — a probe must never kill the bench
         print(f"host_spread probe failed: {type(exc).__name__}: {exc}", file=sys.stderr)
         return None
@@ -109,27 +98,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spread = _host_spread()
-    # Size shuffle partitions to the DATA, not the core count: at bench
-    # scale (<=sf0.1, a few MB of shuffle) 32 tasks are pure scheduling
-    # overhead — 8 is ~40% faster wall-clock. ONLY at that contract
-    # scale, though (r11, VERDICT r10 #3): pinning 8 at every sf capped
-    # every shuffle stage at 8 tasks, so the driver's 8-vs-32-core
-    # scaling block could never separate "parallelizes" from "serial".
-    # Above sf0.1 the env stays unset and session.py sizes shuffle
-    # partitions to the core count — scale-adaptive, and the sf0.1
-    # contract path is byte-identical to every prior round.
-    try:
-        _sf_f = float(sf)
-    except ValueError:
-        _sf_f = 0.1
-    if _sf_f <= 0.1:
-        os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
-    # AQE's query-stage materialization adds ~0.1s of re-planning per
-    # shuffle stage — pure overhead when a whole shuffle is a few MB. At
-    # bench scale (<= sf0.1) turn it off; at real scale AQE is back on by
-    # default (session.py) where coalescing/skew-splitting pay for
-    # themselves. Override with SPARK_GRAFT_AQE=true to measure with AQE.
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
+    scale_settings(sf_dir)
     spark = get_session("bench")
 
     queries = entry_mod.queries()

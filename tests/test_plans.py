@@ -493,7 +493,7 @@ def test_exchange_count_budgets(spark):
         # the gram explode (~all of c88's wall) ran on ONE input split
         # before; interleaved A/B 1.16 -> 0.62 s at sf0.1
         "c88_decontaminate": 4,
-        # r9 weak-four floors (tools/weak4_stages.py decomposition):
+        # r9 weak-four floors (stage decomposition in BASELINE.md):
         # a106/a107's wall is the tokenize scan(s) + broadcast stats —
         # ONE exchange total (the top-k presentation sort); a138's is
         # ~entirely the shared minhash stage (islands+join ≈ 0.05 s),

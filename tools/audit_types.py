@@ -4,8 +4,9 @@ Flags any Spark DECIMAL output and any DuckDB DECIMAL/HUGEINT/INT128 output,
 plus pandas-dtype mismatches between the two sides — the exact class of
 divergence that breaks the driver's value hash (r1: q13/q45/q47).
 """
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as entry_mod
 from one_stop_cdc_ingestion_toolkit_spark.catalog import TABLES

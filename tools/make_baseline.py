@@ -10,12 +10,13 @@ Usage: python tools/make_baseline.py BENCH_JSON [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from one_stop_cdc_ingestion_toolkit_spark.catalog import TABLES  # noqa: E402

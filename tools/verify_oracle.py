@@ -7,15 +7,17 @@ order-insensitive value hash (columns sorted by name, cells normalized).
 Usage: python tools/verify_oracle.py [sf_dir] [query_name ...]
        python tools/verify_oracle.py [sf_dir] --window
 (--window replays exactly the driver's correctness slice: the first 50
-names in sorted registry order.)
+names in sorted registry order. A name that is not an exact registry
+name selects every query it prefixes, e.g. ``a11`` for a110-a119.)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from one_stop_cdc_ingestion_toolkit_spark.catalog import TABLES  # noqa: E402
@@ -33,20 +35,23 @@ def main() -> int:
     # sf_dir is positional-optional: only consume argv[0] as a directory
     # when it IS one — a bare query name used to be misparsed as the
     # data dir and ALL queries ran against a nonexistent path (review r7)
-    import os
-
     if argv and os.path.isdir(argv[0]):
         sf_dir, names = argv[0], argv[1:]
     else:
         sf_dir, names = "/root/testdata/sf0.01", argv
     queries = entry_mod.queries()
-    unknown = [n for n in names if n not in queries]
+    only: set[str] = set()
+    unknown = []
+    for n in names:
+        hits = [n] if n in queries else [q for q in queries if q.startswith(n)]
+        only.update(hits)
+        if not hits:
+            unknown.append(n)
     if unknown:
         # a typo'd name silently matching nothing made the gate report
         # '0 passed, 0 failed' and exit 0 — a false green (review r7)
         print(f"unknown query name(s): {unknown}", file=sys.stderr)
         return 2
-    only = set(names)
     if window:
         only |= set(sorted(queries)[:50])
     spark = get_session("verify-oracle")
