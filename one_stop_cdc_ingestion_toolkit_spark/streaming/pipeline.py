@@ -19,14 +19,15 @@ idempotent (keyed, total-ordered), so end-to-end state is exactly-once.
 
 Scale posture: the only shuffles are keyed (window + anti-join) inside
 each table's merge; routing and decode are maps. A micro-batch costs a
-fixed number of passes whatever its table count — one to classify
-(shared with the tx gate), one to check every table's decode — whose
-facts (DDL and bad-record counts, per-table row counts and touched key
-buckets) are observed metrics of a no-op write that also fills the
-cache, not probe actions. The tables with rows then merge concurrently,
-one thread each (tables linked by a join view share one), so their
-small jobs and the query planning between them overlap on otherwise
-idle cores.
+fixed number of passes whatever its table or transaction count — one to
+classify (shared with the tx gate), one to check every table's decode —
+whose facts (the DDL events themselves, bad-record counts, per-table row
+counts and touched key buckets) are observed metrics of a no-op write
+that also fills the cache, not probe actions; the tx gate adds at most a
+completion count and a buffer append (``streaming/tx_gate.py``). The
+tables with rows then merge concurrently, one thread each (tables
+linked by a join view share one), so their small jobs and the query
+planning between them overlap on otherwise idle cores.
 """
 
 from __future__ import annotations
@@ -204,6 +205,17 @@ RAW_SCHEMA = T.StructType(
 )
 
 
+def _ddl_events() -> Column:
+    """Observed metric ``ddl``: the batch's schema-change events as
+    ``(ord, value)`` rows."""
+    return F.collect_list(F.when(F.col("ddl"), F.struct("ord", "value"))).alias("ddl")
+
+
+def _literal(text: str) -> str:
+    """A string as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _linked_groups(spec: PipelineSpec) -> list[list[int]]:
     """The declared tables (as indexes) grouped by join-view links: two
     tables share a group when a view joins them, directly or through
@@ -304,7 +316,6 @@ class Pipeline:
             for jv in spec.join_views
         ]
         self._groups = _linked_groups(spec)
-        self._check_cache: tuple | None = None
         self.query: StreamingQuery | None = None
 
     # -- batch core (also used directly by tests / backfills) -------------
@@ -317,7 +328,9 @@ class Pipeline:
 
         1. classify: every record's routing fields are parsed once
            (``route_envelopes``) into a persisted frame the tx gate and
-           the decode share; DDL events are registered first;
+           the decode share; DDL events are registered first, in source
+           order, from the metrics the gate's pass observes (without a
+           gate, from the check pass's);
         2. check: one pass decodes each record with its own table's
            schema, flags malformed and decode-mismatch records, and
            observes per-table row counts and touched key buckets;
@@ -337,8 +350,10 @@ class Pipeline:
     ) -> None:
         # persisted before ANY action: the tx gate and the check pass both
         # read it, and un-persisted each action re-read the source (the
-        # r6 soak's listener log showed ~2.4x numInputRows per batch)
-        routed = route_envelopes(raw).persist()
+        # r6 soak's listener log showed ~2.4x numInputRows per batch).
+        # ``ord`` keeps source order for the DDL events a pass observes.
+        ordinal = F.monotonically_increasing_id().alias("ord")
+        routed = route_envelopes(raw).select("*", ordinal).persist()
         checked = None
         try:
             # A5: schema-change (DDL) events ride the same stream
@@ -346,29 +361,27 @@ class Pipeline:
             # bin/mskc-connector.sh:399). Debezium logs DDL BEFORE the data
             # that uses the new schema, so register first — data later in
             # this same batch then decodes with the evolved schema.
-            ddl_done = False
-            if self.tx_gate is None:
-                batch = routed
-            else:
+            registered: set = set()
+            batch = routed
+            if self.tx_gate is not None:
                 # transaction atomicity: boundary records are consumed,
                 # open transactions buffered, committed ones released into
                 # THIS batch — so a source transaction lands in one epoch.
                 # The gate's one pass fills the routed cache and also
-                # counts this batch's DDL events.
+                # observes this batch's DDL events.
                 seen = Observation("classify")
                 batch = self.tx_gate.filter_batch(
-                    routed.observe(seen, F.count_if("ddl").alias("ddl")), batch_id
+                    routed.observe(seen, _ddl_events()), batch_id
                 )
-                if seen.get["ddl"]:
-                    self._register_ddl(batch)
-                    ddl_done = True
+                registered = self._register_ddl(seen.get["ddl"])
             schemas = [self._decode_schema(t) for t in self.spec.tables]
             checked, facts = self._check_batch(batch, schemas)
-            if facts["ddl"] and not ddl_done:
+            ddl = [e for e in facts["ddl"] if e["ord"] not in registered]
+            if ddl:
                 # DDL found by the check pass itself (no gate, or a DDL
                 # released from the tx buffer): register it, and decode
                 # again if it evolved a table this batch has rows for
-                self._register_ddl(checked)
+                self._register_ddl(ddl)
                 evolved = [self._decode_schema(t) for t in self.spec.tables]
                 if any(
                     facts[f"n{i}"] and evolved[i] != schemas[i]
@@ -408,12 +421,13 @@ class Pipeline:
                 checked.unpersist()
             routed.unpersist()
 
-    def _register_ddl(self, batch: DataFrame) -> None:
-        """Register the batch's schema-change events, in source order (the
-        collect is bounded by schema changes per batch, never data
-        volume)."""
-        events = [r[0] for r in batch.filter("ddl").select("value").collect()]
-        self.schema_log.extend(apply_schema_changes(self.schemas, events))
+    def _register_ddl(self, events: list) -> set:
+        """Register observed schema-change events (bounded by schema changes
+        per batch, never data volume) in source order; their ordinals."""
+        events = sorted(events, key=lambda e: (e["ord"] is None, e["ord"] or 0))
+        values = [e["value"] for e in events]
+        self.schema_log.extend(apply_schema_changes(self.schemas, values))
+        return {e["ord"] for e in events}
 
     def _decode_schema(self, tspec: TableSpec) -> T.StructType:
         """Effective row schema: when the declared schema is already a
@@ -444,10 +458,11 @@ class Pipeline:
     ) -> tuple[DataFrame, dict]:
         """Decode every record with its own table's schema, in one pass.
 
-        Returns the persisted frame — ``key, value, ddl, reason`` and, per
-        declared table i, its decoded envelope ``__env<i>`` (null on
-        other tables' rows) — and the facts observed while filling it:
-        ``ddl`` and ``bad`` counts, and per table ``n<i>`` (rows routed
+        Returns the persisted frame — ``key, value, ddl, ord, reason``
+        and, per declared table i, its decoded envelope ``__env<i>``
+        (null on other tables' rows) — and the facts observed while
+        filling it: the ``ddl`` events (see :func:`_ddl_events`), the
+        ``bad`` count, and per table ``n<i>`` (rows routed
         to it), ``g<i>`` (rows to merge) and, where the store prunes
         reads by key bucket, ``b<i>`` (their buckets).
 
@@ -461,9 +476,9 @@ class Pipeline:
         ``database_include`` (A3), are dropped the same way."""
         envs, reason, metrics = self._check_columns(schemas)
         checked = (
-            batch.select("key", "value", "ddl", "op", "table", *envs)
+            batch.select("key", "value", "ddl", "ord", "op", "table", *envs)
             .select(
-                "key", "value", "ddl", reason.alias("reason"),
+                "key", "value", "ddl", "ord", reason.alias("reason"),
                 *[f"__env{i}" for i in range(len(envs))],
             )
             .persist()
@@ -487,45 +502,38 @@ class Pipeline:
 
     def _check_columns(self, schemas: list[T.StructType]) -> tuple:
         """(envelope columns, reason column, metric columns) of the check
-        pass for these decode schemas. Built once per schema set and
-        reused: the decode-mismatch predicates alone are ~1k py4j calls,
-        a Python-side cost every batch would otherwise pay."""
-        if self._check_cache is not None and self._check_cache[0] == schemas:
-            return self._check_cache[1]
-        tables = list(zip(self.spec.tables, schemas))
-        live = ~F.col("ddl") & F.col("value").isNotNull()
-        envelope = live & F.col("op").isNotNull() & F.col("table").isNotNull()
+        pass for these decode schemas, built from SQL text: a few py4j
+        calls per table, whatever its field count."""
+        live = "NOT ddl AND value IS NOT NULL"
+        envelope = f"{live} AND op IS NOT NULL AND `table` IS NOT NULL"
         if self.spec.database_include:
-            envelope = envelope & F.col("db").isin(self.spec.database_include)
-        envs = [
-            F.when(
-                envelope & (F.col("table") == t.name),
-                F.from_json("value", envelope_schema(schema)),
-            ).alias(f"__env{i}")
-            for i, (t, schema) in enumerate(tables)
+            dbs = ", ".join(map(_literal, self.spec.database_include))
+            envelope += f" AND db IN ({dbs})"
+        cases = [
+            f"WHEN {live} AND op IS NULL THEN 'not_an_envelope'",
+            f"WHEN {live} AND `table` IS NULL THEN 'missing_source_table'",
         ]
-        reason = F.when(live & F.col("op").isNull(), "not_an_envelope").when(
-            live & F.col("table").isNull(), "missing_source_table"
-        )
-        for i, (t, schema) in enumerate(tables):
-            env = F.col(f"__env{i}")
-            reason = reason.when(
-                env.isNotNull() & ~env["source"]["table"].eqNullSafe(t.name),
-                "missing_source_table",
-            ).when(
-                env.isNotNull() & self._decode_mismatch(env, schema),
-                "decode_mismatch",
+        envs = []
+        metrics = [_ddl_events(), F.expr("count_if(reason IS NOT NULL)").alias("bad")]
+        for i, (t, schema) in enumerate(zip(self.spec.tables, schemas)):
+            env, name = f"`__env{i}`", _literal(t.name)
+            decoded = f"from_json(value, {_literal(envelope_schema(schema).json())})"
+            envs.append(
+                F.expr(
+                    f"CASE WHEN {envelope} AND `table` = {name} THEN {decoded} END"
+                ).alias(f"__env{i}")
             )
-        bad = F.col("reason").isNotNull()
-        metrics = [F.count_if("ddl").alias("ddl"), F.count_if(bad).alias("bad")]
-        for i in range(len(tables)):
-            env = F.col(f"__env{i}")
-            metrics += [
-                F.count_if(env.isNotNull()).alias(f"n{i}"),
-                F.count_if(env.isNotNull() & ~bad).alias(f"g{i}"),
+            cases += [
+                f"WHEN {env} IS NOT NULL AND NOT ({env}.source.`table` <=> {name})"
+                " THEN 'missing_source_table'",
+                f"WHEN {env} IS NOT NULL AND {self._decode_mismatch(env, schema)}"
+                " THEN 'decode_mismatch'",
             ]
-        self._check_cache = (list(schemas), (envs, reason, metrics))
-        return envs, reason, metrics
+            metrics += [
+                F.expr(f"count_if({env} IS NOT NULL)").alias(f"n{i}"),
+                F.expr(f"count_if({env} IS NOT NULL AND reason IS NULL)").alias(f"g{i}"),
+            ]
+        return envs, F.expr(f"CASE {' '.join(cases)} END"), metrics
 
     def _merge_group(
         self, group: list[int], checked: DataFrame, schemas: list, facts: dict
@@ -595,13 +603,13 @@ class Pipeline:
             if f.exception() is not None:
                 raise f.exception()
 
-    def _decode_mismatch(self, env: Column, row_schema: T.StructType) -> Column:
-        """Predicate over a decoded envelope column and the raw ``value``:
-        true when the after/before payload lost data in PERMISSIVE
-        parsing (type drift — e.g. upstream widened int→string ahead of
-        the DDL event). Without this the merge writes a null over real
-        data; with it the record waits in _dlq until the schema evolves,
-        then replay_dlq() re-decodes it.
+    def _decode_mismatch(self, env: str, row_schema: T.StructType) -> str:
+        """SQL predicate over the decoded envelope column ``env`` (a quoted
+        name) and the raw ``value``: true when the after/before payload
+        lost data in PERMISSIVE parsing (type drift — e.g. upstream widened
+        int→string ahead of the DDL event). Without this the merge writes
+        a null over real data; with it the record waits in _dlq until the
+        schema evolves, then replay_dlq() re-decodes it.
 
         A side is bad when its raw JSON is present but either (a) it is
         not an object (map parse fails), or (b) some schema field decoded
@@ -610,19 +618,17 @@ class Pipeline:
         columns are legitimate; adding them is what BACKWARD evolution
         allows)."""
 
-        def side_bad(side: str) -> Column:
-            raw = F.get_json_object(F.col("value"), f"$.{side}")
-            m = F.from_json(raw, "map<string,string>")
-            dropped = [
-                env[side].getField(f).isNull() & m.getItem(f).isNotNull()
+        def side_bad(side: str) -> str:
+            raw = f"get_json_object(value, '$.{side}')"
+            m = f"from_json({raw}, 'map<string,string>')"
+            dropped = " OR ".join(
+                f"({env}.`{side}`.`{f.replace('`', '``')}` IS NULL"
+                f" AND {m}[{_literal(f)}] IS NOT NULL)"
                 for f in row_schema.fieldNames()
-            ]
-            any_dropped = dropped[0]
-            for c in dropped[1:]:
-                any_dropped = any_dropped | c
-            return raw.isNotNull() & (m.isNull() | any_dropped)
+            )
+            return f"({raw} IS NOT NULL AND ({m} IS NULL OR {dropped}))"
 
-        return side_bad("after") | side_bad("before")
+        return f"({side_bad('after')} OR {side_bad('before')})"
 
     def _quarantine(self, rows: DataFrame) -> None:
         """Append (key, value, reason) rows to the reserved ``_dlq`` table.
@@ -998,7 +1004,6 @@ class Pipeline:
                 shutil.rmtree(sink / "_schemas", ignore_errors=True)
                 if self.tx_gate is not None:
                     shutil.rmtree(self.tx_gate.dir, ignore_errors=True)
-                    shutil.rmtree(self.tx_gate.release_root, ignore_errors=True)
                     Path(self.tx_gate.state_path).unlink(missing_ok=True)
                 (sink / "_EPOCHS").unlink(missing_ok=True)
                 for p in sink.glob("_backfill_*.json"):

@@ -25,54 +25,60 @@ Record shapes (over the raw ``(key, value)`` stream):
   DLQ, so the gate strips boundaries before the malformed-check);
 - anything without ``transaction.id`` passes through untouched.
 
-Durability & replay (the round-3 advisory fixes):
+Durability & replay:
 
-- A release is IDEMPOTENT under micro-batch replay. Released rows are
-  staged per transaction under ``_txrelease/<tx_id>/`` and the state
-  file records ``released[tx] = batch``. The staged rows and the marker
-  survive until a LATER batch runs — foreachBatch only starts batch
-  N+1 after batch N's checkpoint committed, so seeing batch > N proves
-  the released rows reached the sink durably. A crash between release
-  and checkpoint commit therefore replays batch N, finds
-  ``released[tx] == N``, and re-emits the staged rows — nothing is
-  lost even though the buffer was already rewritten.
+- A release is IDEMPOTENT under micro-batch replay. The state file
+  records ``released[tx] = batch``, and a released transaction's
+  buffered rows stay in place — its buffer partition — until a LATER
+  batch runs: foreachBatch only starts batch N+1 after batch N's
+  checkpoint committed, so seeing batch > N proves the released rows
+  reached the sink durably, and that batch's GC deletes the partition.
+  A crash between release and checkpoint commit therefore replays batch
+  N, finds ``released[tx] == N``, and emits the same rows again from
+  the replayed batch and the partition.
 - Ended/released transactions leave a TOMBSTONE (bounded, newest
   ``TOMBSTONE_KEEP``). Same-tx records arriving in a later micro-batch
   than the END (multi-partition redelivery) pass straight through to
   the idempotent merge instead of re-buffering against a transaction
   that can never re-complete; a redelivered END for a tombstoned tx is
   ignored.
-- The buffer swap is crash-recoverable: ``__init__`` rolls a leftover
-  ``-gone``/``-stage-*`` pair forward or back before first use.
+- Every durable step is an append, a delete or a single-file replace,
+  so the next attempt completes whatever a crash left: the buffer
+  append (it skips rows already buffered, so a repeat adds nothing), the
+  state save (write + rename), the GC's partition deletes (repeated
+  until the state that tombstones them is saved).
 
-Scale: buffered volume is bounded by OPEN transactions only (released
-data is physically removed), i.e. by transaction size × concurrency,
-not stream history. All buffer operations are DataFrame scans/writes —
-no driver-side row materialization except the (small) set of boundary
-records per batch.
+Scale: a micro-batch runs a fixed number of Spark jobs whatever its
+transaction count: the classify pass (shared with the caller), one
+buffer append when transactions are still open at batch end, and one
+aggregate when a transaction with rows in this batch has an
+``event_count`` its lower bound does not meet. Only transactions that
+gained an END or rows are checked, so a held one costs nothing; one
+complete within its batch passes straight through, never buffered. The
+buffer holds each row once, one partition per transaction: its count
+is read from parquet footers, a release reads it in place, and the GC
+deletes it. Transaction ids reach the plan only as a small broadcast
+table, never as literal lists. Only the batch's transaction ids and END
+boundaries are collected — bounded by transactions per batch, never rows.
 """
 
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import shutil
-import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from one_stop_cdc_ingestion_toolkit_spark.sources.debezium import route_envelopes
 
-BUFFER_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType(), True),
-        T.StructField("value", T.StringType(), True),
-        T.StructField("tx_id", T.StringType(), True),
-    ]
-)
+#: Buffered rows: the raw record and its transaction id.
+BUFFER_SCHEMA = "key string, value string, tx_id string"
+BUFFER_COLS = ["key", "value", "tx_id"]
 
 #: How many released-transaction tombstones to retain (newest first, by
 #: release batch). A tombstone only matters within the source's
@@ -80,6 +86,11 @@ BUFFER_SCHEMA = T.StructType(
 #: out would re-open the transaction forever, so size this above the
 #: maximum END-to-last-straggler batch distance the broker can produce.
 TOMBSTONE_KEEP = 10_000
+
+#: Per-transaction routing of a batch's tx-tagged rows (``act`` column):
+#: PASS — the transaction closed in an earlier batch (a straggler);
+#: RELEASE — it commits in this batch; null — still open, buffered.
+PASS, RELEASE = "pass", "release"
 
 
 class TxGate:
@@ -89,42 +100,22 @@ class TxGate:
         self.spark = spark
         self.dir = os.path.join(base_dir, "_txbuf")
         self.state_path = os.path.join(base_dir, "_txstate.json")
-        self.release_root = os.path.join(base_dir, "_txrelease")
-        self._recover_buffer_swap()
         os.makedirs(self.dir, exist_ok=True)
+        self._adopt_flat_layout(os.path.join(base_dir, "_txrelease"))
 
-    # -- crash recovery ----------------------------------------------------
-
-    def _recover_buffer_swap(self) -> None:
-        """Roll a torn _rewrite_buffer forward or back (advisory: a crash
-        between the two renames left no _txbuf dir at all)."""
-        gone = self.dir + "-gone"
-        # newest-by-mtime, NOT lexicographic: stage names are random uuid
-        # hex, and a partial stage from an earlier failed write could sort
-        # after the complete one whose rename was in progress (review r7).
-        # (_rewrite_buffer also removes its stage on a failed write, so a
-        # partial stage coexisting with a torn swap is doubly unlikely.)
-        stages = sorted(glob.glob(self.dir + "-stage-*"), key=os.path.getmtime)
-        if not os.path.exists(self.dir):
-            if os.path.exists(gone) and stages:
-                # crash between the renames: the stage dir is a complete
-                # replacement buffer (written before any rename) — roll
-                # FORWARD to it and drop the old generation
-                os.rename(stages[-1], self.dir)
-                stages = stages[:-1]
-                shutil.rmtree(gone)
-            elif os.path.exists(gone):
-                # stage already swapped in then crashed mid-cleanup is
-                # impossible without self.dir; a lone -gone means the
-                # stage rename finished and cleanup raced — or nothing
-                # was ever staged. Rolling BACK is always safe: the
-                # release state was not saved before the swap completed.
-                os.rename(gone, self.dir)
-        else:
-            if os.path.exists(gone):
-                shutil.rmtree(gone)  # crash after swap, before cleanup
-        for s in stages:
-            shutil.rmtree(s, ignore_errors=True)
+    def _adopt_flat_layout(self, release_root: str) -> None:
+        """Move rows an older layout left — buffer files at the top of
+        ``_txbuf``, released rows under ``_txrelease/<tx>`` — into
+        per-transaction partitions (a crash midway repeats the move)."""
+        legacy = glob.glob(os.path.join(self.dir, "*.parquet"))
+        legacy += glob.glob(os.path.join(release_root, "*"))
+        if legacy:
+            raw = self.spark.read.schema("key string, value string").parquet(*legacy)
+            rows = route_envelopes(raw).select(*BUFFER_COLS)
+            self._append(rows, {r[0] for r in rows.select("tx_id").distinct().collect()})
+            for path in legacy:
+                shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+        shutil.rmtree(release_root, ignore_errors=True)
 
     # -- state ------------------------------------------------------------
 
@@ -148,39 +139,51 @@ class TxGate:
 
     # -- buffer I/O -------------------------------------------------------
 
-    def _read_buffer(self) -> DataFrame:
-        if any(n.endswith(".parquet") for n in os.listdir(self.dir)):
-            return self.spark.read.schema(BUFFER_SCHEMA).parquet(self.dir)
-        return self.spark.createDataFrame([], BUFFER_SCHEMA)
+    def partition(self, tx_id: str) -> str:
+        """Buffer directory of one transaction's rows (named by a hash of
+        its id, so any id is a safe directory name)."""
+        digest = hashlib.sha256(tx_id.encode()).hexdigest()
+        return os.path.join(self.dir, f"h={digest}")
 
-    def _append_buffer(self, df: DataFrame) -> None:
-        # one file per batch, unique name: append without listing races
-        df.coalesce(1).write.mode("append").parquet(self.dir)
+    def _read_buffer(self, dirs: list[str]) -> DataFrame | None:
+        """One relation over these buffer partitions; None when none exists."""
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        return self.spark.read.schema(BUFFER_SCHEMA).parquet(*dirs) if dirs else None
 
-    def _rewrite_buffer(self, df: DataFrame) -> None:
-        stage = self.dir + f"-stage-{uuid.uuid4().hex[:8]}"
-        try:
-            df.write.mode("overwrite").parquet(stage)
-        except BaseException:
-            # a partial stage must not survive: recovery rolls forward to
-            # a leftover stage on the assumption it is a COMPLETE buffer
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        old = self.dir
-        gone = self.dir + "-gone"
-        os.rename(old, gone)
-        os.rename(stage, old)
-        shutil.rmtree(gone)
+    def _buffered(self, tx_id: str) -> int:
+        """Distinct buffered rows of a transaction: the row counts in its
+        partition's parquet footers (the buffer holds each row once), so
+        no Spark job."""
+        files = glob.glob(os.path.join(self.partition(tx_id), "*.parquet"))
+        return sum(pq.read_metadata(f).num_rows for f in files)
 
-    def _staged_dir(self, tx_id: str) -> str:
-        return os.path.join(self.release_root, tx_id)
+    def _append(self, rows: DataFrame, tx_ids: set) -> None:
+        """Buffer these transactions' rows in one write whatever their
+        count: each transaction's rows land in (and are later deleted
+        with) its own partition. Each row is written once — deduplicated
+        within the batch and against the partitions already there, so a
+        repeated append (a replay) adds nothing."""
+        rows = rows.coalesce(1).distinct()
+        old = self._read_buffer([self.partition(t) for t in tx_ids])
+        if old is not None:
+            same = [rows[c].eqNullSafe(old[c]) for c in BUFFER_COLS]
+            rows = rows.join(old, same, "left_anti")
+        rows = rows.withColumn("h", F.sha2("tx_id", 256)).coalesce(1)
+        rows.write.partitionBy("h").mode("append").parquet(self.dir)
 
-    def _read_staged(self, tx_ids: list[str]) -> DataFrame:
-        # one multi-path relation, not a per-tx union tree (plan depth
-        # and file-listing rounds stay O(1) in transaction count)
-        return self.spark.read.schema(
-            T.StructType(BUFFER_SCHEMA.fields[:2])
-        ).parquet(*[self._staged_dir(t) for t in tx_ids])
+    def _tag(self, rows: DataFrame, acts: dict, tx_ids: set) -> DataFrame:
+        """``rows`` plus their transaction's ``act``. A literal when every
+        transaction of the batch shares one act, else a broadcast join
+        with a table of the batch's PASS/RELEASE ids (open ids are absent
+        and read null) — never a literal list of ids."""
+        kinds = set(acts.values()) | ({None} if len(acts) < len(tx_ids) else set())
+        if len(kinds) > 1:
+            table = self.spark.createDataFrame(
+                sorted(acts.items()), "tx_id string, act string"
+            )
+            return rows.join(F.broadcast(table), "tx_id", "left")
+        act = F.lit(kinds.pop() if kinds else None).cast("string")
+        return rows.withColumn("act", F.when(F.col("tx_id").isNotNull(), act))
 
     # -- the gate ---------------------------------------------------------
 
@@ -193,13 +196,15 @@ class TxGate:
         the same records already classified by
         :func:`~one_stop_cdc_ingestion_toolkit_spark.sources.debezium.route_envelopes`
         (then nothing is parsed again); the return carries the routing
-        columns either way. Splits the batch into boundary records
-        (consumed here), tx-tagged data (buffered, as raw ``(key,
-        value)``), and plain data (passes through). Returns plain
-        data UNIONed with every buffered record of transactions that
-        are now provably committed. ``batch_id`` is the foreachBatch
-        epoch — the replay detector; direct (non-streaming) callers get
-        a monotonic internal sequence instead.
+        columns either way (a released row read back from the buffer has
+        nulls in any other column of ``raw``). Splits the batch into
+        boundary records (consumed here), tx-tagged data, and plain data
+        (passes through). Returns plain data UNIONed with the distinct
+        rows — from this batch and the buffer — of every transaction
+        that is now provably committed; rows of transactions still open
+        are buffered, as raw ``(key, value)``. ``batch_id`` is the
+        foreachBatch epoch — the replay detector; direct (non-streaming)
+        callers get a monotonic internal sequence instead.
 
         Direct-mode contract (at-least-once): a direct call's release is
         GC'd by the NEXT direct call on the assumption the caller merged
@@ -210,56 +215,44 @@ class TxGate:
         idempotent merge) — i.e. exactly the chunk-high-water-mark
         semantics the backfill driver already has. Streaming mode does
         not need this: foreachBatch replays batch N itself and the
-        released marker re-emits the staged rows."""
+        released marker re-emits the transaction."""
         state = self._load_state()
         mode = "s" if batch_id is not None else "d"
         eb = state["seq"] + 1 if batch_id is None else batch_id
         state["seq"] = max(state["seq"], eb)
+        released, tombstones = state["released"], state["tombstones"]
 
         # 0. GC: a released transaction whose batch is OLDER than this
         # one IN THE SAME MODE is durably applied (foreachBatch only
         # starts batch N+1 after N committed; direct calls likewise
-        # complete their merge before returning). A DIRECT call must
-        # never GC a STREAMING release — its seq says nothing about the
-        # stream's checkpoint progress (a backfill run during the
-        # stream's crash window would otherwise delete staged rows the
-        # replay still needs) — hence the mode scoping.
-        gced = [
-            t
-            for t, rb in state["released"].items()
-            if rb["mode"] == mode and rb["batch"] < eb
-        ]
-        for t in gced:
-            shutil.rmtree(self._staged_dir(t), ignore_errors=True)
-            state["tombstones"][t] = state["released"].pop(t)
-        if len(state["tombstones"]) > TOMBSTONE_KEEP:
+        # complete their merge before returning) — delete its partition.
+        # A DIRECT call must never GC a STREAMING release — its seq says
+        # nothing about the stream's checkpoint progress (a backfill run
+        # during the stream's crash window would otherwise delete rows
+        # the replay still needs) — hence the mode scoping.
+        for t, rb in list(released.items()):
+            if rb["mode"] == mode and rb["batch"] < eb:
+                shutil.rmtree(self.partition(t), ignore_errors=True)
+                tombstones[t] = released.pop(t)
+        if len(tombstones) > TOMBSTONE_KEEP:
             for t, _ in sorted(
-                state["tombstones"].items(), key=lambda kv: kv[1]["batch"]
-            )[: len(state["tombstones"]) - TOMBSTONE_KEEP]:
-                del state["tombstones"][t]
-        closed = set(state["released"]) | set(state["tombstones"])
-        if gced:
-            # a crash between a release's state save and its buffer
-            # rewrite leaves the released rows in the buffer; the
-            # tombstone transition is the deterministic moment to purge
-            # them (once per tx — later rewrites never revisit them)
-            buf0 = self._read_buffer()
-            stale = buf0.filter(F.col("tx_id").isin(sorted(closed)))
-            if not stale.isEmpty():
-                self._rewrite_buffer(
-                    buf0.filter(~F.col("tx_id").isin(sorted(closed)))
-                )
+                tombstones.items(), key=lambda kv: kv[1]["batch"]
+            )[: len(tombstones) - TOMBSTONE_KEEP]:
+                del tombstones[t]
+        # transactions this batch released on an earlier attempt (a
+        # replay) are emitted again; every other closed one passes through
+        emit = {
+            t for t, rb in released.items() if rb["mode"] == mode and rb["batch"] == eb
+        }
+        closed = (set(released) | set(tombstones)) - emit
 
-        # 1. one pass over the routed batch: the END boundaries (bounded
-        # by tx ends per batch) and whether any OPEN-tx data needs
-        # buffering come back as observed metrics of a no-op write — it
-        # also fills the caller's cache of the batch, and any observation
-        # the caller put on ``raw`` fires in the same pass
+        # 1. one pass over the routed batch: its END boundaries and its
+        # transaction ids (both bounded by transactions per batch) come
+        # back as observed metrics of a no-op write — it also fills the
+        # caller's cache of the batch, and any observation the caller put
+        # on ``raw`` fires in the same pass
         batch = raw if "boundary" in raw.columns else route_envelopes(raw)
-        in_closed = (
-            F.col("tx_id").isin(sorted(closed)) if closed else F.lit(False)
-        )
-        is_open = ~F.col("boundary") & F.col("tx_id").isNotNull() & ~in_closed
+        is_tx = ~F.col("boundary") & F.col("tx_id").isNotNull()
         end = F.when(
             F.col("boundary") & (F.col("status") == "END"),
             F.struct("boundary_id", "event_count"),
@@ -268,7 +261,7 @@ class TxGate:
         batch.observe(
             seen,
             F.collect_list(end).alias("ends"),
-            F.count_if(is_open).alias("open"),
+            F.collect_set(F.when(is_tx, F.col("tx_id"))).alias("txs"),
         ).write.format("noop").mode("overwrite").save()
         facts = seen.get
         # collect_list has no order: sort so a tx whose END arrives twice
@@ -277,78 +270,73 @@ class TxGate:
         # record, so this only matters for a malformed source)
         ends = sorted(facts["ends"], key=lambda r: (r[0], r[1] is not None, r[1]))
         for tx, count in ends:
-            if tx not in closed:  # redelivered END: ignore
+            if tx not in closed and tx not in emit:  # redelivered END: ignore
                 state["ended"][tx] = count
+        tx_ids = set(facts["txs"])
 
-        # 2. buffer OPEN-tx data; rows of already-released/tombstoned
-        # transactions pass straight through to the idempotent merge
-        # (advisory: re-buffering them would strand them forever)
-        if facts["open"]:
-            self._append_buffer(
-                batch.filter(is_open).select("key", "value", "tx_id")
+        # 2. completion check, only for ended transactions that gained an
+        # END or rows in this batch (a held one that gained nothing
+        # cannot have completed). A transaction's buffered distinct rows
+        # are its footer counts; one that also has rows in this batch
+        # needs the exact count only when the lower bound (its buffered
+        # rows, and at least one) falls short of its event_count — those
+        # are counted over the batch and the buffer in one aggregate.
+        gained = tx_ids | {tx for tx, _ in ends}
+        check = {t: need for t, need in state["ended"].items() if t in gained}
+        have = {t: max(self._buffered(t), int(t in tx_ids)) for t in check}
+        exact = [t for t, n in check.items() if t in tx_ids and n and have[t] < n]
+        if exact:
+            rows = batch.filter(is_tx).select(*BUFFER_COLS)
+            buf = self._read_buffer([self.partition(t) for t in exact])
+            if buf is not None:
+                rows = rows.unionByName(buf)
+            counts = rows.coalesce(1).distinct().groupBy("tx_id").count().collect()
+            have.update((t, n) for t, n in counts if t in exact)
+        for t, need in check.items():
+            if have[t] and (need is None or have[t] >= need):
+                released[t] = {"batch": eb, "mode": mode}
+                del state["ended"][t]
+                emit.add(t)
+
+        # 3. route the batch's tx rows: buffer the still-open ones (rows
+        # of closed transactions pass straight through to the idempotent
+        # merge — re-buffering them would strand them forever)
+        acts = {t: RELEASE if t in emit else PASS for t in tx_ids & (closed | emit)}
+        tagged = self._tag(batch.filter(~F.col("boundary")), acts, tx_ids)
+        if len(acts) < len(tx_ids):
+            is_open = F.col("tx_id").isNotNull() & F.col("act").isNull()
+            self._append(
+                tagged.filter(is_open).select(*BUFFER_COLS), tx_ids - set(acts)
             )
-        passthrough = batch.filter(
-            ~F.col("boundary") & (F.col("tx_id").isNull() | in_closed)
+        self._save_state(state)
+
+        # 4. emit: the distinct rows of every transaction released IN
+        # THIS batch, from its partition in place (each row once) and from
+        # the batch — covers fresh releases and the replay-after-crash
+        # case
+        out = tagged.filter(
+            F.col("tx_id").isNull() | (F.col("act") == PASS)
+        ).drop("act")
+        rows = self._read_buffer([self.partition(t) for t in emit])
+        if emit & tx_ids:
+            here = tagged.filter(F.col("act") == RELEASE).select(*BUFFER_COLS)
+            rows = here if rows is None else rows.unionByName(here)
+            rows = rows.coalesce(1).distinct()
+        if rows is None:
+            return out
+        return out.unionByName(
+            route_envelopes(rows.select("key", "value")), allowMissingColumns=True
         )
 
-        # 3. release committed transactions
-        if state["ended"]:
-            buf = self._read_buffer().distinct()
-            counts = {
-                r["tx_id"]: r["n"]
-                for r in buf.groupBy("tx_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            release = [
-                t
-                for t, need in state["ended"].items()
-                if t in counts and (need is None or counts[t] >= need)
-            ]
-            if release:
-                # stage per-tx BEFORE the buffer swap invalidates
-                # lineage; the staged dirs + released markers are
-                # what make a post-release crash replayable
-                for t in release:
-                    buf.filter(F.col("tx_id") == t).select(
-                        "key", "value"
-                    ).write.mode("overwrite").parquet(self._staged_dir(t))
-                    state["released"][t] = {"batch": eb, "mode": mode}
-                    del state["ended"][t]
-                self._save_state(state)
-                self._rewrite_buffer(
-                    buf.filter(~F.col("tx_id").isin(release))
-                )
-
-        # 4. emit staged rows for every tx released IN THIS batch —
-        # covers fresh releases and the replay-after-crash case
-        # (the released marker survives until a later same-mode
-        # batch GCs it)
-        emit = [
-            t
-            for t, rb in state["released"].items()
-            if rb["mode"] == mode and rb["batch"] == eb
-        ]
-        self._save_state(state)
-        if emit:
-            return passthrough.unionByName(
-                route_envelopes(self._read_staged(emit))
-            )
-        return passthrough
-
     def pending(self) -> dict:
-        """Observability: open transaction ids → buffered record count.
-        Excludes transactions already released or tombstoned — their rows
-        can linger in the buffer only inside the crash window between a
-        release's state save and the buffer rewrite, and they are not
-        open."""
+        """Observability: open transaction ids → buffered distinct record
+        count. Excludes transactions already released or tombstoned —
+        a released one keeps its partition until the next batch's GC,
+        and it is not open."""
         state = self._load_state()
         closed = set(state["released"]) | set(state["tombstones"])
-        buf = self._read_buffer().distinct()
-        return {
-            r["tx_id"]: r["n"]
-            for r in buf.groupBy("tx_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-            if r["tx_id"] not in closed
-        }
+        buf = self._read_buffer(glob.glob(os.path.join(self.dir, "h=*")))
+        if buf is None:
+            return {}
+        counts = buf.groupBy("tx_id").count().collect()
+        return {t: n for t, n in counts if t not in closed}

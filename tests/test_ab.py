@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from tools.ab import verdict
+import sys
+
+from tools.ab import _run, batch_medians, verdict
 
 LOWER = [{"name": "latency_s", "better": "lower", "bound": 0.25}]
 
@@ -86,3 +88,26 @@ def test_identical_runs_are_neither_gain_nor_regression():
     out = judge(BASE, list(BASE))
     assert out["wins"] == 0
     assert out["verdict"] == "within bound"
+
+
+def report(cycle):
+    return {"workload": "cdc_bulk", "named": {"batch_cycle_s": {"value": cycle, "unit": "s"}}}
+
+
+def test_batch_medians_per_batch_index():
+    reports = [report([12.0, 6.0, 6.5, 3.5]), None, report([14.0, 5.0, 7.5, 3.0]),
+               report([13.0, 5.5, 6.0, 4.0, 9.0]), {"named": {}}]
+    assert batch_medians(reports) == [13.0, 5.5, 6.5, 3.5, 9.0]
+    assert batch_medians([None, {"named": {}}]) is None
+
+
+def test_run_keeps_the_report_line(tmp_path):
+    lines = [{"report": report([10.0, 5.0])}, {"correct": True, "attempted": 1, "failed": 0,
+                                                "metrics": {}}]
+    script = "import json\n" + "".join(f"print(json.dumps({line!r}))\n" for line in lines)
+    result, rep = _run([sys.executable, "-c", script], str(tmp_path), str(tmp_path / "log"), [])
+    assert result == lines[1]
+    assert batch_medians([rep]) == [10.0, 5.0]
+    result, rep = _run([sys.executable, "-c", "print('{}')"], str(tmp_path),
+                       str(tmp_path / "log"), [])
+    assert result == {} and rep is None

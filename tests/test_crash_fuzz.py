@@ -306,17 +306,25 @@ def test_torn_epoch_line_recovers(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# TxGate crash points (the buffer swap's two renames + the release window)
+# TxGate crash points: one per durable step of a batch — the buffer
+# append, the state save, the release emit (the caller's merge) and the GC
 # ---------------------------------------------------------------------------
 
 
-def _gate_events(tx="tx-1"):
+def _gate_events(tx="tx-1", keys=("k1", "k2")):
     rows = [
-        {"key": "k1", "value": json.dumps({"op": "c", "transaction": {"id": tx}})},
-        {"key": "k2", "value": json.dumps({"op": "c", "transaction": {"id": tx}})},
+        {"key": k, "value": json.dumps({"op": "c", "k": k, "transaction": {"id": tx}})}
+        for k in keys
     ]
     end = {"key": None, "value": json.dumps({"status": "END", "id": tx})}
     return rows, end
+
+
+def _end(tx="tx-1", event_count=None):
+    v = {"status": "END", "id": tx}
+    if event_count is not None:
+        v["event_count"] = event_count
+    return {"key": None, "value": json.dumps(v)}
 
 
 def _raw(spark, events):
@@ -329,78 +337,110 @@ def _keys(df):
     return {r["key"] for r in df.collect()}
 
 
-@pytest.mark.parametrize("crash_rename", [1, 2])
-def test_tx_buffer_swap_crash_mid_renames(spark, tmp_path, crash_rename, monkeypatch):
-    """Kill between/after the swap's two renames: a fresh gate's
-    _recover_buffer_swap must roll the swap forward (the stage dir is a
-    complete replacement buffer) and the released rows must still reach
-    the caller exactly once per batch replay."""
-    import os as _os
-
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.tx_gate import TxGate
+def test_tx_crash_after_buffer_append(spark, tmp_path, monkeypatch):
+    """Kill after the open rows' append landed but before the state save:
+    the replay appends them again, and neither the completion count (read
+    from the buffer's parquet footers) nor the release may see them
+    twice."""
+    from one_stop_cdc_ingestion_toolkit_spark.streaming import tx_gate as tg
 
     base = str(tmp_path / "lake")
-    gate = TxGate(spark, base)
-    rows, end = _gate_events()
-    assert _keys(gate.filter_batch(_raw(spark, rows), batch_id=1)) == set()
+    gate = tg.TxGate(spark, base)
+    rows, _ = _gate_events()
+    orig = tg.TxGate._append
 
-    calls = {"n": 0}
-    orig_rename = _os.rename
+    def append_then_die(self, *args):
+        orig(self, *args)
+        raise Boom("kill after append")
 
-    def flaky_rename(src, dst):
-        if "-gone" in str(dst) or "-stage-" in str(src):
-            calls["n"] += 1
-            if calls["n"] == crash_rename:
-                if crash_rename == 2:
-                    orig_rename(src, dst)  # second rename finishes…
-                raise Boom("kill inside swap")  # …but cleanup never runs
-        return orig_rename(src, dst)
-
-    monkeypatch.setattr(_os, "rename", flaky_rename)
+    monkeypatch.setattr(tg.TxGate, "_append", append_then_die)
     with pytest.raises(Boom):
-        gate.filter_batch(_raw(spark, [end]), batch_id=2)
+        gate.filter_batch(_raw(spark, rows), batch_id=1)
     monkeypatch.undo()
 
-    # restart: recovery rolls the swap forward, and the foreachBatch
-    # replay of batch 2 re-emits the staged release
-    gate2 = TxGate(spark, base)
-    out = gate2.filter_batch(_raw(spark, [end]), batch_id=2)
-    assert _keys(out) == {"k1", "k2"}
-    # the buffer no longer holds the released tx
-    assert gate2.pending() == {}
-    # a later batch GCs the release marker without re-emitting
-    assert _keys(gate2.filter_batch(_raw(spark, []), batch_id=3)) == set()
+    gate2 = tg.TxGate(spark, base)
+    assert _keys(gate2.filter_batch(_raw(spark, rows), batch_id=1)) == set()
+    assert gate2.pending() == {"tx-1": 2}
+    # two distinct rows, appended twice: an END for three must not release
+    assert _keys(gate2.filter_batch(_raw(spark, [_end(event_count=3)]), batch_id=2)) == set()
+    late, _ = _gate_events(keys=("k3",))
+    out = gate2.filter_batch(_raw(spark, late), batch_id=3)
+    assert sorted(r["key"] for r in out.collect()) == ["k1", "k2", "k3"]
 
 
-def test_tx_crash_between_release_save_and_rewrite(spark, tmp_path, monkeypatch):
-    """Kill after the staged dirs + released marker are durable but before
-    the buffer rewrite: the replay re-emits from the stage, and the stale
-    buffer rows are purged at the tombstone transition (the documented
-    once-per-tx moment)."""
+def test_tx_crash_mid_state_save(spark, tmp_path, monkeypatch):
+    """Kill while the release batch writes its state: the state file on
+    disk stays the previous, whole one, and the replayed batch releases
+    the transaction."""
     from one_stop_cdc_ingestion_toolkit_spark.streaming import tx_gate as tg
 
     base = str(tmp_path / "lake")
     gate = tg.TxGate(spark, base)
     rows, end = _gate_events()
     gate.filter_batch(_raw(spark, rows), batch_id=1)
+    orig = json.dump
 
-    monkeypatch.setattr(
-        gate,
-        "_rewrite_buffer",
-        lambda df: (_ for _ in ()).throw(Boom("kill before rewrite")),
-    )
+    def torn_dump(obj, fh):
+        fh.write(json.dumps(obj)[:20])
+        raise Boom("kill mid state write")
+
+    monkeypatch.setattr(tg.json, "dump", torn_dump)
     with pytest.raises(Boom):
         gate.filter_batch(_raw(spark, [end]), batch_id=2)
+    monkeypatch.setattr(tg.json, "dump", orig)
+
+    gate2 = tg.TxGate(spark, base)
+    assert _keys(gate2.filter_batch(_raw(spark, [end]), batch_id=2)) == {"k1", "k2"}
+    assert _keys(gate2.filter_batch(_raw(spark, []), batch_id=3)) == set()
+    assert gate2.pending() == {}
+
+
+def test_tx_crash_before_release_is_merged(spark, tmp_path):
+    """Kill after the release batch saved its state, before the caller
+    merged the released rows (the checkpoint never commits): the replay
+    re-emits the transaction from its buffer partition, and only the
+    next batch deletes the partition."""
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.tx_gate import TxGate
+
+    base = str(tmp_path / "lake")
+    gate = TxGate(spark, base)
+    rows, end = _gate_events()
+    gate.filter_batch(_raw(spark, rows), batch_id=1)
+    gate.filter_batch(_raw(spark, [end]), batch_id=2)  # result never merged
+
+    gate2 = TxGate(spark, base)
+    assert _keys(gate2.filter_batch(_raw(spark, [end]), batch_id=2)) == {"k1", "k2"}
+    assert pathlib.Path(gate2.partition("tx-1")).is_dir()
+    assert _keys(gate2.filter_batch(_raw(spark, []), batch_id=3)) == set()
+    assert not pathlib.Path(gate2.partition("tx-1")).exists()
+
+
+def test_tx_crash_mid_gc(spark, tmp_path, monkeypatch):
+    """Kill after the GC deleted a released transaction's partition but
+    before the state that tombstones it was saved: the replayed batch
+    repeats the GC, tombstones the transaction and passes its straggler
+    through."""
+    from one_stop_cdc_ingestion_toolkit_spark.streaming import tx_gate as tg
+
+    base = str(tmp_path / "lake")
+    gate = tg.TxGate(spark, base)
+    rows, end = _gate_events()
+    gate.filter_batch(_raw(spark, rows), batch_id=1)
+    gate.filter_batch(_raw(spark, [end]), batch_id=2)
+    orig = tg.shutil.rmtree
+
+    def rmtree_then_die(path, *a, **kw):
+        orig(path, *a, **kw)
+        raise Boom("kill mid GC")
+
+    monkeypatch.setattr(tg.shutil, "rmtree", rmtree_then_die)
+    late, _ = _gate_events(keys=("k3",))
+    with pytest.raises(Boom):
+        gate.filter_batch(_raw(spark, late), batch_id=3)
     monkeypatch.undo()
 
     gate2 = tg.TxGate(spark, base)
-    # replayed batch 2: released marker matches → staged rows re-emitted
-    assert _keys(gate2.filter_batch(_raw(spark, [end]), batch_id=2)) == {
-        "k1",
-        "k2",
-    }
-    # batch 3 tombstones the tx and purges its stale buffer rows
-    assert _keys(gate2.filter_batch(_raw(spark, []), batch_id=3)) == set()
-    assert gate2.pending() == {}
+    assert _keys(gate2.filter_batch(_raw(spark, late), batch_id=3)) == {"k3"}
     state = json.loads((tmp_path / "lake" / "_txstate.json").read_text())
     assert "tx-1" in state["tombstones"] and state["released"] == {}
+    assert gate2.pending() == {}

@@ -172,8 +172,8 @@ def test_delete_inside_transaction(spark, tmp_path):
 def test_release_is_replay_safe(spark, tmp_path):
     """Crash between release and checkpoint commit (advisory r3, high):
     replaying the releasing micro-batch must re-emit the full
-    transaction from the staged dir even though the buffer was already
-    rewritten — no rows lost, no permanently-open tx."""
+    transaction from its buffer partition even though the state already
+    marks it released — no rows lost, no permanently-open tx."""
     import os
 
     from one_stop_cdc_ingestion_toolkit_spark.streaming.tx_gate import TxGate
@@ -190,7 +190,7 @@ def test_release_is_replay_safe(spark, tmp_path):
     )
     out1 = gate.filter_batch(b2, batch_id=2)
     assert out1.count() == 2  # released
-    assert gate.pending() == {}  # buffer rewritten
+    assert gate.pending() == {}  # no longer open
     # simulate the crash: downstream merge of batch 2 never committed,
     # the stream replays the SAME batch id against a fresh gate instance
     gate2 = TxGate(spark, str(tmp_path / "g"))
@@ -201,10 +201,10 @@ def test_release_is_replay_safe(spark, tmp_path):
     assert out2.distinct().count() == 2, (
         "replay must re-emit the staged transaction"
     )
-    # a LATER batch proves the checkpoint advanced: staged dir is GC'd,
-    # tombstone retained
+    # a LATER batch proves the checkpoint advanced: the partition is
+    # GC'd, tombstone retained
     assert gate2.filter_batch(_raw(spark, []), batch_id=3).count() == 0
-    assert not os.path.exists(str(tmp_path / "g" / "_txrelease" / "tx-1"))
+    assert not os.path.exists(gate2.partition("tx-1"))
     assert "tx-1" in gate2._load_state()["tombstones"]
 
 
@@ -229,26 +229,6 @@ def test_straggler_after_release_passes_through(spark, tmp_path):
     assert pipe.status()["open_transactions"] == 0
 
 
-def test_buffer_swap_crash_recovery(spark, tmp_path):
-    """A crash between _rewrite_buffer's two renames leaves only the
-    -gone dir (advisory r3, low): the next TxGate init must roll the
-    buffer back instead of crashing on a missing _txbuf."""
-    import os
-
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.tx_gate import TxGate
-
-    base = str(tmp_path / "g")
-    gate = TxGate(spark, base)
-    b1 = _raw(spark, [tx_envelope("c", 1, "tx-3", after=person("ann", "a", 1))])
-    gate.filter_batch(b1, batch_id=1)
-    assert gate.pending() == {"tx-3": 1}
-    # simulate: first rename done, second never happened
-    os.rename(os.path.join(base, "_txbuf"), os.path.join(base, "_txbuf-gone"))
-    gate2 = TxGate(spark, base)
-    assert gate2.pending() == {"tx-3": 1}, "buffered rows must survive"
-    assert not os.path.exists(os.path.join(base, "_txbuf-gone"))
-
-
 def test_direct_call_does_not_gc_streaming_release(spark, tmp_path):
     """Code-review r4: a DIRECT (batch_id=None) call's internal sequence
     says nothing about the stream's checkpoint progress, so it must not
@@ -259,15 +239,11 @@ def test_direct_call_does_not_gc_streaming_release(spark, tmp_path):
     from one_stop_cdc_ingestion_toolkit_spark.streaming.tx_gate import TxGate
 
     gate = TxGate(spark, str(tmp_path / "g"))
-    b = _raw(
-        spark,
-        [
-            tx_envelope("c", 1, "tx-9", after=person("ann", "a", 1)),
-            boundary("tx-9", event_count=1),
-        ],
-    )
+    b0 = _raw(spark, [tx_envelope("c", 1, "tx-9", after=person("ann", "a", 1))])
+    assert gate.filter_batch(b0, batch_id=4).count() == 0  # buffered
+    b = _raw(spark, [boundary("tx-9", event_count=1)])
     assert gate.filter_batch(b, batch_id=5).count() == 1  # stream releases
-    staged = str(tmp_path / "g" / "_txrelease" / "tx-9")
+    staged = gate.partition("tx-9")
     assert os.path.exists(staged)
     # a direct backfill call runs during the stream's crash window
     gate.filter_batch(_raw(spark, []), batch_id=None)
@@ -277,3 +253,30 @@ def test_direct_call_does_not_gc_streaming_release(spark, tmp_path):
     # and a LATER stream batch does GC it
     gate.filter_batch(_raw(spark, []), batch_id=6)
     assert not os.path.exists(staged)
+
+
+def test_flat_layout_is_adopted(spark, tmp_path):
+    """A gate of the earlier layout kept open rows as files at the top of
+    _txbuf and a release's rows under _txrelease/<tx>: a new gate moves
+    both into per-transaction partitions, so the open transaction still
+    releases and a replay of the release still re-emits."""
+    import json
+
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.tx_gate import TxGate
+
+    base = tmp_path / "g"
+    _raw(spark, [tx_envelope("c", 1, "tx-1", after=person("ann", "a", 1))]).write.parquet(
+        str(base / "_txbuf")
+    )
+    _raw(spark, [tx_envelope("c", 2, "tx-2", after=person("bob", "b", 2))]).write.parquet(
+        str(base / "_txrelease" / "tx-2")
+    )
+    state = {"ended": {}, "released": {"tx-2": {"batch": 7, "mode": "s"}},
+             "tombstones": {}, "seq": 7}
+    (base / "_txstate.json").write_text(json.dumps(state))
+    gate = TxGate(spark, str(base))
+    assert not (base / "_txrelease").exists()
+    assert gate.pending() == {"tx-1": 1}
+    assert gate.filter_batch(_raw(spark, []), batch_id=7).count() == 1  # replay
+    assert gate.filter_batch(_raw(spark, [boundary("tx-1")]), batch_id=8).count() == 1
+    assert gate.pending() == {}

@@ -14,7 +14,11 @@ BENCHMARK.json. Every workload gets exactly ten pairs of runs, seed 9001
 (held out) first, then seeds 1-9; the side that runs first alternates, and
 every run is a fresh process in its own side's checkout. Each run's result
 line is printed as it finishes, then one summary line with the verdict per
-workload and metric (see :func:`verdict`).
+workload and metric (see :func:`verdict`). When a run's report line (the
+line before its result line) carries the per-micro-batch walls
+``named.batch_cycle_s``, its printed line carries them too, and the summary
+gives their per-batch-index medians for each side (see
+:func:`batch_medians`), so an A/B shows which micro-batch moved.
 
 ``--queries`` runs this checkout's ``tools/probe.py`` on the named registry
 queries in each side's checkout instead of the benchmark command
@@ -92,6 +96,18 @@ def verdict(base: list[dict], change: list[dict], metrics: list[dict]) -> dict:
     return out
 
 
+def batch_medians(reports: list[dict | None]) -> list[float] | None:
+    """Per-batch-index medians of ``named.batch_cycle_s`` over the reports
+    that carry it (a run may have fewer batches than another); None when
+    none does."""
+    cycles = [r["named"]["batch_cycle_s"]["value"] for r in reports
+              if r and "batch_cycle_s" in r.get("named", {})]
+    if not cycles:
+        return None
+    return [statistics.median(c[i] for c in cycles if i < len(c))
+            for i in range(max(map(len, cycles)))]
+
+
 def _session(sid: int) -> list[int]:
     """Live processes of session ``sid``."""
     pids = []
@@ -130,9 +146,10 @@ def _end(proc: subprocess.Popen) -> None:
     proc.wait()
 
 
-def _run(cmd: list[str], cwd: str, log: str, live: list) -> dict:
-    """One run in a session of its own; its last stdout line, or a failed
-    operation if it printed none."""
+def _run(cmd: list[str], cwd: str, log: str, live: list) -> tuple[dict, dict | None]:
+    """One run in a session of its own: its result (the last stdout line,
+    or a failed operation if it printed none) and its report (the
+    ``report`` of the line before, if any)."""
     with open(log, "w") as err:
         proc = subprocess.Popen(cmd, cwd=cwd, stdout=subprocess.PIPE, stderr=err, text=True,
                                 start_new_session=True)
@@ -143,12 +160,18 @@ def _run(cmd: list[str], cwd: str, log: str, live: list) -> dict:
             out = ""
         _end(proc)
         live.remove(proc)
+    lines = out.strip().splitlines()
     try:
-        return json.loads(out.strip().splitlines()[-1])
+        result = json.loads(lines[-1])
     except (IndexError, ValueError):
         with open(log) as fh:
             sys.stderr.write(f"run failed (exit {proc.returncode}): {cmd}\n{fh.read()[-3000:]}")
-        return {"correct": False, "attempted": 1, "failed": 1, "metrics": {}}
+        return {"correct": False, "attempted": 1, "failed": 1, "metrics": {}}, None
+    try:
+        report = json.loads(lines[-2])["report"]
+    except (IndexError, ValueError, KeyError, TypeError):
+        report = None
+    return result, report
 
 
 def _git(*args: str) -> str:
@@ -191,13 +214,19 @@ def main(argv: list[str] | None = None) -> int:
                    "workloads": {}}
         for w, command in jobs.items():
             results: dict[str, list[dict]] = {"base": [], "change": []}
+            reports: dict[str, list[dict | None]] = {"base": [], "change": []}
             for i, seed in enumerate(SEEDS):
                 for side in ("base", "change") if i % 2 == 0 else ("change", "base"):
                     log = os.path.join(tmp, f"{w}-{i}-{side}.log")
-                    res = _run(command(seed), checkouts[side], log, live)
+                    res, report = _run(command(seed), checkouts[side], log, live)
                     results[side].append(res)
-                    print(json.dumps({"workload": w, "pair": i, "seed": seed, "side": side,
-                                      "result": res}), flush=True)
+                    reports[side].append(report)
+                    line = {"workload": w, "pair": i, "seed": seed, "side": side,
+                            "result": res}
+                    cycle = batch_medians([report])
+                    if cycle is not None:
+                        line["batch_cycle_s"] = cycle
+                    print(json.dumps(line), flush=True)
             if args.queries:
                 seen = {m for r in results["base"] + results["change"] for m in r["metrics"]}
                 bound = min(m["bound"] for m in bench["end_to_end"])
@@ -205,6 +234,9 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 specs = bench["end_to_end"]
             summary["workloads"][w] = verdict(results["base"], results["change"], specs)
+            medians = {side: batch_medians(reports[side]) for side in reports}
+            if any(m is not None for m in medians.values()):
+                summary["workloads"][w]["batch_cycle_s_median"] = medians
         print(json.dumps(summary), flush=True)
         return 0
     except KeyboardInterrupt:
