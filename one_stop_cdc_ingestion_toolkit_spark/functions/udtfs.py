@@ -1,7 +1,7 @@
 """Python user-defined TABLE functions (Spark 3.5+/4 ``@udtf``).
 
 Completes the extensibility surface next to the SQL-language UDFs
-(`functions/__init__.py`), the pandas UDAF (`operators/extras.py
+(`functions/__init__.py`), the pandas UDAF (`operators/profiling.py
 b68_geomean_udaf`) and the grouped-map UDF (`b58_zscore_pandas`): a UDTF
 is the lateral-join shape — one input row fans out to N output rows with
 a declared schema, callable from SQL.

@@ -100,25 +100,14 @@ def track_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Conf key controlling the verify-join broadcast decision in the
-#: near-dup operators (ngram_jaccard_pairs, a004). AQE cannot size a
-#: frame that sits behind a .persist(), so "auto" makes the runtime-stats
-#: call itself with an eager probe job; at cluster scale that synchronous
-#: job (and a mis-estimated pinned broadcast) can be worse than just
-#: shuffling, hence the escape hatch.
-VERIFY_JOIN_CONF = "spark.cdcToolkit.verifyJoin"
-
-
 def pin_broadcast_if_small(df: DataFrame, est_bytes: Callable[[], int]) -> DataFrame:
     """Broadcast-pin ``df`` when a data-derived size estimate fits the
-    64 MB pin budget, honoring ``spark.cdcToolkit.verifyJoin``:
-
-    - ``auto`` (default): call ``est_bytes()`` (usually one small probe
-      job over already-cached data) and pin ``F.broadcast`` under the
-      budget; above it, return ``df`` untouched so the planner shuffles.
-    - ``shuffle``: never probe, never pin — zero synchronous jobs, the
-      cluster-scale setting when the array side is known to be large.
-    - ``broadcast``: always pin (benchmarking escape hatch).
+    64 MB pin budget, for the near-dup verify joins (ngram_jaccard_pairs,
+    a004). AQE cannot size a frame that sits behind a ``.persist()``, so
+    this makes the runtime-stats call itself: ``est_bytes()`` (usually one
+    small probe job over already-cached data), then ``F.broadcast`` under
+    the budget; above it, ``df`` is returned untouched so the planner
+    shuffles.
 
     The pin bypasses Spark's size-check fallback, so ``est_bytes`` must
     OVER-estimate: derive it from row counts / byte sums of the actual
@@ -127,11 +116,6 @@ def pin_broadcast_if_small(df: DataFrame, est_bytes: Callable[[], int]) -> DataF
     """
     from pyspark.sql import functions as F
 
-    mode = str(df.sparkSession.conf.get(VERIFY_JOIN_CONF, "auto")).lower()
-    if mode == "shuffle":
-        return df
-    if mode == "broadcast":
-        return F.broadcast(df)
     if est_bytes() < (64 << 20):
         return F.broadcast(df)
     return df
@@ -202,37 +186,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module so REGISTRY is fully populated."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators import (  # noqa: F401
-        advanced,
-        audit,
-        behavior,
-        corpus,
-        dedup,
-        experiments,
-        extras,
-        history,
-        insights,
-        mixing,
-        mlprep,
-        multimodal,
-        neardup2,
-        pipeline_ops,
-        profiling,
-        quantization,
-        recursive,
-        relational,
-        relational2,
-        retrieval,
-        round4,
-        round4b,
-        round4c,
-        round5,
-        round9,
-        selection,
-        similarity,
-        text,
-        textmine,
-        tseries,
-    )
+    import importlib
+    import pkgutil
 
+    for mod in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{mod.name}")
     return REGISTRY

@@ -38,6 +38,7 @@ from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
     MINHASH_BANDS,
     MINHASH_P,
     SHINGLE_K,
+    _duck_shingles,
     minhash_cc_edges,
     word_shingles,
 )
@@ -487,8 +488,7 @@ def _dup_clusters_oracle() -> str:
         ),
         sh AS (
           SELECT doc_id,
-                 unnest(list_transform(generate_series(1, len(words) - {SHINGLE_K - 1}),
-                        i -> array_to_string(words[i:i+{SHINGLE_K - 1}], ' '))) AS shingle
+                 {_duck_shingles()} AS shingle
           FROM w WHERE len(words) >= {SHINGLE_K}
         ),
         base AS (
@@ -554,8 +554,7 @@ PMI_MIN_COUNT = 5
         ucnt AS (SELECT w, COUNT(*) AS c1 FROM uni WHERE w != '' GROUP BY w),
         tot AS (SELECT CAST(SUM(c1) AS DOUBLE) AS n_tok FROM ucnt),
         bg AS (
-          SELECT unnest(list_transform(generate_series(1, len(words) - 1),
-                        i -> array_to_string(words[i:i+1], ' '))) AS bigram
+          SELECT {_duck_shingles(2)} AS bigram
           FROM w WHERE len(words) >= 2
         ),
         bcnt AS (

@@ -7,7 +7,9 @@ over CDC-materialized tables: referential-integrity audits, join-size
 semi-joins, sketch-vs-exact quantile contracts, revenue-concentration
 and Pareto audits, winsorized/robust aggregates, behavioral-gap
 histograms, ordered funnels, and deterministic per-stratum reservoir
-sampling.
+sampling. The statistical audits live here too: pairwise AUC of the
+quality score (a043), Welch's two-sample t (a008) and k-anonymity over
+quasi-identifiers (a0055).
 
 Scale notes (what survives 1000 executors):
 
@@ -40,6 +42,7 @@ from pyspark.sql.window import Window as W
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
 from one_stop_cdc_ingestion_toolkit_spark.operators import register, track_cache
+from one_stop_cdc_ingestion_toolkit_spark.operators.text import _duck_quality, quality_score
 
 #: F2-estimator key-sample: keys whose first md5 hex digit is '0' (1/16).
 F2_SALT = "f2:"
@@ -850,3 +853,269 @@ def a137_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("load").cast("double") / F.avg(F.col("load").cast("double")), 4
         ).alias("imbalance"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Pairwise AUC of the quality score (a043)
+# Mann-Whitney with tie handling, per source; distinct rounded scores are
+# bounded (<= 10^4, the score is rounded to 4 places), so the rank
+# shuffle carries short keys only.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "a043_pairwise_auc",
+    f"""WITH q AS (SELECT source, lang = 'en' AS pos, {_duck_quality()} AS s
+                 FROM documents),
+       per AS (SELECT source, s,
+                      CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS np,
+                      CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS nn
+               FROM q GROUP BY 1, 2),
+       cum AS (SELECT source, np, nn,
+                      COALESCE(SUM(nn) OVER (
+                          PARTITION BY source ORDER BY s
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                        0) AS below
+               FROM per),
+       agg AS (SELECT source, SUM(np) AS p, SUM(nn) AS n,
+                      SUM(CAST(np AS DOUBLE)
+                          * (CAST(below AS DOUBLE) + 0.5 * CAST(nn AS DOUBLE)))
+                        AS u
+               FROM cum GROUP BY source)
+       SELECT source, CAST(p AS BIGINT) AS n_pos, CAST(n AS BIGINT) AS n_neg,
+              ROUND(u / (CAST(p AS DOUBLE) * CAST(n AS DOUBLE)), 4) AS auc
+       FROM agg WHERE p > 0 AND n > 0 ORDER BY source""",
+)
+def a043_pairwise_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source AUC of the quality score as a classifier of English vs
+    non-English documents — the Mann–Whitney rank statistic with exact
+    tie handling: AUC = Σ_s np(s)·(cum_nn(<s) + ½·nn(s)) / (P·N).
+
+    Scale shape: docs collapse map-side to (source, score) count rows;
+    the only window runs per source over DISTINCT ROUNDED scores (≤ 10^4
+    values by construction — quality ∈ [0,1] rounded to 4 places), so no
+    corpus-sized frame ever sorts. The U accumulator sums exact
+    half-integers (np·below and ½·np·nn are both representable), so the
+    statistic is bit-identical across engines before the single
+    divide+round."""
+    d = tables(spark, sf_dir)["documents"]
+    q = d.select(
+        "source",
+        (F.col("lang") == "en").alias("pos"),
+        quality_score(F.col("text")).alias("s"),
+    )
+    per = q.groupBy("source", "s").agg(
+        F.sum(F.when(F.col("pos"), 1).otherwise(0)).alias("np"),
+        F.sum(F.when(F.col("pos"), 0).otherwise(1)).alias("nn"),
+    )
+    w = (
+        W.partitionBy("source")
+        .orderBy("s")
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    cum = per.withColumn("below", F.coalesce(F.sum("nn").over(w), F.lit(0)))
+    agg = cum.groupBy("source").agg(
+        F.sum("np").alias("p"),
+        F.sum("nn").alias("n"),
+        F.sum(
+            F.col("np").cast("double")
+            * (F.col("below").cast("double") + 0.5 * F.col("nn").cast("double"))
+        ).alias("u"),
+    )
+    return (
+        agg.filter((F.col("p") > 0) & (F.col("n") > 0))
+        .select(
+            "source",
+            F.col("p").cast("long").alias("n_pos"),
+            F.col("n").cast("long").alias("n_neg"),
+            F.round(
+                F.col("u") / (F.col("p").cast("double") * F.col("n").cast("double")),
+                4,
+            ).alias("auc"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# k-anonymity audit (a0055)
+# One quasi-id partial agg plus a 4-row rollup; percentages come from a
+# broadcast 1-row total, never a global window.
+# ---------------------------------------------------------------------------
+
+
+#: Balance band width for the quasi-identifier (c_acctbal ∈ [-999, 9999]).
+BAL_BAND = 1000
+
+
+@register(
+    "a0055_k_anonymity",
+    f"""WITH qi AS (
+          SELECT c_nationkey, c_mktsegment,
+                 CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / {BAL_BAND}) AS BIGINT)
+                   AS bal_band,
+                 COUNT(*) AS k
+          FROM customer GROUP BY 1, 2, 3),
+        tiers AS (
+          SELECT CASE WHEN k = 1 THEN 1 WHEN k < 5 THEN 2
+                      WHEN k < 10 THEN 3 ELSE 4 END AS tier_ord,
+                 CASE WHEN k = 1 THEN 'unique' WHEN k < 5 THEN 'k<5'
+                      WHEN k < 10 THEN 'k<10' ELSE 'k>=10' END AS risk_tier,
+                 k
+          FROM qi),
+        tot AS (SELECT SUM(k) AS t FROM tiers)
+        SELECT tier_ord, risk_tier,
+               CAST(COUNT(*) AS BIGINT) AS n_groups,
+               CAST(SUM(k) AS BIGINT) AS n_rows,
+               ROUND(SUM(k) / t, 4) AS pct_rows
+        FROM tiers CROSS JOIN tot
+        GROUP BY tier_ord, risk_tier, t ORDER BY tier_ord""",
+)
+def a055_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-anonymity audit over (nation, market segment, balance band)
+    quasi-identifiers: how many equivalence classes — and what fraction
+    of rows — sit in each re-identification risk tier (unique, k<5,
+    k<10, k≥10). A release gate reads `pct_rows` for the `unique` tier.
+
+    Scale shape: ONE partial-aggregable shuffle on the quasi-id key
+    produces the class sizes; everything after operates on classes (≤
+    nations × segments × bands rows), with the corpus total carried by
+    a broadcast 1-row frame — no global window, no second data scan."""
+    c = tables(spark, sf_dir)["customer"]
+    # cached: the class-size frame feeds the corpus total AND the tier
+    # rollup — uncached, the customer scan ran twice, contradicting the
+    # "no second data scan" claim below (review r8)
+    qi = track_cache(
+        c.groupBy(
+            "c_nationkey",
+            "c_mktsegment",
+            F.floor(F.col("c_acctbal").cast("double") / BAL_BAND)
+            .cast("long")
+            .alias("bal_band"),
+        ).agg(F.count(F.lit(1)).alias("k"))
+    )
+    tiers = qi.select(
+        F.when(F.col("k") == 1, 1)
+        .when(F.col("k") < 5, 2)
+        .when(F.col("k") < 10, 3)
+        .otherwise(4)
+        .alias("tier_ord"),
+        F.when(F.col("k") == 1, "unique")
+        .when(F.col("k") < 5, "k<5")
+        .when(F.col("k") < 10, "k<10")
+        .otherwise("k>=10")
+        .alias("risk_tier"),
+        "k",
+    )
+    tot = tiers.agg(F.sum("k").alias("t"))
+    return (
+        tiers.crossJoin(F.broadcast(tot))
+        .groupBy("tier_ord", "risk_tier", "t")
+        .agg(
+            F.count(F.lit(1)).alias("n_groups"),
+            F.sum("k").alias("n_rows"),
+            F.round(F.sum("k") / F.col("t"), 4).alias("pct_rows"),
+        )
+        .drop("t")
+        .orderBy("tier_ord")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Welch two-sample t audit (a008)
+# The event stream reduces to one exact per-type row (n, sum, sum of
+# squares as DECIMAL(38,0) milli-units); every complement ("rest")
+# statistic derives from the broadcast 1-row total.
+# ---------------------------------------------------------------------------
+
+
+#: |t| threshold for the e154 significance flag (two-sided 5%).
+T_CRIT = 1.96
+
+
+@register(
+    "a008_welch_audit",
+    f"""WITH mv AS (
+         SELECT event_type,
+                CAST(ROUND(value * 1000) AS DECIMAL(38,0)) AS m
+         FROM events),
+       per AS (
+         SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+                SUM(m) AS s1, SUM(m * m) AS s2
+         FROM mv GROUP BY event_type),
+       tot AS (SELECT SUM(n) AS tn, SUM(s1) AS t1, SUM(s2) AS t2 FROM per),
+       st AS (
+         SELECT event_type, n,
+                CAST(s1 AS DOUBLE) / n AS m1,
+                (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n)
+                  / (n - 1) AS v1,
+                tn - n AS n2,
+                CAST(t1 - s1 AS DOUBLE) / (tn - n) AS m2,
+                (CAST(t2 - s2 AS DOUBLE)
+                 - CAST(t1 - s1 AS DOUBLE) * CAST(t1 - s1 AS DOUBLE) / (tn - n))
+                  / (tn - n - 1) AS v2
+         FROM per CROSS JOIN tot),
+       t AS (
+         SELECT event_type, n, m1, v1, n2, m2, v2,
+                v1 / n + v2 / n2 AS se2
+         FROM st)
+       SELECT event_type, n,
+              ROUND(m1 / 1000, 4) AS mean_value,
+              ROUND((m1 - m2) / sqrt(se2), 4) + 0.0 AS t_welch,
+              ROUND(se2 * se2 / ((v1 / n) * (v1 / n) / (n - 1)
+                                 + (v2 / n2) * (v2 / n2) / (n2 - 1)), 2)
+                AS df_welch,
+              abs((m1 - m2) / sqrt(se2)) > {T_CRIT} AS significant
+       FROM t ORDER BY event_type""",
+)
+def a008_welch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Metric-shift tripwire: Welch's unequal-variance t-test of
+    ``events.value`` for each event type against all other events —
+    the standard "did this segment's metric really move" audit over an
+    event stream, with the Welch–Satterthwaite degrees of freedom.
+
+    Values are quantized to exact milli-unit DECIMAL(38,0) sums (n, Σv,
+    Σv² — overflow-safe past 10^12 rows and bit-identical across
+    engines regardless of addend order); each type's complement comes
+    from the broadcast one-row total, so the whole test costs one
+    partial-aggregated shuffle."""
+    ev = tables(spark, sf_dir)["events"]
+    m = F.round(F.col("value") * 1000).cast("decimal(38,0)")
+    # cached: the per-type moment frame feeds the totals AND the test —
+    # uncached, the event scan ran twice (review r8)
+    per = track_cache(
+        ev.select("event_type", m.alias("m")).groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("m").alias("s1"),
+            F.sum(F.col("m") * F.col("m")).alias("s2"),
+        )
+    )
+    tot = per.agg(
+        F.sum("n").alias("tn"), F.sum("s1").alias("t1"), F.sum("s2").alias("t2")
+    )
+    j = per.crossJoin(F.broadcast(tot))
+    n = F.col("n").cast("double")
+    n2 = (F.col("tn") - F.col("n")).cast("double")
+    s1d, s2d = F.col("s1").cast("double"), F.col("s2").cast("double")
+    r1d = (F.col("t1") - F.col("s1")).cast("double")
+    r2d = (F.col("t2") - F.col("s2")).cast("double")
+    m1 = s1d / n
+    v1 = (s2d - s1d * s1d / n) / (n - F.lit(1.0))
+    m2 = r1d / n2
+    v2 = (r2d - r1d * r1d / n2) / (n2 - F.lit(1.0))
+    se2 = v1 / n + v2 / n2
+    t_stat = (m1 - m2) / F.sqrt(se2)
+    df_w = (se2 * se2) / (
+        (v1 / n) * (v1 / n) / (n - F.lit(1.0))
+        + (v2 / n2) * (v2 / n2) / (n2 - F.lit(1.0))
+    )
+    return j.select(
+        "event_type",
+        "n",
+        F.round(m1 / 1000, 4).alias("mean_value"),
+        # + 0.0 collapses IEEE −0.0 (a sub-half-ulp negative t rounds to
+        # −0.0 in one engine and +0.0 in the other) to a single encoding
+        (F.round(t_stat, 4) + F.lit(0.0)).alias("t_welch"),
+        F.round(df_w, 2).alias("df_welch"),
+        (F.abs(t_stat) > T_CRIT).alias("significant"),
+    ).orderBy("event_type")

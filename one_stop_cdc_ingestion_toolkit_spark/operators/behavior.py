@@ -1,6 +1,7 @@
 """Behavioral-analytics operators (`e168`–`e172`): multi-granularity
 rollups, gaps-and-islands streaks, RFM segmentation, market-basket
-co-occurrence, and rolling active-user curves.
+co-occurrence, rolling active-user curves, and first-order Markov
+transitions between event types (a021).
 
 These are the classic "user/revenue behavior" reporting shapes a CDC
 pipeline's downstream lake tables feed. Each is a pure DataFrame plan
@@ -404,3 +405,62 @@ def a026_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wau = contrib.groupBy("day").agg(F.countDistinct("user_id").alias("wau"))
     return dau.join(wau, "day").select("day", "dau", "wau").orderBy("day")
+
+
+# ---------------------------------------------------------------------------
+# Markov transitions of user events (a021)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "a021_markov_transitions",
+    """WITH seq AS (
+         SELECT user_id, event_type,
+                lead(event_type) OVER (PARTITION BY user_id
+                                       ORDER BY ts, event_id) AS nxt
+         FROM events),
+       t AS (
+         SELECT event_type AS cur, nxt, CAST(COUNT(*) AS BIGINT) AS n
+         FROM seq WHERE nxt IS NOT NULL GROUP BY cur, nxt),
+       tot AS (SELECT cur, SUM(n) AS tn FROM t GROUP BY cur)
+       SELECT t.cur, t.nxt, t.n,
+              ROUND(CAST(t.n AS DOUBLE) / tot.tn, 4) AS p
+       FROM t JOIN tot USING (cur) ORDER BY cur, nxt""",
+)
+def a021_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order Markov transition matrix of user behavior: for every
+    consecutive event pair within a user's (ts, event_id)-ordered
+    history, count cur→next transitions and normalize per current
+    state. The matrix is the standard sequence-model sanity check
+    before training on event sequences (a114's assembly): a
+    near-uniform row means that state carries no signal; a
+    near-degenerate row reveals deterministic instrumentation
+    (log-spam) that will dominate next-event objectives.
+
+    One user-keyed window (the only shuffle carrying event rows) then
+    two |types|²-sized exact-count aggs; probabilities are exact
+    integer ratios, bit-identical across engines."""
+    ev = tables(spark, sf_dir)["events"]
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        "user_id", "event_type", F.lead("event_type").over(w).alias("nxt")
+    ).filter(F.col("nxt").isNotNull())
+    # cached: the types² transition counts feed the row totals AND the
+    # probabilities — uncached, the events window pass ran twice
+    # (review r8)
+    t = track_cache(
+        seq.groupBy(F.col("event_type").alias("cur"), "nxt").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+    )
+    tot = t.groupBy("cur").agg(F.sum("n").alias("tn"))
+    return (
+        t.join(F.broadcast(tot), "cur")
+        .select(
+            "cur",
+            "nxt",
+            "n",
+            F.round(F.col("n").cast("double") / F.col("tn"), 4).alias("p"),
+        )
+        .orderBy("cur", "nxt")
+    )

@@ -1,7 +1,8 @@
 """Corpus-assembly operators (second training-data batch, ``f`` names):
 token-budget selection, overlapping chunking, MinHash decontamination,
 boilerplate-prefix detection, curriculum bucketing, and LSH candidate
-verification by estimated Jaccard.
+verification by estimated Jaccard, plus the padding-waste audit per
+candidate context length (a016).
 
 These extend ``pipeline_ops.py``/``advanced.py`` toward a complete
 corpus-assembly surface: after cleaning (c-batch) and dedup clustering
@@ -40,12 +41,14 @@ from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
     MINHASH_BANDS,
     MINHASH_P,
     SHINGLE_K,
+    _duck_shingles,
     band_pairs,
     minhash_band_rows,
     minhash_signatures,
     sig_band_rows,
 )
 from one_stop_cdc_ingestion_toolkit_spark.operators.text import (
+    _duck_quality,
     quality_score,
     token_count,
 )
@@ -81,8 +84,7 @@ def _sig_sql() -> str:
         ),
         sh AS (
           SELECT doc_id, source,
-                 unnest(list_transform(generate_series(1, len(words) - {SHINGLE_K - 1}),
-                        i -> array_to_string(words[i:i+{SHINGLE_K - 1}], ' '))) AS shingle
+                 {_duck_shingles()} AS shingle
           FROM w WHERE len(words) >= {SHINGLE_K}
         ),
         base AS (
@@ -322,10 +324,7 @@ def a103_prefix_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a104_curriculum_buckets",
     rf"""WITH q AS (
           SELECT lang, doc_id,
-                 ROUND(LEAST(CAST({_TOK_SQL} AS DOUBLE) / 100.0, 1.0)
-                       * (1.0 - CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
-                                     AS DOUBLE)
-                               / GREATEST(length(text), 1)), 4) AS quality
+                 {_duck_quality()} AS quality
           FROM documents
         ),
         b AS (
@@ -425,4 +424,66 @@ def a105_est_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("est_jaccard") >= EST_JACCARD_MIN)
         .orderBy("id_a", "id_b")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Padding waste per context length (a016)
+# ---------------------------------------------------------------------------
+
+
+#: candidate context lengths (tokens) for the e162 packing audit.
+PACK_LENGTHS = (16, 32, 64, 128)
+
+
+@register(
+    "a016_padding_waste",
+    f"""WITH t AS (
+         SELECT doc_id,
+                len(string_split_regex(trim(text), '\\s+')) AS n_tok
+         FROM documents),
+       l AS (SELECT unnest(ARRAY{list(PACK_LENGTHS)}) AS ctx_len),
+       p AS (
+         SELECT l.ctx_len, t.n_tok,
+                CAST(CEIL(CAST(t.n_tok AS DOUBLE) / l.ctx_len) * l.ctx_len
+                     AS BIGINT) AS padded
+         FROM t CROSS JOIN l)
+       SELECT ctx_len, CAST(COUNT(*) AS BIGINT) AS n_docs,
+              CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
+              CAST(SUM(padded) AS BIGINT) AS total_padded,
+              ROUND(CAST(SUM(padded) - SUM(n_tok) AS DOUBLE)
+                    / SUM(padded), 4) AS waste_frac
+       FROM p GROUP BY ctx_len ORDER BY ctx_len""",
+)
+def a016_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Padding-waste audit for choosing a training context length: for
+    each candidate length L, every document occupies ceil(tokens/L)
+    rows of L tokens (the pad-don't-concat packing regime) and the
+    wasted fraction is (padded − real) / padded. The elbow of this
+    curve is how max_seq_len actually gets picked; at 100 TB the audit
+    is one scan with a 4-way literal explode and an exact-integer
+    partial agg — no shuffle carries more than |PACK_LENGTHS| × sources
+    rows."""
+    d = tables(spark, sf_dir)["documents"]
+    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    t = d.select(n_tok.alias("n_tok"))
+    exploded = t.select(
+        "n_tok", F.explode(F.array(*[F.lit(x) for x in PACK_LENGTHS])).alias("ctx_len")
+    )
+    padded = (
+        F.ceil(F.col("n_tok").cast("double") / F.col("ctx_len")) * F.col("ctx_len")
+    ).cast("long")
+    return (
+        exploded.withColumn("padded", padded)
+        .groupBy("ctx_len")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tok").cast("long").alias("total_tokens"),
+            F.sum("padded").cast("long").alias("total_padded"),
+            F.round(
+                (F.sum("padded") - F.sum("n_tok")).cast("double") / F.sum("padded"),
+                4,
+            ).alias("waste_frac"),
+        )
+        .orderBy("ctx_len")
     )

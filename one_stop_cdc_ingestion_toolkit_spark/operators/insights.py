@@ -21,7 +21,7 @@ from one_stop_cdc_ingestion_toolkit_spark.operators import (
     register,
     track_cache,
 )
-from one_stop_cdc_ingestion_toolkit_spark.operators.neardup2 import (
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
     _DUCK_BANDS_CTE,
     _DUCK_FIRST_MATCH,
     _DUCK_SIMHASH_CTE,
@@ -140,8 +140,7 @@ def a027_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured slower: a second 166k-row broadcast build per run buys
     # no shuffle savings the reused exchange wasn't already giving).
     # est_bytes over-estimates at 64 B/row (3 longs + row overhead);
-    # above the 64 MB budget (or spark.cdcToolkit.verifyJoin=shuffle)
-    # the planner keeps the old sort-merge shape — the probe count runs
+    # above the 64 MB budget the planner keeps the old sort-merge shape — the probe count runs
     # on the already-cached edge frame. Interleaved A/B/C at sf0.1,
     # min-of-4 one window: old both-SMJ 5.54 s, both-broadcast+widen
     # 3.83 s, this shape 2.98 s — identical output rows.

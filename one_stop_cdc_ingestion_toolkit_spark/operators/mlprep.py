@@ -1,7 +1,8 @@
 """ML-data-prep operators (round-3 batch, ``a1xx`` names): bigram
 language-model scoring, CCNet-style perplexity bucketing, nearest-centroid
-embedding classification, word-entropy statistics, and leakage-safe
-group-level train/val/test splitting.
+embedding classification (with its calibration, a009, and label-margin,
+a011, audits), word-entropy statistics, and leakage-safe group-level and
+temporal (a040) train/val/test splitting.
 
 These close the remaining "choose and audit the training mix" gaps on top
 of the cleaning (c-batch), clustering (d/a9x-batch) and corpus-assembly
@@ -40,6 +41,7 @@ from one_stop_cdc_ingestion_toolkit_spark.operators import (
 )
 from one_stop_cdc_ingestion_toolkit_spark.operators.similarity import (
     EMB_DIM,
+    cosine,
     cosine_hoisted,
     norm,
 )
@@ -662,4 +664,210 @@ def a116_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         z.filter((F.col("k") >= 12) & (F.col("sd") > 0) & (F.abs(zscore) > 2))
         .select("w_start", "event_type", "n", F.round(zscore, 3).alias("z"))
         .orderBy("w_start", "event_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Leakage-safe temporal holdout (a040)
+# Split boundaries come from the global [min, max] event time with exact
+# integer arithmetic, broadcast back as one row; assignment is a map-side
+# CASE and the report is one partial-agg shuffle.
+# ---------------------------------------------------------------------------
+
+
+#: a040 temporal-holdout fractions: train < 80% of the observed time
+#: range, a 10% quarantine gap, test ≥ 90% — the gap absorbs sessions /
+#: documents straddling the boundary so near-boundary leakage cannot
+#: put the same interaction on both sides.
+TRAIN_FRAC_TENTHS = 8
+TEST_FRAC_TENTHS = 9
+
+
+@register(
+    "a040_temporal_split",
+    f"""WITH b AS (
+         SELECT epoch_us(MIN(ts)) AS tmin, epoch_us(MAX(ts)) AS tmax
+         FROM events),
+       lim AS (
+         SELECT tmin + (tmax - tmin) * {TRAIN_FRAC_TENTHS} // 10 AS t1,
+                tmin + (tmax - tmin) * {TEST_FRAC_TENTHS} // 10 AS t2
+         FROM b),
+       tagged AS (
+         SELECT CASE WHEN epoch_us(e.ts) < lim.t1 THEN 'train'
+                     WHEN epoch_us(e.ts) < lim.t2 THEN 'gap'
+                     ELSE 'test' END AS split,
+                e.user_id, epoch_us(e.ts) AS us
+         FROM events e CROSS JOIN lim)
+       SELECT split,
+              CAST(COUNT(*) AS BIGINT) AS n_events,
+              CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+              CAST(MIN(us) AS BIGINT) AS min_us,
+              CAST(MAX(us) AS BIGINT) AS max_us
+       FROM tagged GROUP BY split ORDER BY split""",
+)
+def a040_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Leakage-safe temporal holdout over the event stream: train on the
+    first 80% of observed time, quarantine the next 10% (the gap bounds
+    boundary leakage from sessions straddling the cut), test on the
+    last 10%. Boundaries are exact integer epoch-microsecond arithmetic
+    on the broadcast [min, max] row — no float drift between engines —
+    and the per-split report (events, distinct users, actual time span)
+    is the audit a team checks before trusting an offline eval."""
+    ev = tables(spark, sf_dir)["events"]
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    b = ev.agg(
+        F.min(us).alias("tmin"), F.max(us).alias("tmax")
+    ).select(
+        (F.col("tmin") + ((F.col("tmax") - F.col("tmin")) * TRAIN_FRAC_TENTHS / 10).cast("long")).alias("t1"),
+        (F.col("tmin") + ((F.col("tmax") - F.col("tmin")) * TEST_FRAC_TENTHS / 10).cast("long")).alias("t2"),
+    )
+    split = (
+        F.when(us < F.col("t1"), F.lit("train"))
+        .when(us < F.col("t2"), F.lit("gap"))
+        .otherwise(F.lit("test"))
+    )
+    return (
+        ev.crossJoin(F.broadcast(b))
+        .select(split.alias("split"), "user_id", us.alias("us"))
+        .groupBy("split")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            F.min("us").alias("min_us"),
+            F.max("us").alias("max_us"),
+        )
+        .orderBy("split")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Calibration (a009) and label-margin (a011) audits of the
+# nearest-centroid classifier
+# a009 rides a110's broadcast-centroid scan; the calibration table is a
+# <= 21-row aggregate of (bin)-keyed exact counts.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "a009_ece_calibration",
+    f"""WITH cx AS (SELECT label, embedding,
+                          unnest(generate_series(1, {EMB_DIM})) AS i
+                   FROM embeddings),
+       cd AS (SELECT label, i, ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cv
+              FROM cx GROUP BY 1, 2),
+       cent AS (SELECT label AS c_label, list(cv ORDER BY i) AS cent_vec
+                FROM cd GROUP BY label),
+       scored AS (SELECT e.vec_id, e.label, c.c_label,
+                         {_duck_cos_vs('e.embedding', 'c.cent_vec')} AS cos
+                  FROM embeddings e CROSS JOIN cent c),
+       pred AS (SELECT vec_id, label, c_label AS pred, ROUND(cos, 6) AS conf
+                FROM (SELECT vec_id, label, c_label, cos,
+                             row_number() OVER (PARTITION BY vec_id
+                                                ORDER BY cos DESC, c_label) AS rn
+                      FROM scored) WHERE rn = 1),
+       binned AS (SELECT LEAST(GREATEST(CAST(FLOOR(conf * 10) AS INT), -10), 9)
+                           AS bin,
+                         CASE WHEN pred = label THEN 1 ELSE 0 END AS ok
+                  FROM pred),
+       agg AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
+                      CAST(SUM(ok) AS BIGINT) AS n_ok,
+                      ROUND(AVG(CAST(bin AS DOUBLE)) / 10 + 0.05, 4) AS bin_mid
+               FROM binned GROUP BY bin)
+       SELECT bin, n, ROUND(CAST(n_ok AS DOUBLE) / n, 4) AS accuracy,
+              bin_mid,
+              ROUND(ABS(ROUND(CAST(n_ok AS DOUBLE) / n, 4) - bin_mid), 4)
+                AS gap
+       FROM agg ORDER BY bin""",
+)
+def a009_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Calibration audit for the nearest-centroid classifier (a110's
+    model): bucket predictions by confidence (max centroid cosine,
+    bin width 0.1) and compare per-bin accuracy against the bin
+    midpoint — the per-bin table whose n-weighted ``gap`` sum is the
+    expected calibration error (ECE). An over-confident auto-labeler
+    silently poisons curated training mixes; this is the check.
+
+    Same scan shape as a110 (centroids broadcast, argmax is a keyed
+    partial agg, embeddings never shuffle); the calibration table adds
+    one ≤ 21-row exact-count aggregation. Accuracy and gap derive from
+    integer counts, bit-identical across engines."""
+    emb = tables(spark, sf_dir)["embeddings"]
+    # norm hoist (r8): one self-fold per vector/centroid, not per pair
+    cent = label_centroids(emb).select(
+        F.col("label").alias("c_label"),
+        "cent_vec",
+        norm(F.col("cent_vec")).alias("__cn"),
+    )
+    scored = (
+        emb.withColumn("__vn", norm(F.col("embedding")))
+        .crossJoin(F.broadcast(cent))
+        .withColumn(
+            "cos",
+            cosine_hoisted(
+                F.col("embedding"), F.col("cent_vec"), F.col("__vn"), F.col("__cn")
+            ),
+        )
+    )
+    pred = scored.groupBy("vec_id", "label").agg(
+        F.max_by(
+            "c_label", F.struct(F.col("cos"), (-F.col("c_label")).alias("nl"))
+        ).alias("pred"),
+        F.round(F.max("cos"), 6).alias("conf"),
+    )
+    binned = pred.select(
+        F.least(
+            F.greatest(F.floor(F.col("conf") * 10).cast("int"), F.lit(-10)),
+            F.lit(9),
+        ).alias("bin"),
+        (F.col("pred") == F.col("label")).cast("int").alias("ok"),
+    )
+    agg = binned.groupBy("bin").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("ok").alias("n_ok"),
+        F.round(F.avg(F.col("bin").cast("double")) / 10 + 0.05, 4).alias("bin_mid"),
+    )
+    acc = F.round(F.col("n_ok").cast("double") / F.col("n"), 4)
+    return agg.select(
+        "bin",
+        "n",
+        acc.alias("accuracy"),
+        "bin_mid",
+        F.round(F.abs(acc - F.col("bin_mid")), 4).alias("gap"),
+    ).orderBy("bin")
+
+
+@register(
+    "a011_label_margin_matrix",
+    f"""WITH cx AS (SELECT label, embedding,
+                          unnest(generate_series(1, {EMB_DIM})) AS i
+                   FROM embeddings),
+       cd AS (SELECT label, i, ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cv
+              FROM cx GROUP BY 1, 2),
+       cent AS (SELECT label, list(cv ORDER BY i) AS cent_vec
+                FROM cd GROUP BY label)
+       SELECT a.label AS label_a, b.label AS label_b,
+              ROUND({_duck_cos_vs('a.cent_vec', 'b.cent_vec')}, 6) AS cos_sim
+       FROM cent a JOIN cent b ON a.label < b.label
+       ORDER BY label_a, label_b""",
+)
+def a011_label_margin_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise cosine similarity between label centroids — the margin
+    audit behind a110/e155: label pairs whose centroids are nearly
+    parallel are the ones an auto-labeler will confuse and a curated
+    mix will cross-contaminate. k(k-1)/2 rows regardless of corpus
+    size; the per-label centroids come from one (label, dim)-keyed
+    partial agg, and the pair matrix is a broadcast self-join over k
+    rows."""
+    emb = tables(spark, sf_dir)["embeddings"]
+    cent = label_centroids(emb)
+    a = cent.select(F.col("label").alias("label_a"), F.col("cent_vec").alias("va"))
+    b = cent.select(F.col("label").alias("label_b"), F.col("cent_vec").alias("vb"))
+    return (
+        a.join(F.broadcast(b), F.col("label_a") < F.col("label_b"))
+        .select(
+            "label_a",
+            "label_b",
+            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
+        )
+        .orderBy("label_a", "label_b")
     )

@@ -26,6 +26,8 @@ from pyspark.sql.window import Window as W
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
 from one_stop_cdc_ingestion_toolkit_spark.operators import register
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import _duck_shingles
+from one_stop_cdc_ingestion_toolkit_spark.operators.text import _duck_quality
 
 #: salt for the deterministic sampler — changing it draws a fresh sample
 SAMPLE_SALT = "s:"
@@ -300,8 +302,7 @@ def _bigram_stats_batches(it):
         ),
         bg AS (
           SELECT doc_id,
-                 unnest(list_transform(generate_series(1, len(words) - 1),
-                        i -> array_to_string(words[i:i+1], ' '))) AS bigram
+                 {_duck_shingles(2)} AS bigram
           FROM w WHERE len(words) >= 2
         ),
         counts AS (
@@ -347,8 +348,7 @@ DECONTAM_K = 5  # overlap n-gram width (13 in practice; 5 fits the fixture)
         ),
         grams AS (
           SELECT DISTINCT doc_id,
-                 unnest(list_transform(generate_series(1, len(words) - {DECONTAM_K - 1}),
-                        i -> array_to_string(words[i:i+{DECONTAM_K - 1}], ' '))) AS g
+                 {_duck_shingles(DECONTAM_K)} AS g
           FROM w WHERE len(words) >= {DECONTAM_K}
         ),
         eval_grams AS (SELECT DISTINCT g FROM grams WHERE doc_id < 5),
@@ -483,11 +483,7 @@ def _clean_corpus_oracle() -> str:
         for i, (a, b) in enumerate(MINHASH_BANDS)
     )
     return rf"""WITH scored AS (
-          SELECT *, ROUND(LEAST(CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                          / 100.0, 1.0)
-                    * (1.0 - CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
-                                  AS DOUBLE)
-                            / GREATEST(length(text), 1)), 4) AS q
+          SELECT *, {_duck_quality()} AS q
           FROM documents
         ),
         good AS (SELECT * FROM scored WHERE q >= 0.2),
@@ -504,8 +500,7 @@ def _clean_corpus_oracle() -> str:
         ),
         sh AS (
           SELECT doc_id,
-                 unnest(list_transform(generate_series(1, len(words) - {SHINGLE_K - 1}),
-                        i -> array_to_string(words[i:i+{SHINGLE_K - 1}], ' '))) AS shingle
+                 {_duck_shingles()} AS shingle
           FROM w WHERE len(words) >= {SHINGLE_K}
         ),
         base AS (

@@ -1,4 +1,7 @@
-"""Declared relational query inventory (SURVEY.md §2.2, Q01–Q42).
+"""Declared relational query inventory (SURVEY.md §2.2, Q01–Q42), plus the
+b56–b79 query-surface extensions (pivots, date arithmetic, analytic and
+set operators, moments, RANGE frames, GROUPING ids, interval join) and
+VARIANT extraction (a017).
 
 The reference implements zero relational operators — it materializes
 tables-as-topics whose purpose is downstream query
@@ -29,6 +32,7 @@ from pyspark.sql.window import Window as W
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
 from one_stop_cdc_ingestion_toolkit_spark.operators import register
+from one_stop_cdc_ingestion_toolkit_spark.operators.skew import salted_join
 
 DEC = "decimal(18,2)"
 
@@ -920,4 +924,634 @@ def q42_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rev").desc(), "o_orderkey")
         .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Moments, RANGE frames, GROUPING ids, calendar rollups, conditional
+# join aggregates, first/last/nth, posexplode, salted-join parity,
+# interval join (b70-b79, a90)
+# Sums feeding arithmetic are exact DECIMAL(18,2) sums; double math runs
+# only on the exact aggregates, with the same operation tree on both
+# engines. Moments come from exact sums, not the engines' stddev/corr
+# accumulators, whose merge order is nondeterministic.
+# ---------------------------------------------------------------------------
+
+
+def _dec(col: str) -> F.Column:
+    return F.col(col).cast("decimal(18,2)")
+
+
+@register(
+    "b70_stats_moments",
+    """SELECT l_returnflag, n,
+              ROUND(SQRT((sxx - sx * sx / n) / (n - 1)), 6) AS std_qty,
+              ROUND((n * sxy - sx * sy) /
+                    (SQRT(n * sxx - sx * sx) * SQRT(n * syy - sy * sy)), 6) AS corr_qp
+       FROM (
+         SELECT l_returnflag,
+                CAST(COUNT(*) AS DOUBLE) AS n,
+                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
+                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
+                         CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
+                CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
+                CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                         CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS syy,
+                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) *
+                         CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sxy
+         FROM lineitem GROUP BY l_returnflag) t
+       ORDER BY l_returnflag""",
+)
+def b70_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sample stddev + Pearson correlation from exact decimal sums.
+
+    Deliberately NOT Spark's ``stddev``/``corr``: their partial-aggregate
+    merge order is nondeterministic at double precision, which breaks
+    hash parity. Exact decimal partial sums shuffle 6 numbers per group
+    (map-side combine), and the double math on top is order-free.
+    """
+    li = tables(spark, sf_dir)["lineitem"]
+    q, p = _dec("l_quantity"), _dec("l_extendedprice")
+    agg = li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum(q).cast("double").alias("sx"),
+        F.sum(q * q).cast("double").alias("sxx"),
+        F.sum(p).cast("double").alias("sy"),
+        F.sum(p * p).cast("double").alias("syy"),
+        F.sum(q * p).cast("double").alias("sxy"),
+    )
+    n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
+    sy, syy, sxy = F.col("sy"), F.col("syy"), F.col("sxy")
+    return agg.select(
+        "l_returnflag",
+        "n",
+        F.round(F.sqrt((sxx - sx * sx / n) / (n - F.lit(1))), 6).alias("std_qty"),
+        F.round(
+            (n * sxy - sx * sy)
+            / (F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)),
+            6,
+        ).alias("corr_qp"),
+    ).orderBy("l_returnflag")
+
+
+@register(
+    "b71_range_frame",
+    """SELECT o_custkey, o_orderkey,
+              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+                PARTITION BY o_custkey ORDER BY o_orderkey
+                RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rsum
+       FROM orders ORDER BY o_custkey, o_orderkey""",
+)
+def b71_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RANGE (value-based) window frame over the order-key domain —
+    complements the ROWS frame of q24. One shuffle on o_custkey."""
+    o = tables(spark, sf_dir)["orders"]
+    w = W.partitionBy("o_custkey").orderBy("o_orderkey").rangeBetween(-5, 0)
+    return o.select(
+        "o_custkey",
+        "o_orderkey",
+        F.sum(_dec("o_totalprice")).over(w).cast("double").alias("rsum"),
+    ).orderBy("o_custkey", "o_orderkey")
+
+
+@register(
+    "b72_grouping_id",
+    """SELECT o_orderstatus, o_orderpriority,
+              GROUPING(o_orderstatus) AS gs, GROUPING(o_orderpriority) AS gp,
+              COUNT(*) AS n
+       FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+       ORDER BY gs, gp, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
+)
+def b72_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE with GROUPING() markers distinguishing 'NULL because rolled
+    up' from a genuine NULL group key (q19 without the markers)."""
+    o = tables(spark, sf_dir)["orders"]
+    return (
+        o.cube("o_orderstatus", "o_orderpriority")
+        .agg(
+            F.grouping("o_orderstatus").alias("gs"),
+            F.grouping("o_orderpriority").alias("gp"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .select("o_orderstatus", "o_orderpriority", "gs", "gp", "n")
+        .orderBy(
+            "gs",
+            "gp",
+            F.col("o_orderstatus").asc_nulls_first(),
+            F.col("o_orderpriority").asc_nulls_first(),
+        )
+    )
+
+
+@register(
+    "b73_regexp_funcs",
+    """SELECT p_partkey,
+              regexp_extract(p_name, '^([a-z]+)', 1) AS first_word,
+              LENGTH(regexp_replace(p_type, '[^0-9]', '', 'g')) AS n_digits,
+              CAST(regexp_matches(p_type, '(BRASS|STEEL|COPPER)') AS INT) AS has_metal
+       FROM part ORDER BY p_partkey""",
+)
+def b73_regexp_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Regexp extract/replace/match. Dialects differ only in spelling
+    (DuckDB needs the 'g' flag and regexp_matches); values are identical.
+    All three stay in whole-stage codegen — no UDF."""
+    p = tables(spark, sf_dir)["part"]
+    return p.select(
+        "p_partkey",
+        F.regexp_extract("p_name", r"^([a-z]+)", 1).alias("first_word"),
+        F.length(F.regexp_replace("p_type", r"[^0-9]", "")).alias("n_digits"),
+        F.col("p_type").rlike(r"(BRASS|STEEL|COPPER)").cast("int").alias("has_metal"),
+    ).orderBy("p_partkey")
+
+
+@register(
+    "b74_month_rollup",
+    """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
+              COUNT(*) AS n,
+              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s
+       FROM orders GROUP BY 1 ORDER BY mon""",
+)
+def b74_month_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Calendar-month rollup — the partition granularity a 100 TB lake
+    table would use ((db, table, month) per SURVEY §4.4), so this agg is
+    partition-pruned there; here it is a single shuffle on the month."""
+    o = tables(spark, sf_dir)["orders"]
+    return (
+        o.groupBy(F.trunc("o_orderdate", "mon").alias("mon"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(_dec("o_totalprice")).cast("double").alias("s"),
+        )
+        .orderBy("mon")
+    )
+
+
+@register(
+    "b75_late_ship",
+    """SELECT o_orderpriority,
+              CAST(SUM(CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
+                       THEN 1 ELSE 0 END) AS BIGINT) AS late_cnt,
+              COUNT(*) AS n
+       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+       GROUP BY o_orderpriority ORDER BY o_orderpriority""",
+)
+def b75_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q12 shape on the fixture schema: fact-fact equi-join with
+    conditional counts. Shuffle on the join key, partial aggs both
+    sides of the final group-by; integer outputs are exact."""
+    t = tables(spark, sf_dir)
+    o, li = t["orders"], t["lineitem"]
+    j = o.join(li, o.o_orderkey == li.l_orderkey)
+    return (
+        j.groupBy("o_orderpriority")
+        .agg(
+            F.sum(
+                F.when(
+                    F.col("l_shipdate")
+                    > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
+                    1,
+                ).otherwise(0)
+            ).alias("late_cnt"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .orderBy("o_orderpriority")
+    )
+
+
+@register(
+    "b76_promo_share",
+    """SELECT ROUND(100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
+                     THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
+                          (1 - CAST(l_discount AS DECIMAL(18,2)))
+                     ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) /
+                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                            (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE),
+                   6) AS promo_pct
+       FROM lineitem JOIN part ON l_partkey = p_partkey""",
+)
+def b76_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q14 shape: revenue share of PROMO parts. Exact decimal
+    revenue sums; the single double division on top is order-free.
+    `part` broadcasts (dimension side), so the only shuffle is the
+    map-side partial agg merge."""
+    t = tables(spark, sf_dir)
+    li, p = t["lineitem"], t["part"]
+    rev = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
+    zero = F.lit(0).cast("decimal(18,2)")
+    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    return j.agg(
+        F.round(
+            F.lit(100.0)
+            * F.sum(
+                F.when(F.col("p_type").like("PROMO%"), rev).otherwise(zero)
+            ).cast("double")
+            / F.sum(rev).cast("double"),
+            6,
+        ).alias("promo_pct")
+    )
+
+
+@register(
+    "b77_first_last_nth",
+    """SELECT o_custkey, o_orderkey,
+              FIRST_VALUE(o_orderkey) OVER w AS first_k,
+              LAST_VALUE(o_orderkey) OVER
+                (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_k,
+              NTH_VALUE(o_orderkey, 2) OVER
+                (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_k
+       FROM orders
+       WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+       ORDER BY o_custkey, o_orderkey""",
+)
+def b77_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """first/last/nth_value analytics; the unbounded frame makes last/nth
+    deterministic under the total (date, key) order. One shuffle, all
+    three windows share the same sort."""
+    o = tables(spark, sf_dir)["orders"]
+    base = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    full = base.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    return o.select(
+        "o_custkey",
+        "o_orderkey",
+        F.first("o_orderkey").over(base).alias("first_k"),
+        F.last("o_orderkey").over(full).alias("last_k"),
+        F.nth_value("o_orderkey", 2).over(full).alias("second_k"),
+    ).orderBy("o_custkey", "o_orderkey")
+
+
+@register(
+    "b78_posexplode_words",
+    """SELECT p_partkey, u.pos, u.word FROM (
+         SELECT p_partkey,
+                unnest(list_transform(generate_series(1, len(l)),
+                                      i -> struct_pack(pos := i - 1, word := l[i]))) AS u
+         FROM (SELECT p_partkey, string_split(p_name, ' ') AS l FROM part) s) t
+       ORDER BY p_partkey, u.pos""",
+)
+def b78_posexplode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Table-valued positional explode (the UDTF surface of SURVEY §2.3,
+    as a built-in generator — no Python). DuckDB spells it
+    unnest+list_transform; values are identical."""
+    p = tables(spark, sf_dir)["part"]
+    return (
+        p.select(
+            "p_partkey", F.posexplode(F.split("p_name", " ")).alias("pos", "word")
+        )
+        .orderBy("p_partkey", "pos")
+    )
+
+
+@register(
+    "b79_salted_join_parity",
+    """SELECT s_nationkey, COUNT(*) AS n,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sq
+       FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+       GROUP BY s_nationkey ORDER BY s_nationkey""",
+)
+def b79_salted_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The salted skew-join path, oracle-checked against the plain join:
+    lineitem's hot supplier keys are scattered across 8 salt buckets and
+    the supplier dimension is replicated 8x — results must be (and are)
+    exactly the unsalted join's. At 100 TB this is the manual fallback
+    when one key exceeds what AQE skew-splitting handles."""
+    t = tables(spark, sf_dir)
+    li = t["lineitem"]
+    sup = t["supplier"].select(
+        F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
+    )
+    j = salted_join(li.select("l_suppkey", "l_quantity"), sup, "l_suppkey")
+    return (
+        j.groupBy("s_nationkey")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(_dec("l_quantity")).cast("double").alias("sq"),
+        )
+        .orderBy("s_nationkey")
+    )
+
+
+@register(
+    "a90_interval_join",
+    """WITH c AS (SELECT user_id, event_id AS l_id, ts AS ts_l
+                 FROM events WHERE event_type = 'click'),
+        p AS (SELECT user_id, event_id AS r_id, ts AS ts_r
+                 FROM events WHERE event_type = 'purchase')
+       SELECT c.user_id, l_id, r_id
+       FROM c JOIN p ON c.user_id = p.user_id
+         AND p.ts_r >= c.ts_l
+         AND p.ts_r <= c.ts_l + INTERVAL 30 MINUTE
+       ORDER BY l_id, r_id""",
+)
+def a90_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event-time interval join (click→purchase attribution within 30
+    min) — the BATCH twin of streaming.analytics.interval_join, same
+    code path, oracle-checked. The equi-key (user_id) carries the
+    shuffle; the range predicate filters inside the joined key group, so
+    there is no Cartesian blow-up at scale. Timestamps stay internal
+    (event ids are the output), sidestepping ns-vs-µs representation."""
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.analytics import (
+        interval_join,
+    )
+
+    ev = tables(spark, sf_dir)["events"]
+    clicks = ev.filter(F.col("event_type") == "click")
+    purchases = ev.filter(F.col("event_type") == "purchase")
+    return (
+        interval_join(clicks, purchases, delay=None)
+        .select("user_id", "l_id", "r_id")
+        .orderBy("l_id", "r_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Pivot/unpivot, date arithmetic, cohort retention, analytic functions,
+# EXCEPT ALL, exact quantiles, boolean aggregates, edit distance, array
+# statistics (b56, b57, b60-b66, a67)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "b56_pivot",
+    """SELECT l_returnflag,
+              COUNT(*) FILTER (WHERE l_linestatus = 'F') AS f_cnt,
+              COUNT(*) FILTER (WHERE l_linestatus = 'O') AS o_cnt,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
+                FILTER (WHERE l_linestatus = 'F') AS DOUBLE) AS f_qty,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
+                FILTER (WHERE l_linestatus = 'O') AS DOUBLE) AS o_qty
+       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+)
+def b56_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pivot on l_linestatus. Spark's pivot with an explicit value list is
+    a single-pass conditional aggregation — same plan the FILTER-clause
+    oracle describes; no extra shuffle versus a plain groupBy."""
+    li = tables(spark, sf_dir)["lineitem"]
+    piv = (
+        li.groupBy("l_returnflag")
+        .pivot("l_linestatus", ["F", "O"])
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty"),
+        )
+    )
+    return piv.select(
+        "l_returnflag",
+        F.col("F_cnt").alias("f_cnt"),
+        F.col("O_cnt").alias("o_cnt"),
+        F.col("F_qty").cast("double").alias("f_qty"),
+        F.col("O_qty").cast("double").alias("o_qty"),
+    ).orderBy("l_returnflag")
+
+
+@register(
+    "b57_date_arith",
+    """SELECT o_orderkey,
+              CAST(o_orderdate AS DATE) + 30 AS due,
+              CAST(o_orderdate AS DATE) - INTERVAL 7 DAY AS reminded,
+              EXTRACT(DOW FROM o_orderdate) AS dow
+       FROM orders WHERE o_orderkey <= 1000 ORDER BY o_orderkey""",
+)
+def b57_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Date arithmetic. DOW normalized: Spark dayofweek is 1=Sunday,
+    DuckDB EXTRACT(DOW) is 0=Sunday — subtract 1 on the Spark side."""
+    o = tables(spark, sf_dir)["orders"]
+    return (
+        o.filter(F.col("o_orderkey") <= 1000)
+        .select(
+            "o_orderkey",
+            F.date_add(F.col("o_orderdate").cast("date"), 30).alias("due"),
+            F.date_sub(F.col("o_orderdate").cast("date"), 7).cast("timestamp").alias(
+                "reminded"
+            ),
+            (F.dayofweek("o_orderdate") - 1).alias("dow"),
+        )
+        .orderBy("o_orderkey")
+    )
+
+
+@register(
+    "b66_unpivot",
+    """SELECT p_partkey, metric, val FROM (
+         SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS val
+         FROM part
+         UNION ALL
+         SELECT p_partkey, 'retail', CAST(p_retailprice AS DOUBLE) FROM part
+       ) t
+       WHERE p_partkey <= 300 ORDER BY p_partkey, metric""",
+)
+def b66_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unpivot (wide → long) via the native melt/unpivot operator — one
+    Expand node, a single scan, no self-union."""
+    p = tables(spark, sf_dir)["part"]
+    return (
+        p.filter(F.col("p_partkey") <= 300)
+        .select(
+            "p_partkey",
+            F.col("p_size").cast("double").alias("size"),
+            F.col("p_retailprice").cast("double").alias("retail"),
+        )
+        .unpivot("p_partkey", ["size", "retail"], "metric", "val")
+        .orderBy("p_partkey", "metric")
+    )
+
+
+@register(
+    "a67_cohort_retention",
+    """WITH firsts AS (
+         SELECT user_id, CAST(MIN(date_trunc('day', ts)) AS DATE) AS cohort
+         FROM events GROUP BY user_id
+       ),
+       activity AS (
+         SELECT DISTINCT e.user_id, f.cohort,
+                datediff('day', f.cohort, CAST(date_trunc('day', e.ts) AS DATE)) AS day_n
+         FROM events e JOIN firsts f ON e.user_id = f.user_id
+       )
+       SELECT cohort, day_n, COUNT(*) AS n_users
+       FROM activity WHERE day_n <= 7
+       GROUP BY cohort, day_n ORDER BY cohort, day_n""",
+)
+def a67_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort retention: users grouped by first-seen day, distinct active
+    users per day-offset. Two keyed shuffles (first-seen agg + the
+    distinct); the join broadcasts the cohort dim when small."""
+    ev = tables(spark, sf_dir)["events"]
+    day = F.col("ts").cast("date")
+    ev_d = ev.select("user_id", day.alias("day"))
+    firsts = ev_d.groupBy("user_id").agg(F.min("day").alias("cohort"))
+    activity = (
+        ev_d.join(firsts, "user_id")
+        .select("user_id", "cohort", F.datediff("day", "cohort").alias("day_n"))
+        .distinct()
+    )
+    return (
+        activity.filter(F.col("day_n") <= 7)
+        .groupBy("cohort", "day_n")
+        .agg(F.count(F.lit(1)).alias("n_users"))
+        .orderBy("cohort", "day_n")
+    )
+
+
+@register(
+    "b62_analytic_funcs",
+    """SELECT c_custkey,
+              FIRST_VALUE(c_custkey) OVER (PARTITION BY c_nationkey
+                                           ORDER BY c_custkey) AS fv,
+              LAST_VALUE(c_custkey) OVER (PARTITION BY c_nationkey
+                                          ORDER BY c_custkey
+                                          ROWS BETWEEN UNBOUNDED PRECEDING
+                                          AND UNBOUNDED FOLLOWING) AS lv,
+              ROUND(PERCENT_RANK() OVER (PARTITION BY c_nationkey
+                                         ORDER BY c_custkey), 6) AS pr
+       FROM customer ORDER BY c_custkey""",
+)
+def b62_analytic_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = tables(spark, sf_dir)["customer"]
+    w = W.partitionBy("c_nationkey").orderBy("c_custkey")
+    w_full = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    return c.select(
+        "c_custkey",
+        F.first("c_custkey").over(w).alias("fv"),
+        F.last("c_custkey").over(w_full).alias("lv"),
+        F.round(F.percent_rank().over(w), 6).alias("pr"),
+    ).orderBy("c_custkey")
+
+
+@register(
+    "b63_except_all",
+    """SELECT l_suppkey AS k FROM lineitem WHERE l_quantity > 40
+       EXCEPT ALL SELECT s_suppkey FROM supplier
+       ORDER BY k""",
+)
+def b63_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = tables(spark, sf_dir)
+    li = t["lineitem"].filter(F.col("l_quantity") > 40).select(
+        F.col("l_suppkey").alias("k")
+    )
+    s = t["supplier"].select(F.col("s_suppkey").alias("k"))
+    return li.exceptAll(s).orderBy("k")
+
+
+@register(
+    "b64_median",
+    """SELECT l_returnflag,
+              ROUND(CAST(quantile_cont(l_quantity, 0.5) AS DOUBLE), 4) AS med,
+              ROUND(CAST(quantile_cont(l_quantity, 0.9) AS DOUBLE), 4) AS p90
+       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+)
+def b64_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact interpolated quantiles (Spark percentile == SQL
+    quantile_cont/percentile_cont definition)."""
+    li = tables(spark, sf_dir)["lineitem"]
+    return (
+        li.groupBy("l_returnflag")
+        .agg(
+            F.round(F.percentile("l_quantity", F.lit(0.5)).cast("double"), 4).alias(
+                "med"
+            ),
+            F.round(F.percentile("l_quantity", F.lit(0.9)).cast("double"), 4).alias(
+                "p90"
+            ),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+@register(
+    "b65_bool_aggs",
+    """SELECT o_orderstatus,
+              BOOL_AND(o_totalprice > 0) AS all_pos,
+              BOOL_OR(o_totalprice > 400000) AS any_big,
+              COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_urgent
+       FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
+)
+def b65_bool_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = tables(spark, sf_dir)["orders"]
+    return (
+        o.groupBy("o_orderstatus")
+        .agg(
+            F.bool_and(F.col("o_totalprice") > 0).alias("all_pos"),
+            F.bool_or(F.col("o_totalprice") > 400000).alias("any_big"),
+            F.count_if(F.col("o_orderpriority") == "1-URGENT").alias("n_urgent"),
+        )
+        .orderBy("o_orderstatus")
+    )
+
+
+@register(
+    "b60_levenshtein",
+    """SELECT p_partkey, levenshtein(p_brand, p_type) AS d,
+              levenshtein(p_name, p_brand) AS dn
+       FROM part WHERE p_partkey <= 500 ORDER BY p_partkey""",
+)
+def b60_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance (fuzzy matching primitive for entity dedup)."""
+    p = tables(spark, sf_dir)["part"]
+    return (
+        p.filter(F.col("p_partkey") <= 500)
+        .select(
+            "p_partkey",
+            F.levenshtein("p_brand", "p_type").alias("d"),
+            F.levenshtein("p_name", "p_brand").alias("dn"),
+        )
+        .orderBy("p_partkey")
+    )
+
+
+@register(
+    "b61_array_stats",
+    """SELECT vec_id, len(embedding) AS n,
+              ROUND(CAST(list_max(embedding) AS DOUBLE), 5) AS mx,
+              ROUND(CAST(list_min(embedding) AS DOUBLE), 5) AS mn
+       FROM embeddings ORDER BY vec_id""",
+)
+def b61_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Array-column primitives over the embedding fixture."""
+    e = tables(spark, sf_dir)["embeddings"]
+    return e.select(
+        "vec_id",
+        F.size("embedding").alias("n"),
+        F.round(F.array_max("embedding").cast("double"), 5).alias("mx"),
+        F.round(F.array_min("embedding").cast("double"), 5).alias("mn"),
+    ).orderBy("vec_id")
+
+
+# ---------------------------------------------------------------------------
+# VARIANT extraction (a017)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "a017_variant_extract",
+    """SELECT event_type,
+              CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
+                AS BIGINT) AS sum_k,
+              CAST(MIN(CAST(json_extract_string(props, '$.k') AS BIGINT))
+                AS BIGINT) AS min_k,
+              CAST(MAX(CAST(json_extract_string(props, '$.k') AS BIGINT))
+                AS BIGINT) AS max_k,
+              COUNT(json_extract_string(props, '$.k')) AS n_k
+       FROM events GROUP BY event_type ORDER BY event_type""",
+)
+def a017_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured extraction through Spark 4's VARIANT type:
+    ``parse_json`` once into a binary VARIANT, then typed
+    ``try_variant_get`` path reads — the modern engine-native encoding
+    that replaces per-access JSON string re-parsing (b51's
+    ``get_json_object``) with a parse-once binary format; on wide
+    telemetry payloads the VARIANT read is O(paths), not O(payload).
+    Dialect pair: DuckDB extracts the same path from the JSON text."""
+    ev = tables(spark, sf_dir)["events"]
+    k = F.try_variant_get(F.parse_json("props"), "$.k", "bigint")
+    return (
+        ev.select("event_type", k.alias("k"))
+        .groupBy("event_type")
+        .agg(
+            F.sum("k").alias("sum_k"),
+            F.min("k").alias("min_k"),
+            F.max("k").alias("max_k"),
+            F.count("k").alias("n_k"),
+        )
+        .orderBy("event_type")
     )

@@ -46,10 +46,12 @@ from one_stop_cdc_ingestion_toolkit_spark.operators import (
 )
 from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
     SHINGLE_K,
+    _duck_shingles,
     minhash_cc_edges,
     word_shingles,
 )
 from one_stop_cdc_ingestion_toolkit_spark.operators.text import (
+    _duck_quality,
     bpe_ish_tokens,
     quality_score,
     token_count,
@@ -313,11 +315,7 @@ def _retention_oracle() -> str:
         ),
         member AS (
           SELECT c.cluster_id, c.doc_id,
-                 ROUND(LEAST(CAST(len(string_split_regex(trim(d.text), '\s+'))
-                                  AS DOUBLE) / 100.0, 1.0)
-                       * (1.0 - CAST(length(regexp_replace(d.text,
-                                     '[a-zA-Z0-9\s]', '', 'g')) AS DOUBLE)
-                                / GREATEST(length(d.text), 1)), 4) AS quality
+                 {_duck_quality("d.text")} AS quality
           FROM clusters c JOIN documents d ON d.doc_id = c.doc_id
         ),
         ranked AS (
@@ -523,8 +521,7 @@ def a143_source_kl_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         sh AS (
           SELECT DISTINCT source,
-                 unnest(list_transform(generate_series(1, len(words) - {SHINGLE_K - 1}),
-                        i -> array_to_string(words[i:i+{SHINGLE_K - 1}], ' '))) AS shingle
+                 {_duck_shingles()} AS shingle
           FROM w WHERE len(words) >= {SHINGLE_K}
         ),
         cnt AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS c

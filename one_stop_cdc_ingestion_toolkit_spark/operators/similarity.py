@@ -2,6 +2,8 @@
 
 North-star operator family (BASELINE.json): brute-force cosine top-k as
 the correctness baseline, and an LSH-bucketed variant as the scale path.
+Built on them: the kNN-graph degree audit (a003) and hard-negative
+mining (a0056).
 
 Design for 100 TB:
 - The query side is expected small → broadcast it; the corpus streams.
@@ -576,3 +578,175 @@ def q46_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cs = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
     return cosine_topk(qs, cs, 10).orderBy("q_id", "rn")
+
+
+# ---------------------------------------------------------------------------
+# LSH-bucketed kNN-graph degree (a003)
+# Pair generation is bounded by the sign bucket (KNN_PLANES hyperplanes);
+# the degree histogram is two partial-agg shuffles over id-keyed rows.
+# ---------------------------------------------------------------------------
+
+
+#: cosine threshold for an e149 kNN-graph edge.
+KNN_TAU = 0.2
+#: sign planes for the a003 kNN-graph buckets. 16 planes = 65,536
+#: buckets: like the SimHash band fix, the bucket space must be able to
+#: GROW with the corpus — the default 8-plane/256-bucket space is fine
+#: for top-k retrieval (b54 probes one bucket) but pins an
+#: all-pairs-in-bucket GRAPH build at O(n²/256) at 10^9 vectors.
+KNN_PLANES = 16
+
+
+@register(
+    "a003_knn_degree",
+    f"""WITH sig AS (
+         SELECT vec_id, embedding, {_duck_signature(n_planes=KNN_PLANES)} AS s
+         FROM embeddings),
+       edges AS (
+         SELECT a.vec_id AS id_a, b.vec_id AS id_b
+         FROM sig a JOIN sig b
+           ON a.s = b.s AND a.vec_id < b.vec_id
+         WHERE {_duck_cos('a.embedding', 'b.embedding')} >= {KNN_TAU}),
+       nbrs AS (
+         SELECT id_a AS vec_id, id_b AS nbr FROM edges
+         UNION ALL
+         SELECT id_b AS vec_id, id_a AS nbr FROM edges),
+       deg AS (
+         SELECT s.vec_id, CAST(COUNT(n.nbr) AS BIGINT) AS degree
+         FROM sig s LEFT JOIN nbrs n ON s.vec_id = n.vec_id
+         GROUP BY s.vec_id)
+       SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_vecs
+       FROM deg GROUP BY degree ORDER BY degree""",
+)
+def a003_knn_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree histogram of the LSH-bucketed approximate kNN graph over
+    the embedding corpus (edges = same sign-bucket AND cosine ≥ 0.2) —
+    the index-quality audit run before trusting ANN retrieval: a spiky
+    histogram means hub buckets (recall rot + join skew), a mass at
+    degree 0 means over-partitioned planes. Pair generation is bounded
+    per bucket with a KNN_PLANES-bit signature (65,536 buckets — bucket
+    headroom grows with the corpus instead of pinning the in-bucket
+    self-join at O(n²/256)); the histogram is two partial-agg
+    shuffles."""
+    e = tables(spark, sf_dir)["embeddings"]
+    # norm hoisted to the per-vector signature projection (r8): the edge
+    # filter then pays one dot fold per candidate pair, not three
+    sig = e.select(
+        "vec_id",
+        "embedding",
+        lsh_signature(F.col("embedding"), n_planes=KNN_PLANES).alias("s"),
+        norm(F.col("embedding")).alias("nrm"),
+    )
+    a = sig.select(
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
+        "s",
+        F.col("nrm").alias("na"),
+    )
+    b = sig.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
+        "s",
+        F.col("nrm").alias("nb"),
+    )
+    edges = (
+        a.join(b, "s")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(
+            cosine_hoisted(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
+            >= KNN_TAU
+        )
+        .select("id_a", "id_b")
+    )
+    nbrs = edges.select(F.col("id_a").alias("vec_id")).unionAll(
+        edges.select(F.col("id_b").alias("vec_id"))
+    )
+    deg = (
+        sig.select("vec_id")
+        .join(nbrs.groupBy("vec_id").agg(F.count(F.lit(1)).alias("d")), "vec_id", "left")
+        .select(F.coalesce(F.col("d"), F.lit(0)).alias("degree"))
+    )
+    return (
+        deg.groupBy("degree")
+        .agg(F.count(F.lit(1)).alias("n_vecs"))
+        .orderBy("degree")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Hard-negative mining (a0056)
+# Broadcasts the query sample and streams the corpus once (the audit
+# shape; the production path swaps in the LSH-bucketed join).
+# ---------------------------------------------------------------------------
+
+
+#: Queries sampled for hard-negative mining, negatives kept per query.
+HN_QUERIES = 10
+HN_TOPK = 5
+
+
+@register(
+    "a0056_hard_negatives",
+    f"""WITH q AS (
+          SELECT vec_id AS q_id, embedding AS q_vec, label AS q_label
+          FROM embeddings WHERE vec_id < {HN_QUERIES}),
+        scored AS (
+          SELECT q_id, vec_id AS c_id,
+                 list_sum(list_transform(generate_series(1, 64),
+                   i -> CAST(q_vec[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
+                 / (sqrt(list_sum(list_transform(generate_series(1, 64),
+                      i -> CAST(q_vec[i] AS DOUBLE) * CAST(q_vec[i] AS DOUBLE))))
+                  * sqrt(list_sum(list_transform(generate_series(1, 64),
+                      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))))
+                   AS cos
+          FROM q JOIN embeddings ON label <> q_label),
+        ranked AS (
+          SELECT q_id, c_id, cos,
+                 ROW_NUMBER() OVER (PARTITION BY q_id
+                                    ORDER BY cos DESC, c_id) AS rn
+          FROM scored)
+        SELECT q_id, c_id, ROUND(cos, 6) AS sim, rn
+        FROM ranked WHERE rn <= {HN_TOPK} ORDER BY q_id, rn""",
+)
+def a056_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive training: per sampled query,
+    the {HN_TOPK} most-similar corpus vectors whose label DIFFERS — the
+    "close but wrong" examples a retrieval/embedding trainer feeds as
+    negatives. Self-pairs drop out automatically (same label).
+
+    Scale shape: the query sample broadcasts; the corpus streams through
+    one scan (label filter + cosine both codegen); top-k per query is a
+    q_id-keyed window over the sample's partitions. At full scale the
+    corpus side swaps to the LSH-bucketed join (`ann_lsh_topk`) — this
+    exact ranking is the audit/recall baseline for that path."""
+    emb = tables(spark, sf_dir)["embeddings"]
+    qs = (
+        emb.filter(F.col("vec_id") < HN_QUERIES)
+        .select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_vec"),
+            F.col("label").alias("q_label"),
+        )
+        .withColumn("__qn", norm(F.col("q_vec")))
+    )
+    # corpus norm hoisted to once-per-row (r8): cosine() in the pair
+    # projection re-folded both self-dot-products per (q, c) pair
+    scored = (
+        emb.withColumn("__cn", norm(F.col("embedding")))
+        .crossJoin(F.broadcast(qs))
+        .filter(F.col("label") != F.col("q_label"))
+        .select(
+            "q_id",
+            F.col("vec_id").alias("c_id"),
+            cosine_hoisted(
+                F.col("q_vec"), F.col("embedding"), F.col("__qn"), F.col("__cn")
+            ).alias("cos"),
+        )
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= HN_TOPK)
+        .select("q_id", "c_id", F.round("cos", 6).alias("sim"), "rn")
+        .orderBy("q_id", "rn")
+    )

@@ -1,5 +1,7 @@
-"""Text-analysis operators: token counting, quality scoring, language ID,
-document fingerprinting.
+"""Text-analysis operators: token counting, quality scoring (and its
+per-source quantile normalization, a041), language ID, document
+fingerprinting. ``_duck_quality`` is the one DuckDB twin of
+``quality_score``; every oracle that scores quality uses it.
 
 All hot-path logic is built-in Spark SQL functions (regex, split,
 higher-order) — JVM-side, codegen'd, no Python UDFs — so a 100 TB
@@ -12,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
 from one_stop_cdc_ingestion_toolkit_spark.operators import register
@@ -46,6 +49,15 @@ def quality_score(text: Column) -> Column:
     """Deterministic [0,1] quality: length component x non-punct share."""
     tokens = token_count(text).cast("double")
     return F.round(F.least(tokens / 100.0, F.lit(1.0)) * (1.0 - punct_ratio(text)), 4)
+
+
+def _duck_quality(text: str = "text") -> str:
+    """DuckDB twin of `quality_score` over the SQL column ``text``."""
+    return rf"""ROUND(LEAST(CAST(len(string_split_regex(trim({text}), '\s+')) AS DOUBLE)
+                      / 100.0, 1.0)
+                * (1.0 - CAST(length(regexp_replace({text}, '[a-zA-Z0-9\s]', '', 'g'))
+                              AS DOUBLE)
+                        / GREATEST(length({text}), 1)), 4)"""
 
 
 def lang_scores(text: Column) -> dict[str, Column]:
@@ -110,13 +122,9 @@ def b47_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q48_quality_score",
-    r"""SELECT doc_id,
+    rf"""SELECT doc_id,
               len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-              ROUND(LEAST(CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-                          / 100.0, 1.0)
-                    * (1.0 - CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
-                                  AS DOUBLE)
-                            / GREATEST(length(text), 1)), 4) AS quality
+              {_duck_quality()} AS quality
        FROM documents ORDER BY doc_id""",
 )
 def q48_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,4 +212,51 @@ def b51_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(k).alias("n_k"),
         )
         .orderBy("event_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Per-source quantile-normalized quality (a041)
+# percent_rank is partitioned by source (never a global single-partition
+# sort); the decile report is one small agg.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "a041_quantile_norm_quality",
+    f"""WITH q AS (
+         SELECT source, {_duck_quality()} AS quality FROM documents),
+       pr AS (
+         SELECT source, quality,
+                PERCENT_RANK() OVER (PARTITION BY source
+                                     ORDER BY quality) AS p
+         FROM q)
+       SELECT source,
+              CAST(LEAST(9, CAST(FLOOR(p * 10) AS INT)) AS INT) AS decile,
+              CAST(COUNT(*) AS BIGINT) AS n_docs,
+              ROUND(AVG(quality), 4) AS avg_raw_quality
+       FROM pr GROUP BY source, decile ORDER BY source, decile""",
+)
+def a041_quantile_norm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source quantile normalization of the quality score: a doc's
+    normalized score is its percent_rank WITHIN its source, so "top 10%
+    of source X" is comparable to "top 10% of source Y" even when the
+    sources' raw-score distributions differ wildly (the reason raw
+    cross-source quality thresholds systematically starve verbose
+    sources). Reported as per-(source, decile) counts with the mean raw
+    score — the calibration table a mixing policy reads. The window is
+    PARTITIONED by source (each source sorts independently — no global
+    sort); ties get identical percent_rank in both engines."""
+    d = tables(spark, sf_dir)["documents"]
+    q = d.select("source", quality_score(F.col("text")).alias("quality"))
+    p = F.percent_rank().over(W.partitionBy("source").orderBy("quality"))
+    decile = F.least(F.lit(9), F.floor(p * 10).cast("int")).cast("int")
+    return (
+        q.select("source", "quality", decile.alias("decile"))
+        .groupBy("source", "decile")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.round(F.avg("quality"), 4).alias("avg_raw_quality"),
+        )
+        .orderBy("source", "decile")
     )

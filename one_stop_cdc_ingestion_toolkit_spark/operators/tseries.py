@@ -1,5 +1,6 @@
-"""Time-series similarity search (`e181`): z-normalized distance between
-per-user daily activity curves and the global traffic curve.
+"""Time-series operators: similarity search (`e181`, z-normalized distance
+between per-user daily activity curves and the global traffic curve)
+and CUSUM change points over daily event volumes (a045).
 
 Pattern follows the distributed time-series similarity literature
 (PAPERS.md: "Time Series Similarity Search for Streaming Data in
@@ -19,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
 from one_stop_cdc_ingestion_toolkit_spark.operators import register, track_cache
@@ -157,4 +159,75 @@ def a035_curve_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("zdist", "user_id")
         .limit(TS_TOPK)
+    )
+
+
+# ---------------------------------------------------------------------------
+# CUSUM change points over daily event volumes (a045)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "a045_cusum_changepoint",
+    """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+                           CAST(COUNT(*) AS BIGINT) AS cnt
+                    FROM events GROUP BY 1, 2),
+       st AS (SELECT event_type, CAST(SUM(cnt) AS DOUBLE) / COUNT(*) AS mu,
+                     COUNT(*) AS n_days
+              FROM daily GROUP BY 1),
+       cs AS (SELECT d.event_type, day, st.n_days,
+                     SUM(CAST(cnt AS DOUBLE) - mu) OVER (
+                         PARTITION BY d.event_type ORDER BY day) AS cusum
+              FROM daily d JOIN st USING (event_type)),
+       r AS (SELECT event_type, day, n_days, cusum,
+                    ROW_NUMBER() OVER (PARTITION BY event_type
+                                       ORDER BY abs(cusum) DESC, day) AS rn
+             FROM cs)
+       SELECT event_type, day AS change_day,
+              ROUND(cusum, 4) AS peak_cusum,
+              CAST(n_days AS BIGINT) AS n_days
+       FROM r WHERE rn = 1 ORDER BY event_type""",
+)
+def a045_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM change-point detection on daily event volume: per event
+    type, the day where the cumulative deviation from the mean daily
+    count peaks in magnitude — the standard "did the stream's behavior
+    shift, and when" alarm for an ingestion pipeline.
+
+    Shape: the corpus collapses to (event_type, day) counts map-side;
+    every window is partitioned by event_type over day-cardinality
+    frames. The running sum folds (cnt − mu) in day order — a fixed
+    sequential order both engines share, so the doubles are
+    bit-identical before the final round."""
+    ev = tables(spark, sf_dir)["events"]
+    # cached: the (type, day) counts feed the per-type stats AND the
+    # cusum window — uncached, the event scan ran twice (review r8)
+    daily = track_cache(
+        ev.groupBy(
+            "event_type", F.col("ts").cast("date").alias("day")
+        ).agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    st = daily.groupBy("event_type").agg(
+        (F.sum("cnt").cast("double") / F.count(F.lit(1))).alias("mu"),
+        F.count(F.lit(1)).alias("n_days"),
+    )
+    wsum = (
+        W.partitionBy("event_type")
+        .orderBy("day")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    cs = daily.join(st, "event_type").withColumn(
+        "cusum", F.sum(F.col("cnt").cast("double") - F.col("mu")).over(wsum)
+    )
+    wr = W.partitionBy("event_type").orderBy(F.abs("cusum").desc(), "day")
+    return (
+        cs.withColumn("rn", F.row_number().over(wr))
+        .filter(F.col("rn") == 1)
+        .select(
+            "event_type",
+            F.col("day").alias("change_day"),
+            F.round("cusum", 4).alias("peak_cusum"),
+            F.col("n_days").cast("long").alias("n_days"),
+        )
+        .orderBy("event_type")
     )

@@ -41,6 +41,36 @@ def _parseable_lines(path: Path) -> list:
     return out
 
 
+def _tail_records(path: Path, n: int) -> list:
+    """The last ``n`` complete records of an append-only jsonl file, oldest
+    first, read back from EOF in chunks: the cost follows ``n`` and the
+    record size, not the file's length. Unparseable lines (a torn last
+    append) are skipped, as in `_parseable_lines`."""
+    if n <= 0 or not path.exists():
+        return []
+    out: list = []
+    with path.open("rb") as f:
+        pos = f.seek(0, 2)
+        tail = b""
+        while pos > 0 and len(out) < n:
+            step = min(pos, 1 << 16)
+            pos -= step
+            f.seek(pos)
+            lines = (f.read(step) + tail).split(b"\n")
+            # the first piece may continue a line that starts further back
+            tail = lines.pop(0) if pos > 0 else b""
+            for line in reversed(lines):
+                if not line.strip():
+                    continue
+                try:
+                    out.append(json.loads(line))
+                except ValueError:
+                    continue
+                if len(out) == n:
+                    break
+    return out[::-1]
+
+
 def _complete_record_count(path: Path) -> int:
     """Number of complete records, parsing AT MOST the last line (the
     only one a single-writer append crash can tear — review r8: the
@@ -190,9 +220,11 @@ class TableStore:
 
     def _live_states(self, table: str) -> list:
         """The pointer states whose data must survive pruning: the last
-        ``retain + 1`` history entries (current + retained history)."""
-        recs = _parseable_lines(self._history_file(table))
-        return [r["state"] for r in recs[-(self.retain + 1) :]]
+        ``retain + 1`` history entries (current + retained history), read
+        from the file's tail so a write's cost does not grow with the
+        table's age."""
+        recs = _tail_records(self._history_file(table), self.retain + 1)
+        return [r["state"] for r in recs]
 
     def _last_seq(self, table: str) -> int | None:
         """Seq of the most recent pointer flip, json-parsing at most the

@@ -10,15 +10,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+from one_stop_cdc_ingestion_toolkit_spark.operators.audit import a008_welch_audit
+from one_stop_cdc_ingestion_toolkit_spark.operators.clustering import (
     KMEANS_K,
     assign_clusters,
     a007_kmeans_clusters,
-    a008_welch_audit,
-    a009_ece_calibration,
-    a010_segment_dup_mass,
     kmeans_fit,
 )
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import a010_segment_dup_mass
+from one_stop_cdc_ingestion_toolkit_spark.operators.mlprep import a009_ece_calibration
 from tests.conftest import SF_DIR
 
 
@@ -74,7 +74,7 @@ def test_arrow_and_hof_assignment_bit_identical(spark):
     """The Arrow kernel replays `_l2sq`'s IEEE fold order, so both
     physical paths must emit EXACTLY the same (cid, dist, dist2) —
     float equality, no tolerance."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.clustering import (
         assign_with_runnerup,
         kmeans_centroids,
     )
@@ -102,7 +102,7 @@ def test_arrow_assignment_tolerates_null_vectors(spark):
     job (parity with the HOF path's null propagation)."""
     from pyspark.sql import functions as F
 
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.clustering import (
         assign_clusters,
     )
 
@@ -169,7 +169,7 @@ def test_segment_count_matches_word_count(spark):
 
 
 def test_label_margin_matrix_shape(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.mlprep import (
         a011_label_margin_matrix,
     )
 
@@ -187,7 +187,7 @@ def test_label_margin_matrix_shape(spark):
 
 
 def test_silhouette_bounds_and_population(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.clustering import (
         a012_simplified_silhouette,
     )
 
@@ -200,7 +200,7 @@ def test_silhouette_bounds_and_population(spark):
 
 
 def test_cluster_purity_consistent_with_kmeans(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.clustering import (
         a007_kmeans_clusters,
         a013_cluster_purity,
     )
@@ -213,7 +213,7 @@ def test_cluster_purity_consistent_with_kmeans(spark):
 
 
 def test_weighted_sample_fixed_size_and_ranked(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.mixing import (
         WSAMPLE_M,
         a014_weighted_sample,
     )
@@ -231,7 +231,7 @@ def test_weighted_sample_fixed_size_and_ranked(spark):
 
 
 def test_weighted_sample_plan_is_take_ordered(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.mixing import (
         a014_weighted_sample,
     )
     from one_stop_cdc_ingestion_toolkit_spark.plans import uses_take_ordered
@@ -240,7 +240,7 @@ def test_weighted_sample_plan_is_take_ordered(spark):
 
 
 def test_kcenter_radius_monotone_and_spread(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.clustering import (
         KCENTER_K,
         a015_kcenter_coreset,
     )
@@ -260,9 +260,7 @@ def test_padding_waste_monotone_in_ctx_len(spark):
     """Larger context length can only increase per-doc padding for docs
     shorter than it; the fixture's docs are 10-99 words, so waste_frac
     must rise with ctx_len across 16->128."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
-        a016_padding_waste,
-    )
+    from one_stop_cdc_ingestion_toolkit_spark.operators.corpus import a016_padding_waste
 
     res = {r["ctx_len"]: r for r in a016_padding_waste(spark, SF_DIR).collect()}
     assert set(res) == {16, 32, 64, 128}
@@ -276,7 +274,7 @@ def test_padding_waste_monotone_in_ctx_len(spark):
 
 def test_variant_extract_equals_json_path(spark):
     """The VARIANT path must agree with the string get_json_object path."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.relational import (
         a017_variant_extract,
     )
 
@@ -301,7 +299,7 @@ def test_coreset_coverage_bounded_by_radius(spark):
     farthest-first bound (final radius covers only k-1 picks, so use
     the global max over labels <= radius at step k-1 would not hold;
     instead check coverage max equals the true global max min-dist)."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.clustering import (
         a018_coreset_coverage,
     )
 
@@ -315,7 +313,7 @@ def test_coreset_coverage_bounded_by_radius(spark):
 def test_countmin_contract(spark):
     """CMS guarantees: estimate never underestimates; grid is 256
     counters whose total equals CMS_D x stream size."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.profiling import (
         CMS_TOPK,
         a019_countmin_heavy_hitters,
     )
@@ -330,7 +328,7 @@ def test_countmin_contract(spark):
 def test_pagerank_mass_and_ranking(spark):
     """PR scores are positive; output is the rounded-score descending
     top-10 with doc_id tie-break."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
         PR_TOPK,
         a020_pagerank_neardup,
     )
@@ -348,7 +346,7 @@ def test_markov_rows_sum_to_one(spark):
     """Each current-state row of the transition matrix is a probability
     distribution: counts per cur sum to the transition total and the
     rounded probabilities sum to ~1."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.experiments import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.behavior import (
         a021_markov_transitions,
     )
 

@@ -5,15 +5,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from one_stop_cdc_ingestion_toolkit_spark.operators.extras import (
-    approx_distinct_stats,
-    approx_quantiles,
-)
 from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
     decode_image,
     extract_blob_metadata,
     fake_decode,
     frame_sample,
+)
+from one_stop_cdc_ingestion_toolkit_spark.operators.profiling import (
+    approx_distinct_stats,
+    approx_quantiles,
 )
 from tests.conftest import SF_DIR
 

@@ -223,57 +223,35 @@ def test_persisting_operators_release_caches(spark):
 
 
 def test_verify_join_conf_escape_hatch(spark):
-    """spark.cdcToolkit.verifyJoin controls the near-dup verify join:
-    'shuffle' must skip the eager size probe AND the broadcast pin
-    (cluster-scale escape hatch — judge ask r7 #7), 'broadcast' must
-    pin, and all three modes must return identical rows."""
+    """The near-dup verify join's broadcast decision: the verify join
+    returns pairs, and ``pin_broadcast_if_small`` probes once per call,
+    pinning below the 64 MB budget and leaving the frame alone above."""
     from one_stop_cdc_ingestion_toolkit_spark.operators import (
-        VERIFY_JOIN_CONF,
+        pin_broadcast_if_small,
         release_caches,
     )
     from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
 
-    from one_stop_cdc_ingestion_toolkit_spark.operators import pin_broadcast_if_small
-
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(300)
-    results = {}
-    for mode in ("auto", "shuffle", "broadcast"):
-        spark.conf.set(VERIFY_JOIN_CONF, mode)
-        try:
-            pairs = ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
-            results[mode] = sorted(map(tuple, pairs.collect()))
-        finally:
-            spark.conf.unset(VERIFY_JOIN_CONF)
-            release_caches()
-    assert results["auto"] == results["shuffle"] == results["broadcast"]
-    assert len(results["auto"]) > 0
+    try:
+        pairs = ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
+        auto = sorted(map(tuple, pairs.collect()))
+    finally:
+        release_caches()
+    assert len(auto) > 0
 
-    # the contract, unit-level: 'shuffle' must run ZERO probe jobs and
-    # leave the frame unpinned (Spark's own stats-based broadcast — with
-    # its size-check fallback — remains free to fire); 'broadcast' pins
-    # without probing; 'auto' probes.
     calls = []
 
     def probe(n):
         calls.append(1)
         return n
 
-    spark.conf.set(VERIFY_JOIN_CONF, "shuffle")
-    try:
-        out = pin_broadcast_if_small(d, lambda: probe(0))
-        assert out is d and calls == []
-        spark.conf.set(VERIFY_JOIN_CONF, "broadcast")
-        out = pin_broadcast_if_small(d, lambda: probe(0))
-        assert out is not d and calls == []
-        spark.conf.set(VERIFY_JOIN_CONF, "auto")
-        big = pin_broadcast_if_small(d, lambda: probe(1 << 40))
-        assert big is d and len(calls) == 1
-        small = pin_broadcast_if_small(d, lambda: probe(1024))
-        assert small is not d and len(calls) == 2
-    finally:
-        spark.conf.unset(VERIFY_JOIN_CONF)
+    big = pin_broadcast_if_small(d, lambda: probe(1 << 40))
+    assert big is d and len(calls) == 1
+    small = pin_broadcast_if_small(d, lambda: probe(1024))
+    assert small is not d and len(calls) == 2
 
 
 def test_export_corpus_deterministic_shards(spark, tmp_path):
@@ -530,18 +508,15 @@ def test_triangle_closing_join_is_broadcast(spark):
     reprints, so it alone would not catch pin_broadcast_if_small
     silently falling back to sort-merge (est-bytes drift, conf change) —
     which would quietly re-shuffle the Σ outdeg² wedge stream and undo
-    the measured 5.54→2.98 s win. Pin the strategy: under the default
-    verifyJoin=auto the plan must contain a BroadcastHashJoin (the
-    closing probe) and no wedge-keyed SortMergeJoin above it."""
+    the measured 5.54→2.98 s win. Pin the strategy: the plan must
+    contain a BroadcastHashJoin (the closing probe) and no wedge-keyed
+    SortMergeJoin above it."""
     from one_stop_cdc_ingestion_toolkit_spark.operators import release_caches
     from one_stop_cdc_ingestion_toolkit_spark.operators.insights import (
         a027_triangle_census,
     )
     from one_stop_cdc_ingestion_toolkit_spark.plans import physical_plan
 
-    from one_stop_cdc_ingestion_toolkit_spark.operators import VERIFY_JOIN_CONF
-
-    assert spark.conf.get(VERIFY_JOIN_CONF, "auto") == "auto"
     plan = physical_plan(a027_triangle_census(spark, SF_DIR))
     release_caches()
     assert "BroadcastHashJoin" in plan, "closing join lost its broadcast pin"

@@ -1,4 +1,4 @@
-"""Semantic tests for the a043–a048 batch (operators/round4b.py):
+"""Semantic tests for a043–a048 (audit, profiling, tseries, textmine, dedup):
 AUC on a hand-built frame with ties, correlation bounds/symmetry,
 CUSUM peak on a synthetic level shift, burstiness closed-form, dedup
 savings conservation, and entropy bounds — plus the plan shapes the
@@ -11,15 +11,21 @@ import math
 from pyspark.sql import functions as F
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
-from one_stop_cdc_ingestion_toolkit_spark.operators.round4b import (
-    BURST_TOPK,
-    CORR_DIMS,
-    a043_pairwise_auc,
-    a044_dim_correlation,
-    a045_cusum_changepoint,
-    a046_word_burstiness,
+from one_stop_cdc_ingestion_toolkit_spark.operators.audit import a043_pairwise_auc
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
     a047_dedup_token_savings,
+)
+from one_stop_cdc_ingestion_toolkit_spark.operators.profiling import (
+    CORR_DIMS,
+    a044_dim_correlation,
+)
+from one_stop_cdc_ingestion_toolkit_spark.operators.textmine import (
+    BURST_TOPK,
+    a046_word_burstiness,
     a048_bigram_cond_entropy,
+)
+from one_stop_cdc_ingestion_toolkit_spark.operators.tseries import (
+    a045_cusum_changepoint,
 )
 from one_stop_cdc_ingestion_toolkit_spark.plans import physical_plan
 from tests.conftest import SF_DIR

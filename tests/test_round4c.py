@@ -3,11 +3,11 @@ shapes that keep them cheap at 100 TB."""
 
 from __future__ import annotations
 
-from one_stop_cdc_ingestion_toolkit_spark.operators.round4c import (
-    a055_k_anonymity,
+from one_stop_cdc_ingestion_toolkit_spark.operators.audit import a055_k_anonymity
+from one_stop_cdc_ingestion_toolkit_spark.operators.similarity import (
     a056_hard_negatives,
-    a057_vocab_coverage,
 )
+from one_stop_cdc_ingestion_toolkit_spark.operators.textmine import a057_vocab_coverage
 from one_stop_cdc_ingestion_toolkit_spark.plans import physical_plan
 from tests.conftest import SF_DIR
 

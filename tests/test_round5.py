@@ -6,20 +6,20 @@ from __future__ import annotations
 
 import pytest
 
-from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
-    PNG_H,
-    PNG_W,
-)
-from one_stop_cdc_ingestion_toolkit_spark.operators.round5 import (
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
     CL_MIN_SHARED,
-    FRAME_BYTES,
-    FRAME_STEP,
-    RESIZE_FACTOR,
-    a0001_image_resize,
-    a0002_frame_sample,
     a0003_crosslang_dups,
     a0004_phash_dedup,
     a0005_kmv_overlap,
+)
+from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
+    FRAME_BYTES,
+    FRAME_STEP,
+    PNG_H,
+    PNG_W,
+    RESIZE_FACTOR,
+    a0001_image_resize,
+    a0002_frame_sample,
 )
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -177,7 +177,7 @@ def test_frame_container_over_binary_column(spark, tmp_path):
     """Substantiate a0002's scale claim: the same Y4M mux/decode runs
     over a real parquet `binary` column (the production arrival shape),
     not only text-derived bytes — and malformed streams are rejected."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.round5 import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
         pack_frame_container,
         sample_frames,
     )

@@ -102,7 +102,7 @@ def test_crosslang_pair_space_bounded(spark, scale_dir):
     count stays orders of magnitude below corpus² (the generator's
     random lang tags make a slice of the planted dups cross-language,
     so the matrix must also be non-empty)."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.round5 import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
         a0003_crosslang_dups,
     )
 
@@ -199,7 +199,7 @@ def test_kmv_estimates_track_exact_at_scale(spark, scale_dir):
     pairs inside the ±KMV_TOL audit band (deterministic fixture; the
     observed rate is 44/45) and every estimate within 2·KMV_TOL
     (≈5.4σ at worst-case J=0.5, σ = sqrt(J(1−J)/k) ≈ 0.044)."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.round5 import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
         KMV_TOL,
         a0005_kmv_overlap,
     )

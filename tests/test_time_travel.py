@@ -118,3 +118,45 @@ def test_read_as_of_empty_bucket_state_returns_none(spark, tmp_path):
     assert store.read_as_of(spark, "t", 1) is None
     # seq 0 (pre-delete) still reads within retain
     assert store.read_as_of(spark, "t", 0).count() == 1
+
+
+def test_write_parses_only_history_tail(spark, tmp_path, monkeypatch):
+    """A write's metadata step parses at most ``retain + 2`` _HISTORY
+    records (the tail it keeps, plus the last line's torn-tail check),
+    however long the history is: counted on a 100k-line file."""
+    import json
+
+    from one_stop_cdc_ingestion_toolkit_spark.streaming import table_store
+
+    store = TableStore(tmp_path / "lake", retain=2)
+    store.write(_df(spark, [(1, "a")]), "t")
+    hf = tmp_path / "lake" / "t" / "_HISTORY"
+    n = 100_000
+    with hf.open("w") as f:
+        for i in range(n - 1):
+            rec = {"seq": i, "kind": "snapshot", "state": f"gen-old{i}"}
+            f.write(json.dumps(rec) + "\n")
+        rec = {"seq": n - 1, "kind": "snapshot", "state": "gen-000000"}
+        f.write(json.dumps(rec) + "\n")
+
+    parses = []
+
+    class CountingJson:
+        dumps = staticmethod(json.dumps)
+
+        @staticmethod
+        def loads(s):
+            parses.append(1)
+            return json.loads(s)
+
+    monkeypatch.setattr(table_store, "json", CountingJson)
+    store.write(_df(spark, [(2, "b")]), "t")
+    monkeypatch.undo()
+
+    assert len(parses) <= store.retain + 2
+    hist = store.history("t")
+    assert len(hist) == n + 1 and hist[-1]["seq"] == n
+    # the current and the previous generation survive the prune
+    gens = sorted(p.name for p in (tmp_path / "lake" / "t").glob("gen-*"))
+    assert gens == ["gen-000000", "gen-000001"]
+    assert store.read(spark, "t").collect()[0]["v"] == "b"

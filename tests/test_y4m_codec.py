@@ -123,7 +123,7 @@ def test_encode_rejects_wrong_plane_sizes():
 def test_a0008_spark_end_to_end(spark):
     """The a0008 operator decodes genuinely: its per-doc stats over the
     Arrow batch path equal a pure-Python recompute from the raw text."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.round9 import (
+    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
         Y4M_DOCS,
         Y4M_FRAME_BYTES,
         Y4M_STEP,
