@@ -9,11 +9,10 @@ types (None/Sub/Up/Average/Paeth, PNG spec §9.2) on both paths.
 Unsupported shapes (palette, 16-bit, interlaced) raise ``ValueError``
 so callers fall back explicitly rather than mis-decode.
 
-Used by ``operators/multimodal.py``: ``decode_image`` tries Pillow,
-then this codec for PNG payloads, then raises; ``resize_images`` gets a
-real decode → nearest-neighbor resample → re-encode path for PNGs. All
-byte-level work happens inside the executor's Arrow batch (mapInPandas)
-— the codec itself is deliberately driver/executor agnostic pure
+Used by ``operators/multimodal.py``: a050 round-trips PNGs and a0001
+decodes → nearest-neighbor resamples → re-encodes them. All byte-level
+work happens inside the executor's Arrow batch (mapInPandas) — the
+codec itself is deliberately driver/executor agnostic pure
 Python, deterministic bit-for-bit: the same payload always re-encodes
 to the same bytes (fixed zlib level, fixed filter), so retried tasks
 produce identical shards.

@@ -3,17 +3,15 @@
 Companion to ``png_codec.py`` for the audio modality: PCM WAV needs no
 third-party codec, so audio payloads in a binary column can be parsed
 (sample rate / channels / bit depth / duration), decoded to sample
-arrays, and feature-extracted (windowed RMS energy, the standard
-voice-activity / silence-trim primitive) for real inside the executor's
-Arrow batch. Scope: canonical RIFF little-endian, uncompressed PCM
+arrays for real inside the executor's Arrow batch (a049's windowed
+RMS energy). Scope: canonical RIFF little-endian, uncompressed PCM
 (format tag 1), 8-bit unsigned or 16-bit signed samples, any channel
 count. Anything else raises ``ValueError`` so callers fall back
 explicitly rather than mis-decode.
 
 Everything is deterministic: encode uses a fixed header layout, decode
-is exact integer work, and RMS features are computed in int64 sums
-before one final float division — so a retried task reproduces feature
-rows bit-for-bit.
+is exact integer work — so a retried task reproduces its rows
+bit-for-bit.
 """
 
 from __future__ import annotations
@@ -135,45 +133,3 @@ def encode_wav(
     )
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
-
-def rms_windows(audio: WavAudio, window_ms: int = 100) -> list[dict]:
-    """Per-window RMS energy + peak over the mono mix — the silence-trim
-    / voice-activity primitive. Integer mean-square sums (int64, exact)
-    with ONE final sqrt per window, so results are platform-stable.
-    Returns [{window_idx, start_ms, rms, peak}] — the last partial
-    window is included (its divisor is its true frame count)."""
-    if window_ms <= 0:
-        raise ValueError("wav: window_ms must be positive")
-    # mono mix: floor-divide sum by channel count (exact integer)
-    mono = audio.samples.astype(np.int64).sum(axis=1) // audio.channels
-    win = audio.sample_rate * window_ms // 1000
-    if win == 0:
-        raise ValueError("wav: window shorter than one frame")
-    out = []
-    for w, start in enumerate(range(0, len(mono), win)):
-        seg = mono[start : start + win]
-        sq = int((seg * seg).sum())
-        out.append(
-            {
-                "window_idx": w,
-                "start_ms": start * 1000 // audio.sample_rate,
-                "rms": round(float(np.sqrt(sq / len(seg))), 6),
-                "peak": int(np.abs(seg).max()),
-            }
-        )
-    return out
-
-
-def downsample(audio: WavAudio, factor: int) -> WavAudio:
-    """Integer decimation (every ``factor``-th frame) — the deterministic
-    resample counterpart of the PNG nearest-neighbor path. A real
-    anti-aliased resampler needs a filter-design library; decimation is
-    exact and sufficient for fingerprinting/feature alignment."""
-    if factor <= 0:
-        raise ValueError("wav: factor must be positive")
-    return WavAudio(
-        max(1, audio.sample_rate // factor),
-        audio.channels,
-        audio.bits,
-        audio.samples[::factor].copy(),
-    )

@@ -17,9 +17,9 @@ re-expression of the reference's tasks.max=1 total order,
 
 Merge = union(state-as-pseudo-changes, batch) → one window on the key
 ordered by (pos, ts_ms) desc → keep rn=1. One shuffle, on the key; AQE
-handles skewed keys. At 100 TB, partition state by key-hash buckets and
-rewrite only batch-affected partitions (``affected_partitions``);
-tombstones are GC'd once older than the redelivery horizon
+handles skewed keys. At 100 TB, state is partitioned by key-hash
+buckets and only batch-affected buckets are rewritten
+(``BucketedTableStore``); tombstones are GC'd once older than the redelivery horizon
 (``expire_tombstones``).
 """
 
@@ -111,23 +111,3 @@ def expire_tombstones(state: DataFrame, min_pos: int) -> DataFrame:
     (e.g. the checkpointed min offset across sources)."""
     return state.filter(~(F.col("__deleted") & (F.col("__pos") < min_pos)))
 
-
-def affected_partitions(changes: DataFrame, partition_cols: list[str]) -> list[dict]:
-    """Distinct partition tuples a change batch touches — the rewrite set
-    for a partitioned state (rewrite only these, not the table).
-
-    Partition columns must be KEY columns (top-level in the flattened
-    change shape): a delete's after-image is NULL, so partitioning on a
-    non-key data column cannot locate the deleted row's partition and
-    would silently skip applying the delete. Hash-bucket partitioning on
-    the key (``BucketedTableStore``) is the general-purpose scheme.
-    """
-    missing = [c for c in partition_cols if c not in changes.columns]
-    if missing:
-        raise ValueError(
-            f"partition cols must be key columns of the change stream; "
-            f"{missing} are not (deletes carry no after-image, so non-key "
-            "partitioning cannot locate the rows to rewrite)"
-        )
-    rows = changes.select(*partition_cols).distinct().collect()
-    return [r.asDict() for r in rows]

@@ -18,13 +18,13 @@ Scale shapes:
 Cross-engine determinism: inertia and distances are a ROUND of a
 bounded-drift float reduction (addend order differs between engines by
 ~1e-12 relative, rounded well above it); the Arrow kernels replay the
-JVM fold order exactly.
+index-order left fold of the oracle's ``list_sum`` (`_duck_l2`) exactly.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
@@ -41,28 +41,13 @@ KMEANS_K = 8
 KMEANS_ITERS = 2
 
 
-def _l2sq(vec: Column, cent: list[float]) -> Column:
-    """Squared L2 distance between an array column and a literal centroid,
-    folded in index order (same reduction order DuckDB's ``list_sum``
-    uses, so both engines produce bit-identical doubles)."""
-    lit_vec = F.array(*[F.lit(float(x)) for x in cent])
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            lit_vec,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _dist_grid(X, centroids):
-    """n×k squared-L2 grid with the SAME addend order as `_l2sq`'s HOF
-    fold (acc starts 0.0, adds (x_i−c_i)² in dimension order): the numpy
-    loop runs over dimensions, so every (row, centroid) accumulator sees
-    the identical IEEE-double operation sequence — results are
-    bit-for-bit equal to the JVM fold (asserted in tests)."""
+    """n×k squared-L2 grid with the SAME addend order as `_duck_l2`'s
+    ``list_sum`` (acc starts 0.0, adds (x_i−c_i)² in dimension order):
+    the numpy loop runs over dimensions, so every (row, centroid)
+    accumulator sees the identical IEEE-double operation sequence —
+    results are bit-for-bit equal to the DuckDB fold (asserted in
+    tests)."""
     import numpy as np
 
     cents = np.asarray(centroids, dtype=np.float64)
@@ -77,71 +62,50 @@ def assign_clusters(
     emb: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Map-side cluster assignment: adds (cid, dist) = argmin over the
     literal centroid list. No join, no shuffle; ties break to the
-    smallest cid.
+    smallest cid (``argmin`` takes the first minimum).
 
-    Two equivalent physical paths (same bits out — the Arrow kernel
-    replays `_l2sq`'s fold order, and ``argmin`` takes the first
-    minimum exactly like the (dist, cid) struct-min):
-
-    - ``use_arrow=True`` (default): a vectorized pandas_udf — measured
-      ~40× faster per pass at k=8, dim=64. Spark's higher-order
-      functions are *interpreted* per element (each lambda evaluation
-      walks an expression tree), so the k·dim work per row dominated
-      the whole k-means family; the Arrow batch turns it into k·dim
-      numpy vector ops per BATCH.
-    - ``use_arrow=False``: the pure-JVM ``array_min`` over k (dist,
-      cid) structs — no Python workers; kept as the cross-check and
-      for Arrow-less deployments.
+    A vectorized pandas_udf, not a struct-min over higher-order-function
+    folds: Spark's higher-order functions are *interpreted* per element,
+    so their k·dim work per row would dominate the whole k-means family
+    (measured ~40× slower per pass at k=8, dim=64); the Arrow batch turns
+    it into k·dim numpy vector ops per BATCH. Distances replay
+    `_duck_l2`'s fold order (see `_dist_grid`).
     """
-    if use_arrow:
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-        cents = [list(map(float, c)) for c in centroids]
+    cents = [list(map(float, c)) for c in centroids]
 
-        @pandas_udf("struct<cid:int,dist:double>")
-        def best_udf(vs: pd.Series) -> pd.DataFrame:
-            # NULL vectors assign to (null, null) — like the HOF path,
-            # a null embedding must not kill the job
-            mask = vs.isna().to_numpy()
-            n = len(vs)
-            cid = pd.array([None] * n, dtype="Int32")
-            dist = pd.array([None] * n, dtype="Float64")
-            if (~mask).any():
-                idx = np.flatnonzero(~mask)
-                X = np.array(
-                    [np.asarray(vs.iloc[i], dtype=np.float64) for i in idx]
-                )
-                acc = _dist_grid(X, cents)
-                c = acc.argmin(axis=1)  # first min = smallest cid on ties
-                cid[idx] = c.astype("int32")
-                dist[idx] = acc[np.arange(len(c)), c]
-            return pd.DataFrame({"cid": cid, "dist": dist})
+    @pandas_udf("struct<cid:int,dist:double>")
+    def best_udf(vs: pd.Series) -> pd.DataFrame:
+        # NULL vectors assign to (null, null) — a null embedding must
+        # not kill the job
+        mask = vs.isna().to_numpy()
+        n = len(vs)
+        cid = pd.array([None] * n, dtype="Int32")
+        dist = pd.array([None] * n, dtype="Float64")
+        if (~mask).any():
+            idx = np.flatnonzero(~mask)
+            X = np.array(
+                [np.asarray(vs.iloc[i], dtype=np.float64) for i in idx]
+            )
+            acc = _dist_grid(X, cents)
+            c = acc.argmin(axis=1)  # first min = smallest cid on ties
+            cid[idx] = c.astype("int32")
+            dist[idx] = acc[np.arange(len(c)), c]
+        return pd.DataFrame({"cid": cid, "dist": dist})
 
-        # materialize the struct ONCE, then project fields — guarantees a
-        # single UDF evaluation per row regardless of optimizer collapse
-        return (
-            emb.withColumn("__b", best_udf(F.col(vec_col)))
-            .withColumn("cid", F.col("__b.cid"))
-            .withColumn("dist", F.col("__b.dist"))
-            .drop("__b")
-        )
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _l2sq(F.col(vec_col), c).alias("dist"),
-                    F.lit(i).alias("cid"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
+    # materialize the struct ONCE, then project fields — guarantees a
+    # single UDF evaluation per row regardless of optimizer collapse
+    return (
+        emb.withColumn("__b", best_udf(F.col(vec_col)))
+        .withColumn("cid", F.col("__b.cid"))
+        .withColumn("dist", F.col("__b.dist"))
+        .drop("__b")
     )
-    return emb.withColumn("cid", best["cid"]).withColumn("dist", best["dist"])
 
 
 def kmeans_centroids(
@@ -273,63 +237,42 @@ def assign_with_runnerup(
     emb: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Like `assign_clusters` but also keeps the runner-up centroid
-    distance (for simplified-silhouette). Same two physical paths as
-    `assign_clusters` (Arrow kernel default; stable argsort's tie order
-    equals the (dist, cid) struct sort since cids ascend) — still a
-    pure map-side projection, no join, no shuffle."""
-    if use_arrow:
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
+    distance (for simplified-silhouette). Stable argsort's tie order
+    equals a (dist, cid) sort since cids ascend — still a pure map-side
+    projection, no join, no shuffle."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-        cents = [list(map(float, c)) for c in centroids]
+    cents = [list(map(float, c)) for c in centroids]
 
-        @pandas_udf("struct<cid:int,dist:double,dist2:double>")
-        def top2_udf(vs: pd.Series) -> pd.DataFrame:
-            mask = vs.isna().to_numpy()
-            n = len(vs)
-            cid = pd.array([None] * n, dtype="Int32")
-            dist = pd.array([None] * n, dtype="Float64")
-            dist2 = pd.array([None] * n, dtype="Float64")
-            if (~mask).any():
-                idx = np.flatnonzero(~mask)
-                X = np.array(
-                    [np.asarray(vs.iloc[i], dtype=np.float64) for i in idx]
-                )
-                acc = _dist_grid(X, cents)
-                order = acc.argsort(axis=1, kind="stable")
-                rows = np.arange(len(order))
-                cid[idx] = order[:, 0].astype("int32")
-                dist[idx] = acc[rows, order[:, 0]]
-                dist2[idx] = acc[rows, order[:, 1]]
-            return pd.DataFrame({"cid": cid, "dist": dist, "dist2": dist2})
+    @pandas_udf("struct<cid:int,dist:double,dist2:double>")
+    def top2_udf(vs: pd.Series) -> pd.DataFrame:
+        mask = vs.isna().to_numpy()
+        n = len(vs)
+        cid = pd.array([None] * n, dtype="Int32")
+        dist = pd.array([None] * n, dtype="Float64")
+        dist2 = pd.array([None] * n, dtype="Float64")
+        if (~mask).any():
+            idx = np.flatnonzero(~mask)
+            X = np.array(
+                [np.asarray(vs.iloc[i], dtype=np.float64) for i in idx]
+            )
+            acc = _dist_grid(X, cents)
+            order = acc.argsort(axis=1, kind="stable")
+            rows = np.arange(len(order))
+            cid[idx] = order[:, 0].astype("int32")
+            dist[idx] = acc[rows, order[:, 0]]
+            dist2[idx] = acc[rows, order[:, 1]]
+        return pd.DataFrame({"cid": cid, "dist": dist, "dist2": dist2})
 
-        return (
-            emb.withColumn("__t", top2_udf(F.col(vec_col)))
-            .withColumn("cid", F.col("__t.cid"))
-            .withColumn("dist", F.col("__t.dist"))
-            .withColumn("dist2", F.col("__t.dist2"))
-            .drop("__t")
-        )
-    arr = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    _l2sq(F.col(vec_col), c).alias("dist"),
-                    F.lit(i).alias("cid"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
-    )
     return (
-        emb.withColumn("__arr", arr)
-        .withColumn("cid", F.col("__arr")[0]["cid"])
-        .withColumn("dist", F.col("__arr")[0]["dist"])
-        .withColumn("dist2", F.col("__arr")[1]["dist"])
-        .drop("__arr")
+        emb.withColumn("__t", top2_udf(F.col(vec_col)))
+        .withColumn("cid", F.col("__t.cid"))
+        .withColumn("dist", F.col("__t.dist"))
+        .withColumn("dist2", F.col("__t.dist2"))
+        .drop("__t")
     )
 
 
@@ -479,7 +422,7 @@ KCENTER_POOL = 2048
 
 
 def _py_l2sq(a: list[float], b: list[float]) -> float:
-    """Driver-side twin of `_l2sq`: the same left fold in index order
+    """Driver-side twin of `_duck_l2`: the same left fold in index order
     over IEEE doubles, so pool-local distance updates stay bit-identical
     to the distributed (and DuckDB ``list_sum``) computation."""
     acc = 0.0
@@ -502,7 +445,7 @@ def _kcenter_scored(base: DataFrame, centers: list[list[float]]) -> DataFrame:
     the identical IEEE double). ``array_min`` over the per-center
     squared distances is bit-identical to the oracle's ``LEAST`` chain
     (min over doubles is exact and order-free); the inner ``aggregate``
-    replays `_l2sq`'s index-order left fold."""
+    replays `_duck_l2`'s index-order left fold."""
     arr = (
         "array("
         + ", ".join(
@@ -609,7 +552,7 @@ def a015_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracts every center the certificate proves global — at this scale
     all k come from ONE pool job; the oracle unrolls the same k greedy
     rounds as CTEs, arithmetic bit-identical (no transcendentals, and
-    the driver-side distance fold replays `_l2sq`'s index-order left
+    the driver-side distance fold replays `_duck_l2`'s index-order left
     fold exactly)."""
     emb = tables(spark, sf_dir)["embeddings"]
     base = emb.select("vec_id", F.col("embedding").alias("e"))

@@ -66,16 +66,6 @@ SHINGLE_K = 3  # word-shingle width
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, content_col: str, order_col: str) -> DataFrame:
-    """Keep-first exact dedup by content digest (one shuffle on the digest)."""
-    w = W.partitionBy(F.md5(F.col(content_col))).orderBy(order_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def word_shingles(text: Column, k: int = SHINGLE_K) -> Column:
     """Array of k-word shingles of ``lower(text)``; empty when < k words.
 
@@ -703,178 +693,96 @@ def jaccard_pairs_collapsed(
     )
 
 
-def simhash(text: Column, bits: int = 32, hex_offset: int = 0) -> Column:
-    """32-bit SimHash over words: per-word 32-bit hash from md5 hex; each bit
-    position votes +1/-1; sign of the vote sum sets the fingerprint bit.
-
-    Built entirely from higher-order functions (no Python UDF): the
-    per-word hash is ``conv(substr(md5(w),1,8),16,10)`` and the bit votes
-    are aggregated with ``F.aggregate`` over the word array.
-
-    ``hex_offset`` selects which 8-hex-char window of the md5 digest
-    feeds the per-word hash — callers that need a WIDER fingerprint
-    (a001's 64-bit Hamming pairs) combine two independent 32-bit
-    halves (offsets 0 and 8) instead of paying one 64-lambda aggregate.
-    """
-    words = F.array_distinct(F.split(F.lower(text), r"\s+"))
-    hashes = F.transform(
-        words,
-        lambda w: F.conv(
-            F.substring(F.md5(w), 1 + hex_offset, 8), 16, 10
-        ).cast("long"),
-    )
-    # votes[i] = sum over words of (bit_i(h) ? 1 : -1); shift amounts must be
-    # Python ints (Spark's shiftright takes a literal), hence the list compr.
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                    ).otherwise(F.lit(-1))
-                    for i in range(bits)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    # fingerprint = sum of 2^i where votes[i] > 0
-    powers = F.array(*[F.lit(1 << i).cast("long") for i in range(bits)])
-    contrib = F.zip_with(
-        votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(contrib, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 def simhash_fps(
     df: DataFrame,
     id_col: str,
     text_col: str,
     offsets: tuple[int, ...] = (0,),
     bits: int = 32,
-    use_arrow: bool = True,
     widen: bool = True,
 ) -> DataFrame:
     """(id, fp0[, fp1…]): one 32-bit SimHash per md5-hex window offset.
 
-    Two equivalent physical paths, bit-identical (votes are integer
-    sums of ±1 per distinct word — order-free — and Python's md5/split
-    reproduce the JVM's exactly; asserted by a cross-path equality
-    test):
-
-    - ``use_arrow=True`` (default): a vectorized-batch pandas_udf. The
-      win is not execution but PLAN WEIGHT — the JVM shape's 2×32
-      conditional-SUM aggregate costs ~1.5-4 s of analysis/codegen per
-      fresh query plan (measured: first evaluation 5.2 s, re-execution
-      of the same DataFrame 0.3 s), which every registered query that
-      embeds SimHash re-pays. The UDF plan is tiny and shuffle-FREE
-      (per-row compute; the JVM shape shuffles (id, 64 ints)). Rows
-      with NULL text are dropped to match the explode path.
-    - ``use_arrow=False``: explode-distinct-words → 32 conditional-SUM
-      votes → fingerprint reassembly; one codegen'd explode + a
-      map-side-combinable groupBy. Kept as cross-check and as a
-      debugging/verification twin.
+    A vectorized-batch pandas_udf for PLAN WEIGHT: the JVM shape
+    (explode distinct words → 2×32 conditional-SUM votes) costs
+    ~1.5-4 s of analysis/codegen per fresh query plan (measured: first
+    evaluation 5.2 s, re-execution of the same DataFrame 0.3 s), which
+    every registered query that embeds SimHash would re-pay. The UDF
+    plan is tiny and shuffle-FREE (per-row compute). Rows with NULL
+    text are dropped: they have no words.
 
     All offsets share a single md5 per word; the per-word hash and vote
-    rule mirror the b45/a001 oracle CTEs verbatim. ``widen=True``
+    rule mirror the b45/a001 oracle CTEs (`_DUCK_SIMHASH_CTE`) verbatim
+    — votes are integer sums of ±1 per distinct word (order-free), so
+    the two are bit-identical (asserted by a test). ``widen=True``
     repartitions a narrow scan up to the session's shuffle parallelism
     first (widen_narrow_scan — no-op at real scale)."""
     if widen:
         df = widen_narrow_scan(df)
-    if use_arrow:
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        offs = tuple(offsets)
-        fields = ", ".join(f"fp{i}: bigint" for i in range(len(offs)))
+    offs = tuple(offsets)
+    fields = ", ".join(f"fp{i}: bigint" for i in range(len(offs)))
 
-        #: per-TASK word→hash memo (the UDF closure deserializes per
-        #: task, so the dict lives for one partition): corpora repeat
-        #: vocabulary heavily, so md5 amortizes to ~|partition vocab|.
-        #: The cap bounds CONCURRENT-task memory: ~32 running tasks ×
-        #: 250k entries × ~100 B ≈ 0.8 GB worst case per executor.
-        _hash_cache: dict[str, tuple[int, ...]] = {}
-        _CACHE_CAP = 250_000
+    #: per-TASK word→hash memo (the UDF closure deserializes per
+    #: task, so the dict lives for one partition): corpora repeat
+    #: vocabulary heavily, so md5 amortizes to ~|partition vocab|.
+    #: The cap bounds CONCURRENT-task memory: ~32 running tasks ×
+    #: 250k entries × ~100 B ≈ 0.8 GB worst case per executor.
+    _hash_cache: dict[str, tuple[int, ...]] = {}
+    _CACHE_CAP = 250_000
 
-        @pandas_udf(f"struct<{fields}>")
-        def fps_udf(texts: pd.Series) -> pd.DataFrame:
-            import hashlib
-            import re
+    @pandas_udf(f"struct<{fields}>")
+    def fps_udf(texts: pd.Series) -> pd.DataFrame:
+        import hashlib
+        import re
 
-            import numpy as np
+        import numpy as np
 
-            idx = np.arange(bits)
-            out = {
-                f"fp{i}": np.empty(len(texts), dtype=np.int64)
-                for i in range(len(offs))
-            }
-            for r, t in enumerate(texts):
-                # re.split(flags=re.ASCII) == Java \s (F.split):
-                # identical ASCII whitespace class (Python's default \s
-                # is Unicode-wide — U+00A0 would split here but not on
-                # the JVM), and limit=-1 semantics both keep leading and
-                # trailing empty strings; dict preserves first-seen
-                # distinct like array_distinct (order is irrelevant to
-                # the vote sums anyway)
-                words = dict.fromkeys(re.split(r"\s+", t.lower(), flags=re.ASCII))
-                hs = np.empty((len(words), len(offs)), dtype=np.int64)
-                for k, w in enumerate(words):
-                    hw = _hash_cache.get(w)
-                    if hw is None:
-                        digest = hashlib.md5(w.encode("utf-8")).hexdigest()
-                        hw = tuple(
-                            int(digest[off : off + 8], 16) for off in offs
-                        )
-                        if len(_hash_cache) < _CACHE_CAP:
-                            _hash_cache[w] = hw
-                    hs[k] = hw
-                n = len(words)
-                for j in range(len(offs)):
-                    # votes = 2·(set-bit count) − n, vectorized per doc
-                    setc = ((hs[:, j, None] >> idx) & 1).sum(axis=0)
-                    out[f"fp{j}"][r] = int(
-                        (((2 * setc - n) > 0).astype(np.int64) << idx).sum()
+        idx = np.arange(bits)
+        out = {
+            f"fp{i}": np.empty(len(texts), dtype=np.int64)
+            for i in range(len(offs))
+        }
+        for r, t in enumerate(texts):
+            # re.split(flags=re.ASCII): an ASCII whitespace class like
+            # the oracle's string_split_regex (Python's default \s is
+            # Unicode-wide — U+00A0 would split here but not there),
+            # and both keep leading and trailing empty strings; dict
+            # preserves first-seen distinct like list_distinct (order
+            # is irrelevant to the vote sums anyway)
+            words = dict.fromkeys(re.split(r"\s+", t.lower(), flags=re.ASCII))
+            hs = np.empty((len(words), len(offs)), dtype=np.int64)
+            for k, w in enumerate(words):
+                hw = _hash_cache.get(w)
+                if hw is None:
+                    digest = hashlib.md5(w.encode("utf-8")).hexdigest()
+                    hw = tuple(
+                        int(digest[off : off + 8], 16) for off in offs
                     )
-            return pd.DataFrame(out)
+                    if len(_hash_cache) < _CACHE_CAP:
+                        _hash_cache[w] = hw
+                hs[k] = hw
+            n = len(words)
+            for j in range(len(offs)):
+                # votes = 2·(set-bit count) − n, vectorized per doc
+                setc = ((hs[:, j, None] >> idx) & 1).sum(axis=0)
+                out[f"fp{j}"][r] = int(
+                    (((2 * setc - n) > 0).astype(np.int64) << idx).sum()
+                )
+        return pd.DataFrame(out)
 
-        return (
-            df.filter(F.col(text_col).isNotNull())  # explode drops these too
-            .withColumn("__fps", fps_udf(F.col(text_col)))
-            .select(
-                F.col(id_col),
-                *[
-                    F.col(f"__fps.fp{i}").alias(f"fp{i}")
-                    for i in range(len(offs))
-                ],
-            )
+    return (
+        df.filter(F.col(text_col).isNotNull())  # NULL text has no words
+        .withColumn("__fps", fps_udf(F.col(text_col)))
+        .select(
+            F.col(id_col),
+            *[
+                F.col(f"__fps.fp{i}").alias(f"fp{i}")
+                for i in range(len(offs))
+            ],
         )
-    w = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.col(text_col)), r"\s+"))
-        ).alias("__w"),
-    ).withColumn("__md5", F.md5("__w"))
-    for oi, off in enumerate(offsets):
-        w = w.withColumn(
-            f"__h{oi}",
-            F.conv(F.substring("__md5", 1 + off, 8), 16, 10).cast("long"),
-        )
-    aggs = []
-    for oi in range(len(offsets)):
-        h = F.col(f"__h{oi}")
-        fp = None
-        for i in range(bits):
-            vote = F.sum(
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            )
-            term = F.when(vote > 0, F.lit(1 << i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            fp = term if fp is None else fp + term
-        aggs.append(fp.alias(f"fp{oi}"))
-    return w.groupBy(F.col("__id").alias(id_col)).agg(*aggs)
+    )
 
 
 def simhash_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

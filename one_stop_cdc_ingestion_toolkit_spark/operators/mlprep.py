@@ -39,6 +39,7 @@ from one_stop_cdc_ingestion_toolkit_spark.operators import (
     track_cache,
     widen_narrow_scan,
 )
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import _duck_shingles
 from one_stop_cdc_ingestion_toolkit_spark.operators.similarity import (
     EMB_DIM,
     cosine,
@@ -551,9 +552,7 @@ def _coverage_probe_batches(eval_grams):
     f"""WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words
                   FROM documents),
        gx AS (SELECT doc_id,
-                     unnest(list_transform(
-                         generate_series(1, len(words) - {COVERAGE_K - 1}),
-                         i -> array_to_string(words[i:i+{COVERAGE_K - 1}], ' '))) AS g
+                     {_duck_shingles(COVERAGE_K)} AS g
               FROM w WHERE len(words) >= {COVERAGE_K}),
        f AS (SELECT g, bool_or(doc_id < 5) AS ie, bool_or(doc_id >= 5) AS ic
              FROM gx GROUP BY g)

@@ -3,31 +3,13 @@ columns with typed metadata, and the decoded-pixel verbs over them:
 image resize (a0001), YUV4MPEG2 frame sampling (a0002) and frame luma
 (a0008).
 
-Decode is real for PNG everywhere (``functions/png_codec.py`` — stdlib
-zlib, no third-party codec needed) and for other formats wherever
-Pillow is installed; payloads outside both raise
-``NotImplementedError`` and ``fake_decode`` remains the deterministic
-test double for codec-free plumbing tests. What IS real and tested
-end-to-end:
-
-- the schema convention (``payload binary`` + ``media_type`` + metadata),
-- the Arrow batch path: ``mapInPandas`` over binary columns, preserving
-  partitioning, with a bounded batch size so a 100 TB blob scan never
-  materializes more than one Arrow batch per task at a time,
-- deterministic metadata extraction (byte length + md5 digest), computed
-  JVM-side with built-ins (``octet_length`` / ``md5`` — whole-stage
-  codegen, no Python round-trip), oracle-checkable against DuckDB.
-
-Split of responsibilities (round-2: the metadata path must never pay the
-Arrow→Python→Arrow round-trip over full payload bytes):
-
-- :func:`blob_metadata` — byte_len + digest, pure built-ins, codegen.
-- :func:`decode_blobs` — width/height/n_frames via ``mapInPandas``; the
-  ONLY place payload bytes enter Python, because a codec genuinely cannot
-  run JVM-side.
-- :func:`extract_blob_metadata` — both, one pass: JVM metadata columns
-  are computed before the decode stage and pass through the Arrow batch
-  untouched (column copies, no per-row Python work on them).
+Payloads are decoded for real by the stdlib-only codecs in
+``functions/`` (PNG, WAV, YUV4MPEG2) inside ``mapInPandas``/
+``applyInPandas`` batches, so a blob scan never materializes more than
+one Arrow batch per task at a time. Metadata (byte length + md5 digest,
+:func:`blob_metadata`) is computed JVM-side with the ``octet_length`` /
+``md5`` built-ins — whole-stage codegen, no Python round-trip over the
+payload bytes — and is oracle-checkable against DuckDB.
 
 At scale, blobs should live in parquet with a small row-group size (or as
 object-store pointers); the operators below only touch bytes inside the
@@ -36,7 +18,6 @@ executor-local Arrow batch — no driver collect, no shuffle.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -45,108 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
-from one_stop_cdc_ingestion_toolkit_spark.functions import png_codec, wav_codec
 from one_stop_cdc_ingestion_toolkit_spark.operators import register
-
-#: Arrow batch bound for blob processing (rows per batch handed to pandas).
-BLOB_BATCH_ROWS = 256
-
-
-def pil_available() -> bool:
-    """True when Pillow is importable — the real-decode feature gate."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image(payload: bytes) -> dict:
-    """Real image decode: PNG via the dependency-free stdlib codec
-    (``functions/png_codec.py`` — always available), anything else via
-    Pillow when installed (feature-gated — VERDICT r3 #8). Width/height
-    come from the decoded raster, n_frames from animated formats (PNG
-    path is single-frame). PNG variants outside the stdlib codec's
-    envelope (palette, 16-bit, interlaced, APNG) fall through to Pillow
-    when it is installed — Pillow keeps decoding everything it used to.
-    Raises ``NotImplementedError`` for formats with no importable
-    codec; callers that need determinism without any codec use
-    :func:`fake_decode` (identical output shape and Arrow path). A PNG
-    no available codec can parse raises ``ValueError`` — decode errors
-    must surface, not silently degrade to fake metadata."""
-    raw = bytes(payload)
-    if png_codec.is_png(raw):
-        try:
-            img = png_codec.decode_png(raw)
-            return {"width": img.width, "height": img.height, "n_frames": 1}
-        except ValueError:
-            if not pil_available():
-                raise
-            # unsupported variant or corrupt: let Pillow try (it also
-            # reports real n_frames for APNG); normalize its failure to
-            # the documented ValueError
-            try:
-                return _pil_decode(raw)
-            except Exception as exc:
-                raise ValueError(
-                    f"png: undecodable by any available codec ({exc})"
-                ) from exc
-    if not pil_available():
-        raise NotImplementedError(
-            "non-PNG image decode requires an image codec library (e.g. "
-            "PIL); use fake_decode for deterministic tests"
-        )
-    return _pil_decode(raw)
-
-
-def _pil_decode(raw: bytes) -> dict:
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(raw)) as im:
-        return {
-            "width": im.width,
-            "height": im.height,
-            "n_frames": int(getattr(im, "n_frames", 1)),
-        }
-
-
-def decodable(payload: bytes) -> bool:
-    """True when :func:`decode_image` has a codec to TRY for this payload
-    (PNG always; anything else when Pillow is importable). A True here
-    does not guarantee the decode succeeds — auto-mode callers fall back
-    per payload (see ``_auto_decode``)."""
-    return png_codec.is_png(bytes(payload)) or pil_available()
-
-
-def _auto_decode(payload: bytes) -> dict:
-    """decode_blobs' auto policy: real decode where a codec can parse
-    the payload, :func:`fake_decode` elsewhere — per PAYLOAD, not per
-    library (a Pillow-equipped executor still sees undecodable bytes).
-    Corrupt PNGs still raise: a payload that *claims* to be PNG but
-    can't be parsed is a data error to surface, not noise to fake."""
-    raw = bytes(payload)
-    try:
-        return decode_image(raw)
-    except NotImplementedError:
-        return fake_decode(raw)
-    except ValueError:
-        raise  # undecodable PNG — surface it
-    except Exception:
-        return fake_decode(raw)  # Pillow couldn't identify a non-PNG blob
-
-
-def fake_decode(payload: bytes) -> dict:
-    """Deterministic stand-in for decode: derives fake width/height/frames
-    from the digest so tests exercise the full plumbing without codecs."""
-    digest = hashlib.md5(payload).hexdigest()
-    return {
-        "width": int(digest[:4], 16) % 1920 + 1,
-        "height": int(digest[4:8], 16) % 1080 + 1,
-        "n_frames": int(digest[8:12], 16) % 240 + 1,
-    }
 
 
 def blob_metadata(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -161,240 +41,6 @@ def blob_metadata(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
         F.octet_length(F.col(payload_col)).alias("byte_len"),
         F.md5(F.col(payload_col)).alias("digest"),
     )
-
-
-def decode_blobs(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    *passthrough: str,
-    use_real: bool | None = None,
-) -> DataFrame:
-    """(id, *passthrough, width, height, n_frames) via ``mapInPandas``.
-
-    The decode trio is the only work done in Python; ``passthrough``
-    columns are copied into the output batch without per-row Python
-    compute. Decoder selection: ``use_real=True`` decodes every payload
-    for real (PNG via the stdlib codec, other formats via Pillow —
-    raises on payloads with no codec), ``use_real=False`` is the
-    deterministic :func:`fake_decode` double, and ``None`` (auto)
-    decides per payload — real where a codec exists, fake elsewhere.
-    Tests pin ``use_real`` so results never depend on the environment.
-    """
-    pt_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in df.select(*passthrough).schema.fields
-    )
-    # derive the id type from the actual schema like the passthrough
-    # columns — a hardcoded `long` failed at runtime for string/int ids
-    # (review r7)
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}{pt_schema}, width int, height int, n_frames int"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # resolve the gate INSIDE the task, per payload: the codec must
-        # be importable on the EXECUTOR that decodes, not on the driver
-        # that planned (driver/executor environment drift is routine on
-        # clusters)
-        if use_real is True:
-            decoder = decode_image
-        elif use_real is False:
-            decoder = fake_decode
-        else:
-            decoder = _auto_decode
-        for pdf in it:
-            # NULL payloads decode to null metadata (the JVM metadata
-            # path of this module already yields null byte_len/digest
-            # for them) instead of an opaque bytes(None) TypeError
-            # (review r7)
-            nulls = {"width": None, "height": None, "n_frames": None}
-            meta = [
-                nulls if b is None else decoder(b) for b in pdf[payload_col]
-            ]
-            out = {id_col: pdf[id_col].values}
-            for c in passthrough:
-                out[c] = pdf[c].values
-            out["width"] = [m["width"] for m in meta]
-            out["height"] = [m["height"] for m in meta]
-            out["n_frames"] = [m["n_frames"] for m in meta]
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, *passthrough, payload_col).mapInPandas(batches, out_schema)
-
-
-def extract_blob_metadata(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    use_real: bool | None = False,
-) -> DataFrame:
-    """(id, byte_len, digest, width, height, n_frames) in one pass.
-
-    byte_len/digest are computed JVM-side *before* the decode stage and
-    ride through the Arrow batch as plain column copies; only the decode
-    trio costs Python time. ``use_real`` defaults to False (the
-    deterministic fake decoder) because callers here feed synthetic
-    payloads; pass ``None`` to auto-enable Pillow when installed.
-    """
-    enriched = df.select(
-        id_col,
-        F.col(payload_col),
-        F.octet_length(F.col(payload_col)).alias("byte_len"),
-        F.md5(F.col(payload_col)).alias("digest"),
-    )
-    return decode_blobs(
-        enriched, id_col, payload_col, "byte_len", "digest", use_real=use_real
-    )
-
-
-def decode_audio(payload: bytes) -> dict:
-    """Real audio decode for PCM WAV via the dependency-free stdlib
-    codec (``functions/wav_codec.py``): sample rate / channels / bit
-    depth / frame count / duration from the actual RIFF header + data
-    chunk. Non-WAV formats raise ``NotImplementedError`` (no audio
-    codec library ships in this container); a *corrupt* WAV raises
-    ``ValueError`` — decode errors surface, never degrade silently."""
-    if not wav_codec.is_wav(bytes(payload)):
-        raise NotImplementedError(
-            "non-WAV audio decode requires an audio codec library"
-        )
-    a = wav_codec.decode_wav(payload)
-    return {
-        "sample_rate": a.sample_rate,
-        "channels": a.channels,
-        "bits": a.bits,
-        "n_frames": a.n_frames,
-        "duration_ms": a.duration_ms,
-    }
-
-
-def audio_features(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    window_ms: int = 100,
-) -> DataFrame:
-    """Windowed RMS-energy feature extraction over WAV payloads:
-    (id, window_idx, start_ms, rms, peak), one output row per window —
-    the silence-trim / voice-activity primitive of an audio training
-    pipeline, run for REAL inside the Arrow batch (exact int64
-    mean-square sums, one final sqrt per window → deterministic under
-    retry). Like every blob operator here, payload bytes never leave
-    the executor-local batch and the flatMap shape preserves
-    partitioning — no shuffle, no driver collect."""
-    out_schema = (
-        f"{id_col} long, window_idx int, start_ms long, rms double, peak int"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, widx, start, rms, peak = [], [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                audio = wav_codec.decode_wav(bytes(b))
-                for w in wav_codec.rms_windows(audio, window_ms):
-                    ids.append(i)
-                    widx.append(w["window_idx"])
-                    start.append(w["start_ms"])
-                    rms.append(w["rms"])
-                    peak.append(w["peak"])
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "window_idx": pd.Series(widx, dtype="int32"),
-                    "start_ms": pd.Series(start, dtype="int64"),
-                    "rms": pd.Series(rms, dtype="float64"),
-                    "peak": pd.Series(peak, dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, out_schema)
-
-
-def frame_sample(df: DataFrame, id_col: str, payload_col: str, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing: explode one row per sampled frame index.
-
-    The actual frame grab is behind the gated decoder; the Spark-side
-    shape (explode → one row per frame, partitioning preserved) is real.
-    """
-    meta = decode_blobs(df, id_col, payload_col, use_real=False)
-    return meta.select(
-        id_col,
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    target_w: int,
-    target_h: int,
-) -> DataFrame:
-    """Resize: (id, width, height, payload) → target dims.
-
-    PNG payloads are resized for REAL — decode → nearest-neighbor
-    resample → re-encode, all inside the same Arrow batch via the
-    stdlib codec (integer-exact source indexing + fixed encode
-    parameters, so output bytes are a pure function of input bytes and
-    target dims: a retried task produces bit-identical shards). Payloads
-    with no codec keep the deterministic tag+digest stand-in, preserving
-    the same batch contract (binary in, binary out, bounded batch rows).
-    """
-    # validate ONCE, before any task runs: the per-blob ValueError catch
-    # below is for out-of-envelope/corrupt payloads — a caller bug in
-    # the target dims would otherwise silently degrade EVERY png to the
-    # digest stand-in and report success (review r7)
-    if target_w <= 0 or target_h <= 0:
-        raise ValueError(
-            f"target dimensions must be positive, got {target_w}x{target_h}"
-        )
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_type}, width int, height int, payload binary"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for b in pdf[payload_col]:
-                if b is None:  # null blob: null out, not bytes(None)
-                    payloads.append(None)
-                    continue
-                raw = bytes(b)
-                small = None
-                if png_codec.is_png(raw):
-                    try:
-                        small = png_codec.resize_nearest(
-                            png_codec.decode_png(raw), target_w, target_h
-                        )
-                    except ValueError:
-                        # out-of-envelope variant (palette/16-bit/
-                        # interlaced) or corrupt: a bulk resize over
-                        # millions of rows must not die on one blob —
-                        # fall to the deterministic stand-in below
-                        small = None
-                if small is not None:
-                    payloads.append(
-                        png_codec.encode_png(
-                            small.pixels, small.width, small.height, small.channels
-                        )
-                    )
-                else:
-                    # no codec: tag + digest keeps bytes deterministic
-                    tag = f"resized:{target_w}x{target_h}:".encode()
-                    payloads.append(tag + hashlib.md5(raw).digest())
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": payloads,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, out_schema)
 
 
 @register(

@@ -326,11 +326,6 @@ def approx_distinct_stats(df: DataFrame, col: str, rsd: float = 0.05) -> DataFra
     )
 
 
-def approx_quantiles(df: DataFrame, col: str, probs: list[float]) -> list[float]:
-    """Greenwald-Khanna approximate quantiles (single pass, mergeable)."""
-    return df.approxQuantile(col, probs, 0.01)
-
-
 @register(
     "b68_geomean_udaf",
     """SELECT lang, ROUND(EXP(AVG(LN(n_chars))), 4) AS gm

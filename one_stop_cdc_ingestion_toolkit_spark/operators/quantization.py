@@ -268,54 +268,41 @@ def _jl_signs() -> list[list[float]]:
     ]
 
 
-def jl_project(vec: Column, use_arrow: bool = True) -> Column:
-    """The {JL_DIM}-dim projection as ``array<double>``. Two equivalent
-    physical paths (the similarity.lsh_signature discipline — the Arrow
-    kernel accumulates dimension-by-dimension in the HOF fold's
-    left-to-right order, so every projection runs the identical IEEE
-    operation sequence; asserted bit-equal in tests/test_quantization.py):
+def jl_project(vec: Column) -> Column:
+    """The {JL_DIM}-dim projection as ``array<double>``: one multiply-add
+    per (row, plane, dim) in C — {JL_DIM} interpreted HOF folds per row
+    would otherwise dominate a054's runtime. The kernel accumulates
+    dimension-by-dimension in left-to-right order, so every projection
+    runs the identical IEEE operation sequence as the oracle's
+    ``list_sum`` (`_DUCK_JL_PROJ`; asserted bit-equal in
+    tests/test_quantization.py). Null vectors project to NULL (a null
+    embedding has no distance to anything; rows drop out of the pair
+    join upstream)."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-    - ``use_arrow=True`` (default): one multiply-add per (row, plane,
-      dim) in C — {JL_DIM} interpreted HOF folds per row otherwise
-      dominate a054's runtime.
-    - ``use_arrow=False``: the ``zip_with``+``aggregate`` fold twin,
-      which is also the DuckDB oracle's arithmetic.
+    planes = _jl_signs()
 
-    Null vectors project to NULL on both paths (a null embedding has no
-    distance to anything; rows drop out of the pair join upstream)."""
-    signs = _jl_signs()
-    if use_arrow:
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
+    @pandas_udf("array<double>")
+    def proj_udf(vs: pd.Series) -> pd.Series:
+        P = np.asarray(planes, dtype=np.float64)  # p × d
+        out: list = [None] * len(vs)
+        null_mask = vs.isna()
+        if (~null_mask).any():
+            idx = np.flatnonzero(~null_mask.to_numpy())
+            X = np.array(
+                [np.asarray(vs.iloc[i], dtype=np.float64) for i in idx]
+            )
+            acc = np.zeros((X.shape[0], P.shape[0]))
+            # dimension-order fold == list_sum's left-to-right sum
+            for i in range(P.shape[1]):
+                acc += X[:, i, None] * P[None, :, i]
+            acc = acc / 4.0
+            for k, r in enumerate(idx):
+                out[int(r)] = [float(v) for v in acc[k]]
+        return pd.Series(out)
 
-        planes = [list(map(float, s)) for s in signs]
-
-        @pandas_udf("array<double>")
-        def proj_udf(vs: pd.Series) -> pd.Series:
-            P = np.asarray(planes, dtype=np.float64)  # p × d
-            out: list = [None] * len(vs)
-            null_mask = vs.isna()
-            if (~null_mask).any():
-                idx = np.flatnonzero(~null_mask.to_numpy())
-                X = np.array(
-                    [np.asarray(vs.iloc[i], dtype=np.float64) for i in idx]
-                )
-                acc = np.zeros((X.shape[0], P.shape[0]))
-                # dimension-order fold == the HOF's left-to-right sum
-                for i in range(P.shape[1]):
-                    acc += X[:, i, None] * P[None, :, i]
-                acc = acc / 4.0
-                for k, r in enumerate(idx):
-                    out[int(r)] = [float(v) for v in acc[k]]
-            return pd.Series(out)
-
-        return proj_udf(vec)
-    return F.array(
-        *[
-            dot(vec, F.array(*[F.lit(v) for v in signs[p]])) / F.lit(4.0)
-            for p in range(JL_DIM)
-        ]
-    )
+    return proj_udf(vec)
 
 
 def _jl_bucket_hist(pdf):
@@ -327,8 +314,8 @@ def _jl_bucket_hist(pdf):
     here each vector crosses the boundary once per bucket and the dot
     products run as 64 (resp. 16) vectorized multiply-adds in exactly
     the fold's left-to-right dimension order, so every double —
-    distances, ratios, bin edges — is bit-identical to the JVM fold and
-    the oracle's list_sum. Pair chunking bounds peak memory on hot
+    distances, ratios, bin edges — is bit-identical to the oracle's
+    list_sum. Pair chunking bounds peak memory on hot
     buckets (identical-vector clusters make bucket sizes, and so pair
     counts, data-bound by design — same as the join it replaces)."""
     import numpy as np
@@ -386,6 +373,25 @@ def _jl_bucket_hist(pdf):
     )
 
 
+#: DuckDB twin of `jl_project`: the ±1 sign rows derived once from
+#: DuckDB's own md5 (same seed strings as `_jl_signs`), then each
+#: projection folded left to right by ``list_sum`` — the a054 oracle's
+#: CTEs, and the bit-equality oracle of tests/test_quantization.py.
+_DUCK_JSIGN = f"""jsign AS (
+          SELECT p, list(CASE WHEN substr(md5('j' || p || ':' || i), 1, 1)
+                              < '8' THEN 1.0 ELSE -1.0 END ORDER BY i) AS srow
+          FROM generate_series(0, {JL_DIM - 1}) t(p)
+               CROSS JOIN generate_series(0, {EMB_DIM - 1}) u(i)
+          GROUP BY p)"""
+_DUCK_JL_PROJ = f"""prj AS (
+          SELECT e.vec_id, j.p,
+                 list_sum(list_transform(generate_series(1, {EMB_DIM}),
+                   i -> j.srow[i] * CAST(e.embedding[i] AS DOUBLE))) / 4.0 AS v
+          FROM embeddings e CROSS JOIN jsign j),
+        proj AS (SELECT vec_id, list(v ORDER BY p) AS proj
+                 FROM prj GROUP BY vec_id)"""
+
+
 @register(
     "a0054_jl_distortion",
     # The sign matrices are md5-CONSTANTS per (plane, dim) — DuckDB does
@@ -395,25 +401,14 @@ def _jl_bucket_hist(pdf):
     # DuckDB's own md5, same seed strings, and folding in the identical
     # left-to-right order (srow[i]·vec[i], i ascending) — keeps the
     # recomputation independent and the doubles bit-identical.
-    f"""WITH jsign AS (
-          SELECT p, list(CASE WHEN substr(md5('j' || p || ':' || i), 1, 1)
-                              < '8' THEN 1.0 ELSE -1.0 END ORDER BY i) AS srow
-          FROM generate_series(0, {JL_DIM - 1}) t(p)
-               CROSS JOIN generate_series(0, {EMB_DIM - 1}) u(i)
-          GROUP BY p),
+    f"""WITH {_DUCK_JSIGN},
         lsign AS (
           SELECT p, list(CASE WHEN substr(md5(p || ':' || i), 1, 1)
                               < '8' THEN 1.0 ELSE -1.0 END ORDER BY i) AS srow
           FROM generate_series(0, 7) t(p)
                CROSS JOIN generate_series(0, {EMB_DIM - 1}) u(i)
           GROUP BY p),
-        prj AS (
-          SELECT e.vec_id, j.p,
-                 list_sum(list_transform(generate_series(1, {EMB_DIM}),
-                   i -> j.srow[i] * CAST(e.embedding[i] AS DOUBLE))) / 4.0 AS v
-          FROM embeddings e CROSS JOIN jsign j),
-        proj AS (SELECT vec_id, list(v ORDER BY p) AS proj
-                 FROM prj GROUP BY vec_id),
+        {_DUCK_JL_PROJ},
         sigp AS (
           SELECT e.vec_id, l.p,
                  CASE WHEN list_sum(list_transform(generate_series(1, {EMB_DIM}),
@@ -450,7 +445,7 @@ def a054_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     for THIS corpus before anyone swaps the projection into a pipeline.
 
     Scale shape (r11): projection is one Arrow-kernel scan (bit-equal to
-    the retained {JL_DIM}-fold JVM twin — cross-checked in tests);
+    the oracle's {JL_DIM}-fold ``list_sum`` — cross-checked in tests);
     squared norms are hoisted per-vector; the pair space is
     LSH-bucket-bounded (shuffle key is the 8-bit signature, never
     all-pairs) and each bucket's pair distances are computed INSIDE one

@@ -118,88 +118,61 @@ def lsh_signature(
     vec: Column,
     n_planes: int = LSH_PLANES,
     dim: int = EMB_DIM,
-    use_arrow: bool = True,
 ) -> Column:
     """Sign-bit signature against MD5-derived hyperplanes (string of sign
-    bits of plane.vec; fold order matches the oracle's list_sum).
+    bits of plane.vec).
 
-    Two equivalent physical paths (same bits out — the Arrow kernel's
-    numpy loop runs over dimensions in the HOF fold's order, so every
-    projection sees the identical IEEE operation sequence; asserted by
-    a cross-path equality test):
+    A vectorized pandas_udf: n_planes interpreted HOF folds (each
+    element evaluation walks an expression tree) would dominate every
+    LSH consumer; the kernel is one multiply-add per (row, plane, dim)
+    in C. Its numpy loop runs over dimensions in ``list_sum``'s
+    left-to-right order, so every projection sees the identical IEEE
+    operation sequence as the oracle's `_duck_signature` (asserted by a
+    bit-equality test).
 
-    - ``use_arrow=True`` (default): vectorized pandas_udf — the
-      n_planes interpreted HOF folds (each element evaluation walks an
-      expression tree) dominated every LSH consumer; the kernel is one
-      multiply-add per (row, plane, dim) in C.
-    - ``use_arrow=False``: the per-plane ``zip_with``+``aggregate``
-      fold — cross-check/verification twin (unrolling into a flat
-      expression is even slower; see :func:`dot`).
+    Null-vector edge: a null vector emits a NULL signature (the row
+    drops out of bucket equi-joins) rather than an all-"0" signature —
+    a REAL bucket that would collect every null vector.
 
-    Null-vector edge: the Arrow path emits a NULL signature (the row
-    drops out of bucket equi-joins); the JVM fold's when() coerces the
-    null projection to an all-"0" signature — a REAL bucket that would
-    collect every null vector. The Arrow behavior is deliberate.
-
-    Degenerate-element contract (review r7 — the two paths used to
-    diverge here): a projection that is NaN or NULL (a null/NaN element
-    inside the vector) and a vector of the WRONG dimension both emit
-    "0" bits on BOTH paths — deterministic, and a ragged vector no
-    longer crashes the Arrow kernel while the JVM path degraded
-    gracefully.
+    Degenerate-element contract (review r7): a projection that is NaN or
+    NULL (a null/NaN element inside the vector) and a vector of the
+    WRONG dimension both emit "0" bits — deterministic, and a ragged
+    vector does not crash the kernel.
     """
-    signs = _plane_signs(n_planes, dim)
-    if use_arrow:
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-        planes = [list(map(float, s)) for s in signs]
+    planes = _plane_signs(n_planes, dim)
 
-        @pandas_udf("string")
-        def sig_udf(vs: pd.Series) -> pd.Series:
-            P = np.asarray(planes, dtype=np.float64)  # p × d
-            zero_sig = "0" * P.shape[0]
-            null_mask = vs.isna()
-            sigs: dict[int, str] = {}
-            if (~null_mask).any():
-                idx = np.flatnonzero(~null_mask.to_numpy())
-                rows = []
-                for i in idx:
-                    r = np.asarray(vs.iloc[i], dtype=np.float64)
-                    if r.shape == (P.shape[1],):
-                        rows.append((int(i), r))
-                    else:  # ragged/wrong-dim: all-"0", like the JVM fold
-                        sigs[int(i)] = zero_sig
-                if rows:
-                    X = np.stack([r for _, r in rows])
-                    # dimension-order fold == the HOF's left-to-right sum
-                    acc = np.zeros((X.shape[0], P.shape[0]))
-                    for i in range(P.shape[1]):
-                        acc += X[:, i, None] * P[None, :, i]
-                    # NaN proj (null/NaN element): numpy NaN >= 0 is
-                    # False -> "0", matching the JVM guard below
-                    for k, (ri, _) in enumerate(rows):
-                        sigs[ri] = "".join(
-                            "1" if v >= 0 else "0" for v in acc[k]
-                        )
-            out = [sigs.get(i) for i in range(len(vs))]  # None for null vecs
-            return pd.Series(out)
+    @pandas_udf("string")
+    def sig_udf(vs: pd.Series) -> pd.Series:
+        P = np.asarray(planes, dtype=np.float64)  # p × d
+        zero_sig = "0" * P.shape[0]
+        null_mask = vs.isna()
+        sigs: dict[int, str] = {}
+        if (~null_mask).any():
+            idx = np.flatnonzero(~null_mask.to_numpy())
+            rows = []
+            for i in idx:
+                r = np.asarray(vs.iloc[i], dtype=np.float64)
+                if r.shape == (P.shape[1],):
+                    rows.append((int(i), r))
+                else:  # ragged/wrong-dim: all-"0"
+                    sigs[int(i)] = zero_sig
+            if rows:
+                X = np.stack([r for _, r in rows])
+                # dimension-order fold == list_sum's left-to-right sum
+                acc = np.zeros((X.shape[0], P.shape[0]))
+                for i in range(P.shape[1]):
+                    acc += X[:, i, None] * P[None, :, i]
+                # NaN proj (null/NaN element): numpy NaN >= 0 is False
+                # -> "0"
+                for k, (ri, _) in enumerate(rows):
+                    sigs[ri] = "".join("1" if v >= 0 else "0" for v in acc[k])
+        out = [sigs.get(i) for i in range(len(vs))]  # None for null vecs
+        return pd.Series(out)
 
-        return sig_udf(vec)
-    bits = []
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(x) for x in signs[p]])
-        terms = F.zip_with(vec, plane, lambda x, sg: x.cast("double") * sg)
-        proj = F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
-        # NULL proj (null element / short vector) and NaN proj (NaN
-        # element — Spark would compare NaN GREATER than any number)
-        # both emit "0", matching the Arrow kernel (review r7)
-        bits.append(
-            F.when(
-                proj.isNotNull() & ~F.isnan(proj) & (proj >= 0), F.lit("1")
-            ).otherwise(F.lit("0"))
-        )
-    return F.concat(*bits)
+    return sig_udf(vec)
 
 
 def ann_lsh_topk(

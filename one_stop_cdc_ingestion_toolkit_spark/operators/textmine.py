@@ -20,6 +20,7 @@ from one_stop_cdc_ingestion_toolkit_spark.operators import (
     track_cache,
     widen_narrow_scan,
 )
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import _duck_shingles
 
 #: Top-N BPE merge candidates reported (a128).
 BPE_TOP = 20
@@ -239,9 +240,7 @@ NOVELTY_K = 5
     f"""WITH w AS (SELECT doc_id, {_WORDS_SQL} AS words FROM documents),
        mx AS (SELECT MAX(doc_id) + 1 AS m FROM documents),
        g AS (SELECT DISTINCT doc_id,
-                    unnest(list_transform(
-                        generate_series(1, len(words) - {NOVELTY_K - 1}),
-                        i -> array_to_string(words[i:i+{NOVELTY_K - 1}], ' '))) AS gram
+                    {_duck_shingles(NOVELTY_K)} AS gram
              FROM w WHERE len(words) >= {NOVELTY_K}),
        gb AS (SELECT CAST(doc_id * {NOVELTY_BUCKETS} // (SELECT m FROM mx) AS INT)
                          AS bucket,

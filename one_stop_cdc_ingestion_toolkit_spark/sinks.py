@@ -32,51 +32,6 @@ def write_table(
     w.parquet(path)
 
 
-def export_corpus(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_shards: int,
-) -> dict:
-    """Export a (cleaned, deduped) corpus as deterministic training shards.
-
-    Shard membership is ``xxhash64(id) mod n_shards`` — stable across
-    runs, task retries and cluster sizes, so an interrupted export can be
-    re-run and downstream consumers can address shards reproducibly
-    (contrast ``repartition(n)`` round-robin, which is neither). One
-    shuffle on the shard key; each shard lands as one parquet directory
-    ``shard=i``. Returns a manifest {shard: row_count} (written alongside
-    as ``_MANIFEST.json``) for consumer-side accounting.
-    """
-    from pyspark.sql import functions as F
-
-    sharded = df.withColumn(
-        "shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")
-    )
-    (
-        sharded.repartition(n_shards, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    # count the WRITTEN data, not the upstream frame: re-evaluating the
-    # source would re-run the whole scan+shuffle a second time, and on a
-    # source that changed between the two actions the manifest would
-    # disagree with the shards it claims to describe (review r7)
-    counts = {
-        int(r["shard"]): r["n"]
-        for r in df.sparkSession.read.parquet(path)
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    manifest = {str(s): counts.get(s, 0) for s in range(n_shards)}
-    import json
-
-    Path(path, "_MANIFEST.json").write_text(json.dumps(manifest, sort_keys=True))
-    return manifest
-
-
 def dir_stats(path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) under a parquet directory."""
     files = [p for p in Path(path).rglob("*.parquet") if p.is_file()]
@@ -257,26 +212,6 @@ def files_touched(stats_rows: list, col: str, lo, hi) -> int:
         return not (mx < lo or mn > hi)
 
     return sum(1 for r in stats_rows if _touched(r))
-
-
-def lakehouse_format_available(spark: SparkSession, fmt: str = "delta") -> bool:
-    """True when a lakehouse table format (delta/iceberg/hudi) is on the
-    classpath. None ship in this container — the CDC merge would become a
-    single ``MERGE INTO`` with one (`delta-spark` etc.) jar added."""
-    import shutil
-    import tempfile
-
-    # per-call temp dir: a fixed shared path raced concurrent sessions
-    # (one probe failing on the other's in-flight state → false
-    # negative) and was never cleaned up (review r7)
-    probe = tempfile.mkdtemp(prefix="__fmt_probe__")
-    try:
-        spark.range(1).write.format(fmt).mode("overwrite").save(probe)
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-    finally:
-        shutil.rmtree(probe, ignore_errors=True)
 
 
 def recover(path: str) -> bool:

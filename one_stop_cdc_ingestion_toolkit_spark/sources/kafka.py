@@ -41,9 +41,9 @@ def normalize_client_options(client_options: dict[str, str] | None) -> dict[str,
 def kafka_available(spark: SparkSession) -> bool:
     """True when the spark-sql-kafka data source is on the classpath.
 
-    Same availability-probe pattern as ``debezium.avro_available`` /
-    ``sinks.lakehouse_format_available``: callers branch to the file
-    source where the connector is absent instead of failing at start().
+    Same availability-probe pattern as ``debezium.avro_available``:
+    callers branch to the file source where the connector is absent
+    instead of failing at start().
     """
     try:
         jvm = spark._jvm

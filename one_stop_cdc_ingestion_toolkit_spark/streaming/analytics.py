@@ -167,60 +167,6 @@ def interval_join(
     )
 
 
-def start_materialized_counts(
-    spark,
-    source_dir: str,
-    schema,
-    store,
-    table: str = "event_counts",
-    checkpoint_dir: str = "checkpoint/event_counts",
-    width: str = "1 hour",
-    delay: str = "10 minutes",
-):
-    """Incrementally-maintained materialized view: windowed counts kept
-    up to date in the table store as the stream advances.
-
-    Update-mode emits each (window, event_type) row whenever its
-    aggregate changes; ``foreachBatch`` upserts those rows into the
-    stored view (anti-join out the superseded keys, union the fresh
-    ones). State in the streaming agg is bounded by the watermark; the
-    stored view only ever rewrites the windows a batch touched — the
-    same partition-scoped discipline as the CDC merge.
-    """
-    ev = stream_of(spark, source_dir, schema)
-    ev = ev.withColumn("ts_ev", event_time(ev))
-    agg = (
-        ev.withWatermark("ts_ev", delay)
-        .groupBy(F.window("ts_ev", width).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("v"),
-        )
-        .select(wall_clock("w.start").alias("w_start"), "event_type", "n", "v")
-    )
-
-    def upsert(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        current = store.read(spark, table)
-        if current is None:
-            new = batch
-        else:
-            keys = ["w_start", "event_type"]
-            new = current.join(batch.select(*keys), keys, "left_anti").unionByName(
-                batch
-            )
-        store.write(new, table)
-
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(f"mv_{table}")
-        .start()
-    )
-
-
 def dedup_stream_within(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
     """Exact dedup for duplicates that arrive WITHIN ``delay`` of each
     other (``dropDuplicatesWithinWatermark``): state for a key is
@@ -232,93 +178,3 @@ def dedup_stream_within(events: DataFrame, delay: str = "10 minutes") -> DataFra
     same ``SELECT DISTINCT``."""
     return watermarked(events, delay).dropDuplicatesWithinWatermark(["event_id"])
 
-
-def enrich_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "left",
-    hint_broadcast: bool = True,
-) -> DataFrame:
-    """Stream-static dimension enrichment: join a (possibly streaming)
-    event frame against a static dimension table — the bread-and-butter
-    CDC pattern of decorating a click/txn stream with customer/product
-    attributes.
-
-    Stream-static joins need NO state store: Spark re-executes the
-    static side's plan every micro-batch, so each batch joins against
-    the dimension as read at batch planning time. With
-    ``hint_broadcast`` (the default — dimensions are the small side)
-    the join is a broadcast hash join per batch: the stream never
-    shuffles, which is the 100 TB-stream posture. Set it False for a
-    dimension too large to broadcast (falls back to a shuffle join of
-    THAT BATCH only — still bounded by micro-batch size).
-
-    For a dimension that the CDC pipeline itself maintains (a
-    `TableStore` materialized table), prefer :func:`enrich_via_store`,
-    which re-resolves the atomic generation pointer each batch so dim
-    UPDATES become visible mid-stream.
-    """
-    d = F.broadcast(dim) if hint_broadcast else dim
-    return events.join(d, on, how)
-
-
-def enrich_via_store(
-    spark,
-    events: DataFrame,
-    store,
-    dim_table: str,
-    on: str | list[str],
-    out_path: str,
-    checkpoint: str,
-    how: str = "left",
-    dim_schema=None,
-):
-    """Start a foreachBatch enrichment that re-reads the dimension from a
-    :class:`TableStore` at EVERY micro-batch — dimension rows
-    upserted/deleted by the CDC pipeline between batches are visible to
-    the very next batch (the store's generation pointer is atomic, so a
-    batch sees a consistent dim snapshot, never a half-written one).
-
-    Enriched batches append to ``out_path`` as parquet. Returns the
-    StreamingQuery. Restart-safe: foreachBatch re-delivery after a crash
-    re-reads the CURRENT dim generation — enrichment is at-least-once
-    with latest-dim semantics (the standard contract for slowly-changing
-    enrichment; use `read_as_of` inside a custom fn for frozen-dim
-    semantics).
-
-    ``dim_schema`` (StructType): the dimension's row schema, used when
-    the dim table has not materialized yet — batches then append with
-    NULL dim columns, keeping every parquet file in ``out_path`` on ONE
-    schema (without it, pre-dim batches would carry only event columns
-    and a plain read of the output would silently drop the dim columns
-    from them — review r7). Omitted: a batch arriving before the dim
-    exists fails loudly instead of writing a divergent schema."""
-    join_keys = [on] if isinstance(on, str) else list(on)
-
-    def _apply(batch: DataFrame, _epoch: int) -> None:
-        d = store.read(spark, dim_table)
-        if d is not None:
-            out = batch.join(F.broadcast(d), on, how)
-        elif dim_schema is not None:
-            out = batch.select(
-                "*",
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in dim_schema.fields
-                    if f.name not in join_keys
-                ],
-            )
-        else:
-            raise ValueError(
-                f"dim table {dim_table!r} not materialized yet — create it "
-                "first or pass dim_schema so pre-dim batches keep a stable "
-                "output schema"
-            )
-        out.write.mode("append").parquet(out_path)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

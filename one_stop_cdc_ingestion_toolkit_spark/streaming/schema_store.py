@@ -17,10 +17,8 @@ history topic (`bin/mskc-connector.sh:407-408`).
 
 from __future__ import annotations
 
-import abc
 import json
 import os
-from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import types as T
@@ -84,39 +82,7 @@ COMPAT_CHECKS = {
 }
 
 
-class SchemaRegistryClient(abc.ABC):
-    """Pluggable registry interface (VERDICT r3 #6): the engine codes
-    against get/register/compat only, so the local JSON store and a
-    remote Glue/Confluent HTTP registry (the reference's
-    `bin/mskc-connector.sh:440-457`) are drop-in replacements for each
-    other. ``compatibility`` names the mode a register() enforces."""
-
-    compatibility: str
-
-    @abc.abstractmethod
-    def versions(self, subject: str) -> list[T.StructType]:
-        """All registered versions for ``subject``, oldest first."""
-
-    @abc.abstractmethod
-    def register(self, subject: str, schema: T.StructType) -> int:
-        """Register (idempotently) and return the 1-based version;
-        raises :class:`IncompatibleSchemaError` on a violation."""
-
-    @abc.abstractmethod
-    def list_subjects(self) -> list[str]:
-        """All known subjects, sorted."""
-
-    def latest(self, subject: str) -> T.StructType | None:
-        vs = self.versions(subject)
-        return vs[-1] if vs else None
-
-    def _check(self, old: T.StructType, new: T.StructType, subject: str) -> None:
-        problems = COMPAT_CHECKS[self.compatibility](old, new)
-        if problems:
-            raise IncompatibleSchemaError(f"{subject}: {'; '.join(problems)}")
-
-
-class SchemaStore(SchemaRegistryClient):
+class SchemaStore:
     """Directory-backed registry: one ``<subject>.json`` per subject holding
     the append-only version list. Save → reload → validate round-trip, the
     reference's config-integrity invariant (`bin/mskc-connector.sh:571-575`)."""
@@ -142,19 +108,19 @@ class SchemaStore(SchemaRegistryClient):
         """Register a schema version (auto-registration, SURVEY §2.1 A10).
 
         Identical schemas dedup to the EARLIEST matching version with no
-        compatibility check — Confluent's per-subject contract, which the
-        HTTP client already follows: an A→B→A history returns version 1,
-        not a rejected/_appended_ version 3 (ADVICE r8 — the two backends
-        of the same drop-in interface must agree on reverts). Otherwise
-        raises :class:`IncompatibleSchemaError` when the compatibility
-        check fails, else appends and returns the new 1-based version.
+        compatibility check — Confluent's per-subject contract: an A→B→A
+        history returns version 1, not a rejected/_appended_ version 3
+        (ADVICE r8). Otherwise raises :class:`IncompatibleSchemaError`
+        when the compatibility check fails, else appends and returns the
+        new 1-based version.
         """
         versions = self.versions(subject)
         for i, v in enumerate(versions):
             if v == schema:
                 return i + 1
-        if versions:
-            self._check(versions[-1], schema, subject)
+        problems = versions and COMPAT_CHECKS[self.compatibility](versions[-1], schema)
+        if problems:
+            raise IncompatibleSchemaError(f"{subject}: {'; '.join(problems)}")
         versions.append(schema)
         doc = {
             "subject": subject,
@@ -177,112 +143,7 @@ class SchemaStore(SchemaRegistryClient):
     def list_subjects(self) -> list[str]:
         return sorted(p.stem for p in self.root.glob("*.json"))
 
+    def latest(self, subject: str) -> T.StructType | None:
+        vs = self.versions(subject)
+        return vs[-1] if vs else None
 
-def _urllib_transport(method: str, url: str, body: dict | None) -> dict:
-    """Default HTTP transport (stdlib only). Tests inject a fake."""
-    import urllib.request
-
-    req = urllib.request.Request(
-        url,
-        data=None if body is None else json.dumps(body).encode(),
-        method=method,
-        headers={"Content-Type": "application/vnd.schemaregistry.v1+json"},
-    )
-    with urllib.request.urlopen(req) as resp:  # noqa: S310 (registry URL is operator config)
-        return json.loads(resp.read())
-
-
-class HttpSchemaRegistryClient(SchemaRegistryClient):
-    """Confluent-wire-protocol registry client (subjects/versions REST
-    endpoints — the reference points Debezium converters at exactly this
-    API shape via ``schema.registry.url``, `bin/mskc-connector.sh:440-457`).
-
-    The schema payload is the engine's canonical Spark StructType JSON
-    carried as a ``schemaType: JSON`` subject — symmetric with
-    :class:`SchemaStore`'s on-disk form, so the two registries hold
-    byte-identical documents. Compatibility is ALSO enforced client-side
-    before the POST (a server may be permissive or unreachable mid-flight;
-    failing fast here keeps pipeline semantics identical across backends).
-
-    ``transport(method, url, body) -> dict`` is injectable: unit tests
-    exercise the full wire mapping against an in-memory fake; production
-    uses the stdlib urllib transport.
-    """
-
-    def __init__(
-        self,
-        base_url: str,
-        compatibility: str = "BACKWARD",
-        transport: Callable[[str, str, dict | None], dict] = _urllib_transport,
-    ):
-        if compatibility not in COMPAT_CHECKS:
-            raise ValueError(f"unknown compatibility mode: {compatibility}")
-        self.base_url = base_url.rstrip("/")
-        self.compatibility = compatibility
-        self._t = transport
-
-    def versions(self, subject: str) -> list[T.StructType]:
-        try:
-            ids = self._t(
-                "GET", f"{self.base_url}/subjects/{subject}/versions", None
-            )
-        except KeyError:  # in-memory transport's unknown-subject signal
-            return []
-        except OSError as exc:  # urllib raises HTTPError (an OSError)
-            if getattr(exc, "code", None) == 404:
-                return []  # Confluent: 40401 subject not found
-            raise
-        out = []
-        for v in ids:
-            doc = self._t(
-                "GET", f"{self.base_url}/subjects/{subject}/versions/{v}", None
-            )
-            out.append(T.StructType.fromJson(json.loads(doc["schema"])))
-        return out
-
-    def register(self, subject: str, schema: T.StructType) -> int:
-        versions = self.versions(subject)
-        # Confluent dedups identical schemas per-subject to the EARLIEST
-        # version (an A→B→A history re-registers A as version 1, not 3),
-        # so search forward and short-circuit on the first match —
-        # returning a later index diverged from the real registry's
-        # contract (ADVICE r8)
-        for i, v in enumerate(versions):
-            if v == schema:
-                return i + 1
-        if versions:
-            self._check(versions[-1], schema, subject)
-        try:
-            self._t(
-                "POST",
-                f"{self.base_url}/subjects/{subject}/versions",
-                {
-                    "schemaType": "JSON",
-                    "schema": json.dumps(schema.jsonValue()),
-                },
-            )
-        except OSError as exc:  # urllib raises HTTPError (an OSError)
-            # a server-side compatibility rejection must surface as the
-            # interface's IncompatibleSchemaError — callers written
-            # against the contract (schema_events keeps the connector
-            # running by catching exactly that) must behave identically
-            # whichever backend is plugged in (review r7). Confluent:
-            # 409 incompatible schema, 422 invalid schema.
-            if getattr(exc, "code", None) in (409, 422):
-                raise IncompatibleSchemaError(f"{subject}: {exc}") from exc
-            raise
-        # the real Confluent response carries only the GLOBAL schema id,
-        # not the per-subject version — re-read the subject and return
-        # the index where THIS schema landed (a plain len() could count
-        # a concurrent registrant's later version as ours; registration
-        # is rare, so the extra GETs don't matter). Forward scan: like
-        # the pre-check above, the registry's contract is dedup-to-
-        # earliest-identical-version (ADVICE r8)
-        after = self.versions(subject)
-        for i, v in enumerate(after):
-            if v == schema:
-                return i + 1
-        return len(after)
-
-    def list_subjects(self) -> list[str]:
-        return sorted(self._t("GET", f"{self.base_url}/subjects", None))

@@ -12,7 +12,7 @@ writes a NEW snapshot generation directory and flips a pointer file, so
 
 At 100 TB the same layout holds per partition: generation dirs under each
 ``(db, table, date)`` partition and a pointer per table, with only
-batch-affected partitions rewritten (``cdc.affected_partitions``).
+batch-affected partitions rewritten.
 """
 
 from __future__ import annotations
@@ -71,34 +71,14 @@ def _tail_records(path: Path, n: int) -> list:
     return out[::-1]
 
 
-def _complete_record_count(path: Path) -> int:
-    """Number of complete records, parsing AT MOST the last line (the
-    only one a single-writer append crash can tear — review r8: the
-    per-append callers must stay O(lines), not O(lines) json parses)."""
-    if not path.exists():
-        return 0
-    n, last = 0, None
-    with path.open() as f:
-        for line in f:
-            if line.strip():
-                n += 1
-                last = line
-    if last is not None:
-        try:
-            json.loads(last)
-        except ValueError:
-            n -= 1
-    return n
-
-
 def _truncate_torn_tail(path: Path) -> None:
     """When the file's existing content does not end in a newline (a torn
     append), REMOVE the fragment — equivalent to crashing one instruction
     earlier, since the torn record never became durable. Truncation (not
-    sealing with a newline, ADVICE r9) keeps ``_complete_record_count``
-    exact: a sealed fragment became a newline-terminated junk line that
-    counted as a complete record once it was no longer last, so seq/epoch
-    numbers silently skipped values after the first repair."""
+    sealing with a newline, ADVICE r9) keeps the next seq/epoch exact: a
+    sealed fragment became a newline-terminated junk line that counted as
+    a complete record once it was no longer last, so seq/epoch numbers
+    silently skipped values after the first repair."""
     if not path.exists() or not path.stat().st_size:
         return
     with path.open("rb+") as f:
@@ -158,14 +138,17 @@ class TableStore:
     def _log_state(self, table: str, kind: str, state) -> None:
         """Append one pointer state to the table's _HISTORY jsonl.
 
-        Torn-tail safe (crash-fuzz r8): a kill mid-append can leave a
-        PARTIAL last line with no trailing newline — the fragment is
-        truncated away before counting (the torn record never became
-        readable, so its seq is legitimately reused), keeping seq exactly
-        the count of complete records with no gaps (ADVICE r9)."""
+        The seq is the last complete record's seq + 1, read from the
+        file's tail, so an append's cost does not grow with the table's
+        age. Torn-tail safe (crash-fuzz r8): a kill mid-append can leave
+        a PARTIAL last line with no trailing newline — the fragment is
+        truncated away first (the torn record never became readable, so
+        its seq is legitimately reused), so seqs run with no gaps
+        (ADVICE r9)."""
         hf = self._history_file(table)
         _truncate_torn_tail(hf)
-        seq = _complete_record_count(hf)
+        last = self._last_seq(table)
+        seq = 0 if last is None else last + 1
         with hf.open("a") as f:
             f.write(json.dumps({"seq": seq, "kind": kind, "state": state}) + "\n")
 
@@ -227,30 +210,15 @@ class TableStore:
         return [r["state"] for r in recs]
 
     def _last_seq(self, table: str) -> int | None:
-        """Seq of the most recent pointer flip, json-parsing at most the
-        last TWO _HISTORY lines. ``history()`` would also stat() every
-        generation of every record to compute liveness — a
+        """Seq of the most recent pointer flip: the last complete _HISTORY
+        record, read from the file's tail. ``history()`` would also stat()
+        every generation of every record to compute liveness — a
         per-micro-batch caller (log_epoch) doing that accumulates
-        O(batches²) filesystem work (review r7) — and parsing every line
-        per call would be O(batches²) json parses (review r8). Torn-tail
-        safe: only the final line can be torn (single writer, O_APPEND);
-        if it fails to parse, fall back to the line before it."""
-        hf = self._history_file(table)
-        if not hf.exists():
-            return None
-        last, prev = None, None
-        with hf.open() as f:
-            for line in f:
-                if line.strip():
-                    prev, last = last, line
-        for candidate in (last, prev):
-            if candidate is None:
-                continue
-            try:
-                return json.loads(candidate)["seq"]
-            except ValueError:
-                continue
-        return None
+        O(batches²) filesystem work (review r7). Torn-tail safe: only the
+        final line can be torn (single writer, O_APPEND); an unparseable
+        line is skipped for the one before it."""
+        recs = _tail_records(self._history_file(table), 1)
+        return recs[0]["seq"] if recs else None
 
     # -- cross-table consistent snapshots (epochs) ------------------------
 
@@ -270,7 +238,8 @@ class TableStore:
                 seqs[t] = seq
         ef = self._epoch_file()
         _truncate_torn_tail(ef)
-        epoch = _complete_record_count(ef)
+        last = _tail_records(ef, 1)
+        epoch = last[0]["epoch"] + 1 if last else 0
         with ef.open("a") as f:
             f.write(json.dumps({"epoch": epoch, "tables": seqs}) + "\n")
         return epoch

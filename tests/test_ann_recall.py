@@ -86,13 +86,15 @@ def test_multiprobe_candidates_superset(spark):
     assert len(cells2) == 2 * len({v for v, _ in cells1})
 
 
-def test_lsh_signature_arrow_and_jvm_bit_identical(spark):
-    """The Arrow signature kernel replays the HOF projection fold order,
-    so both paths must emit the exact same bit strings at every plane
-    count used in the engine (8 for retrieval, 16 for the kNN graph)."""
+def test_lsh_signature_matches_duckdb_bitwise(spark, duck):
+    """The Arrow signature kernel replays ``list_sum``'s projection fold
+    order, so it must emit the exact bit strings of the oracle's
+    `_duck_signature` at every plane count used in the engine (8 for
+    retrieval, 16 for the kNN graph)."""
     from pyspark.sql import functions as F
 
     from one_stop_cdc_ingestion_toolkit_spark.operators.similarity import (
+        _duck_signature,
         lsh_signature,
     )
 
@@ -102,21 +104,16 @@ def test_lsh_signature_arrow_and_jvm_bit_identical(spark):
             r["vec_id"]: r["s"]
             for r in emb.select(
                 "vec_id",
-                lsh_signature(
-                    F.col("embedding"), n_planes=planes, use_arrow=True
-                ).alias("s"),
+                lsh_signature(F.col("embedding"), n_planes=planes).alias("s"),
             ).collect()
         }
-        b = {
-            r["vec_id"]: r["s"]
-            for r in emb.select(
-                "vec_id",
-                lsh_signature(
-                    F.col("embedding"), n_planes=planes, use_arrow=False
-                ).alias("s"),
-            ).collect()
-        }
-        assert a == b and len(a) > 0
+        b = dict(
+            duck.execute(
+                f"SELECT vec_id, {_duck_signature(n_planes=planes)} AS s "
+                "FROM embeddings"
+            ).fetchall()
+        )
+        assert a == {i: b[i] for i in a} and len(a) > 0
 
 
 def test_ivf_assign_accepts_non_numeric_cent_id(spark):

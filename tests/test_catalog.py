@@ -3,10 +3,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from one_stop_cdc_ingestion_toolkit_spark.catalog import Catalog, tables
-from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import dedup_exact
 from tests.conftest import SF_DIR
 
 
@@ -86,18 +83,3 @@ def test_register_views_sql(spark):
            GROUP BY r_name ORDER BY r_name"""
     ).collect()
     assert len(got) == 5 and all(r["n"] == 5 for r in got)
-
-
-def test_dedup_exact_operator(spark):
-    d = tables(spark, SF_DIR)["documents"]
-    out = dedup_exact(d, "text", "doc_id")
-    n_unique = d.select(F.md5("text")).distinct().count()
-    assert out.count() == n_unique
-    # keep-first: every surviving doc_id is the min for its content hash
-    firsts = d.groupBy(F.md5("text").alias("h")).agg(F.min("doc_id").alias("m"))
-    assert (
-        out.join(firsts, F.md5(out["text"]) == firsts["h"])
-        .filter(F.col("doc_id") != F.col("m"))
-        .count()
-        == 0
-    )

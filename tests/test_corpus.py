@@ -128,12 +128,17 @@ def test_est_jaccard_identical_docs_score_one(spark):
         assert 0.5 <= est <= 1.0 and est * 8 == int(est * 8), (a, b, est)
 
 
-def test_simhash_arrow_and_jvm_paths_bit_identical(spark):
-    """The Arrow SimHash kernel (default) must reproduce the JVM
-    explode+vote aggregate EXACTLY — same md5 windows, same ±1 votes,
-    same fingerprint bits — including whitespace-edge texts where
-    split() emits empty-string words."""
-    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import simhash_fps
+def test_simhash_kernel_matches_duckdb_cte_bitwise(spark):
+    """The Arrow SimHash kernel must reproduce the b45/a001 oracle's
+    DuckDB SimHash CTEs EXACTLY — same md5 windows, same ±1 votes, same
+    fingerprint bits — including whitespace-edge texts where the split
+    emits empty-string words."""
+    import duckdb
+
+    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
+        _DUCK_SIMHASH_CTE,
+        simhash_fps,
+    )
 
     df = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(300)
     edge = spark.createDataFrame(
@@ -147,18 +152,22 @@ def test_simhash_arrow_and_jvm_paths_bit_identical(spark):
         "doc_id long, text string",
     )
     for frame in (df, edge):
+        docs = [(r["doc_id"], r["text"]) for r in frame.collect()]
         a = {
             r["doc_id"]: (r["fp0"], r["fp1"])
             for r in simhash_fps(
-                frame, "doc_id", "text", offsets=(0, 8), use_arrow=True
+                frame, "doc_id", "text", offsets=(0, 8)
             ).collect()
         }
-        b = {
-            r["doc_id"]: (r["fp0"], r["fp1"])
-            for r in simhash_fps(
-                frame, "doc_id", "text", offsets=(0, 8), use_arrow=False
-            ).collect()
-        }
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+        b = dict(
+            (i, (lo, hi))
+            for i, lo, hi in con.execute(
+                f"WITH {_DUCK_SIMHASH_CTE} SELECT doc_id, fp_lo, fp_hi FROM fp"
+            ).fetchall()
+        )
         assert a == b and len(a) > 0
 
 
@@ -196,3 +205,19 @@ def test_minhash_arrow_and_jvm_paths_identical(spark):
         r["id"]
         for r in minhash_signatures(edge, "doc_id", "text").collect()
     } == {2, 3}
+
+
+def test_padding_waste_monotone_in_ctx_len(spark):
+    """Larger context length can only increase per-doc padding for docs
+    shorter than it; the fixture's docs are 10-99 words, so waste_frac
+    must rise with ctx_len across 16->128."""
+    from one_stop_cdc_ingestion_toolkit_spark.operators.corpus import a016_padding_waste
+
+    res = {r["ctx_len"]: r for r in a016_padding_waste(spark, SF_DIR).collect()}
+    assert set(res) == {16, 32, 64, 128}
+    n_docs = {r["n_docs"] for r in res.values()}
+    assert len(n_docs) == 1, "every L sees every doc"
+    for r in res.values():
+        assert r["total_padded"] >= r["total_tokens"]
+        assert 0.0 <= r["waste_frac"] < 1.0
+    assert res[128]["waste_frac"] > res[16]["waste_frac"]

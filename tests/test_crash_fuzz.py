@@ -186,7 +186,7 @@ def test_bucketed_write_crash_points(spark, tmp_path, point, monkeypatch):
 def test_last_seq_parses_at_most_last_line(spark, tmp_path):
     """review r8: _last_seq is on the per-micro-batch path (log_epoch) —
     it must fall back to the line BEFORE a torn tail without parsing the
-    whole file, and _complete_record_count must count complete records."""
+    whole file, and the next write must reuse the torn record's seq."""
     store = TableStore(tmp_path / "lake", retain=2)
     store.write(_df(spark, [(1, "a")]), "t")
     store.write(_df(spark, [(2, "b")]), "t")

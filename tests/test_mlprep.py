@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
 from one_stop_cdc_ingestion_toolkit_spark.operators.mlprep import (
+    a009_ece_calibration,
     a109_bigram_logprob,
     a110_centroid_classify,
     a112_group_split,
@@ -173,3 +174,32 @@ def test_rolling_anomaly_excludes_current_hour(spark):
     out = a116_rolling_anomaly(spark, SF_DIR)
     # every reported row really deviates: |z| > 2 by construction
     assert out.filter(F.abs(F.col("z")) <= 2).count() == 0
+
+
+def test_ece_bins_bounded(spark):
+    res = a009_ece_calibration(spark, SF_DIR).collect()
+    assert res, "at least one confidence bin"
+    for r in res:
+        assert -10 <= r["bin"] <= 9
+        assert 0.0 <= r["accuracy"] <= 1.0
+        assert r["gap"] >= 0.0
+        # gap is |accuracy - bin_mid| on the rounded values
+        assert abs(r["gap"] - round(abs(r["accuracy"] - r["bin_mid"]), 4)) < 1e-9
+
+
+def test_label_margin_matrix_shape(spark):
+    from one_stop_cdc_ingestion_toolkit_spark.operators.mlprep import (
+        a011_label_margin_matrix,
+    )
+
+    res = a011_label_margin_matrix(spark, SF_DIR).collect()
+    labels = {
+        r["label"]
+        for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        .select("label").distinct().collect()
+    }
+    k = len(labels)
+    assert len(res) == k * (k - 1) // 2
+    for r in res:
+        assert r["label_a"] < r["label_b"]
+        assert -1.0 <= r["cos_sim"] <= 1.0

@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+from one_stop_cdc_ingestion_toolkit_spark.operators.audit import a043_pairwise_auc
+from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
+    a047_dedup_token_savings,
+)
 from one_stop_cdc_ingestion_toolkit_spark.operators.relational import (
     q02_project_filter,
     q05_star_join,
@@ -10,9 +14,13 @@ from one_stop_cdc_ingestion_toolkit_spark.operators.relational import (
     q36_correlated_scalar,
     q42_revenue_join,
 )
+from one_stop_cdc_ingestion_toolkit_spark.operators.tseries import (
+    a045_cusum_changepoint,
+)
 from one_stop_cdc_ingestion_toolkit_spark.plans import (
     codegen_stage_count,
     has_pushed_filter,
+    physical_plan,
     scan_read_schema,
     uses_broadcast_join,
     uses_take_ordered,
@@ -83,7 +91,7 @@ def test_no_accidental_cartesian_or_row_python_udf(spark):
     #     UDAF, the multimodal codecs a049/a050);
     # (2) a MEASURED Arrow kernel win over the interpreted-HOF or
     #     heavy-expression JVM shape, with a bit-equality cross-check
-    #     test against the retained JVM path: the k-means assignment
+    #     test against the DuckDB oracle fragment: the k-means assignment
     #     family (a007/a012/a013 — ~2.3x) and the SimHash fingerprint
     #     family (a001/b45/a020/a027 — the 2x32-sum aggregate cost
     #     1.5-4s of plan analysis per query; kernel is plan-light and
@@ -254,35 +262,6 @@ def test_verify_join_conf_escape_hatch(spark):
     assert small is not d and len(calls) == 2
 
 
-def test_export_corpus_deterministic_shards(spark, tmp_path):
-    """Shard membership must be content-addressed (hash of id): two
-    exports of the same data produce identical manifests, and every row
-    lands in exactly the shard its id hashes to."""
-    from pyspark.sql import functions as F
-
-    from one_stop_cdc_ingestion_toolkit_spark.sinks import export_corpus
-
-    df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out1, out2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    m1 = export_corpus(df, out1, "doc_id", 4)
-    m2 = export_corpus(df, out2, "doc_id", 4)
-    assert m1 == m2
-    assert sum(m1.values()) == df.count()
-    back = spark.read.parquet(out1)
-    assert back.count() == df.count()
-    # membership: shard column equals the hash rule for every row
-    mism = back.filter(
-        F.col("shard") != F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")
-    ).count()
-    assert mism == 0
-    import json
-    import pathlib
-
-    assert json.loads(pathlib.Path(out1, "_MANIFEST.json").read_text()) == {
-        str(k): v for k, v in m1.items()
-    }
-
-
 def test_compact_recovery_after_crash(spark, tmp_path):
     """A crash between the two swap renames leaves <path>._old; the next
     compact() must restore it before proceeding."""
@@ -331,7 +310,7 @@ def test_simhash_band_cardinality_scales_with_corpus(spark):
     from pyspark.sql import functions as F
 
     from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
-    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import simhash
+    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import simhash_fps
 
     # -- scheme level: diverse 64-bit fps from md5(id) halves ----------
     def occupied(n_rows: int, chunk_bits: int) -> int:
@@ -377,9 +356,8 @@ def test_simhash_band_cardinality_scales_with_corpus(spark):
     # -- corpus level: monotone occupancy on the real table ------------
     def corpus_occupied(sf_dir: str) -> int:
         d = tables(spark, sf_dir)["documents"]
-        fp = d.select(
-            simhash(F.col("text")).alias("fp_lo"),
-            simhash(F.col("text"), hex_offset=8).alias("fp_hi"),
+        fp = simhash_fps(d, "doc_id", "text", offsets=(0, 8)).select(
+            F.col("fp0").alias("fp_lo"), F.col("fp1").alias("fp_hi")
         )
         chunks = [
             F.shiftright("fp_lo", 0).bitwiseAND(F.lit(65535)),
@@ -622,3 +600,15 @@ def test_rfm_stacked_ntile_small_inputs(spark, tmp_path):
             .collect()
         }
         assert got == want, (n_cust, got, want)
+
+
+def test_no_zero_partition_windows(spark):
+    """The batch's windows are all partitioned (source / event_type /
+    fingerprint) — none should plan a single-partition global sort."""
+    for fn in (
+        a043_pairwise_auc,
+        a045_cusum_changepoint,
+        a047_dedup_token_savings,
+    ):
+        plan = physical_plan(fn(spark, SF_DIR))
+        assert "SinglePartition" not in plan, fn.__name__

@@ -1,10 +1,9 @@
-"""PNG codec (stdlib-only) + real multimodal decode/resize path.
+"""PNG codec (stdlib-only) and its nearest-neighbor resize.
 
 The decoder is proven against a hand-built golden PNG (constructed with
 raw struct/zlib in the test — independent of our encoder), the encoder
 by encode→decode round-trips across every channel count and all five
-scanline filter types, and the Spark integration end-to-end through the
-mapInPandas Arrow batch path with NO Pillow in the environment.
+scanline filter types.
 """
 
 from __future__ import annotations
@@ -185,97 +184,3 @@ def test_resize_nearest_exact():
     one = resize_nearest(img, 1, 1)
     assert one.pixel(0, 0) == img.pixel(0, 0)
 
-
-# ---------------------------------------------------------------------------
-# Spark integration: the real decode path through mapInPandas, no Pillow
-# ---------------------------------------------------------------------------
-
-
-def _blob_df(spark):
-    rows = [
-        (1, _golden_png()),
-        (2, encode_png(bytes(range(30)), 5, 2, 3, filter_type=4)),
-        (3, b"GIF89a...no codec for this here"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, payload binary")
-
-
-def test_decode_blobs_real_png_no_pillow(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
-        decode_blobs,
-        pil_available,
-    )
-
-    assert not pil_available()  # the sandbox premise this test encodes
-    df = _blob_df(spark).filter("doc_id <= 2")
-    out = {
-        r.doc_id: (r.width, r.height, r.n_frames)
-        for r in decode_blobs(df, "doc_id", "payload", use_real=True).collect()
-    }
-    assert out == {1: (2, 2, 1), 2: (5, 2, 1)}
-
-
-def test_decode_blobs_auto_mixes_real_and_fake(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
-        decode_blobs,
-        fake_decode,
-    )
-
-    out = {
-        r.doc_id: (r.width, r.height, r.n_frames)
-        for r in decode_blobs(
-            _blob_df(spark), "doc_id", "payload", use_real=None
-        ).collect()
-    }
-    assert out[1] == (2, 2, 1)  # real decode
-    f = fake_decode(b"GIF89a...no codec for this here")
-    assert out[3] == (f["width"], f["height"], f["n_frames"])  # fake fallback
-
-
-def test_auto_mode_surfaces_corrupt_png(spark):
-    """A payload that CLAIMS PNG but is corrupt must fail the decode, not
-    silently fake — auto mode's one non-fallback case."""
-    from pyspark.errors.exceptions.captured import PythonException
-
-    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
-        decode_blobs,
-    )
-
-    rows = [(1, PNG_SIGNATURE + b"\x00\x00\x00\x05IHDRxxxxx")]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    with pytest.raises(PythonException, match="malformed IHDR"):
-        decode_blobs(df, "doc_id", "payload", use_real=None).collect()
-
-
-def test_resize_falls_back_on_undecodable_png(spark):
-    """Bulk resize must not die on one out-of-envelope blob — it gets the
-    deterministic tag+digest stand-in instead."""
-    import hashlib
-
-    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    corrupt = PNG_SIGNATURE + b"\x00\x00\x00\x05IHDRxxxxx"
-    df = spark.createDataFrame([(7, corrupt)], "doc_id long, payload binary")
-    out = resize_images(df, "doc_id", "payload", 4, 4).collect()
-    assert bytes(out[0].payload) == b"resized:4x4:" + hashlib.md5(corrupt).digest()
-
-
-def test_resize_images_real_png_roundtrip(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    df = _blob_df(spark).filter("doc_id = 1")
-    out = resize_images(df, "doc_id", "payload", 4, 4).collect()
-    assert len(out) == 1 and out[0].width == 4 and out[0].height == 4
-    img = decode_png(bytes(out[0].payload))
-    src = decode_png(_golden_png())
-    assert (img.width, img.height) == (4, 4)
-    for y in range(4):
-        for x in range(4):
-            assert img.pixel(x, y) == src.pixel(x // 2, y // 2)
-    # determinism: a rerun (= a retried task) produces identical bytes
-    again = resize_images(df, "doc_id", "payload", 4, 4).collect()
-    assert bytes(again[0].payload) == bytes(out[0].payload)

@@ -61,28 +61,38 @@ def test_jl_distortion_concentrates_near_one(spark):
         assert 0.0 < r.ratio_bin < 2.0, r
 
 
-def test_jl_project_arrow_matches_jvm_fold_bitwise(spark):
-    """The Arrow kernel and the zip_with/aggregate fold must produce
-    BIT-identical projections (the kernel accumulates in the fold's
-    dimension order, so this is exact equality, not approx)."""
+def test_jl_project_matches_duckdb_fold_bitwise(spark, duck):
+    """The Arrow kernel and the a054 oracle's DuckDB projection CTEs must
+    produce BIT-identical projections (the kernel accumulates in
+    ``list_sum``'s dimension order, so this is exact equality, not
+    approx)."""
     import math
 
     from pyspark.sql import functions as F
 
     from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
     from one_stop_cdc_ingestion_toolkit_spark.operators.quantization import (
+        _DUCK_JL_PROJ,
+        _DUCK_JSIGN,
         jl_project,
     )
 
     emb = tables(spark, SF_DIR)["embeddings"].limit(50)
-    rows = emb.select(
-        jl_project(F.col("embedding"), use_arrow=True).alias("pa"),
-        jl_project(F.col("embedding"), use_arrow=False).alias("pj"),
-    ).collect()
-    assert rows
-    for r in rows:
-        assert len(r.pa) == len(r.pj)
-        for x, y in zip(r.pa, r.pj):
+    pa = {
+        r.vec_id: r.pa
+        for r in emb.select(
+            "vec_id", jl_project(F.col("embedding")).alias("pa")
+        ).collect()
+    }
+    pj = dict(
+        duck.execute(
+            f"WITH {_DUCK_JSIGN}, {_DUCK_JL_PROJ} SELECT vec_id, proj FROM proj"
+        ).fetchall()
+    )
+    assert pa
+    for vec_id, proj in pa.items():
+        assert len(proj) == len(pj[vec_id])
+        for x, y in zip(proj, pj[vec_id]):
             assert x == y or (math.isnan(x) and math.isnan(y)), (x, y)
 
 

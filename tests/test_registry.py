@@ -1,9 +1,10 @@
 """The operator registry: the query set is fixed, module discovery finds
-every operator module, and each shared DuckDB oracle fragment is written
-out once."""
+every operator module, each shared DuckDB oracle fragment is written
+out once, and no package definition is reached only from tests."""
 
 from __future__ import annotations
 
+import ast
 import re
 import sys
 from pathlib import Path
@@ -112,3 +113,104 @@ def test_shared_oracle_fragments_written_once():
         (SHINGLE_FRAGMENT, "dedup.py"),
     ):
         assert [n for n, s in sources.items() if fragment in s] == [home]
+
+
+ROOT = OPS_DIR.parents[1]
+PKG_DIR = OPS_DIR.parent
+
+#: Top-level package definitions that no non-test source names but that
+#: stay, as ``module:name`` -> why.
+KEEP = {
+    # test oracles and assertion helpers
+    "plans:has_pushed_filter": "plan-shape assertion helper",
+    "plans:scan_read_schema": "plan-shape assertion helper",
+    "plans:uses_broadcast_join": "plan-shape assertion helper",
+    "plans:uses_take_ordered": "plan-shape assertion helper",
+    "plans:exchange_count": "plan-shape assertion helper",
+    "plans:hash_exchange_count": "plan-shape assertion helper",
+    "plans:codegen_stage_count": "plan-shape assertion helper",
+    "streaming.agg_view:recompute_reference": "oracle of the incremental agg view",
+    "streaming.agg_view:views_equal": "oracle of the incremental agg view",
+    "streaming.join_view:recompute_reference": "oracle of the incremental join view",
+    "sinks:layout_stats": "measures what the CLI's optimize_layout prunes",
+    "sinks:files_touched": "measures what the CLI's optimize_layout prunes",
+    # the reference's ingestion surface (SURVEY A8/A25)
+    "sources.kafka:kafka_available": "Kafka source (SURVEY A8)",
+    "sources.kafka:kafka_reader": "Kafka source (SURVEY A8)",
+    "sources.kafka:raw_records": "Kafka source (SURVEY A8)",
+    "config:resolve_value": "Kafka client secret resolution (SURVEY A8)",
+    "config:resolve_options": "Kafka client secret resolution (SURVEY A8)",
+    "sources.debezium:decode_json": "Debezium JSON decode (SURVEY A25)",
+    "sources.debezium:decode_avro": "Confluent/Avro decode (SURVEY A25)",
+    "sources.debezium:avro_to_json": "Confluent/Avro decode (SURVEY A25)",
+    "sources.debezium:strip_confluent_header": "Confluent/Avro decode (SURVEY A25)",
+    "sources.debezium:avro_available": "Confluent/Avro decode (SURVEY A25)",
+    # the streaming rows of SURVEY's capability table (SURVEY.md:470-472)
+    "streaming.analytics:sliding_counts": "sliding windows",
+    "streaming.analytics:session_counts": "session windows",
+    "streaming.analytics:dedup_stream": "watermarked streaming dedup",
+    "streaming.analytics:dedup_stream_within": "watermarked streaming dedup",
+    "streaming.analytics:watermarked": "watermarked streaming dedup",
+    "streaming.analytics:stream_of": "file-source stream replay",
+}
+
+
+def _non_test_sources() -> list[Path]:
+    return [
+        *PKG_DIR.rglob("*.py"),
+        *(ROOT / "tools").glob("*.py"),
+        *(ROOT / "perfbench").glob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+
+
+def _names_in_code(tree: ast.AST):
+    """(name, line) of every name the code uses: identifiers, attribute
+    names and imported names (docstrings and comments do not count)."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            yield n.id, n.lineno
+        elif isinstance(n, ast.Attribute):
+            yield n.attr, n.lineno
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit(".", 1)[-1], n.lineno
+
+
+def _is_registered(node: ast.AST) -> bool:
+    for dec in getattr(node, "decorator_list", []):
+        fn = dec.func if isinstance(dec, ast.Call) else dec
+        if isinstance(fn, ast.Name) and fn.id == "register":
+            return True
+    return False
+
+
+def test_every_package_definition_has_a_non_test_caller():
+    """Every top-level package function and class is a registered query,
+    is named in code by a non-test source outside its own body, or is on
+    KEEP. Code only tests reach is deleted with its tests instead."""
+    trees = {p: ast.parse(p.read_text()) for p in _non_test_sources()}
+    uses: dict[str, list[tuple[Path, int]]] = {}
+    for path, tree in trees.items():
+        for name, line in _names_in_code(tree):
+            uses.setdefault(name, []).append((path, line))
+    defined, unused = set(), []
+    for path, tree in trees.items():
+        if PKG_DIR not in path.parents:
+            continue
+        module = ".".join(path.relative_to(PKG_DIR).with_suffix("").parts)
+        module = module.removesuffix(".__init__")
+        for node in tree.body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or _is_registered(node):
+                continue
+            key = f"{module}:{node.name}"
+            defined.add(key)
+            own = range(node.lineno, node.end_lineno + 1)
+            if key not in KEEP and not any(
+                p != path or line not in own for p, line in uses.get(node.name, [])
+            ):
+                unused.append(key)
+    assert not unused, f"reached only from tests (delete, or add to KEEP): {unused}"
+    assert not set(KEEP) - defined, f"stale KEEP entries: {set(KEEP) - defined}"

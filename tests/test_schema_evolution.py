@@ -155,121 +155,19 @@ def test_forward_mode_truth_table(tmp_path):
     assert len(store.versions("t")) == 3
 
 
-class _FakeRegistryServer:
-    """In-memory Confluent-wire registry: the transport double for
-    HttpSchemaRegistryClient — exercises the full endpoint/payload
-    mapping without a network."""
-
-    def __init__(self):
-        self.subjects = {}
-
-    def __call__(self, method, url, body):
-        import json as _json
-
-        parts = url.split("/")
-        if method == "GET" and url.endswith("/subjects"):
-            return sorted(self.subjects)
-        if method == "GET" and parts[-1] == "versions":
-            subject = parts[-2]
-            if subject not in self.subjects:
-                raise KeyError(subject)  # 404 analogue
-            return list(range(1, len(self.subjects[subject]) + 1))
-        if method == "GET" and parts[-2] == "versions":
-            subject, v = parts[-3], int(parts[-1])
-            return {"schema": self.subjects[subject][v - 1]}
-        if method == "POST" and parts[-1] == "versions":
-            subject = parts[-2]
-            self.subjects.setdefault(subject, []).append(body["schema"])
-            return {"id": len(self.subjects[subject]),
-                    "version": len(self.subjects[subject])}
-        raise AssertionError(f"unexpected call {method} {url}")
-
-
-def test_http_registry_client_drop_in():
-    """The HTTP client implements the same SchemaRegistryClient contract
-    as the local store: register/idempotence/latest/list and the SAME
-    client-side BACKWARD enforcement (VERDICT r3 #6)."""
-    import pytest
-
+def test_register_revert_returns_earliest_version(tmp_path):
+    """ADVICE r9: schema reverts dedup to the earliest version — an
+    A→B→A history returns version 1 (dedup-to-earliest, no compat
+    check, no appended version 3), Confluent's per-subject contract. A
+    BACKWARD-incompatible revert (drop a required field then re-add) is
+    exactly the history where a latest-only short-circuit diverges: the
+    store used to run the check on (B, A) and reject what the real
+    registry accepts."""
     from one_stop_cdc_ingestion_toolkit_spark.streaming.schema_store import (
-        HttpSchemaRegistryClient,
-        IncompatibleSchemaError,
-        SchemaRegistryClient,
-    )
-
-    server = _FakeRegistryServer()
-    client = HttpSchemaRegistryClient("http://reg:8081", transport=server)
-    assert isinstance(client, SchemaRegistryClient)
-
-    v1 = T.StructType([T.StructField("a", T.LongType(), False)])
-    v2 = T.StructType(
-        [
-            T.StructField("a", T.LongType(), False),
-            T.StructField("b", T.StringType(), True),
-        ]
-    )
-    bad = T.StructType(
-        [
-            T.StructField("a", T.LongType(), False),
-            T.StructField("c", T.StringType(), False),  # NOT NULL, no default
-        ]
-    )
-    assert client.register("person-value", v1) == 1
-    assert client.register("person-value", v1) == 1  # idempotent
-    assert client.register("person-value", v2) == 2
-    assert client.latest("person-value") == v2
-    assert client.versions("person-value") == [v1, v2]
-    assert client.list_subjects() == ["person-value"]
-    with pytest.raises(IncompatibleSchemaError, match="NOT NULL"):
-        client.register("person-value", bad)
-    # unknown subject reads as empty, like the local store
-    assert client.versions("nope") == []
-    assert client.latest("nope") is None
-
-
-def test_http_register_dedups_to_earliest_version():
-    """ADVICE r8: Confluent dedups identical schemas per-subject to the
-    ORIGINAL version — an A→B→A history must return 1 for the third
-    register (and not POST a new version)."""
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.schema_store import (
-        HttpSchemaRegistryClient,
-    )
-
-    server = _FakeRegistryServer()
-    client = HttpSchemaRegistryClient("http://reg:8081", transport=server)
-    a = T.StructType([T.StructField("a", T.LongType(), False)])
-    b = T.StructType(
-        [
-            T.StructField("a", T.LongType(), False),
-            T.StructField("b", T.StringType(), True),
-        ]
-    )
-    assert client.register("s-value", a) == 1
-    assert client.register("s-value", b) == 2
-    assert client.register("s-value", a) == 1  # dedup-to-earliest
-    assert len(server.subjects["s-value"]) == 2  # no third version POSTed
-
-
-@pytest.mark.parametrize("backend", ["local", "http"])
-def test_register_revert_contract_shared_across_backends(backend, tmp_path):
-    """ADVICE r9: the two SchemaRegistryClient implementations must agree
-    on schema reverts — an A→B→A history returns version 1 from BOTH the
-    directory-backed store and the HTTP client (dedup-to-earliest, no
-    compat check, no appended version 3). A BACKWARD-incompatible revert
-    (drop a required field then re-add) is exactly the history where a
-    latest-only short-circuit diverges: the local store used to run
-    _check(B, A) and reject what the real registry accepts."""
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.schema_store import (
-        HttpSchemaRegistryClient,
         SchemaStore,
     )
 
-    if backend == "local":
-        client = SchemaStore(tmp_path / "reg")
-    else:
-        client = HttpSchemaRegistryClient(
-            "http://reg:8081", transport=_FakeRegistryServer()
-        )
+    store = SchemaStore(tmp_path / "reg")
     a = T.StructType([T.StructField("a", T.LongType(), False)])
     # B drops no fields but adds a required-with-no-default one ONLY in
     # the B→A direction check; use add-nullable so A→B registers, then
@@ -281,118 +179,10 @@ def test_register_revert_contract_shared_across_backends(backend, tmp_path):
             T.StructField("b", T.StringType(), True),
         ]
     )
-    assert client.register("s-value", a) == 1
-    assert client.register("s-value", b) == 2
-    assert client.register("s-value", a) == 1  # dedup-to-earliest, both
-    assert client.versions("s-value") == [a, b]  # no version 3 appended
-
-
-def test_http_registry_client_over_real_socket():
-    """End-to-end over a real TCP socket: an in-process http.server speaks
-    the Confluent subjects/versions protocol and the client uses the
-    DEFAULT stdlib urllib transport — proving the production wire path
-    (request method/headers/body, JSON round-trip, and the HTTPError-404
-    unknown-subject branch) with no transport double involved."""
-    import http.server
-    import json as _json
-    import threading
-
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.schema_store import (
-        HttpSchemaRegistryClient,
-    )
-
-    subjects: dict[str, list[str]] = {}
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):  # keep pytest output clean
-            pass
-
-        def _send(self, code, payload):
-            body = _json.dumps(payload).encode()
-            self.send_response(code)
-            self.send_header("Content-Type",
-                             "application/vnd.schemaregistry.v1+json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def do_GET(self):
-            parts = self.path.strip("/").split("/")
-            if parts == ["subjects"]:
-                return self._send(200, sorted(subjects))
-            if len(parts) == 3 and parts[2] == "versions":
-                if parts[1] not in subjects:
-                    return self._send(
-                        404, {"error_code": 40401,
-                              "message": "Subject not found"})
-                return self._send(
-                    200, list(range(1, len(subjects[parts[1]]) + 1)))
-            if len(parts) == 4 and parts[2] == "versions":
-                return self._send(
-                    200, {"schema": subjects[parts[1]][int(parts[3]) - 1]})
-            return self._send(404, {"error_code": 404, "message": "?"})
-
-        def do_POST(self):
-            parts = self.path.strip("/").split("/")
-            body = _json.loads(
-                self.rfile.read(int(self.headers["Content-Length"])))
-            assert self.headers["Content-Type"] == (
-                "application/vnd.schemaregistry.v1+json")
-            vs = subjects.setdefault(parts[1], [])
-            vs.append(body["schema"])
-            return self._send(200, {"id": len(vs)})
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    thread = threading.Thread(target=srv.serve_forever, daemon=True)
-    thread.start()
-    try:
-        client = HttpSchemaRegistryClient(
-            f"http://127.0.0.1:{srv.server_address[1]}")
-        v1 = T.StructType([T.StructField("a", T.LongType(), False)])
-        v2 = T.StructType(v1.fields + [T.StructField("b", T.StringType(), True)])
-        assert client.versions("ghost") == []          # real HTTPError 404
-        assert client.register("t-value", v1) == 1
-        assert client.register("t-value", v1) == 1     # idempotent
-        assert client.register("t-value", v2) == 2
-        assert client.versions("t-value") == [v1, v2]
-        assert client.list_subjects() == ["t-value"]
-        with pytest.raises(IncompatibleSchemaError):
-            client.register(
-                "t-value",
-                T.StructType([T.StructField("z", T.LongType(), False)]))
-    finally:
-        srv.shutdown()
-        srv.server_close()
-
-
-def test_http_server_side_409_maps_to_incompatible():
-    """A server-side compatibility rejection (HTTP 409/422) must surface
-    as IncompatibleSchemaError — the contract schema_events relies on to
-    keep the connector running — not a raw HTTPError (review r7)."""
-    import pytest
-
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.schema_store import (
-        HttpSchemaRegistryClient,
-        IncompatibleSchemaError,
-    )
-
-    class _Strict(_FakeRegistryServer):
-        def __call__(self, method, url, body):
-            if method == "POST" and self.subjects:
-                err = OSError("409 Conflict: incompatible schema")
-                err.code = 409  # urllib.error.HTTPError duck-type
-                raise err
-            return super().__call__(method, url, body)
-
-    client = HttpSchemaRegistryClient(
-        "http://reg:8081", compatibility="NONE", transport=_Strict()
-    )
-    v1 = T.StructType([T.StructField("a", T.LongType(), False)])
-    v2 = T.StructType([T.StructField("b", T.StringType(), True)])
-    assert client.register("s", v1) == 1
-    # client-side NONE admits v2; the stricter server rejects with 409
-    with pytest.raises(IncompatibleSchemaError, match="409"):
-        client.register("s", v2)
+    assert store.register("s-value", a) == 1
+    assert store.register("s-value", b) == 2
+    assert store.register("s-value", a) == 1  # dedup-to-earliest
+    assert store.versions("s-value") == [a, b]  # no version 3 appended
 
 
 def test_store_register_is_atomic_on_disk(tmp_path):

@@ -1,13 +1,10 @@
-"""Salted-join equivalence + applyInPandasWithState running totals."""
+"""Salted-join equivalence."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from one_stop_cdc_ingestion_toolkit_spark.operators.skew import salted_join
-from one_stop_cdc_ingestion_toolkit_spark.streaming.stateful import (
-    running_user_totals,
-)
 from tests.conftest import SF_DIR
 
 
@@ -27,123 +24,3 @@ def test_salted_join_equals_plain_join(spark):
     # shuffle key carries the salt: every hot key fans out over 4 tasks
     assert "__salt" not in salted.columns
 
-
-def test_running_user_totals_stateful(spark, tmp_path):
-    """Drive the custom stateful operator over two micro-batches: state
-    carries across batches and final totals equal the batch aggregate."""
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    half = ev.count() // 2
-    ev1 = ev.orderBy("event_id").limit(half)
-    ev2 = ev.orderBy("event_id").offset(half)
-    src = tmp_path / "stream"
-    src.mkdir()
-    ev1.coalesce(1).write.parquet(str(src / "b1.parquet"))
-
-    stream = (
-        spark.readStream.schema(ev.schema).format("parquet").load(str(src) + "/*")
-    )
-    q = (
-        running_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("totals_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        ev2.coalesce(1).write.parquet(str(src / "b2.parquet"))
-        q.processAllAvailable()
-        # memory sink in update mode appends each emission; latest per user wins
-        out = spark.sql(
-            """SELECT user_id, n_events, total_value FROM (
-                 SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-                                              ORDER BY n_events DESC) AS rn
-                 FROM totals_out) t WHERE rn = 1"""
-        )
-        got = {r["user_id"]: (r["n_events"], round(r["total_value"], 6)) for r in out.collect()}
-    finally:
-        q.stop()
-    expect = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
-        for r in ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    assert got == expect
-
-
-def test_session_finalize_timer_closes_sessions(spark, tmp_path):
-    """Timer-driven sessionizer: all sessions close once the watermark
-    passes last+gap (pushed by a sentinel event), and the closed set
-    equals the built-in session_window batch result (session_window's
-    end = last event + gap; session_finalize emits the last event)."""
-    from pyspark.sql import functions as F
-
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.analytics import (
-        session_counts,
-    )
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.stateful import (
-        SESSION_GAP_US,
-        session_finalize,
-    )
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    half = ev.count() // 2
-    ev1 = ev.orderBy("event_id").limit(half)
-    ev2 = ev.orderBy("event_id").offset(half)
-    # sentinel far past every session's last+gap so all timers fire
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    import datetime
-
-    sentinel = spark.createDataFrame(
-        [(10**9, max_ts + datetime.timedelta(days=2), -1, "view", 0.0, "{}")],
-        ev.schema,
-    )
-    src = tmp_path / "stream"
-    src.mkdir()
-    ev1.coalesce(1).write.parquet(str(src / "b1.parquet"))
-
-    stream = (
-        spark.readStream.schema(ev.schema).format("parquet").load(str(src) + "/*")
-    )
-    q = (
-        session_finalize(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        ev2.coalesce(1).write.parquet(str(src / "b2.parquet"))
-        q.processAllAvailable()
-        sentinel.coalesce(1).write.parquet(str(src / "b3.parquet"))
-        q.processAllAvailable()
-        # one more empty-ish trigger so timers registered in the sentinel
-        # batch fire against the advanced watermark
-        sentinel.withColumn("event_id", F.lit(10**9 + 1)).coalesce(1).write.parquet(
-            str(src / "b4.parquet")
-        )
-        q.processAllAvailable()
-        got = sorted(
-            (r["user_id"], r["s_start"], r["s_end"], r["n_events"])
-            for r in spark.sql(
-                "SELECT * FROM sessions_out WHERE user_id >= 0"
-            ).collect()
-        )
-    finally:
-        q.stop()
-
-    batch = session_counts(ev)
-    want = sorted(
-        (
-            r["user_id"],
-            int(r["s_start"].timestamp() * 1_000_000),
-            int(r["s_end"].timestamp() * 1_000_000) - SESSION_GAP_US,
-            r["n_events"],
-        )
-        for r in batch.collect()
-    )
-    assert got == want

@@ -112,33 +112,6 @@ def test_dedup_stream_equivalence(spark, events_schema, events_dir):
         q.stop()
 
 
-def test_materialized_counts_view(spark, events_schema, events_dir, tmp_path):
-    """The incrementally-maintained view converges to the batch windowed
-    aggregate once the stream drains."""
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.analytics import (
-        start_materialized_counts,
-    )
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
-
-    store = TableStore(tmp_path / "lake")
-    q = start_materialized_counts(
-        spark,
-        events_dir,
-        events_schema,
-        store,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    view = store.read(spark, "event_counts")
-    batch = tumbling_counts(spark.read.parquet(EVENTS))
-    assert _rows(view, "w_start", "event_type") == _rows(
-        batch, "w_start", "event_type"
-    )
-
-
 def test_watermark_is_set(spark, events_schema, events_dir):
     stream = stream_of(spark, events_dir, events_schema)
     wm = watermarked(stream, "10 minutes")

@@ -160,3 +160,79 @@ def test_write_parses_only_history_tail(spark, tmp_path, monkeypatch):
     gens = sorted(p.name for p in (tmp_path / "lake" / "t").glob("gen-*"))
     assert gens == ["gen-000000", "gen-000001"]
     assert store.read(spark, "t").collect()[0]["v"] == "b"
+
+
+class _CountingFile:
+    """File proxy that records how many bytes (or characters) each read
+    returns."""
+
+    def __init__(self, f, counts: list):
+        self._f, self._counts = f, counts
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return self._f.__exit__(*exc)
+
+    def __iter__(self):
+        for line in self._f:
+            self._counts.append(len(line))
+            yield line
+
+    def read(self, *a):
+        data = self._f.read(*a)
+        self._counts.append(len(data))
+        return data
+
+    def __getattr__(self, name):
+        return getattr(self._f, name)
+
+
+def _log_bytes_read(spark, tmp_path, monkeypatch, n: int) -> tuple[int, int]:
+    """(bytes read from the metadata logs by one ``write``, by one
+    ``log_epoch``) on a store whose ``_HISTORY`` and ``_EPOCHS`` already
+    hold ``n`` records each. Records are padded to ~250 bytes, so even
+    the 1k-line files span several of the tail reader's 64 KB chunks."""
+    import json
+    import pathlib
+
+    store = TableStore(tmp_path / "lake", retain=2)
+    store.write(_df(spark, [(1, "a")]), "t")
+    pad = "x" * 200
+    with (tmp_path / "lake" / "t" / "_HISTORY").open("w") as f:
+        for i in range(n):
+            gen = "gen-000000" if i == n - 1 else f"gen-old{i}-{pad}"
+            f.write(json.dumps({"seq": i, "kind": "snapshot", "state": gen}) + "\n")
+    with (tmp_path / "lake" / "_EPOCHS").open("w") as f:
+        for i in range(n):
+            f.write(json.dumps({"epoch": i, "tables": {"t": i}, "pad": pad}) + "\n")
+
+    real_open = pathlib.Path.open
+    counts: list = []
+
+    def counting_open(self, *a, **kw):
+        f = real_open(self, *a, **kw)
+        return _CountingFile(f, counts) if self.name in ("_HISTORY", "_EPOCHS") else f
+
+    with monkeypatch.context() as m:
+        m.setattr(pathlib.Path, "open", counting_open)
+        store.write(_df(spark, [(2, "b")]), "t")
+        write_bytes = sum(counts)
+        counts.clear()
+        epoch = store.log_epoch(["t"])
+        epoch_bytes = sum(counts)
+    # numbering continues from the existing logs
+    assert store._last_seq("t") == n
+    assert epoch == n
+    return write_bytes, epoch_bytes
+
+
+def test_metadata_log_reads_do_not_grow_with_log_length(spark, tmp_path, monkeypatch):
+    """A ``write`` reads the same number of bytes from ``_HISTORY``, and
+    a ``log_epoch`` from ``_HISTORY`` and ``_EPOCHS``, whether the logs
+    hold 1k or 100k records: the next seq and epoch come from the last
+    record of the tail, not from a count of every line."""
+    small = _log_bytes_read(spark, tmp_path / "small", monkeypatch, 1_000)
+    big = _log_bytes_read(spark, tmp_path / "big", monkeypatch, 100_000)
+    assert small == big, (small, big)

@@ -1,14 +1,12 @@
-"""WAV codec (stdlib-only) + real audio feature extraction path.
+"""WAV codec (stdlib-only).
 
 Decoder proven against a hand-built golden WAV (raw struct bytes,
 independent of our encoder), encoder by round-trips across bit depths
-and channel counts (incl. hypothesis), feature extraction by exact
-closed-form RMS values, and the Spark mapInPandas path end-to-end.
+and channel counts (incl. hypothesis).
 """
 
 from __future__ import annotations
 
-import math
 import struct
 
 import numpy as np
@@ -18,10 +16,8 @@ from hypothesis import strategies as st
 
 from one_stop_cdc_ingestion_toolkit_spark.functions.wav_codec import (
     decode_wav,
-    downsample,
     encode_wav,
     is_wav,
-    rms_windows,
 )
 
 
@@ -119,71 +115,3 @@ def test_encode_rejects_out_of_range_samples():
         encode_wav(np.array([[40000]]), 8000)
     with pytest.raises(ValueError, match="out of 8-bit range"):
         encode_wav(np.array([[200]]), 8000, bits=8)
-
-
-def test_rms_windows_exact():
-    a = decode_wav(_golden_wav())  # 1 kHz → 2 ms windows = 2 frames
-    w = rms_windows(a, window_ms=2)
-    assert [x["window_idx"] for x in w] == [0, 1]
-    assert [x["start_ms"] for x in w] == [0, 2]
-    assert w[0]["rms"] == round(math.sqrt((100 * 100 + 100 * 100) / 2), 6)
-    assert w[1]["rms"] == round(math.sqrt((200 * 200 + 200 * 200) / 2), 6)
-    assert [x["peak"] for x in w] == [100, 200]
-    # partial final window: 3 ms window over 4 frames → windows of 3 + 1
-    w2 = rms_windows(a, window_ms=3)
-    assert len(w2) == 2
-    assert w2[1]["rms"] == 200.0  # single-frame window
-
-
-def test_rms_stereo_mono_mix():
-    arr = np.array([[100, 300], [-100, -300]])  # mono mix = 200, -200
-    a = decode_wav(encode_wav(arr, 1000))
-    w = rms_windows(a, window_ms=2)
-    assert w[0]["rms"] == 200.0
-    assert w[0]["peak"] == 200
-
-
-def test_downsample():
-    arr = np.arange(10).reshape(10, 1)
-    a = decode_wav(encode_wav(arr, 8000))
-    d = downsample(a, 2)
-    assert d.sample_rate == 4000
-    assert d.samples[:, 0].tolist() == [0, 2, 4, 6, 8]
-    with pytest.raises(ValueError):
-        downsample(a, 0)
-
-
-# ---------------------------------------------------------------------------
-# Spark integration
-# ---------------------------------------------------------------------------
-
-
-def test_audio_features_end_to_end(spark):
-    from one_stop_cdc_ingestion_toolkit_spark.operators.multimodal import (
-        audio_features,
-        decode_audio,
-    )
-
-    tone = np.array([[1000] * 1 for _ in range(8)])  # 8 frames @ 1 kHz
-    rows = [(1, _golden_wav()), (2, encode_wav(tone, 1000))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = audio_features(df, "doc_id", "payload", window_ms=2).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert len(by_doc[1]) == 2 and len(by_doc[2]) == 4
-    assert all(r.rms == 1000.0 and r.peak == 1000 for r in by_doc[2])
-    assert [r.start_ms for r in sorted(by_doc[2], key=lambda r: r.window_idx)] == [
-        0, 2, 4, 6,
-    ]
-    # metadata decode agrees with the codec
-    meta = decode_audio(_golden_wav())
-    assert meta == {
-        "sample_rate": 1000,
-        "channels": 1,
-        "bits": 16,
-        "n_frames": 4,
-        "duration_ms": 4,
-    }
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"OggS not wav")
