@@ -100,10 +100,16 @@ def track_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+#: Bytes of data an operator may pin in memory on its own decision: the
+#: broadcast pin below, and the edge list connected components collects
+#: to label on the driver (``advanced.connected_components``).
+PIN_BUDGET_BYTES = 64 << 20
+
+
 def pin_broadcast_if_small(df: DataFrame, est_bytes: Callable[[], int]) -> DataFrame:
     """Broadcast-pin ``df`` when a data-derived size estimate fits the
-    64 MB pin budget, for the near-dup verify joins (ngram_jaccard_pairs,
-    a004). AQE cannot size a frame that sits behind a ``.persist()``, so
+    64 MB pin budget (``PIN_BUDGET_BYTES``), for the near-dup verify
+    joins (ngram_jaccard_pairs, a004). AQE cannot size a frame that sits behind a ``.persist()``, so
     this makes the runtime-stats call itself: ``est_bytes()`` (usually one
     small probe job over already-cached data), then ``F.broadcast`` under
     the budget; above it, ``df`` is returned untouched so the planner
@@ -116,7 +122,7 @@ def pin_broadcast_if_small(df: DataFrame, est_bytes: Callable[[], int]) -> DataF
     """
     from pyspark.sql import functions as F
 
-    if est_bytes() < (64 << 20):
+    if est_bytes() < PIN_BUDGET_BYTES:
         return F.broadcast(df)
     return df
 

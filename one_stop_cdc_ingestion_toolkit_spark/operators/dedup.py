@@ -333,40 +333,31 @@ def minhash_cc_edges(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     same bucket in every band) cost B·(B−1)/2 candidate pairs — a
     quadratic blowup a real 100 TB corpus WILL contain (license
     headers, scraped templates). Connected components only needs the
-    pairs' connectivity, so this builder collapses each
-    identical-SIGNATURE group to a star before the quadratic stage:
-
-    - one window over the signature (mh0..mh7) labels every doc with
-      its group's min id (``rep``) — linear rows through one shuffle,
-      partial-order-free aggregates (min) so a hot group streams;
-    - star edges (rep, member) replace the group's internal clique;
-    - band rows are built for REPRESENTATIVES ONLY, so the self-join's
-      bucket sizes are bounded by the number of DISTINCT signatures.
+    pairs' connectivity, so this builder links every doc of an LSH
+    bucket to the bucket's min id instead: one window over
+    (band_idx, band_sig) labels each band row with its bucket's min id
+    (``rep``), and every row whose id is not its ``rep`` becomes the
+    edge (rep, id). That is one shuffle of the band rows and at most
+    one edge per doc and band (4 per doc), with no self-join; the min
+    is order-free, so a hot bucket streams through the window.
 
     Component equality with the full graph (the d96/a141 recursive-CTE
-    oracles): an identical-signature group is a clique in the full
-    graph (all bands match ⇒ the pair is emitted from band 0), and a
-    star spans exactly that clique; any full-graph edge (member, x)
-    exists in collapsed form as (rep, rep_x) because banding sees only
-    signatures — so every path maps to a collapsed path and back.
-    Node sets match too: a member of a size≥2 group always pairs with
-    its signature twin in the full graph, and a singleton's pairs are
-    exactly its rep-pairs. NOT equivalent for edge-set-dependent
-    semantics (clean_corpus's "drop every id_b" keeps the full graph).
+    oracles): the full graph is the union of one clique per bucket of
+    two or more docs, and a star on the bucket's docs spans exactly its
+    clique, so every path maps to a star path and back. Node sets match
+    too: a doc is in the full graph iff it shares some bucket, iff that
+    bucket has a star that names it. Edges may repeat (two bands whose
+    buckets have the same members), which connected components ignores.
+    NOT equivalent for edge-set-dependent semantics (clean_corpus's
+    "drop every id_b" keeps the full graph).
     """
-    sigcols = [f"mh{i}" for i in range(len(MINHASH_A))]
-    # cached: consumed by the star filter AND both sides of the rep
-    # band self-join (released by operators.release_caches).
-    lab = track_cache(
-        minhash_signatures(df, id_col, text_col).withColumn(
-            "rep", F.min("id").over(W.partitionBy(*sigcols))
-        )
+    bands = minhash_band_rows(df, id_col, text_col).select(
+        "id",
+        F.min("id").over(W.partitionBy("band_idx", "band_sig")).alias("rep"),
     )
-    star = lab.filter(F.col("id") != F.col("rep")).select(
+    return bands.filter(F.col("id") != F.col("rep")).select(
         F.col("rep").alias("id_a"), F.col("id").alias("id_b")
     )
-    reps = lab.filter(F.col("id") == F.col("rep")).select("id", *sigcols)
-    return band_pairs(sig_band_rows(reps)).unionByName(star)
 
 
 def _collapsed_form(

@@ -342,9 +342,12 @@ def a141_cluster_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Adds one broadcast-sized join (cluster labels are only the docs that
     appear in any candidate pair) and one cluster-keyed window on top of
     the cluster computation; quality is derived from integer lengths so
-    both engines rank identically. Like d96, edges come from the
-    star-collapsed builder (dedup.minhash_cc_edges) — component-identical
-    to the oracle's full band graph, linear on hot duplicate clusters."""
+    both engines rank identically. Like d96, edges are one star per LSH
+    bucket (dedup.minhash_cc_edges) — component-identical to the
+    oracle's full band graph, at most 4 per doc, linear on hot duplicate
+    clusters. The labels come from connected_components' driver path
+    whenever the edges fit the pin budget, so the query runs a fixed
+    handful of Spark jobs (5 at sf0.1) whatever the clusters' diameter."""
     from one_stop_cdc_ingestion_toolkit_spark.operators.advanced import (
         connected_components,
     )

@@ -130,10 +130,12 @@ def _cc(spark, edges):
     }
 
 
+#: clique {1,2,3}, chain 10-11-12-13 (diameter 3), isolated pair {20,21}
+CLIQUE_CHAIN_PAIR = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (20, 21)]
+
+
 def test_cc_clique_and_chain_and_pair(spark):
-    # clique {1,2,3}, chain 10-11-12-13 (diameter 3), isolated pair {20,21}
-    edges = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (20, 21)]
-    got = _cc(spark, edges)
+    got = _cc(spark, CLIQUE_CHAIN_PAIR)
     assert got == {
         1: 1, 2: 1, 3: 1,
         10: 10, 11: 10, 12: 10, 13: 10,
@@ -156,6 +158,90 @@ def test_cc_label_is_component_min(spark):
     edges = [(8, 9), (7, 8), (6, 7), (5, 6)]
     got = _cc(spark, edges)
     assert got == {5: 5, 6: 5, 7: 5, 8: 5, 9: 5}
+
+
+def _cc_graphs(spark):
+    """The clique/chain/pair graph, the 12-hop chain and a 4096-hop
+    chain (listed head-last, so min labels must travel its length)."""
+    return {
+        "clique_chain_pair": spark.createDataFrame(
+            CLIQUE_CHAIN_PAIR, "id_a long, id_b long"
+        ),
+        "chain_12": spark.createDataFrame(
+            [(i, i + 1) for i in range(100, 112)], "id_a long, id_b long"
+        ),
+        "chain_4096": spark.range(4096).select(
+            (4096 - F.col("id")).alias("id_a"), (4095 - F.col("id")).alias("id_b")
+        ),
+    }
+
+
+def test_cc_job_count_does_not_grow_with_diameter(spark):
+    """Graphs under the pin budget are labeled after one bounded collect,
+    so diameter 1, 12 and 4096 run the same number of Spark jobs. The
+    round loop ran one localCheckpoint and one count per round instead:
+    about 2 rounds for the clique, 12 for the long chain."""
+    from tests.test_tx_scale import _jobs
+
+    jobs = {
+        name: _jobs(spark, lambda g=g: connected_components(g).collect())
+        for name, g in _cc_graphs(spark).items()
+    }
+    assert len(set(jobs.values())) == 1, jobs
+
+
+def test_cc_distributed_loop_matches_local_path(spark, monkeypatch):
+    """With the budget at 0 every non-empty graph takes the round loop;
+    its labels must equal the driver-side union-find's, node set
+    included."""
+    from one_stop_cdc_ingestion_toolkit_spark.operators import (
+        advanced,
+        release_caches,
+    )
+
+    graphs = _cc_graphs(spark)
+    local = {
+        name: sorted(connected_components(g).collect())
+        for name, g in graphs.items()
+    }
+    assert local["chain_4096"][-1] == (4096, 0)
+
+    def fail(*_):
+        raise AssertionError("local path taken under a 0-row budget")
+
+    monkeypatch.setattr(advanced, "CC_LOCAL_EDGES", 0)
+    monkeypatch.setattr(advanced, "_local_components", fail)
+    for name, g in graphs.items():
+        assert sorted(connected_components(g).collect()) == local[name], name
+        release_caches()
+
+
+def test_cc_local_collect_takes_at_most_budget_plus_one_rows(spark, monkeypatch):
+    """The edge collect is bounded by ``limit(budget + 1)``: a graph one
+    row over the budget brings back budget + 1 rows and falls through to
+    the round loop; a graph at the budget is labeled locally."""
+    from one_stop_cdc_ingestion_toolkit_spark.operators import (
+        advanced,
+        release_caches,
+    )
+
+    chain = _cc_graphs(spark)["chain_4096"]
+    seen = []
+    to_arrow = type(chain).toArrow
+
+    def counted(self):
+        t = to_arrow(self)
+        seen.append(t.num_rows)
+        return t
+
+    monkeypatch.setattr(type(chain), "toArrow", counted)
+    for budget in (5, 4095, 4096):
+        monkeypatch.setattr(advanced, "CC_LOCAL_EDGES", budget)
+        seen.clear()
+        got = connected_components(chain).collect()
+        release_caches()
+        assert seen == [min(budget + 1, 4096)], (budget, seen)
+        assert len(got) == 4097 and {r["comp"] for r in got} == {0}
 
 
 # ---------------------------------------------------------------------------

@@ -90,30 +90,37 @@ def test_lsh_signature_matches_duckdb_bitwise(spark, duck):
     """The Arrow signature kernel replays ``list_sum``'s projection fold
     order, so it must emit the exact bit strings of the oracle's
     `_duck_signature` at every plane count used in the engine (8 for
-    retrieval, 16 for the kNN graph)."""
+    retrieval, 16 for the kNN graph). The fold-order frame makes a
+    change of that order visible; the corpus rows alone sum exactly in
+    any order."""
     from pyspark.sql import functions as F
 
     from one_stop_cdc_ingestion_toolkit_spark.operators.similarity import (
         _duck_signature,
         lsh_signature,
     )
+    from tests.conftest import fold_order_embeddings
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(400)
-    for planes in (8, 16):
-        a = {
-            r["vec_id"]: r["s"]
-            for r in emb.select(
-                "vec_id",
-                lsh_signature(F.col("embedding"), n_planes=planes).alias("s"),
-            ).collect()
-        }
-        b = dict(
-            duck.execute(
-                f"SELECT vec_id, {_duck_signature(n_planes=planes)} AS s "
-                "FROM embeddings"
-            ).fetchall()
-        )
-        assert a == {i: b[i] for i in a} and len(a) > 0
+    cases = [
+        (spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(400), duck),
+        fold_order_embeddings(spark),
+    ]
+    for emb, con in cases:
+        for planes in (8, 16):
+            a = {
+                r["vec_id"]: r["s"]
+                for r in emb.select(
+                    "vec_id",
+                    lsh_signature(F.col("embedding"), n_planes=planes).alias("s"),
+                ).collect()
+            }
+            b = dict(
+                con.execute(
+                    f"SELECT vec_id, {_duck_signature(n_planes=planes)} AS s "
+                    "FROM embeddings"
+                ).fetchall()
+            )
+            assert a == {i: b[i] for i in a} and len(a) > 0
 
 
 def test_ivf_assign_accepts_non_numeric_cent_id(spark):

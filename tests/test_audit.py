@@ -9,6 +9,7 @@ from one_stop_cdc_ingestion_toolkit_spark.catalog import tables
 from one_stop_cdc_ingestion_toolkit_spark.operators.audit import (
     a008_welch_audit,
     a043_pairwise_auc,
+    a055_k_anonymity,
 )
 from tests.conftest import SF_DIR
 
@@ -78,3 +79,13 @@ def test_welch_sign_matches_mean_shift(spark):
         assert r["significant"] == (abs(r["t_welch"]) > 1.96) or (
             abs(abs(r["t_welch"]) - 1.96) < 0.01
         )
+
+
+def test_k_anonymity_partitions_account_for_everyone(spark):
+    rows = a055_k_anonymity(spark, SF_DIR).collect()
+    assert rows
+    assert abs(sum(r.pct_rows for r in rows) - 1.0) < 0.01
+    for r in rows:
+        assert r.n_groups <= r.n_rows, r
+    # tiers come back in fixed risk order
+    assert [r.tier_ord for r in rows] == sorted(r.tier_ord for r in rows)

@@ -65,7 +65,8 @@ def test_jl_project_matches_duckdb_fold_bitwise(spark, duck):
     """The Arrow kernel and the a054 oracle's DuckDB projection CTEs must
     produce BIT-identical projections (the kernel accumulates in
     ``list_sum``'s dimension order, so this is exact equality, not
-    approx)."""
+    approx). The fold-order frame makes a change of that order visible;
+    the corpus rows alone sum exactly in any order."""
     import math
 
     from pyspark.sql import functions as F
@@ -76,24 +77,29 @@ def test_jl_project_matches_duckdb_fold_bitwise(spark, duck):
         _DUCK_JSIGN,
         jl_project,
     )
+    from tests.conftest import fold_order_embeddings
 
-    emb = tables(spark, SF_DIR)["embeddings"].limit(50)
-    pa = {
-        r.vec_id: r.pa
-        for r in emb.select(
-            "vec_id", jl_project(F.col("embedding")).alias("pa")
-        ).collect()
-    }
-    pj = dict(
-        duck.execute(
-            f"WITH {_DUCK_JSIGN}, {_DUCK_JL_PROJ} SELECT vec_id, proj FROM proj"
-        ).fetchall()
-    )
-    assert pa
-    for vec_id, proj in pa.items():
-        assert len(proj) == len(pj[vec_id])
-        for x, y in zip(proj, pj[vec_id]):
-            assert x == y or (math.isnan(x) and math.isnan(y)), (x, y)
+    cases = [
+        (tables(spark, SF_DIR)["embeddings"].limit(50), duck),
+        fold_order_embeddings(spark),
+    ]
+    for emb, con in cases:
+        pa = {
+            r.vec_id: r.pa
+            for r in emb.select(
+                "vec_id", jl_project(F.col("embedding")).alias("pa")
+            ).collect()
+        }
+        pj = dict(
+            con.execute(
+                f"WITH {_DUCK_JSIGN}, {_DUCK_JL_PROJ} SELECT vec_id, proj FROM proj"
+            ).fetchall()
+        )
+        assert pa
+        for vec_id, proj in pa.items():
+            assert len(proj) == len(pj[vec_id])
+            for x, y in zip(proj, pj[vec_id]):
+                assert x == y or (math.isnan(x) and math.isnan(y)), (x, y)
 
 
 def test_jl_distortion_pair_space_is_bucketed(spark):

@@ -213,28 +213,9 @@ def test_kmv_estimates_track_exact_at_scale(spark, scale_dir):
     assert worst <= 2 * KMV_TOL, f"estimator off by {worst:.3f}"
 
 
-def test_cc_edges_star_collapse_on_hot_duplicate_cluster(spark):
-    """The 100 TB adversarial input the uniform rehearsal never makes:
-    ONE boilerplate text repeated B times (license header / scraped
-    template). The band self-join is inherently quadratic there
-    (B·(B−1)/2 pairs inside one bucket), so the clustering consumers
-    (d96/a141) take edges from minhash_cc_edges, which collapses each
-    identical-signature group to a star BEFORE the banding self-join.
-
-    Asserts (B = 400 copies over a 400-doc base corpus):
-    - component labels from the collapsed edges == labels from the full
-      pair graph (the oracle-checked semantics), node set included;
-    - the collapsed edge count stays LINEAR (< 8·n) while the full pair
-      graph has already gone quadratic (> B·(B−1)/2 pairs).
-    """
+def _hot_duplicate_docs(spark):
+    """A 400-doc base corpus plus B = 400 copies of one boilerplate text."""
     from pyspark.sql import functions as F
-
-    from one_stop_cdc_ingestion_toolkit_spark.operators.advanced import (
-        connected_components,
-    )
-    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
-        minhash_cc_edges,
-    )
 
     base = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -246,7 +227,32 @@ def test_cc_edges_star_collapse_on_hot_duplicate_cluster(spark):
         F.lit("all rights reserved this template is boilerplate "
               "generated by the scraper pipeline v2").alias("text"),
     )
-    docs = base.unionByName(hot)
+    return base.unionByName(hot)
+
+
+def test_cc_edges_star_collapse_on_hot_duplicate_cluster(spark):
+    """The 100 TB adversarial input the uniform rehearsal never makes:
+    ONE boilerplate text repeated B times (license header / scraped
+    template). The band self-join is inherently quadratic there
+    (B·(B−1)/2 pairs inside one bucket), so the clustering consumers
+    (d96/a141) take edges from minhash_cc_edges, which links every doc
+    of an LSH bucket to the bucket's min id instead.
+
+    Asserts (B = 400 copies over a 400-doc base corpus):
+    - component labels from the star edges == labels from the full
+      pair graph (the oracle-checked semantics), node set included;
+    - the star edge count stays at or below 4 per doc (one per band)
+      while the full pair graph has already gone quadratic
+      (> B·(B−1)/2 pairs).
+    """
+    from one_stop_cdc_ingestion_toolkit_spark.operators.advanced import (
+        connected_components,
+    )
+    from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
+        minhash_cc_edges,
+    )
+
+    docs = _hot_duplicate_docs(spark)
 
     full = minhash_lsh_pairs(docs, "doc_id", "text")
     n_full = full.count()
@@ -264,7 +270,21 @@ def test_cc_edges_star_collapse_on_hot_duplicate_cluster(spark):
 
     assert labels_star == labels_full
     assert n_full >= 400 * 399 // 2, f"expected quadratic full graph, got {n_full}"
-    assert n_edges < 8 * 800, f"collapsed edges not linear: {n_edges}"
+    assert n_edges <= 4 * 800, f"star edges above 4 per doc: {n_edges}"
+
+
+def test_cc_distributed_loop_matches_local_path_on_hot_cluster(spark, monkeypatch):
+    """The hot-duplicate graph's full band pairs, labeled by the round
+    loop (budget patched to 0) and on the driver: identical labels."""
+    from one_stop_cdc_ingestion_toolkit_spark.operators import advanced
+
+    pairs = minhash_lsh_pairs(_hot_duplicate_docs(spark), "doc_id", "text")
+    local = sorted(advanced.connected_components(pairs).collect())
+    release_caches()
+    monkeypatch.setattr(advanced, "CC_LOCAL_EDGES", 0)
+    loop = sorted(advanced.connected_components(pairs).collect())
+    release_caches()
+    assert loop == local and len(local) > 400
 
 
 def test_semantic_cc_star_collapse_on_hot_embedding_cluster(spark):

@@ -12,13 +12,16 @@ for the 200k quadratic-regime cells (q44/a0007 run ~10 min each there,
 see BASELINE "Appendix: 200k-doc decade").
 
 ``--hot N`` runs the SKEW rehearsal instead: the clustering consumers
-(d96/a141, whose edge generation star-collapses identical-signature
-groups) and the collapsed-output pair query (a0006) on each base corpus
-with and without N identical copies of one boilerplate template
-appended — the adversarial input whose LSH bucket is quadratic (N²/2
-pairs) without the collapse. Pair-OUTPUT queries (q43/q44) are
+(d96/a141, whose edge generation links every doc of an LSH bucket to
+the bucket's min id) and the collapsed-output pair query (a0006) on
+each base corpus with and without N identical copies of one boilerplate
+template appended — the adversarial input whose LSH bucket is quadratic
+(N²/2 pairs) without the collapse. Pair-OUTPUT queries (q43/q44) are
 correctly quadratic there (the answer itself is the pair set) and are
-excluded by design; a0006 IS their linear-space production shape.
+excluded by design; a0006 IS their linear-space production shape. A
+last row gives ``minhash_cc_edges``' edge count against the doc count
+of each corpus, and the run fails if edges exceed 4 per doc (one per
+band).
 
 Prints a markdown table for the BASELINE.md appendix.
 """
@@ -122,6 +125,19 @@ def main() -> None:
                 release_caches()
             cells.append(f"{best:.2f} / {rows}")
         print(f"| {q} | " + " | ".join(cells) + " |")
+    if hot:
+        from one_stop_cdc_ingestion_toolkit_spark.operators.dedup import (
+            minhash_cc_edges,
+        )
+
+        cells = []
+        for v in variants:
+            docs = spark.read.parquet(os.path.join(dirs[v], "documents.parquet"))
+            n_docs = docs.count()
+            n_edges = minhash_cc_edges(docs, "doc_id", "text").count()
+            cells.append(f"{n_edges} / {n_docs}")
+            assert n_edges <= 4 * n_docs, f"{label(*v)}: {n_edges} edges"
+        print("| minhash_cc_edges (edges / docs) | " + " | ".join(cells) + " |")
 
 
 if __name__ == "__main__":
