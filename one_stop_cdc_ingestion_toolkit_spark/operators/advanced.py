@@ -382,7 +382,9 @@ CC_MAX_ITERS = 20
 CC_LOCAL_EDGES = PIN_BUDGET_BYTES // 16
 
 
-def _local_components(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _local_components(
+    src: np.ndarray, dst: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
     """(node, comp) arrays of the undirected graph with edges
     src[i]–dst[i], comp = the min node id of node's component.
 
