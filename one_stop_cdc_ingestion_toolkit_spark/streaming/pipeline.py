@@ -131,11 +131,16 @@ class PipelineSpec:
     #: standing denormalized fact⟕dim views maintained incrementally
     #: from the change stream (``streaming.join_view.JoinView``)
     join_views: list = field(default_factory=list)
+    #: ``{"tx_atomic": True}`` turns on the transaction gate; no other key
     options: dict = field(default_factory=dict)
 
     def validate(self) -> None:
         if not self.name:
             raise ValueError("pipeline name required")
+        unknown = sorted(set(self.options) - {"tx_atomic"})
+        if unknown:
+            # a stale spec file must fail here, not run with its key ignored
+            raise ValueError(f"{self.name}: unknown options {unknown}")
         if not self.tables:
             raise ValueError(f"{self.name}: at least one table required")
         for t in self.tables:
@@ -689,7 +694,7 @@ class Pipeline:
         view = self.agg_views.get(tspec.name)
         if view is None:
             return None
-        if view.applied_upto() != len(self.store.history(tspec.name)):
+        if view.applied_upto() != self.store.history_len(tspec.name):
             return self._VIEW_REBUILD
         keys = changes.select(*tspec.key_cols).distinct()
         prior_t = (
@@ -704,7 +709,7 @@ class Pipeline:
         view = self.agg_views.get(tspec.name)
         if view is None or delta is None:
             return
-        applied = len(self.store.history(tspec.name))
+        applied = self.store.history_len(tspec.name)
         if isinstance(delta, str):
             view.rebuild(
                 self.spark, self.store.read(self.spark, tspec.name), applied
@@ -735,8 +740,8 @@ class Pipeline:
             is_dim = jv.spec.dim == tspec.name
             if not (is_fact or is_dim):
                 continue
-            fact_upto = len(self.store.history(jv.spec.fact))
-            dim_upto = len(self.store.history(jv.spec.dim))
+            fact_upto = self.store.history_len(jv.spec.fact)
+            dim_upto = self.store.history_len(jv.spec.dim)
             expected = {
                 "fact_upto": fact_upto - (1 if is_fact else 0),
                 "dim_upto": dim_upto - (1 if is_dim else 0),
@@ -865,44 +870,14 @@ class Pipeline:
 
     def start(self) -> StreamingQuery:
         """Start the StreamingQuery (A13). File source: new files in
-        source_dir are micro-batches; Kafka would swap the reader only.
-        ``options["source_format"]="changelog"`` swaps in the Python
-        DataSource (`sources/changelog_ds.py`) whose capacity knob is
-        RECORD-granular (``options["max_records_per_batch"]``) instead
-        of file-granular — the engine's analogue of the reference's
-        provisioned connector capacity (A14)."""
-        if self.spec.options.get("source_format") == "changelog":
-            from one_stop_cdc_ingestion_toolkit_spark.sources.changelog_ds import (
-                register_changelog,
+        source_dir are micro-batches, at most ``max_files_per_trigger``
+        each (the capacity knob, A14); Kafka would swap the reader only."""
+        reader = self.spark.readStream.schema(RAW_SCHEMA).format("json")
+        if self.spec.max_files_per_trigger:
+            reader = reader.option(
+                "maxFilesPerTrigger", self.spec.max_files_per_trigger
             )
-
-            register_changelog(self.spark)
-            # streamid defaults to the pipeline name: unkeyed readers
-            # share one per-directory commit sidecar, so two pipelines
-            # over one source dir would clobber each other's cap base
-            # on fresh start (ADVICE r9)
-            reader = (
-                self.spark.readStream.format("changelog")
-                .option("path", self.spec.source_dir)
-                .option(
-                    "streamid",
-                    self.spec.options.get("streamid", self.spec.name),
-                )
-            )
-            cap = self.spec.options.get("max_records_per_batch")
-            if cap:
-                reader = reader.option("maxRecordsPerBatch", int(cap))
-            stream = reader.load()
-        else:
-            reader = (
-                self.spark.readStream.schema(RAW_SCHEMA)
-                .format("json")
-            )
-            if self.spec.max_files_per_trigger:
-                reader = reader.option(
-                    "maxFilesPerTrigger", self.spec.max_files_per_trigger
-                )
-            stream = reader.load(self.spec.source_dir)
+        stream = reader.load(self.spec.source_dir)
 
         def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
             self.apply_batch(batch_df, batch_id=epoch_id)
@@ -956,13 +931,11 @@ class Pipeline:
         history — False means the next batch will repair by rebuild."""
         out: dict[str, bool] = {}
         for name, av in self.agg_views.items():
-            out[f"aggview:{name}"] = av.applied_upto() == len(
-                self.store.history(name)
-            )
+            out[f"aggview:{name}"] = av.applied_upto() == self.store.history_len(name)
         for jv in self.join_views:
             out[f"joinview:{jv.spec.fact}⟕{jv.spec.dim}"] = jv.in_sync(
-                len(self.store.history(jv.spec.fact)),
-                len(self.store.history(jv.spec.dim)),
+                self.store.history_len(jv.spec.fact),
+                self.store.history_len(jv.spec.dim),
             )
         return out
 

@@ -220,6 +220,15 @@ class TableStore:
         recs = _tail_records(self._history_file(table), 1)
         return recs[0]["seq"] if recs else None
 
+    def history_len(self, table: str) -> int:
+        """``len(self.history(table))`` read from the file's tail:
+        `_log_state` numbers seqs gap-free from 0, so the count is the last
+        seq + 1 (0 with no history). The view sync asks for it several
+        times per batch, where parsing and stat()ing the whole history
+        would grow with the table's age."""
+        last = self._last_seq(table)
+        return 0 if last is None else last + 1
+
     # -- cross-table consistent snapshots (epochs) ------------------------
 
     def _epoch_file(self) -> Path:

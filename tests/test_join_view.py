@@ -304,3 +304,43 @@ def test_view_materializes_before_dim_exists(spark, tmp_path):
         (2, "bob", 20, None, None),
     }
     assert _rows(pipe.read_join_view("orders", "customer")) == _expect(pipe)
+
+
+def test_view_sync_counts_history_from_its_tail(spark, tmp_path, monkeypatch):
+    """The view sync reads each table's pointer-state count from the
+    _HISTORY tail (``history_len``), never the full ``history()`` parse
+    whose cost grows with the table's age: with ``history()`` raising,
+    batches still keep an agg view and a join view equal to their
+    recomputes, and ``view_status`` still answers."""
+    from one_stop_cdc_ingestion_toolkit_spark.streaming import agg_view
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
+
+    spec = _spec(tmp_path, n_buckets=4)
+    spec.tables[0].agg_group_cols = ["cust"]
+    spec.tables[0].agg_sum_cols = ["amount"]
+    pipe = Pipeline(spark, spec)
+
+    def full_parse(self, table):
+        raise AssertionError(f"full _HISTORY parse of {table}")
+
+    monkeypatch.setattr(TableStore, "history", full_parse)
+    batches = [
+        [cust_env("r", 1, "ann", "gold", "eu"), order_env("c", 2, 100, "ann", 10)],
+        [order_env("c", 3, 101, "bob", 20), order_env("c", 4, 102, "ann", 30)],
+        [
+            cust_env("u", 5, "ann", "platinum", "eu"),
+            order_env("u", 6, 100, "bob", 11),
+        ],
+    ]
+    for b in batches:
+        pipe.apply_batch(_raw(spark, b))
+    assert pipe.view_status() == {
+        "aggview:orders": True,
+        "joinview:orders⟕customer": True,
+    }
+    assert _rows(pipe.read_join_view("orders", "customer")) == _expect(pipe)
+    ref = agg_view.recompute_reference(
+        pipe.store.read(spark, "orders"), ["cust"], ["amount"]
+    )
+    view = pipe.read_agg_view("orders").select("cust", "n", "sum_amount")
+    assert agg_view.views_equal(view, ref, ["cust"])

@@ -4,6 +4,10 @@ merge → materialized snapshot; checkpoint recovery; registry round-trip."""
 from __future__ import annotations
 
 import json
+import os
+from pathlib import Path
+
+import pytest
 
 from one_stop_cdc_ingestion_toolkit_spark.registry import PipelineRegistry
 from one_stop_cdc_ingestion_toolkit_spark.streaming.pipeline import (
@@ -79,6 +83,39 @@ def test_stream_checkpoint_recovery(spark, tmp_path):
     assert _state(snap) == expect
 
 
+def test_late_out_of_order_update_respected_across_batches(spark, tmp_path):
+    """One envelope per file and one file per trigger: the out-of-order
+    pos=2 update arrives in a LATER batch than pos=3 and must still lose
+    (sequence-number merge, not arrival order)."""
+    events = [
+        envelope("c", 1, after=person("zed", "alpha", 20)),
+        envelope("u", 3, before=person("zed", "alpha", 20), after=person("zed", "gamma", 22)),
+        envelope("u", 2, before=person("zed", "alpha", 20), after=person("zed", "beta", 21)),
+    ]
+    spec = _spec(tmp_path, name="pds2")
+    spec.max_files_per_trigger = 1
+    write_stream_files(spec.source_dir, events, files=3)
+    # the file source takes files oldest mtime first
+    for i, f in enumerate(sorted(Path(spec.source_dir).iterdir())):
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    pipe = Pipeline(spark, spec)
+    pipe.process_available()
+    pipe.stop()
+    snap = pipe.read_table("person")
+    rows = {r["firstName"]: r["lastName"] for r in snap.collect()}
+    assert rows == {"zed": "gamma"}
+
+
+def test_spec_rejects_unknown_options(tmp_path):
+    """Only ``tx_atomic`` is an option: a spec naming a key the pipeline
+    no longer reads fails instead of silently running without it."""
+    spec = _spec(tmp_path)
+    spec.options = {"source_format": "changelog"}
+    with pytest.raises(ValueError, match="unknown options"):
+        spec.validate()
+    spec.options = {"tx_atomic": True}
+    spec.validate()
+
 def test_stream_status_and_remove(spark, tmp_path):
     spec = _spec(tmp_path)
     write_stream_files(spec.source_dir, CANONICAL_EVENTS[:2], files=1)
@@ -149,7 +186,6 @@ def test_pipeline_rejects_incompatible_evolution(spark, tmp_path):
     """Restarting a pipeline whose table schema added a NOT NULL column
     must fail the batch (BACKWARD gate inside the stream, A11)."""
     import pyspark.sql.types as T
-    import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     spec = _spec(tmp_path)
