@@ -931,7 +931,9 @@ class Pipeline:
         history — False means the next batch will repair by rebuild."""
         out: dict[str, bool] = {}
         for name, av in self.agg_views.items():
-            out[f"aggview:{name}"] = av.applied_upto() == self.store.history_len(name)
+            out[f"aggview:{name}"] = (
+                av.applied_upto() == self.store.history_len(name)
+            )
         for jv in self.join_views:
             out[f"joinview:{jv.spec.fact}⟕{jv.spec.dim}"] = jv.in_sync(
                 self.store.history_len(jv.spec.fact),

@@ -116,6 +116,7 @@ def test_spec_rejects_unknown_options(tmp_path):
     spec.options = {"tx_atomic": True}
     spec.validate()
 
+
 def test_stream_status_and_remove(spark, tmp_path):
     spec = _spec(tmp_path)
     write_stream_files(spec.source_dir, CANONICAL_EVENTS[:2], files=1)
