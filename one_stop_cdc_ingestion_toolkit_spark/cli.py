@@ -32,9 +32,7 @@ from one_stop_cdc_ingestion_toolkit_spark.registry import (
 )
 from one_stop_cdc_ingestion_toolkit_spark.session import get_session
 from one_stop_cdc_ingestion_toolkit_spark.streaming.pipeline import Pipeline
-from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-    BucketedTableStore,
-)
+from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
 
 
@@ -223,7 +221,7 @@ def main(argv: list[str] | None = None) -> int:
 
     p = sub.add_parser(
         "optimize-table",
-        help="re-cluster a snapshot-layout table on sort columns so "
+        help="re-cluster a one-bucket table on sort columns so "
         "file-level min/max stats prune range scans",
     )
     p.add_argument("sink_dir")
@@ -266,12 +264,12 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.verb == "list-tables":
-        for t in BucketedTableStore(args.sink_dir).list_tables():
+        for t in TableStore(args.sink_dir).list_tables():
             print(t)
         return 0
 
     if args.verb == "remove-tables":
-        for t in BucketedTableStore(args.sink_dir).drop_tables(args.pattern):
+        for t in TableStore(args.sink_dir).drop_tables(args.pattern):
             print(f"dropped {t}")
         return 0
 
@@ -387,7 +385,7 @@ def main(argv: list[str] | None = None) -> int:
         from one_stop_cdc_ingestion_toolkit_spark.operators.cdc import snapshot
 
         spark = get_session("osci-spark")
-        store = BucketedTableStore(args.sink_dir)
+        store = TableStore(args.sink_dir)
         if args.as_of is not None:
             df = store.read_as_of(spark, args.table, args.as_of)
         else:
@@ -403,7 +401,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.verb == "history":
-        recs = BucketedTableStore(args.sink_dir).history(args.table)
+        recs = TableStore(args.sink_dir).history(args.table)
         if not recs:
             print(f"no history for table: {args.table}", file=sys.stderr)
             return 1
@@ -417,7 +415,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         spark = get_session("osci-spark")
-        sindex = SearchIndex(BucketedTableStore(args.sink_dir), args.table)
+        sindex = SearchIndex(TableStore(args.sink_dir), args.table)
         if sindex.read(spark) is None:
             print(f"no search index for table: {args.table}", file=sys.stderr)
             return 1
@@ -430,7 +428,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         spark = get_session("osci-spark")
-        index = DedupIndex(BucketedTableStore(args.sink_dir), args.table)
+        index = DedupIndex(TableStore(args.sink_dir), args.table)
         if index.read(spark) is None:
             print(f"no dedup index for table: {args.table}", file=sys.stderr)
             return 1
@@ -452,7 +450,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         spark = get_session("osci-spark")
-        store = BucketedTableStore(args.sink_dir)
+        store = TableStore(args.sink_dir)
         keys = args.keys.split(",")
         sides = []
         for seq in (args.from_seq, args.to_seq):
@@ -478,21 +476,22 @@ def main(argv: list[str] | None = None) -> int:
             print("need --sort-cols or --zorder", file=sys.stderr)
             return 1
         spark = get_session("osci-spark")
-        store = BucketedTableStore(args.sink_dir)
-        if store.layout(args.table) == "bucketed":
+        store = TableStore(args.sink_dir)
+        bmap = store.bucket_map(args.table)
+        if not bmap:
+            print(f"no such table: {args.table}", file=sys.stderr)
+            return 1
+        if len(bmap) > 1:
             print(
-                "optimize-table works on snapshot-layout tables (bucketed "
+                "optimize-table works on one-bucket tables (key-bucketed "
                 "tables are clustered by key hash already)",
                 file=sys.stderr,
             )
             return 1
-        path = store.current_path(args.table)
-        if path is None:
-            print(f"no such table: {args.table}", file=sys.stderr)
-            return 1
+        (b, gen), = bmap.items()
         n = optimize_layout(
             spark,
-            str(path),
+            str(store.bucket_dir(args.table, b, gen)),
             args.sort_cols.split(",") if args.sort_cols else [],
             zorder_pair=tuple(args.zorder.split(",")) if args.zorder else None,
         )
@@ -503,7 +502,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         spark = get_session("osci-spark")
-        store = BucketedTableStore(args.sink_dir)
+        store = TableStore(args.sink_dir)
         v = store.read(spark, f"{args.table}__aggview")
         if v is None:
             print(f"no aggregate view for table: {args.table}", file=sys.stderr)
@@ -521,7 +520,7 @@ def main(argv: list[str] | None = None) -> int:
         from one_stop_cdc_ingestion_toolkit_spark.operators.cdc import snapshot
 
         spark = get_session("osci-spark")
-        store = BucketedTableStore(args.sink_dir)
+        store = TableStore(args.sink_dir)
         _register_store_views(spark, store, snapshot)
         spark.sql(args.query).explain("formatted")
         return 0
@@ -541,7 +540,7 @@ def main(argv: list[str] | None = None) -> int:
         # functions (LATERAL text_chunks(...)).
         register_sql_functions(spark)
         register_udtfs(spark)
-        store = BucketedTableStore(args.sink_dir)
+        store = TableStore(args.sink_dir)
         if args.epoch is not None:
             try:
                 views = store.read_epoch(spark, args.epoch)
@@ -563,7 +562,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.verb == "epochs":
-        recs = BucketedTableStore(args.sink_dir).epochs()
+        recs = TableStore(args.sink_dir).epochs()
         if not recs:
             print("no epochs logged", file=sys.stderr)
             return 1
@@ -592,7 +591,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_session("osci-spark")
         recs = freshness(
             spark,
-            BucketedTableStore(args.sink_dir),
+            TableStore(args.sink_dir),
             tables=args.table,
             now_ms=args.now_ms,
         )

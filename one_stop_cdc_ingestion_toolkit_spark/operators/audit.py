@@ -835,7 +835,7 @@ def a137_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-partition balance audit: simulate hash-partitioning the
     join key across ``N_PARTS`` reducers and report the max/avg load
     imbalance — the straggler predictor for a planned repartition or
-    bucketing layout (BucketedTableStore). a99 audits per-KEY skew; this
+    bucketing layout (TableStore). a99 audits per-KEY skew; this
     audits the PARTITIONER output, which also catches collision pileups
     of medium keys that no single-key audit shows. Imbalance ≈ 1.0 means
     the layout scales linearly; the md5 bucket is the engine-portable

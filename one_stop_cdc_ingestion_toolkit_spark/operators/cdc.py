@@ -19,7 +19,7 @@ Merge = union(state-as-pseudo-changes, batch) → one window on the key
 ordered by (pos, ts_ms) desc → keep rn=1. One shuffle, on the key; AQE
 handles skewed keys. At 100 TB, state is partitioned by key-hash
 buckets and only batch-affected buckets are rewritten
-(``BucketedTableStore``); tombstones are GC'd once older than the redelivery horizon
+(``TableStore``); tombstones are GC'd once older than the redelivery horizon
 (``expire_tombstones``).
 """
 

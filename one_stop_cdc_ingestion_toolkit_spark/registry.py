@@ -66,7 +66,7 @@ def spec_from_json(doc: dict) -> PipelineSpec:
                 name=t["name"],
                 key_cols=t["key_cols"],
                 row_schema=T.StructType.fromJson(t["row_schema"]),
-                n_buckets=t.get("n_buckets"),
+                n_buckets=1 if t.get("n_buckets") is None else t["n_buckets"],
                 index_text_col=t.get("index_text_col"),
                 search_text_col=t.get("search_text_col"),
                 agg_group_cols=t.get("agg_group_cols"),

@@ -48,7 +48,7 @@ class DedupIndex(KeyedIndex):
         table: str,
         id_col: str | None = None,
         text_col: str | None = None,
-        n_buckets: int | None = None,
+        n_buckets: int = 1,
         id_type: str | None = None,
     ):
         """See :class:`KeyedIndex` for the shared arguments. ``id_type``

@@ -5,8 +5,8 @@ Each index derives rows keyed by the document id (``_index_rows``); this
 base folds a micro-batch in by anti-joining the touched ids out of the
 current index and re-inserting the live documents' rows, through the
 store's keyed read/replace — so the index follows whatever layout
-(whole snapshot or key buckets, ``n_buckets``) the store is asked for,
-including a one-time whole rewrite when that layout changes.
+(``n_buckets`` key buckets; 1 = the whole index) the store is asked for,
+including a one-time whole rewrite when that count changes.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ class KeyedIndex:
         table: str,
         id_col: str | None = None,
         text_col: str | None = None,
-        n_buckets: int | None = None,
+        n_buckets: int = 1,
     ):
         """``id_col``/``text_col`` are required for maintenance; lookups
         over an existing index need only the store and table.

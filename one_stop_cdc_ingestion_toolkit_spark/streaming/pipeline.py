@@ -12,7 +12,7 @@ checkpoint, driven by ``foreachBatch``:
       → decode check (each record by its own table's envelope schema)
       → schema auto-registration + BACKWARD gate   (A10/A11)
       → flatten_changes → apply_changes            (latest-wins merge)
-      → BucketedTableStore.replace_keys (atomic snapshot / bucket swap)
+      → TableStore.replace_keys (atomic swap of the touched key buckets)
 
 Checkpointing makes replay after restart at-least-once; the merge is
 idempotent (keyed, total-ordered), so end-to-end state is exactly-once.
@@ -65,7 +65,7 @@ from one_stop_cdc_ingestion_toolkit_spark.streaming.join_view import JoinView
 from one_stop_cdc_ingestion_toolkit_spark.streaming.dedup_index import DedupIndex
 from one_stop_cdc_ingestion_toolkit_spark.streaming.search_index import SearchIndex
 from one_stop_cdc_ingestion_toolkit_spark.streaming.schema_store import SchemaStore
-from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import BucketedTableStore
+from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
 #: Reserved lake table holding quarantined (malformed) source records.
 DLQ_TABLE = "_dlq"
@@ -81,11 +81,11 @@ ENVELOPE_FIELDS = ("before", "after", "op", "ts_ms", "source")
 class TableSpec:
     """One captured table: name, primary-key columns, row schema.
 
-    ``n_buckets`` switches the table to key-bucketed state
-    (BucketedTableStore): each micro-batch rewrites only the hash buckets
-    its keys touch — the 100 TB merge path. None = whole-snapshot swap.
-    Changing it on an existing table is one whole-table rewrite on the
-    next batch, for None→n and for n→m alike; n→None is refused.
+    ``n_buckets`` is the number of key-hash buckets of the table's state
+    (TableStore): each micro-batch rewrites only the buckets its keys
+    touch — the 100 TB merge path. 1 = the whole table is rewritten per
+    batch. Changing it on an existing table is one whole-table rewrite on
+    the next batch.
 
     ``index_text_col`` names a text column to maintain an incremental
     near-duplicate index over (``streaming.dedup_index.DedupIndex``):
@@ -101,7 +101,7 @@ class TableSpec:
     name: str
     key_cols: list[str]
     row_schema: T.StructType
-    n_buckets: int | None = None
+    n_buckets: int = 1
     index_text_col: str | None = None
     search_text_col: str | None = None
     #: standing GROUP-BY aggregate view maintained incrementally from the
@@ -144,6 +144,11 @@ class PipelineSpec:
         if not self.tables:
             raise ValueError(f"{self.name}: at least one table required")
         for t in self.tables:
+            if type(t.n_buckets) is not int or t.n_buckets < 1:
+                raise ValueError(
+                    f"{self.name}.{t.name}: n_buckets must be a positive int, "
+                    f"got {t.n_buckets!r}"
+                )
             missing = [k for k in t.key_cols if k not in t.row_schema.fieldNames()]
             if missing:
                 raise ValueError(f"{self.name}.{t.name}: key cols {missing} not in schema")
@@ -259,7 +264,7 @@ class Pipeline:
         import threading
 
         self._apply_lock = threading.Lock()
-        self.store = BucketedTableStore(spec.sink_dir, retain=spec.snapshot_retain)
+        self.store = TableStore(spec.sink_dir, retain=spec.snapshot_retain)
         self.schemas = SchemaStore(
             Path(spec.sink_dir) / "_schemas", spec.compatibility
         )
@@ -796,7 +801,7 @@ class Pipeline:
     ) -> tuple[DataFrame | None, list[int] | None]:
         """(state, buckets) of the table rows holding this batch's keys —
         bucket-pruned in the table's requested bucketed layout, whole
-        otherwise (``BucketedTableStore.read_keys``)."""
+        otherwise (``TableStore.read_keys``)."""
         return self.store.read_keys(
             self.spark, tspec.name, tspec.key_cols, tspec.n_buckets, changes, buckets
         )

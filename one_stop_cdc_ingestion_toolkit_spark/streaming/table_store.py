@@ -1,18 +1,23 @@
-"""Materialized-table store: versioned parquet snapshots with atomic swap.
+"""Materialized-table store: key-bucketed parquet generations behind one
+atomic pointer.
 
 The engine's analogue of the reference's tables-as-topics → lake tables
-(Hudi hint, `/root/reference/README.md:22-32`), without Delta: each apply
-writes a NEW snapshot generation directory and flips a pointer file, so
+(the Hudi hint of the reference's README), without Delta. Every
+table has one layout:
 
-- readers never see a half-written snapshot (write staging → fsync →
-  pointer flip),
-- re-running a batch after a crash is safe (the pointer still names the
-  last complete generation — idempotent with the merge's idempotency),
-- old generations are pruned after the flip.
+    <table>/gen-K/__bucket=i/...parquet   one generation per write
+    <table>/_BUCKETS                      {bucket: generation} pointer
+    <table>/_NBUCKETS                     count of the last whole rewrite
+                                          with more than one bucket
 
-At 100 TB the same layout holds per partition: generation dirs under each
-``(db, table, date)`` partition and a pointer per table, with only
-batch-affected partitions rewritten.
+A whole snapshot is the one-bucket map. Each write makes a NEW
+generation and then flips the pointer file, so readers never see a
+half-written generation, a batch re-run after a crash is safe (the
+pointer still names the last complete generations), and generations no
+retained state references are pruned after the flip. Tables of the
+older snapshot layout (a ``_CURRENT`` pointer naming one generation
+whose files sit at its root) are moved into the one-bucket map when a
+store opens them.
 """
 
 from __future__ import annotations
@@ -102,13 +107,21 @@ def _truncate_torn_tail(path: Path) -> None:
         f.truncate(0)
 
 
+def _state(rec: dict) -> dict:
+    """The bucket map of one _HISTORY record. A record of the older
+    snapshot layout names its one generation, which is bucket 0 once
+    the store has adopted the table."""
+    state = rec["state"]
+    return state if isinstance(state, dict) else {"0": state}
+
+
 def key_bucket(n_buckets: int, *cols) -> Column:
     """THE key→bucket hash: ``pmod(xxhash64(cols...), n)`` as int.
 
     Bucket pruning is only correct because every read and write of a
     bucketed table agrees on this exact function; a drifted copy would
     silently mis-prune buckets and drop rows from reads (review r7).
-    Only :class:`BucketedTableStore` calls it (``bucket_of`` /
+    Only :class:`TableStore` calls it (``bucket_of`` /
     ``replace_keys``); tests use it to build bucketed frames by hand."""
     from pyspark.sql import functions as F
 
@@ -116,6 +129,25 @@ def key_bucket(n_buckets: int, *cols) -> Column:
 
 
 class TableStore:
+    """Key-bucketed snapshots: the 100 TB CDC state layout, and the one
+    place that decides how a table is laid out.
+
+    State is hash-partitioned into ``n_buckets`` by key; each merge batch
+    rewrites ONLY the buckets its changes touch (a micro-batch touching
+    0.1% of keys rewrites ~0.1% of the table, not all of it). The pointer
+    maps every bucket to the generation holding its current state; a
+    batch flips only the affected buckets' entries (atomic file replace),
+    then prunes generations no retained state references. Readers union
+    the per-bucket paths.
+
+    Keyed-state writers (pipeline merge, tombstone GC, the dedup/search
+    indexes) go through :meth:`read_keys` and :meth:`replace_keys` only,
+    naming the bucket count they want (``n_buckets``; 1 = the whole
+    snapshot, rewritten by :meth:`write`). When the stored count differs
+    from the requested one, the table is read whole and rewritten whole,
+    once, under the requested count.
+    """
+
     def __init__(self, root: str | Path, retain: int = 0):
         """``retain``: how many PRIOR pointer states keep their data on
         disk (time travel depth). 0 = prune immediately (default; the
@@ -125,17 +157,39 @@ class TableStore:
         self.root = Path(root)
         self.retain = retain
         self.root.mkdir(parents=True, exist_ok=True)
+        self._adopt_snapshots()
+
+    def _adopt_snapshots(self) -> None:
+        """Move tables of the older snapshot layout into the one-bucket
+        map: a generation's loose files go into its ``__bucket=0``
+        directory, and a ``_CURRENT`` pointer becomes ``_BUCKETS`` =
+        {0: its generation}, unless a ``_BUCKETS`` already governs (a
+        crash ended that table's migration after its flip). Every step
+        repeats safely, so a crash midway is finished at the next open.
+        History records of that layout are read by `_state`."""
+        for gen in {f.parent for f in self.root.glob("*/gen-*/*.parquet")}:
+            (gen / "__bucket=0").mkdir(exist_ok=True)
+            for p in gen.iterdir():
+                if not p.name.startswith("__bucket="):
+                    p.rename(gen / "__bucket=0" / p.name)
+        for cur in self.root.glob("*/_CURRENT"):
+            if not (cur.parent / "_BUCKETS").exists():
+                self._write_pointer(cur.parent, {"0": cur.read_text().strip()})
+            cur.unlink()
 
     def _table_dir(self, table: str) -> Path:
         return self.root / table
 
-    def _pointer(self, table: str) -> Path:
-        return self._table_dir(table) / "_CURRENT"
+    def _bucket_pointer(self, table: str) -> Path:
+        return self._table_dir(table) / "_BUCKETS"
+
+    def _count_file(self, table: str) -> Path:
+        return self._table_dir(table) / "_NBUCKETS"
 
     def _history_file(self, table: str) -> Path:
         return self._table_dir(table) / "_HISTORY"
 
-    def _log_state(self, table: str, kind: str, state) -> None:
+    def _log_state(self, table: str, state: dict) -> None:
         """Append one pointer state to the table's _HISTORY jsonl.
 
         The seq is the last complete record's seq + 1, read from the
@@ -150,23 +204,16 @@ class TableStore:
         last = self._last_seq(table)
         seq = 0 if last is None else last + 1
         with hf.open("a") as f:
-            f.write(json.dumps({"seq": seq, "kind": kind, "state": state}) + "\n")
+            f.write(json.dumps({"seq": seq, "kind": "bucketed", "state": state}) + "\n")
 
     def history(self, table: str) -> list[dict]:
         """Pointer-flip history, oldest first: [{seq, kind, state, live}].
         ``live`` = the referenced data still exists (within ``retain``)."""
-        hf = self._history_file(table)
-        if not hf.exists():
-            return []
-        out = []
         tdir = self._table_dir(table)
-        for rec in _parseable_lines(hf):
-            gens = (
-                [rec["state"]]
-                if rec["kind"] == "snapshot"
-                else sorted(set(rec["state"].values()))
-            )
-            rec["live"] = all((tdir / g).exists() for g in gens)
+        out = []
+        for rec in _parseable_lines(self._history_file(table)):
+            rec["state"] = _state(rec)
+            rec["live"] = all((tdir / g).exists() for g in set(rec["state"].values()))
             out.append(rec)
         return out
 
@@ -186,20 +233,9 @@ class TableStore:
                 f"(store retain={self.retain}); re-create the store with a "
                 "larger retain to keep time-travel depth"
             )
-        tdir = self._table_dir(table)
-        if rec["kind"] == "snapshot":
-            return spark.read.parquet(str(tdir / rec["state"]))
-        # a bucketed state can be EMPTY (a batch deleted every remaining
-        # row: write_buckets pops all map entries) — mirror read_buckets'
-        # None contract instead of handing spark.read.parquet() zero paths
-        # (which raises an unrelated schema-inference error, review r7)
-        if not rec["state"]:
-            return None
-        paths = [
-            str(tdir / gen / f"__bucket={b}")
-            for b, gen in sorted((int(k), v) for k, v in rec["state"].items())
-        ]
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._read_map(
+            spark, table, {int(b): g for b, g in rec["state"].items()}
+        )
 
     def _live_states(self, table: str) -> list:
         """The pointer states whose data must survive pruning: the last
@@ -207,7 +243,7 @@ class TableStore:
         from the file's tail so a write's cost does not grow with the
         table's age."""
         recs = _tail_records(self._history_file(table), self.retain + 1)
-        return [r["state"] for r in recs]
+        return [_state(r) for r in recs]
 
     def _last_seq(self, table: str) -> int | None:
         """Seq of the most recent pointer flip: the last complete _HISTORY
@@ -270,44 +306,6 @@ class TableStore:
             for t, seq in sorted(recs[epoch]["tables"].items())
         }
 
-    def current_path(self, table: str) -> Path | None:
-        ptr = self._pointer(table)
-        if not ptr.exists():
-            return None
-        gen = ptr.read_text().strip()
-        path = self._table_dir(table) / gen
-        return path if path.exists() else None
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        path = self.current_path(table)
-        return spark.read.parquet(str(path)) if path else None
-
-    def write(self, df: DataFrame, table: str) -> Path:
-        """Write a new snapshot generation and flip the pointer."""
-        if (self._table_dir(table) / "_BUCKETS").exists():
-            raise ValueError(
-                f"{table} uses the bucketed layout; writing a whole snapshot "
-                "would be shadowed by the _BUCKETS pointer — use "
-                "write_buckets, or drop the table first"
-            )
-        tdir = self._table_dir(table)
-        tdir.mkdir(parents=True, exist_ok=True)
-        ptr = self._pointer(table)
-        prev = ptr.read_text().strip() if ptr.exists() else None
-        gen = f"gen-{(int(prev.split('-')[1]) + 1) if prev else 0:06d}"
-        out = tdir / gen
-        df.write.mode("overwrite").parquet(str(out))
-        tmp = tdir / "_CURRENT.tmp"
-        tmp.write_text(gen)
-        tmp.replace(ptr)  # atomic on POSIX
-        self._log_state(table, "snapshot", gen)
-        keep = {s for s in self._live_states(table) if isinstance(s, str)}
-        keep.add(gen)
-        for p in tdir.glob("gen-*"):
-            if p.name not in keep:
-                shutil.rmtree(p, ignore_errors=True)
-        return out
-
     def drop(self, table: str) -> None:
         shutil.rmtree(self._table_dir(table), ignore_errors=True)
 
@@ -328,39 +326,8 @@ class TableStore:
         return sorted(
             p.name
             for p in self.root.iterdir()
-            if p.is_dir() and ((p / "_CURRENT").exists() or (p / "_BUCKETS").exists())
+            if p.is_dir() and (p / "_BUCKETS").exists()
         )
-
-
-class BucketedTableStore(TableStore):
-    """Key-bucketed snapshots: the 100 TB CDC state layout, and the one
-    place that decides how a keyed table is laid out.
-
-    State is hash-partitioned into ``n_buckets`` by key; each merge batch
-    rewrites ONLY the buckets its changes touch (a micro-batch touching
-    0.1% of keys rewrites ~0.1% of the table, not all of it). Layout:
-
-        <table>/gen-K/__bucket=i/...parquet   (one write per batch,
-                                               partitioned by bucket)
-        <table>/_BUCKETS                      {bucket: generation} pointer
-
-    The pointer maps every bucket to the generation holding its current
-    state; a batch flips only the affected buckets' entries (atomic file
-    replace), then prunes generations no bucket references. Readers union
-    the per-bucket paths. Crash safety matches TableStore: a half-written
-    generation is invisible until the pointer flips.
-
-    Keyed-state writers (pipeline merge, tombstone GC, the dedup/search
-    indexes) go through :meth:`read_keys` and :meth:`replace_keys` only,
-    naming the layout they want (``n_buckets``, None = whole snapshot).
-    Layout-change rule: when the stored layout differs from the requested
-    one — snapshot→bucketed (None→n) or a changed bucket count (n→m) —
-    the table is read whole and rewritten whole, once, in the requested
-    layout. Bucketed→snapshot (n→None) is refused by :meth:`write`.
-    """
-
-    def _bucket_pointer(self, table: str) -> Path:
-        return self._table_dir(table) / "_BUCKETS"
 
     def bucket_map(self, table: str) -> dict[int, str]:
         ptr = self._bucket_pointer(table)
@@ -368,13 +335,23 @@ class BucketedTableStore(TableStore):
             return {}
         return {int(k): v for k, v in json.loads(ptr.read_text()).items()}
 
-    def layout(self, table: str) -> str | None:
-        """'bucketed' | 'snapshot' | None — which pointer kind governs."""
-        if self._bucket_pointer(table).exists():
-            return "bucketed"
-        if self._pointer(table).exists():
-            return "snapshot"
-        return None
+    def bucket_dir(self, table: str, bucket: int, gen: str) -> Path:
+        """The directory holding one bucket's rows in one generation."""
+        return self._table_dir(table) / gen / f"__bucket={bucket}"
+
+    def _read_map(
+        self, spark: SparkSession, table: str, bmap: dict[int, str]
+    ) -> DataFrame | None:
+        """The union of the mapped bucket directories; None for an empty
+        map (a batch that deleted every row pops every entry), instead of
+        handing spark.read.parquet() zero paths."""
+        if not bmap:
+            return None
+        paths = [str(self.bucket_dir(table, b, g)) for b, g in sorted(bmap.items())]
+        # mergeSchema: buckets can sit at different generations that span a
+        # compatible schema evolution; taking the schema from one file
+        # would silently drop evolved columns from the others
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def read_buckets(
         self, spark: SparkSession, table: str, buckets: list[int] | None = None
@@ -382,29 +359,15 @@ class BucketedTableStore(TableStore):
         bmap = self.bucket_map(table)
         if buckets is not None:
             bmap = {b: g for b, g in bmap.items() if b in buckets}
-        if not bmap:
-            return None
-        tdir = self._table_dir(table)
-        paths = [str(tdir / gen / f"__bucket={b}") for b, gen in sorted(bmap.items())]
-        # mergeSchema: buckets can sit at different generations that span a
-        # compatible schema evolution; taking the schema from one file
-        # would silently drop evolved columns from the others.
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._read_map(spark, table, bmap)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Dispatch on layout: bucketed pointer if present, else the
-        whole-snapshot _CURRENT pointer (a store can hold both kinds)."""
-        if self._bucket_pointer(table).exists():
-            return self.read_buckets(spark, table)
-        return super().read(spark, table)
-
-    def _count_file(self, table: str) -> Path:
-        return self._table_dir(table) / "_NBUCKETS"
+        return self.read_buckets(spark, table)
 
     def _bucket_count(self, table: str) -> int | None:
-        """The bucket count of the table's last whole bucketed rewrite;
-        None for a snapshot or absent table, or an unknown count. Only a
-        map written under the requested count may be pruned by it: under
+        """The bucket count of the table's last whole rewrite; None for an
+        absent or one-bucket table, or an unknown count. Only a map
+        written under the requested count may be pruned by it: under
         another count the same key sits in a different bucket, and the
         pruned read would miss its old row."""
         cf = self._count_file(table)
@@ -415,7 +378,7 @@ class BucketedTableStore(TableStore):
         spark: SparkSession,
         table: str,
         key_cols: list[str],
-        n_buckets: int | None,
+        n_buckets: int,
         keys: DataFrame | None = None,
         buckets: list[int] | None = None,
     ) -> tuple[DataFrame | None, list[int] | None]:
@@ -423,13 +386,13 @@ class BucketedTableStore(TableStore):
         frame carrying ``key_cols``; duplicates are fine), and the bucket
         list to hand back to :meth:`replace_keys`.
 
-        In the requested bucketed layout only the buckets holding
+        Under the requested count (above 1) only the buckets holding
         ``keys`` are read — the O(batch) maintenance read. ``buckets``
         reuses a list already collected for the same keys (the collect
-        is bounded by n_buckets, never rows). Otherwise — snapshot
-        layout, ``keys=None``, or a stored layout that differs from the
-        requested one — the whole table is read and the bucket list is
-        None, which makes replace_keys rewrite the whole table."""
+        is bounded by n_buckets, never rows). Otherwise — one bucket,
+        ``keys=None``, or a stored count that differs from the requested
+        one — the whole table is read and the bucket list is None, which
+        makes replace_keys rewrite the whole table."""
         bucket = None if keys is None else self.bucket_of(table, key_cols, n_buckets)
         if bucket is None:
             return self.read(spark, table), None
@@ -439,63 +402,61 @@ class BucketedTableStore(TableStore):
             )
         return self.read_buckets(spark, table, buckets), buckets
 
-    def bucket_of(
-        self, table: str, key_cols: list, n_buckets: int | None
-    ) -> Column | None:
+    def bucket_of(self, table: str, key_cols: list, n_buckets: int) -> Column | None:
         """The bucket of each key, over key columns (names or Columns of
         the key types) — what :meth:`read_keys` prunes by; None when it
-        would read the whole table instead (snapshot layout, or a stored
-        layout that differs from the requested one). A caller that
-        computes the distinct buckets of a batch's keys in a pass of its
-        own hands them to ``read_keys`` as ``buckets``."""
-        if not n_buckets or self._bucket_count(table) != n_buckets:
+        would read the whole table instead (one bucket, or a stored count
+        that differs from the requested one). A caller that computes the
+        distinct buckets of a batch's keys in a pass of its own hands them
+        to ``read_keys`` as ``buckets``."""
+        if n_buckets == 1 or self._bucket_count(table) != n_buckets:
             return None
         return key_bucket(n_buckets, *key_cols)
+
+    def write(self, df: DataFrame, table: str) -> Path:
+        """Replace the whole table by ``df``: the one-bucket rewrite.
+        ``df`` lands unpartitioned in ``gen-K/__bucket=0`` and the map
+        becomes ``{0: gen-K}``, whatever count the table had before."""
+        tdir = self._table_dir(table)
+        gen = self._next_gen(tdir)
+        df.write.mode("overwrite").parquet(str(self.bucket_dir(table, 0, gen)))
+        # a count left from a many-bucket map would prune this one by the
+        # old count's ids
+        self._set_count(table, None)
+        self._flip(table, {0: gen})
+        return tdir / gen
 
     def replace_keys(
         self,
         df: DataFrame,
         table: str,
         key_cols: list[str],
-        n_buckets: int | None,
+        n_buckets: int,
         buckets: list[int] | None,
     ) -> None:
         """Write ``df`` — the new state of exactly what :meth:`read_keys`
-        returned, with the ``buckets`` it returned — in the requested
-        layout: a snapshot swap, a rewrite of the listed buckets, or
-        (``buckets`` None) a whole-table bucketed rewrite that also
-        drops any bucket of a previous count and retires a snapshot
-        pointer."""
-        if not n_buckets:
+        returned, with the ``buckets`` it returned — under the requested
+        count: a rewrite of the listed buckets, or (``buckets`` None) a
+        whole-table rewrite that also drops any bucket of a previous
+        count. One bucket is a :meth:`write`."""
+        if n_buckets == 1:
             self.write(df, table)
             return
         df = df.withColumn("__bucket", key_bucket(n_buckets, *key_cols))
         if buckets is not None:
             self.write_buckets(df, table, buckets)
             return
-        # the recorded count is cleared before the flip and set after it:
-        # a crash in between leaves it absent, which reads as a layout
-        # mismatch and repeats the (idempotent) whole rewrite
-        cf = self._count_file(table)
-        cf.unlink(missing_ok=True)
+        self._set_count(table, None)
         every = set(range(n_buckets)) | set(self.bucket_map(table))
         self.write_buckets(df, table, sorted(every))
-        self._pointer(table).unlink(missing_ok=True)
-        tmp = cf.with_name("_NBUCKETS.tmp")
-        tmp.write_text(str(n_buckets))
-        tmp.replace(cf)
+        self._set_count(table, n_buckets)
 
     def write_buckets(self, df: DataFrame, table: str, buckets: list[int]) -> Path:
         """Write a new generation holding ONLY the given buckets (df must
         carry a ``__bucket`` column) and flip their pointer entries."""
         tdir = self._table_dir(table)
-        tdir.mkdir(parents=True, exist_ok=True)
         bmap = self.bucket_map(table)
-        # number from ALL on-disk generations, not just bucket-referenced
-        # ones — a snapshot-layout gen (during migration) must not be
-        # reused as the write target while it is still the read source.
-        gens = [int(p.name.split("-")[1]) for p in tdir.glob("gen-*")] or [-1]
-        gen = f"gen-{max(gens) + 1:06d}"
+        gen = self._next_gen(tdir)
         df.write.mode("overwrite").partitionBy("__bucket").parquet(str(tdir / gen))
         # a bucket whose rows all vanished in this batch (e.g. every index
         # entry deleted) produces no partition dir — it must leave the map,
@@ -508,23 +469,52 @@ class BucketedTableStore(TableStore):
                 bmap[b] = gen
             else:
                 bmap.pop(b, None)
-        state = {str(b): g for b, g in sorted(bmap.items())}
+        self._flip(table, bmap)
+        return tdir / gen
+
+    @staticmethod
+    def _next_gen(tdir: Path) -> str:
+        """The next generation name, numbered from ALL on-disk generations
+        (not just referenced ones), so a retained one is never reused."""
+        tdir.mkdir(parents=True, exist_ok=True)
+        gens = [int(p.name.split("-")[1]) for p in tdir.glob("gen-*")] or [-1]
+        return f"gen-{max(gens) + 1:06d}"
+
+    def _set_count(self, table: str, n_buckets: int | None) -> None:
+        """Record the count of a whole many-bucket rewrite (None clears
+        it). Such a rewrite clears the count before its flip and sets it
+        after: a crash in between leaves it absent, which reads as a count
+        mismatch and repeats the (idempotent) whole rewrite."""
+        cf = self._count_file(table)
+        if n_buckets is None:
+            cf.unlink(missing_ok=True)
+            return
+        tmp = cf.with_name("_NBUCKETS.tmp")
+        tmp.write_text(str(n_buckets))
+        tmp.replace(cf)
+
+    @staticmethod
+    def _write_pointer(tdir: Path, state: dict) -> None:
         tmp = tdir / "_BUCKETS.tmp"
         tmp.write_text(json.dumps(state))
-        tmp.replace(self._bucket_pointer(table))
-        self._log_state(table, "bucketed", state)
-        # prune generations referenced by neither the current map nor the
-        # retained history depth. Retained history can hold BOTH kinds of
-        # state: a snapshot-layout generation (string) sits in the window
-        # during a layout migration, and skipping it here deleted retained
-        # time-travel depth on the first bucketed write (review r7).
+        tmp.replace(tdir / "_BUCKETS")  # atomic on POSIX
+
+    def _flip(self, table: str, bmap: dict[int, str]) -> None:
+        """Point the table at ``bmap`` (atomic replace), record the state
+        in _HISTORY, then prune the generations referenced by neither the
+        current map nor the retained history depth."""
+        tdir = self._table_dir(table)
+        state = {str(b): g for b, g in sorted(bmap.items())}
+        self._write_pointer(tdir, state)
+        self._log_state(table, state)
         live = set(bmap.values())
         for s in self._live_states(table):
-            if isinstance(s, dict):
-                live |= set(s.values())
-            else:
-                live.add(s)
+            live |= set(s.values())
         for p in tdir.glob("gen-*"):
             if p.name not in live:
                 shutil.rmtree(p, ignore_errors=True)
-        return tdir / gen
+
+
+# perfbench/tracing.py imports this name and wraps read, read_buckets and
+# write_buckets on it; retire the alias together with that import.
+BucketedTableStore = TableStore

@@ -101,21 +101,13 @@ class TxGate:
         self.dir = os.path.join(base_dir, "_txbuf")
         self.state_path = os.path.join(base_dir, "_txstate.json")
         os.makedirs(self.dir, exist_ok=True)
-        self._adopt_flat_layout(os.path.join(base_dir, "_txrelease"))
-
-    def _adopt_flat_layout(self, release_root: str) -> None:
-        """Move rows an older layout left — buffer files at the top of
-        ``_txbuf``, released rows under ``_txrelease/<tx>`` — into
-        per-transaction partitions (a crash midway repeats the move)."""
-        legacy = glob.glob(os.path.join(self.dir, "*.parquet"))
-        legacy += glob.glob(os.path.join(release_root, "*"))
-        if legacy:
-            raw = self.spark.read.schema("key string, value string").parquet(*legacy)
-            rows = route_envelopes(raw).select(*BUFFER_COLS)
-            self._append(rows, {r[0] for r in rows.select("tx_id").distinct().collect()})
-            for path in legacy:
-                shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
-        shutil.rmtree(release_root, ignore_errors=True)
+        if glob.glob(os.path.join(self.dir, "*.parquet")) or os.path.exists(
+            os.path.join(base_dir, "_txrelease")
+        ):
+            raise ValueError(
+                f"{base_dir} holds transaction rows in the older flat layout "
+                "(_txbuf/*.parquet or _txrelease/), which this gate no longer reads"
+            )
 
     # -- state ------------------------------------------------------------
 
@@ -124,11 +116,6 @@ class TxGate:
         if os.path.exists(self.state_path):
             with open(self.state_path) as f:
                 state.update(json.load(f))
-        for field in ("released", "tombstones"):
-            state[field] = {
-                t: (v if isinstance(v, dict) else {"batch": v, "mode": "s"})
-                for t, v in state[field].items()
-            }
         return state
 
     def _save_state(self, state: dict) -> None:

@@ -23,7 +23,7 @@ from one_stop_cdc_ingestion_toolkit_spark.streaming.pipeline import (
 from tests.cdc_fixtures import PERSON_SCHEMA, envelope, person, write_stream_files
 
 
-def _spec(tmp_path, n_buckets=None):
+def _spec(tmp_path, n_buckets=1):
     return PipelineSpec(
         name="person_pipe",
         source_dir=str(tmp_path / "stream"),
@@ -58,7 +58,7 @@ def _assert_view_equals_recompute(spark, pipe):
     )
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4], ids=["snapshot", "bucketed"])
+@pytest.mark.parametrize("n_buckets", [1, 4], ids=["snapshot", "bucketed"])
 def test_incremental_view_equals_recompute(spark, tmp_path, n_buckets):
     spec = _spec(tmp_path, n_buckets=n_buckets)
     pipe = Pipeline(spark, spec)

@@ -23,7 +23,7 @@ def _source_df(spark):
     return spark.createDataFrame(rows, PERSON_SCHEMA)
 
 
-def _pipeline(spark, tmp_path, name="bf", n_buckets=None) -> Pipeline:
+def _pipeline(spark, tmp_path, name="bf", n_buckets=1) -> Pipeline:
     spec = PipelineSpec(
         name=name,
         source_dir=str(tmp_path / f"stream_{name}"),

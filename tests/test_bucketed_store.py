@@ -35,10 +35,10 @@ def _spec(tmp_path) -> PipelineSpec:
     )
 
 
-def _state(pipe) -> dict:
+def _state(pipe, table="person") -> dict:
     return {
         r["firstName"]: (r["firstName"], r["lastName"], r["age"])
-        for r in pipe.read_table("person").collect()
+        for r in pipe.read_table(table).collect()
     }
 
 
@@ -80,49 +80,6 @@ def test_batch_rewrites_only_touched_buckets(spark, tmp_path):
     assert all(after[b] == before[b] for b in untouched)
 
 
-def test_snapshot_to_bucketed_migration(spark, tmp_path):
-    """Enabling n_buckets on an existing whole-snapshot table must fold
-    the snapshot into the bucketed layout, not silently start empty."""
-    spec_flat = PipelineSpec(
-        name="pb",
-        source_dir=str(tmp_path / "stream"),
-        tables=[TableSpec("person", ["firstName"], PERSON_SCHEMA)],  # no buckets
-        sink_dir=str(tmp_path / "lake"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    write_stream_files(spec_flat.source_dir, CANONICAL_EVENTS, files=1)
-    pipe = Pipeline(spark, spec_flat)
-    pipe.process_available()
-    pipe.stop()
-    assert pipe.store.layout("person") == "snapshot"
-
-    late = [envelope("u", 10, before=person("alice", "brown", 31),
-                     after=person("alice", "grey", 32))]
-    with open(pathlib.Path(spec_flat.source_dir) / "late.json", "w") as f:
-        for e in late:
-            f.write(json.dumps(e) + "\n")
-    spec_b = _spec(tmp_path)  # same dirs, now bucketed
-    pipe2 = Pipeline(spark, spec_b)
-    pipe2.process_available()
-    pipe2.stop()
-    assert pipe2.store.layout("person") == "bucketed"
-    expect = dict(GOLDEN_STATE)
-    expect["alice"] = ("alice", "grey", 32)
-    assert _state(pipe2) == expect  # snapshot rows survived the migration
-
-
-def test_whole_snapshot_write_refused_on_bucketed_table(spark, tmp_path):
-
-    spec = _spec(tmp_path)
-    write_stream_files(spec.source_dir, CANONICAL_EVENTS[:2], files=1)
-    pipe = Pipeline(spark, spec)
-    pipe.process_available()
-    pipe.stop()
-    df = pipe.store.read(spark, "person")
-    with pytest.raises(ValueError, match="bucketed layout"):
-        pipe.store.write(df, "person")
-
-
 def test_generation_pruning(spark, tmp_path):
     spec = _spec(tmp_path)
     write_stream_files(spec.source_dir, CANONICAL_EVENTS, files=4)
@@ -135,8 +92,54 @@ def test_generation_pruning(spark, tmp_path):
     assert on_disk == live, "unreferenced generations must be pruned"
 
 
+def test_every_table_is_a_bucket_map(spark, tmp_path):
+    """An unkeyed write, a default keyed table and a 16-bucket table all
+    leave the same pointer file, a bucket map, and no whole-snapshot
+    pointer; only a many-bucket map records its count."""
+    spec = _spec(tmp_path)
+    spec.tables = [
+        TableSpec("person", ["firstName"], PERSON_SCHEMA),
+        TableSpec("person16", ["firstName"], PERSON_SCHEMA, n_buckets=16),
+    ]
+    events = list(CANONICAL_EVENTS)
+    for e in CANONICAL_EVENTS:
+        value = json.loads(e["value"])
+        value["source"]["table"] = "person16"
+        events.append({**e, "value": json.dumps(value)})
+    write_stream_files(spec.source_dir, events, files=1)
+    pipe = Pipeline(spark, spec)
+    pipe.process_available()
+    pipe.stop()
+    pipe.store.write(spark.createDataFrame([(1,)], "v int"), "plain")
+    lake = pathlib.Path(spec.sink_dir)
+    for table, n in (("plain", 1), ("person", 1), ("person16", 16)):
+        names = {p.name for p in (lake / table).iterdir()}
+        assert "_BUCKETS" in names and "_CURRENT" not in names, names
+        assert ("_NBUCKETS" in names) == (n > 1), names
+    assert (lake / "person16" / "_NBUCKETS").read_text() == "16"
+    assert set(pipe.store.bucket_map("person")) == {0}
+    assert _state(pipe) == _state(pipe, "person16") == GOLDEN_STATE
 
-@pytest.mark.parametrize("old_n,new_n", [(4, 8), (8, 4)], ids=["grow", "shrink"])
+
+@pytest.mark.parametrize("n", [-4, 0, 1, 16])
+def test_bucket_count_must_be_positive(tmp_path, n):
+    """A count below 1 is refused: -4 made the whole rewrite map no
+    bucket at all (``range(-4)`` is empty), so the table read back as
+    absent after its rows were written."""
+    spec = _spec(tmp_path)
+    spec.tables[0].n_buckets = n
+    if n < 1:
+        with pytest.raises(ValueError, match="n_buckets"):
+            spec.validate()
+    else:
+        spec.validate()
+
+
+@pytest.mark.parametrize(
+    "old_n,new_n",
+    [(4, 8), (8, 4), (1, 16), (16, 1)],
+    ids=["grow", "shrink", "from_one", "to_one"],
+)
 def test_bucket_count_change_keeps_one_row_per_key(spark, tmp_path, old_n, new_n):
     """Changing n_buckets on a bucketed table must rewrite it once under
     the new count: pruning a 4-bucket map by 8-bucket ids (or the
@@ -176,3 +179,51 @@ def test_bucket_count_change_keeps_one_row_per_key(spark, tmp_path, old_n, new_n
     expect["carol"] = ("carol", "black", 26)
     assert _state(pipe2) == expect
     assert set(pipe2.store.bucket_map("person")) <= set(range(new_n))
+
+
+def test_snapshot_layout_lake_is_adopted(spark, tmp_path):
+    """A lake of the older snapshot layout (``_CURRENT`` naming a
+    generation whose files sit at its root, history records naming that
+    generation) is moved into the one-bucket map when a store opens it:
+    its rows survive the next batch, and with retain=1 its history and
+    the time-travel read of its last state still work. Read as an empty
+    map, the batch's merge would have replaced every earlier row."""
+    spec = _spec(tmp_path)
+    spec.tables[0].n_buckets = 1
+    spec.snapshot_retain = 1
+    write_stream_files(spec.source_dir, CANONICAL_EVENTS, files=1)
+    pipe = Pipeline(spark, spec)
+    pipe.process_available()
+    pipe.stop()
+
+    # rewrite the table by hand into the older layout
+    tdir = pathlib.Path(spec.sink_dir) / "person"
+    (gen,) = set(pipe.store.bucket_map("person").values())
+    stored = sorted(map(tuple, pipe.store.read(spark, "person").collect()))
+    for f in (tdir / gen / "__bucket=0").iterdir():
+        f.rename(tdir / gen / f.name)
+    (tdir / gen / "__bucket=0").rmdir()
+    (tdir / "_BUCKETS").unlink()
+    (tdir / "_CURRENT").write_text(gen)
+    (tdir / "_HISTORY").write_text(
+        json.dumps({"seq": 0, "kind": "snapshot", "state": gen}) + "\n"
+    )
+
+    late = [envelope("u", 10, before=person("carol", "white", 25),
+                     after=person("carol", "black", 26))]
+    with open(pathlib.Path(spec.source_dir) / "late.json", "w") as f:
+        for e in late:
+            f.write(json.dumps(e) + "\n")
+    pipe2 = Pipeline(spark, spec)
+    assert not (tdir / "_CURRENT").exists()
+    assert pipe2.store.bucket_map("person") == {0: gen}
+    pipe2.process_available()
+    pipe2.stop()
+
+    expect = dict(GOLDEN_STATE)
+    expect["carol"] = ("carol", "black", 26)
+    assert _state(pipe2) == expect
+    hist = pipe2.store.history("person")
+    assert hist[0]["state"] == {"0": gen} and hist[0]["live"]
+    old = pipe2.store.read_as_of(spark, "person", 0)
+    assert sorted(map(tuple, old.collect())) == stored

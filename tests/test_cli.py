@@ -203,11 +203,9 @@ def test_cli_diff_table(spark, tmp_path, capsys):
     assert main(["--registry", registry, "quickstart", str(spec_file)]) == 0
     capsys.readouterr()
 
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-        BucketedTableStore,
-    )
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
-    seqs = [r["seq"] for r in BucketedTableStore(spec.sink_dir).history("person")]
+    seqs = [r["seq"] for r in TableStore(spec.sink_dir).history("person")]
     assert len(seqs) >= 2
     assert (
         main(
@@ -283,9 +281,7 @@ def test_cli_freshness_verb(spark, tmp_path, capsys):
     import json as _json
 
     from one_stop_cdc_ingestion_toolkit_spark.cli import main as cli_main
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-        TableStore,
-    )
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
     lake = tmp_path / "lake"
     store = TableStore(lake)

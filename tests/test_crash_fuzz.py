@@ -18,7 +18,6 @@ import pathlib
 import pytest
 
 from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-    BucketedTableStore,
     TableStore,
     key_bucket,
 )
@@ -70,7 +69,7 @@ def _assert_store_invariants(spark, store, table, expect_rows):
 
 SNAPSHOT_POINTS = [
     # (point id, how to arm the kill)
-    "before_tmp_write",  # gen data written, _CURRENT.tmp never created
+    "before_tmp_write",  # gen data written, _BUCKETS.tmp never created
     "before_pointer_flip",  # tmp written, replace(ptr) never ran
     "before_history_log",  # pointer flipped, _HISTORY line never appended
     "torn_history_line",  # kill mid-append: partial last _HISTORY line
@@ -83,9 +82,9 @@ def test_snapshot_write_crash_points(spark, tmp_path, point, monkeypatch):
     store.write(_df(spark, [(1, "a")]), "t")
 
     if point == "before_tmp_write":
-        _crash_path_method(monkeypatch, "write_text", "_CURRENT.tmp")
+        _crash_path_method(monkeypatch, "write_text", "_BUCKETS.tmp")
     elif point == "before_pointer_flip":
-        _crash_path_method(monkeypatch, "replace", "_CURRENT.tmp")
+        _crash_path_method(monkeypatch, "replace", "_BUCKETS.tmp")
     elif point == "before_history_log":
         monkeypatch.setattr(
             store, "_log_state", lambda *a, **kw: (_ for _ in ()).throw(Boom())
@@ -125,7 +124,7 @@ BUCKET_POINTS = [
 
 @pytest.mark.parametrize("point", BUCKET_POINTS)
 def test_bucketed_write_crash_points(spark, tmp_path, point, monkeypatch):
-    store = BucketedTableStore(tmp_path / "lake", retain=2)
+    store = TableStore(tmp_path / "lake", retain=2)
     base = [(i, "a") for i in range(8)]
     store.write_buckets(_bdf(spark, base), "t", list(range(4)))
     before_map = store.bucket_map("t")
@@ -173,7 +172,7 @@ def test_bucketed_write_crash_points(spark, tmp_path, point, monkeypatch):
             assert got == set(base)
 
     # replay against a fresh handle
-    recovered = BucketedTableStore(tmp_path / "lake", retain=2)
+    recovered = TableStore(tmp_path / "lake", retain=2)
     recovered.write_buckets(_bdf(spark, batch), "t", touched)
     expect = {(i, "UPD") if i in (0, 1) else (i, "a") for i in range(8)}
     _assert_store_invariants(spark, recovered, "t", expect)
@@ -207,7 +206,7 @@ def test_empty_dedup_index_matches_declared_id_type(spark, tmp_path):
     )
 
     idx = DedupIndex(
-        BucketedTableStore(tmp_path / "lake"),
+        TableStore(tmp_path / "lake"),
         "docs",
         "doc_id",
         "text",
@@ -231,7 +230,7 @@ def test_empty_dedup_index_infers_id_type_from_stored_table(spark, tmp_path):
         DedupIndex,
     )
 
-    store = BucketedTableStore(tmp_path / "lake")
+    store = TableStore(tmp_path / "lake")
     store.write(
         spark.createDataFrame([("d1", "hello")], "doc_id string, text string"),
         "docs",

@@ -49,7 +49,7 @@ def doc_envelope(op, pos, doc_id, text=None):
     }
 
 
-def _spec(tmp_path, n_buckets=None):
+def _spec(tmp_path, n_buckets=1):
     return PipelineSpec(
         name="docs_pipe",
         source_dir=str(tmp_path / "stream"),
@@ -97,7 +97,7 @@ def _assert_index_equals_recompute(spark, pipe):
 import pytest
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4], ids=["snapshot", "bucketed"])
+@pytest.mark.parametrize("n_buckets", [1, 4], ids=["snapshot", "bucketed"])
 def test_incremental_index_equals_batch_recompute(spark, tmp_path, n_buckets):
     spec = _spec(tmp_path, n_buckets=n_buckets)
     pipe = Pipeline(spark, spec)
@@ -243,7 +243,7 @@ def test_index_rows_plan_is_shuffle_free(spark):
     idx = DedupIndex.__new__(DedupIndex)
     idx.id_col = "doc_id"
     idx.text_col = "text"
-    idx.n_buckets = 0
+    idx.n_buckets = 1
     batch = spark.createDataFrame(
         [(1, BASE), (2, NEAR), (3, OTHER)], DOCS_SCHEMA
     )

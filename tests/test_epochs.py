@@ -178,7 +178,7 @@ def test_more_tables_than_cores_merge_concurrently(spark, tmp_path):
         name="many",
         source_dir=str(tmp_path / "stream"),
         tables=[
-            TableSpec(n, ["k"], schema, n_buckets=4 if i % 2 else None)
+            TableSpec(n, ["k"], schema, n_buckets=4 if i % 2 else 1)
             for i, n in enumerate(names)
         ],
         sink_dir=str(tmp_path / "lake"),

@@ -297,9 +297,7 @@ def test_hot_batch_collapsed_lookup_is_linear(spark, tmp_path):
     from one_stop_cdc_ingestion_toolkit_spark.streaming.dedup_index import (
         DedupIndex,
     )
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-        BucketedTableStore,
-    )
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
     B = 10_000
     template = TEXTS[0]
@@ -313,7 +311,7 @@ def test_hot_batch_collapsed_lookup_is_linear(spark, tmp_path):
     touched = spark.createDataFrame(
         rows, "doc_id long, text string, __deleted boolean"
     )
-    store = BucketedTableStore(tmp_path / "lake")
+    store = TableStore(tmp_path / "lake")
     idx = DedupIndex(store, "docs", "doc_id", "text", n_buckets=8)
     idx.update(spark, touched)
     try:
@@ -329,7 +327,7 @@ def test_hot_batch_collapsed_lookup_is_linear(spark, tmp_path):
         assert len(collapsed) < B + 16  # O(B), not O(B^2)
         # incremental ≡ recompute: rebuilt index answers identically
         snap = touched.select("doc_id", "text")
-        store2 = BucketedTableStore(tmp_path / "lake2")
+        store2 = TableStore(tmp_path / "lake2")
         idx2 = DedupIndex(store2, "docs", "doc_id", "text", n_buckets=8)
         idx2.rebuild(spark, snap)
         want = {

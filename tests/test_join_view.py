@@ -64,7 +64,7 @@ def cust_env(op, pos, cust, tier=None, region=None):
     return env("customer", op, pos, cust, before=before, after=after)
 
 
-def _spec(tmp_path, n_buckets=None):
+def _spec(tmp_path, n_buckets=1):
     return PipelineSpec(
         name="jv",
         source_dir=str(tmp_path / "stream"),
@@ -117,7 +117,7 @@ def _expect(pipe):
 import pytest
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [1, 4])
 def test_join_view_matches_recompute_per_batch(spark, tmp_path, n_buckets):
     """Plain and key-bucketed fact store (the 100 TB merge path) must
     both keep the view equivalent to a full recompute."""

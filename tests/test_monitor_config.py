@@ -113,9 +113,7 @@ def test_freshness_report(spark, tmp_path):
     """freshness(): live/tombstone split, per-table source high-water,
     lag vs a FIXED clock, and None (not zero) for non-CDC tables."""
     from one_stop_cdc_ingestion_toolkit_spark.streaming.monitor import freshness
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-        TableStore,
-    )
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
     store = TableStore(tmp_path / "lake")
     cdc = spark.createDataFrame(
@@ -203,15 +201,13 @@ def test_capacity_report_malformed_events(tmp_path):
 
 def test_freshness_bucketed_layout(spark, tmp_path):
     """freshness() works identically over the bucketed table layout
-    (BucketedTableStore.read dispatches by layout) — the CLI path."""
+    (TableStore.read reads every mapped bucket) — the CLI path."""
     from pyspark.sql import functions as F
 
     from one_stop_cdc_ingestion_toolkit_spark.streaming.monitor import freshness
-    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-        BucketedTableStore,
-    )
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
-    store = BucketedTableStore(tmp_path / "lake")
+    store = TableStore(tmp_path / "lake")
     df = spark.createDataFrame(
         [(1, 0, 3_000, False), (2, 1, 7_000, False)],
         "id long, __pos long, __ts_ms long, __deleted boolean",

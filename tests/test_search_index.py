@@ -20,7 +20,7 @@ from tests.cdc_fixtures import write_stream_files
 from tests.test_dedup_index import DOCS_SCHEMA, doc_envelope
 
 
-def _spec(tmp_path, n_buckets=None):
+def _spec(tmp_path, n_buckets=1):
     return PipelineSpec(
         name="search_pipe",
         source_dir=str(tmp_path / "stream"),

@@ -322,7 +322,7 @@ def test_drop_tables_by_pattern(spark, tmp_path):
 def test_gc_tombstones_both_layouts(spark, tmp_path):
     """gc_tombstones drops only horizon-old tombstones, preserves live
     rows, and respects the table layout (snapshot + bucketed)."""
-    for n_buckets, sub in ((None, "snap"), (4, "buck")):
+    for n_buckets, sub in ((1, "snap"), (4, "buck")):
         base = tmp_path / sub
         spec = PipelineSpec(
             name=f"p_{sub}",

@@ -1,15 +1,12 @@
-"""Time travel over the table store's pointer history: snapshot and
-bucketed layouts, retention-driven pruning, and the CLI surface."""
+"""Time travel over the table store's pointer history: whole-table and
+per-bucket writes, retention-driven pruning, and the CLI surface."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import (
-    BucketedTableStore,
-    TableStore,
-)
+from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
 
 def _df(spark, vals):
@@ -54,7 +51,7 @@ def test_default_retain_prunes_immediately(spark, tmp_path):
 
 
 def test_bucketed_read_as_of(spark, tmp_path):
-    store = BucketedTableStore(tmp_path / "lake", retain=2)
+    store = TableStore(tmp_path / "lake", retain=2)
     d1 = _df(spark, [(1, "a"), (2, "a")]).withColumn(
         "__bucket", (F.col("id") % 2).cast("int")
     )
@@ -85,18 +82,17 @@ def test_cli_history_and_as_of(spark, tmp_path, capsys):
 
 
 def test_migration_keeps_retained_snapshot_history(spark, tmp_path):
-    """Layout migration must honor retain: the first bucketed write's
-    prune used to keep only DICT (bucketed) history states, deleting the
-    retained snapshot generation and breaking read_as_of across the
-    migration (review r7)."""
-    store = BucketedTableStore(tmp_path / "lake", retain=2)
-    store.write(_df(spark, [(1, "a"), (2, "a")]), "t")  # seq 0, snapshot
+    """A bucket-count change must honor retain: the first bucketed write
+    after a whole-table write used to prune the retained generation,
+    breaking read_as_of across the change."""
+    store = TableStore(tmp_path / "lake", retain=2)
+    store.write(_df(spark, [(1, "a"), (2, "a")]), "t")  # seq 0, one bucket
     d = _df(spark, [(1, "b"), (2, "b")]).withColumn(
         "__bucket", (F.col("id") % 2).cast("int")
     )
-    store.write_buckets(d, "t", buckets=[0, 1])  # seq 1, migration
+    store.write_buckets(d, "t", buckets=[0, 1])  # seq 1, two buckets
     hist = store.history("t")
-    assert [r["kind"] for r in hist] == ["snapshot", "bucketed"]
+    assert [r["kind"] for r in hist] == ["bucketed", "bucketed"]
     assert all(r["live"] for r in hist), hist
     v0 = {r["id"]: r["v"] for r in store.read_as_of(spark, "t", 0).collect()}
     assert v0 == {1: "a", 2: "a"}
@@ -108,7 +104,7 @@ def test_read_as_of_empty_bucket_state_returns_none(spark, tmp_path):
     """A batch that deletes every remaining row logs an EMPTY bucketed
     state; read_as_of must mirror read_buckets' None contract instead of
     handing spark.read.parquet() zero paths (review r7)."""
-    store = BucketedTableStore(tmp_path / "lake", retain=2)
+    store = TableStore(tmp_path / "lake", retain=2)
     d = _df(spark, [(1, "a")]).withColumn("__bucket", F.lit(0).cast("int"))
     store.write_buckets(d, "t", buckets=[0])
     # rewrite bucket 0 with no rows for it => bucket leaves the map
@@ -134,9 +130,9 @@ def test_write_parses_only_history_tail(spark, tmp_path, monkeypatch):
     n = 100_000
     with hf.open("w") as f:
         for i in range(n - 1):
-            rec = {"seq": i, "kind": "snapshot", "state": f"gen-old{i}"}
+            rec = {"seq": i, "kind": "bucketed", "state": {"0": f"gen-old{i}"}}
             f.write(json.dumps(rec) + "\n")
-        rec = {"seq": n - 1, "kind": "snapshot", "state": "gen-000000"}
+        rec = {"seq": n - 1, "kind": "bucketed", "state": {"0": "gen-000000"}}
         f.write(json.dumps(rec) + "\n")
 
     parses = []
@@ -203,7 +199,8 @@ def _log_bytes_read(spark, tmp_path, monkeypatch, n: int) -> tuple[int, int]:
     with (tmp_path / "lake" / "t" / "_HISTORY").open("w") as f:
         for i in range(n):
             gen = "gen-000000" if i == n - 1 else f"gen-old{i}-{pad}"
-            f.write(json.dumps({"seq": i, "kind": "snapshot", "state": gen}) + "\n")
+            rec = {"seq": i, "kind": "bucketed", "state": {"0": gen}}
+            f.write(json.dumps(rec) + "\n")
     with (tmp_path / "lake" / "_EPOCHS").open("w") as f:
         for i in range(n):
             f.write(json.dumps({"epoch": i, "tables": {"t": i}, "pad": pad}) + "\n")

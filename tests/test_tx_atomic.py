@@ -255,28 +255,18 @@ def test_direct_call_does_not_gc_streaming_release(spark, tmp_path):
     assert not os.path.exists(staged)
 
 
-def test_flat_layout_is_adopted(spark, tmp_path):
-    """A gate of the earlier layout kept open rows as files at the top of
-    _txbuf and a release's rows under _txrelease/<tx>: a new gate moves
-    both into per-transaction partitions, so the open transaction still
-    releases and a replay of the release still re-emits."""
-    import json
+def test_flat_layout_is_refused(spark, tmp_path):
+    """A gate directory of the earlier flat layout (open rows as files at
+    the top of _txbuf, released rows under _txrelease/<tx>) is refused
+    with an error instead of being opened with its rows unseen."""
+    import pytest
 
     from one_stop_cdc_ingestion_toolkit_spark.streaming.tx_gate import TxGate
 
-    base = tmp_path / "g"
-    _raw(spark, [tx_envelope("c", 1, "tx-1", after=person("ann", "a", 1))]).write.parquet(
-        str(base / "_txbuf")
-    )
-    _raw(spark, [tx_envelope("c", 2, "tx-2", after=person("bob", "b", 2))]).write.parquet(
-        str(base / "_txrelease" / "tx-2")
-    )
-    state = {"ended": {}, "released": {"tx-2": {"batch": 7, "mode": "s"}},
-             "tombstones": {}, "seq": 7}
-    (base / "_txstate.json").write_text(json.dumps(state))
-    gate = TxGate(spark, str(base))
-    assert not (base / "_txrelease").exists()
-    assert gate.pending() == {"tx-1": 1}
-    assert gate.filter_batch(_raw(spark, []), batch_id=7).count() == 1  # replay
-    assert gate.filter_batch(_raw(spark, [boundary("tx-1")]), batch_id=8).count() == 1
-    assert gate.pending() == {}
+    for layout in ("_txbuf", "_txrelease/tx-2"):
+        base = tmp_path / layout.split("/")[0]
+        _raw(spark, [tx_envelope("c", 1, "tx-1", after=person("ann", "a", 1))]).write.parquet(
+            str(base / layout)
+        )
+        with pytest.raises(ValueError, match="flat layout"):
+            TxGate(spark, str(base))

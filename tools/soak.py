@@ -3,7 +3,7 @@
 One quickstart-shaped pipeline driven over a GENERATED sf0.1-sized
 changelog: ~200k envelope events across 26 JSON-lines files (one file
 per micro-batch via maxFilesPerTrigger=1), two captured tables (plain
-snapshot store + 16-bucket BucketedTableStore — the 100 TB merge path),
+one-bucket table + 16-bucket table — the 100 TB merge path),
 mixed c/r/u/d with out-of-order and duplicate delivery (A15), one
 BACKWARD-compatible DDL event mid-stream (A5/A6/A11), one transaction
 whose END boundary arrives AFTER a mid-run kill (tx_atomic gate state
@@ -472,6 +472,7 @@ def main() -> int:
         PipelineSpec,
         TableSpec,
     )
+    from one_stop_cdc_ingestion_toolkit_spark.streaming.table_store import TableStore
 
     base = "/tmp/soak_r06"
     shutil.rmtree(base, ignore_errors=True)
@@ -532,10 +533,7 @@ def main() -> int:
 
     fresh_kill = monitor.freshness(
         spark,
-        __import__(
-            "one_stop_cdc_ingestion_toolkit_spark.streaming.table_store",
-            fromlist=["BucketedTableStore"],
-        ).BucketedTableStore(spec.sink_dir),
+        TableStore(spec.sink_dir),
         ["accounts", "events_tbl"],
         now_ms=acct.max_ts,
     )
